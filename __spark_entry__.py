@@ -23,6 +23,7 @@ from pandasschema_spark import Column, Schema  # noqa: E402
 from pandasschema_spark.operators import dedup as D  # noqa: E402
 from pandasschema_spark.operators import similarity as S  # noqa: E402
 from pandasschema_spark.operators import text as TX  # noqa: E402
+from pandasschema_spark.resources import hold  # noqa: E402
 from pandasschema_spark.validation import (  # noqa: E402
     CanCallValidation,
     CanConvertValidation,
@@ -106,7 +107,7 @@ def q_val_pattern(spark, sf_dir):
 
 def q_val_distinct(spark, sf_dir):
     df = _t(spark, sf_dir, "orders")
-    schema = Schema([Column("o_custkey", [IsDistinctValidation(salt_buckets=32)])])
+    schema = Schema([Column("o_custkey", [IsDistinctValidation()])])
     return _violations(schema, df, ["o_custkey"], "o_orderkey")
 
 
@@ -545,12 +546,11 @@ def q_pipeline_reconcile(spark, sf_dir):
     # phase AND the bucket-restricted diff each consume both sides, and
     # `right` is itself a union of two passes over `o` — uncached, the
     # orders parquet is scanned 6x per run (measured; with the caches it
-    # is scanned once and `right` derives from the cache). The handles
-    # ride the result (the release_cached convention). At warehouse
+    # is scanned once and `right` derives from the cache). At warehouse
     # scale the equivalent is staging the projected snapshots to a temp
     # table before reconciling.
-    o = o.persist(StorageLevel.MEMORY_AND_DISK)
-    right = right.persist(StorageLevel.MEMORY_AND_DISK)
+    o = hold(o.persist(StorageLevel.MEMORY_AND_DISK))
+    right = hold(right.persist(StorageLevel.MEMORY_AND_DISK))
     buckets = 16
     cols = ["o_orderstatus", "o_totalprice"]
     cs_l = table_checksum_by(o, "o_orderkey", cols, buckets=buckets)
@@ -566,13 +566,11 @@ def q_pipeline_reconcile(spark, sf_dir):
         ).select("bucket").distinct().collect()
     )
     bexpr = hash_bucket_expr(F.col("o_orderkey"), buckets)
-    out = table_diff(
+    return table_diff(
         o.where(bexpr.isin(dirty)),
         right.where(bexpr.isin(dirty)),
         ["o_orderkey"], cols,
     )
-    out._psf_cached = [o, right]
-    return out
 
 
 def q_sketch_cms(spark, sf_dir):
@@ -1485,10 +1483,8 @@ def q_pipeline_training_set(spark, sf_dir):
         .where((F.col("n_tokens") >= 5) & (F.col("lang_pred") == "en"))
         .join(F.broadcast(dupes), "doc_id", "left_anti")
     )
-    out = assign_splits(kept.select("doc_id"), "doc_id",
-                        {"train": 0.8, "val": 0.1, "test": 0.1})
-    out._psf_cached = list(getattr(dup_pairs, "_psf_cached", []) or [])
-    return out
+    return assign_splits(kept.select("doc_id"), "doc_id",
+                         {"train": 0.8, "val": 0.1, "test": 0.1})
 
 
 def q_orc_roundtrip(spark, sf_dir):
@@ -1558,10 +1554,7 @@ def q_val_quarantine(spark, sf_dir):
         return d.select("o_orderkey", "o_totalprice", "o_orderpriority",
                         F.lit(side).alias("side"))
 
-    out = pick(clean, "clean").unionByName(pick(quar, "quarantined"))
-    # carry split()'s persisted key-set handle so harnesses can release it
-    out._psf_cached = getattr(clean, "_psf_cached", [])
-    return out
+    return pick(clean, "clean").unionByName(pick(quar, "quarantined"))
 
 
 def q_stats_profile(spark, sf_dir):
@@ -1702,7 +1695,6 @@ def q_pipeline_embed_dedup(spark, sf_dir):
     engines. Runs uncapped per the dedup_window/None convention (the
     capped default is the production path; the cap rule is
     pytest-locked in test_cosine_lsh)."""
-    from pandasschema_spark.operators.dedup import _attach_cached
     from pandasschema_spark.operators.similarity import (
         cosine_lsh_candidates, dot_expr, norm_expr)
 
@@ -1718,11 +1710,10 @@ def q_pipeline_embed_dedup(spark, sf_dir):
                        F.col("embedding").alias("__vb__"))
     cos = (dot_expr(F.col("__va__"), F.col("__vb__"))
            / (norm_expr(F.col("__va__")) * norm_expr(F.col("__vb__"))))
-    out = (cands.join(va, "id_a").join(vb, "id_b")
-           .select("id_a", "id_b",
-                   F.floor(cos * 1e6).cast("long").alias("cos_e6"))
-           .where(F.col("cos_e6") >= 900_000))
-    return _attach_cached(out, getattr(cands, "_psf_cached", []))
+    return (cands.join(va, "id_a").join(vb, "id_b")
+            .select("id_a", "id_b",
+                    F.floor(cos * 1e6).cast("long").alias("cos_e6"))
+            .where(F.col("cos_e6") >= 900_000))
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -1758,15 +1749,13 @@ def q_clips_validate(spark, sf_dir):
     # persist the generated table: the violations union consumes it 4x
     # (row-local branch, both sides of the uniqueness check, the
     # referential anti-join) and each consumer would otherwise re-run
-    # the whole sha256 synthesis mapInPandas. Handle rides the result
-    # (release_cached convention). The warehouse-scale equivalent is
-    # validating a materialized table, which the headline bench does.
-    df = clips_df(spark, CLIPS_N, seed=42, with_audio=False, partitions=32) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # the whole sha256 synthesis mapInPandas. The warehouse-scale
+    # equivalent is validating a materialized table, which the headline
+    # bench does.
+    df = hold(clips_df(spark, CLIPS_N, seed=42, with_audio=False, partitions=32)
+              .persist(StorageLevel.MEMORY_AND_DISK))
     res = validate_clips(df, codec_dim(spark), with_pcm_checks=False)
-    out = res.violations.select(*VIOLATION_COLS)
-    out._psf_cached = [df]
-    return out
+    return res.violations.select(*VIOLATION_COLS)
 
 
 def q_streaming_validate(spark, sf_dir):
@@ -1827,12 +1816,10 @@ def q_clips_pcm_validate(spark, sf_dir):
 
     # persist: the violations union reads the generated table 4x and the
     # PCM synthesis is the expensive part (q_clips_validate note)
-    df = clips_df(spark, 2000, seed=42, with_audio=True, partitions=32) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    df = hold(clips_df(spark, 2000, seed=42, with_audio=True, partitions=32)
+              .persist(StorageLevel.MEMORY_AND_DISK))
     res = validate_clips(df, codec_dim(spark), with_pcm_checks=True)
-    out = res.violations.select(*VIOLATION_COLS)
-    out._psf_cached = [df]
-    return out
+    return res.violations.select(*VIOLATION_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -2348,12 +2335,12 @@ def q_sample_stratified(spark, sf_dir):
 def q_val_distinct_multi(spark, sf_dir):
     """Composite-key uniqueness — the multi-column extension of V8: the
     (l_partkey, l_suppkey) pair must be unique (it is not — the pair
-    repeats across orders), via the same salted two-phase hash-agg +
+    repeats across orders), via the same map-side-combined hash-agg +
     broadcast join-back plan on a fused concat key. Keep-first: the
     minimum row key per duplicate pair survives."""
     df = _t(spark, sf_dir, "lineitem").withColumn(
         "ps_key", F.concat_ws(":", "l_partkey", "l_suppkey"))
-    schema = Schema([Column("ps_key", [IsDistinctValidation(salt_buckets=32)])])
+    schema = Schema([Column("ps_key", [IsDistinctValidation()])])
     return _violations(schema, df, ["ps_key"], F.expr(LINEITEM_ROW))
 
 
@@ -2402,10 +2389,8 @@ def q_pipeline_balanced_set(spark, sf_dir):
     dup_pairs = exact_duplicate_ids(bal, "text", "doc_id")
     dup = dup_pairs.select(F.col("id").alias("doc_id"))
     kept = bal.join(F.broadcast(dup), "doc_id", "left_anti")
-    out = assign_splits(kept.select("doc_id", "lang"), "doc_id",
-                        {"train": 0.9, "val": 0.1})
-    out._psf_cached = list(getattr(dup_pairs, "_psf_cached", []) or [])
-    return out
+    return assign_splits(kept.select("doc_id", "lang"), "doc_id",
+                         {"train": 0.9, "val": 0.1})
 
 
 def q_heavy_hitters_by(spark, sf_dir):
@@ -2867,7 +2852,6 @@ def q_pipeline_timeline_health(spark, sf_dir):
     aggregate frames. The dashboard a pipeline on-call reads first —
     and a semantic drift in ANY of the four operators moves a
     column."""
-    from pandasschema_spark.operators.dedup import release_cached
     from pandasschema_spark.operators.drift import chi_square_onset, ks_onset
     from pandasschema_spark.operators.referential import orphan_rate_timeline
     from pandasschema_spark.operators.sessions import _epoch_us
@@ -2887,15 +2871,10 @@ def q_pipeline_timeline_health(spark, sf_dir):
         _t(spark, sf_dir, "customer").where(F.col("c_custkey") < 100),
         "c_custkey", bucket_s=86_400).select(
         "bucket_start", "n_rows", "orphan_ppm")
-    out = (orph.join(chi, "bucket_start").join(ks, "bucket_start")
-           .select("bucket_start", F.col("n_rows").alias("n_events"),
-                   "chi2_num", "chi2_den", "ks_num", "ks_den",
-                   "orphan_ppm"))
-    # the sub-operators attach their histogram persists; hand them to
-    # the composed frame so `with released(...)` frees all of them
-    out._psf_cached = (getattr(chi_raw, "_psf_cached", [])
-                       + getattr(ks_raw, "_psf_cached", []))
-    return out
+    return (orph.join(chi, "bucket_start").join(ks, "bucket_start")
+            .select("bucket_start", F.col("n_rows").alias("n_events"),
+                    "chi2_num", "chi2_den", "ks_num", "ks_den",
+                    "orphan_ppm"))
 
 
 def q_orphan_rate_timeline(spark, sf_dir):
@@ -3710,9 +3689,9 @@ def q_stats_format_mask(spark, sf_dir):
     # instead of melting the corpus a second time; per-column totals are
     # unchanged by the regrouping, so share_ppm uses the operator's
     # identical n_rows * denom div total rule. Persisted because both
-    # variants read it; handle rides the result.
-    b = format_mask_profile(o, cols, collapse_runs=False).persist(
-        StorageLevel.MEMORY_AND_DISK)
+    # variants read it.
+    b = hold(format_mask_profile(o, cols, collapse_runs=False).persist(
+        StorageLevel.MEMORY_AND_DISK))
     collapsed_mask = F.regexp_replace(
         F.regexp_replace(F.col("mask"), "9+", "9"), "A+", "A")
     a = (b.groupBy("column", collapsed_mask.alias("mask"))
@@ -3723,10 +3702,8 @@ def q_stats_format_mask(spark, sf_dir):
                  F.expr("n_rows * 1000000 div __t__").cast("long")
                   .alias("share_ppm"))
          .withColumn("variant", F.lit("collapsed")))
-    out = (a.unionByName(b.withColumn("variant", F.lit("exact")))
-           .select("variant", "column", "mask", "n_rows", "share_ppm"))
-    out._psf_cached = [b]
-    return out
+    return (a.unionByName(b.withColumn("variant", F.lit("exact")))
+            .select("variant", "column", "mask", "n_rows", "share_ppm"))
 
 
 def q_key_discovery(spark, sf_dir):
@@ -3870,8 +3847,8 @@ def q_pipeline_corpus_curation(spark, sf_dir):
     # AND the canonical label join, and each replay rebuilds the page
     # construction + boilerplate-gate join from the parquet scan
     from pyspark.storagelevel import StorageLevel as _SL
-    kept = corpus.join(kept_ids, "doc_id").withColumn(
-        "n_chars", F.length("text")).persist(_SL.MEMORY_AND_DISK)
+    kept = hold(corpus.join(kept_ids, "doc_id").withColumn(
+        "n_chars", F.length("text")).persist(_SL.MEMORY_AND_DISK))
     pairs = exact_duplicate_ids(kept, "text", "doc_id")
     reps = canonical_representatives(kept.select("doc_id", "text", "n_chars",
                                                  "lang"),
@@ -3881,17 +3858,10 @@ def q_pipeline_corpus_curation(spark, sf_dir):
                                      # exact-dup pairs are min-rooted
                                      # stars -> skip the CC closure jobs
                                      pairs_are_stars=True)
-    out = (reps.groupBy("lang")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_members").cast("long").alias("n_members"),
-                F.sum("n_chars").cast("long").alias("sum_chars")))
-    # re-attach the sub-operator persist handles to the composed frame
-    # (the pipeline_timeline_health convention): one released() frees all
-    # — reps carries the exact-dedup digest persist via the cc frame
-    out._psf_cached = (list(getattr(bp, "_psf_cached", []) or [])
-                       + list(getattr(reps, "_psf_cached", []) or [])
-                       + [kept])
-    return out
+    return (reps.groupBy("lang")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
+                 F.sum("n_members").cast("long").alias("n_members"),
+                 F.sum("n_chars").cast("long").alias("sum_chars")))
 
 
 def q_dedup_canonical(spark, sf_dir):

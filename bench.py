@@ -396,7 +396,7 @@ def _query_phase():
     warm_workers(spark, CPUS)
     import __spark_entry__ as E
 
-    from pandasschema_spark.operators.dedup import release_cached
+    from pandasschema_spark.resources import scope
 
     qs = E.queries()
     missing = [n for n in BENCH_QUERIES if n not in qs]
@@ -404,18 +404,16 @@ def _query_phase():
         raise KeyError("BENCH_QUERIES not in queries(): {}".format(missing))
     all_cpus = list(range(os.cpu_count() or CPUS))
     for name in BENCH_QUERIES:  # warm pass: parquet footers, codegen, plans
-        d = qs[name](spark, SF_DIR)
-        d.count()
-        release_cached(d)  # each invocation attaches fresh persists
+        with scope():  # each invocation pins fresh persists
+            qs[name](spark, SF_DIR).count()
     q_samples = {name: [] for name in BENCH_QUERIES}
     for _ in range(Q_ROUNDS):
         for name in BENCH_QUERIES:
             steal0, busy0 = _cpu_ticks(all_cpus)
             t0 = time.time()
-            d = qs[name](spark, SF_DIR)
-            d.count()
-            sec = round(time.time() - t0, 3)
-            release_cached(d)
+            with scope():
+                qs[name](spark, SF_DIR).count()
+                sec = round(time.time() - t0, 3)
             steal1, busy1 = _cpu_ticks(all_cpus)
             tot = (busy1 - busy0) + (steal1 - steal0)
             q_samples[name].append({

@@ -37,16 +37,15 @@ def mode_plans(suffix: str) -> None:
     spark = make_session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
-    from pandasschema_spark.operators.dedup import release_cached
+    from pandasschema_spark.resources import scope
 
     qs = E.queries()
     outdir = os.path.join(REPO, "plans", "r07")
     os.makedirs(outdir, exist_ok=True)
     for name in BENCH_QUERIES:
         t0 = time.time()
-        d = qs[name](spark, SF_DIR)
-        plan = _capture_plan(d)
-        release_cached(d)
+        with scope():
+            plan = _capture_plan(qs[name](spark, SF_DIR))
         with open(os.path.join(outdir, "{}_{}.txt".format(name, suffix)), "w") as fh:
             fh.write(plan)
         print("{}: plan captured ({:.1f}s build)".format(name, time.time() - t0),
@@ -59,24 +58,22 @@ def mode_time(rounds: int, only: list | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     warm_workers(spark, CPUS)
     import __spark_entry__ as E
-    from pandasschema_spark.operators.dedup import release_cached
+    from pandasschema_spark.resources import scope
 
     qs = E.queries()
     names = only or BENCH_QUERIES
     all_cpus = list(range(os.cpu_count() or CPUS))
     for name in names:  # warm pass
-        d = qs[name](spark, SF_DIR)
-        d.count()
-        release_cached(d)
+        with scope():
+            qs[name](spark, SF_DIR).count()
     samples = {n: [] for n in names}
     for _ in range(rounds):
         for name in names:
             steal0, busy0 = _cpu_ticks(all_cpus)
             t0 = time.time()
-            d = qs[name](spark, SF_DIR)
-            d.count()
-            sec = round(time.time() - t0, 3)
-            release_cached(d)
+            with scope():
+                qs[name](spark, SF_DIR).count()
+                sec = round(time.time() - t0, 3)
             steal1, busy1 = _cpu_ticks(all_cpus)
             tot = (busy1 - busy0) + (steal1 - steal0)
             samples[name].append({

@@ -24,8 +24,6 @@ shuffle.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -146,8 +144,7 @@ def transcript_oracle_validation(seed: int = 42) -> CustomRowValidation:
     return out
 
 
-def clips_schema(codec_dim_df=None, *, seed: int = 42, with_pcm_checks: bool = True,
-                 salt_buckets: int = 64) -> Schema:
+def clips_schema(codec_dim_df=None, *, seed: int = 42, with_pcm_checks: bool = True) -> Schema:
     """The full constraint suite as a Schema over the 6 public clip columns."""
     codec_checks = [InListValidation(["pcm_s16le", "flac", "opus", "mp3"])]
     if codec_dim_df is not None:
@@ -169,7 +166,7 @@ def clips_schema(codec_dim_df=None, *, seed: int = 42, with_pcm_checks: bool = T
     return Schema([
         Column("clip_id", [
             MatchesPatternValidation(r"^clip_\d{12}$"),
-            IsDistinctValidation(salt_buckets=salt_buckets),
+            IsDistinctValidation(),
         ]),
         Column("bytes", bytes_checks),
         Column("sr_hz", [InListValidation(ALLOWED_SR)]),
@@ -182,45 +179,11 @@ def clips_schema(codec_dim_df=None, *, seed: int = 42, with_pcm_checks: bool = T
 PUBLIC_COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
 
 
-#: Arrow-UDF stage task sizing: when set (> 0), the scan is coalesced
-#: (no shuffle) to this many tasks per available core before validation.
-#: Every task of a Python-UDF stage pays a fixed JVM<->worker cost
-#: (Arrow stream setup, worker checkout, eval plumbing — ~10 ms
-#: measured); a parquet layout that splits into many small scan tasks
-#: (8 MB splits of a multi-GB warehouse = ~700 tasks) turns that into
-#: the dominant suite cost. 4 waves per slot measured best on every
-#: width (sweep 1/2/4/8/16): 800k-clip full-suite pass 13.7 s -> 6.5 s
-#: at 16 slots, violation set identical; derived from
-#: defaultParallelism, never a constant.
-#:
-#: DEFAULT OFF (0) in this sandbox, deliberately: the repo's N->4N
-#: strong-scaling proxy runs the suite at walls of ~10-25 s, where
-#: removing ~7 s of perfectly-parallel per-task overhead from both legs
-#: exposes the fixed per-pass serial cost (read + plan build + stage
-#: orchestration, measured 2-5 s, co-tenant-dependent) and the measured
-#: efficiency ratio drops below the 0.8 criterion even though every
-#: leg's absolute wall improves 1.8-2.4x (Amdahl on the proxy's
-#: fixed-size legs, not an engine property — full numbers in
-#: OPTIMIZATION_r07.md). On a real cluster, where a validation stage
-#: runs for minutes and the driver cost is noise, set
-#: SPARK_GRAFT_UDF_WAVES=4.
-COALESCE_WAVES_PER_SLOT = int(os.environ.get("SPARK_GRAFT_UDF_WAVES", "0"))
-
-
 def validate_clips(df, codec_dim_df=None, *, seed: int = 42,
                    with_pcm_checks: bool = True, row_key: str = "row_ord") -> ValidationResult:
     """Run the suite; df may carry extra warehouse columns (row_ord,
     bucket) — validation is scoped to the 6 public columns via subset.
-
-    When ``row_key`` is a stored column (partitioning-independent row
-    identity) and ``COALESCE_WAVES_PER_SLOT`` is enabled, the input is
-    coalesced to that many tasks per core so the Arrow-UDF stage runs
-    few large tasks instead of hundreds of small ones (see the
-    constant's note). ``row_key=None`` always skips it: read-order
-    ordinals depend on the scan partitioning."""
-    if row_key is not None and COALESCE_WAVES_PER_SLOT > 0:
-        target = max(
-            COALESCE_WAVES_PER_SLOT * df.sparkSession.sparkContext.defaultParallelism, 1)
-        df = df.coalesce(target)  # no-op when df already has <= target partitions
+    ``row_key`` names a stored column with partitioning-independent row
+    identity; ``None`` numbers rows in read order."""
     schema = clips_schema(codec_dim_df, seed=seed, with_pcm_checks=with_pcm_checks)
     return schema.validate(df, columns=PUBLIC_COLUMNS, row_key=row_key)

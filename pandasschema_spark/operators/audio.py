@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..resources import hold
+
 AUDIO_STATS_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType(), False),
     T.StructField("n_samples", T.LongType(), False),
@@ -707,22 +709,17 @@ def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
        in centi-dB (integer) for cross-engine hashing.
 
     Returns (clip_a < clip_b, snr_centi_db), one row per verified pair.
-    The slim fingerprint table's persist handle is attached to the result
-    (call operators.dedup.release_cached(result) in long-lived sessions).
     """
     from pyspark import StorageLevel
-
-    from .dedup import _attach_cached
 
     # slim pass (~40 B/row, no bytes) persisted because three consumers
     # read it (bucket counts, candidate ids, and their join); persisting
     # the corpus BYTES instead would be memory-hostile — the raw bytes are
     # re-read from the source scan only for candidate rows below. At
     # warehouse scale the persist's equivalent is staging the fingerprint
-    # table to a temp table. Handle attached (df._psf_cached): call
-    # operators.dedup.release_cached(result) in long-lived sessions.
-    fps = _fingerprint_pass(df, id_col, bytes_col, sr_col,
-                            carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK)
+    # table to a temp table.
+    fps = hold(_fingerprint_pass(df, id_col, bytes_col, sr_col,
+                                 carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK))
 
     counts = fps.groupBy("fingerprint").count()
     dup_fp = counts.where(F.col("count") >= 2)
@@ -772,9 +769,8 @@ def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
             yield pd.DataFrame({"clip_a": keep_a, "clip_b": keep_b,
                                 "snr_centi_db": keep_snr})
 
-    out = cand.select("clip_a", "clip_b", "bytes_a", "bytes_b").mapInPandas(
+    return cand.select("clip_a", "clip_b", "bytes_a", "bytes_b").mapInPandas(
         verify, DUP_PAIRS_SCHEMA)
-    return _attach_cached(out, [fps])
 
 
 INCR_PAIRS_SCHEMA = T.StructType([
@@ -812,8 +808,7 @@ def acoustic_incremental_pairs(
     differently than the batch run's).
 
     Scale shape: one narrow fingerprint pass over the new batch
-    (persisted — two consumers; handle attached, release via
-    operators.dedup.release_cached); bucket counting is a
+    (persisted — two consumers); bucket counting is a
     map-side-combined tagged-union agg over SLIM rows; candidate
     fingerprints broadcast back against both slim tables; candidate
     BYTES are fetched by broadcast id-joins against the two source
@@ -824,11 +819,9 @@ def acoustic_incremental_pairs(
     """
     from pyspark import StorageLevel
 
-    from .dedup import _attach_cached
-
-    new_fps = _fingerprint_pass(
+    new_fps = hold(_fingerprint_pass(
         new_df, id_col, bytes_col, sr_col,
-        carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK)
+        carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK))
 
     tagged = (store_fps.select("fingerprint")
               .withColumn("__new__", F.lit(0))
@@ -879,9 +872,8 @@ def acoustic_incremental_pairs(
             yield pd.DataFrame({"clip_store": keep_s, "clip_new": keep_n,
                                 "snr_centi_db": keep_snr})
 
-    out = pairs.select("clip_store", "clip_new", "bytes_store",
-                       "bytes_new").mapInPandas(verify, INCR_PAIRS_SCHEMA)
-    return _attach_cached(out, [new_fps])
+    return pairs.select("clip_store", "clip_new", "bytes_store",
+                        "bytes_new").mapInPandas(verify, INCR_PAIRS_SCHEMA)
 
 
 def speech_rate(

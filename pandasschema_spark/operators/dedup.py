@@ -23,7 +23,6 @@ SURVEY.md §2.4). Design targets the 100 TB documents table:
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import typing
 
@@ -31,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from ..functions.exact import floor_div
+from ..resources import hold
 from pyspark.storagelevel import StorageLevel
 
 from .text import normalized_text_expr
@@ -46,39 +46,6 @@ MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne)
 #: Pass ``None`` explicitly for exactness (small corpora / audits).
 DEFAULT_MAX_GRAM_DF = 10_000
 DEFAULT_MAX_BUCKET = 10_000
-
-
-def release_cached(df: DataFrame) -> None:
-    """Release the intermediate resources an operator attached to its
-    result for its own multi-consumer plan (``df._psf_cached``): persisted
-    DataFrames are unpersisted, SparkContext broadcasts (the bloom screen's
-    bitmap) are destroyed. Call after the downstream action completes;
-    idempotent, and a no-op for un-annotated frames."""
-    for cached in getattr(df, "_psf_cached", []) or []:
-        if hasattr(cached, "destroy"):  # SparkContext broadcast
-            cached.destroy()
-        else:
-            cached.unpersist()
-    if getattr(df, "_psf_cached", None):
-        df._psf_cached = []
-
-
-@contextlib.contextmanager
-def released(df: DataFrame):
-    """Context manager: ``with released(op(...)) as df: df.action()`` —
-    guarantees the operator's attached persists/broadcasts are freed when
-    the block exits, so long-lived sessions (notebooks, the check_queries
-    harness, streaming drivers) don't accumulate pinned storage across
-    repeated operator calls."""
-    try:
-        yield df
-    finally:
-        release_cached(df)
-
-
-def _attach_cached(out: DataFrame, deps: typing.List) -> DataFrame:
-    out._psf_cached = deps
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -100,25 +67,23 @@ def exact_duplicate_ids(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     duplicate-digest aggregation and the join-back, and without the cache
     the corpus is scanned twice with the normalize+md5 projection
     recomputed per side (measured 4 parquet scans for a union corpus).
-    The handle rides the result (``_psf_cached`` — release via
-    ``release_cached``/``released``); at warehouse scale the equivalent
-    is staging the digest projection to a temp table.
+    At warehouse scale the equivalent is staging the digest projection
+    to a temp table.
     """
     digest = F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8"))
-    base = df.select(F.col(id_col).alias("id"), digest.alias("__fp__")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    base = hold(df.select(F.col(id_col).alias("id"), digest.alias("__fp__"))
+                .persist(StorageLevel.MEMORY_AND_DISK))
     dupes = (
         base.groupBy("__fp__")
         .agg(F.count(F.lit(1)).alias("__c__"), F.min("id").alias("keep_id"))
         .where(F.col("__c__") > 1)
         .select("__fp__", "keep_id")
     )
-    out = (
+    return (
         base.join(F.broadcast(dupes), "__fp__")
         .where(F.col("id") != F.col("keep_id"))
         .select("id", "keep_id")
     )
-    return _attach_cached(out, [base])
 
 
 # ---------------------------------------------------------------------------
@@ -202,17 +167,15 @@ def ngram_jaccard_pairs(
     # size and hot-gram aggregations — without it the text->ngram->md5
     # pipeline runs per consumer (column renames on the join sides defeat
     # Spark's exchange reuse). At warehouse scale the equivalent is
-    # staging grams to a temp table. The handle is attached to the result
-    # (df._psf_cached) — call release_cached(result) after the downstream
-    # action to free executors.
-    cached = grams = doc_grams(df, text_col, id_col, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # staging grams to a temp table.
+    grams = hold(doc_grams(df, text_col, id_col, n)
+                 .persist(StorageLevel.MEMORY_AND_DISK))
     # persist the slim (id, n_grams) aggregate: it feeds TWO broadcast
     # join-backs (n_a and n_b), and each broadcast build otherwise
     # replays the full groupBy(id) exchange over the gram frame — one
     # agg instead of two, O(docs) slim rows cached
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sizes = hold(grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
+                 .persist(StorageLevel.MEMORY_AND_DISK))
     if max_gram_df is not None:
         # hot-gram cap as groupBy-count + BROADCAST ANTI-JOIN (the house
         # cap shape, same as lsh/sessionize/entity): the hot set is
@@ -237,7 +200,7 @@ def ngram_jaccard_pairs(
     # measured 7.3s -> 2.3s interleaved on the dedup_clusters corpus).
     # Partition skew is bounded by the cap; at warehouse scale the
     # equivalent is staging the capped index bucketed by gram.
-    grams = grams.repartition("gram").persist(StorageLevel.MEMORY_AND_DISK)
+    grams = hold(grams.repartition("gram").persist(StorageLevel.MEMORY_AND_DISK))
     a = grams.select(F.col("id").alias("id_a"), "gram")
     b = grams.select(F.col("id").alias("id_b"), "gram")
     common = (
@@ -249,13 +212,12 @@ def ngram_jaccard_pairs(
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
     jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    out = (
+    return (
         common.join(sa, "id_a")
         .join(sb, "id_b")
         .where(jacc >= threshold)
         .select("id_a", "id_b", "n_common", "n_a", "n_b")
     )
-    return _attach_cached(out, [cached, sizes, grams])
 
 
 # ---------------------------------------------------------------------------
@@ -380,11 +342,9 @@ def lsh_candidate_pairs(
     assert k % bands == 0, "k must divide evenly into bands"
     r = k // bands
     # persist: both self-join sides would otherwise recompute the whole
-    # ngram->md5->k-fold signature pipeline (the expensive part); handle
-    # attached to the result — release_cached(result) when done.
-    sigs = minhash_signatures(df, text_col, id_col, n=n, k=k, impl=impl).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # ngram->md5->k-fold signature pipeline (the expensive part)
+    sigs = hold(minhash_signatures(df, text_col, id_col, n=n, k=k, impl=impl)
+                .persist(StorageLevel.MEMORY_AND_DISK))
     banded = _banded_sigs(sigs, bands, r)
     if max_bucket is not None:
         hot = (
@@ -404,13 +364,12 @@ def lsh_candidate_pairs(
     # subtree (the gram index case).
     a = banded.select("band_idx", "band_key", F.col("id").alias("id_a"))
     b = banded.select("band_idx", "band_key", F.col("id").alias("id_b"))
-    out = (
+    return (
         a.join(b, ["band_idx", "band_key"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    return _attach_cached(out, [sigs])
 
 
 def _banded_sigs(sigs: DataFrame, bands: int, r: int) -> DataFrame:
@@ -466,9 +425,8 @@ def incremental_lsh_pairs(
     """
     assert k % bands == 0, "k must divide evenly into bands"
     r = k // bands
-    new_sigs = minhash_signatures(new_df, text_col, id_col, n=n, k=k, impl=impl).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    new_sigs = hold(minhash_signatures(new_df, text_col, id_col, n=n, k=k, impl=impl)
+                    .persist(StorageLevel.MEMORY_AND_DISK))
     nb = _banded_sigs(new_sigs, bands, r)
     sb = _banded_sigs(store_sigs, bands, r)
     if max_bucket is not None:
@@ -482,14 +440,13 @@ def incremental_lsh_pairs(
         )
         nb = nb.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
         sb = sb.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
-    out = (
+    return (
         nb.select("band_idx", "band_key", F.col("id").alias("id_new"))
         .join(sb.select("band_idx", "band_key", F.col("id").alias("id_store")),
               ["band_idx", "band_key"])
         .select("id_new", "id_store")
         .distinct()
     )
-    return _attach_cached(out, [new_sigs])
 
 
 def minhash_dedup_pairs(
@@ -509,13 +466,12 @@ def minhash_dedup_pairs(
     cands = lsh_candidate_pairs(
         df, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
     )
-    grams = doc_grams(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
+    grams = hold(doc_grams(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK))
     # one agg, two broadcast join-backs: persist the slim (id, n_grams)
     # frame so each build reads the cache instead of replaying the
     # groupBy(id) exchange (same rationale as ngram_jaccard_pairs)
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    cached = list(getattr(cands, "_psf_cached", [])) + [grams, sizes]
+    sizes = hold(grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
+                 .persist(StorageLevel.MEMORY_AND_DISK))
     ga = grams.select(F.col("id").alias("id_a"), F.col("gram").alias("g_a"))
     gb = grams.select(F.col("id").alias("id_b"), F.col("gram").alias("g_b"))
     common = (
@@ -528,12 +484,11 @@ def minhash_dedup_pairs(
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
     jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    out = (
+    return (
         common.join(sa, "id_a").join(sb, "id_b")
         .where(jacc >= threshold)
         .select("id_a", "id_b", "n_common", "n_a", "n_b")
     )
-    return _attach_cached(out, cached)
 
 
 # ---------------------------------------------------------------------------
@@ -625,8 +580,8 @@ def simhash_candidates(
         # a non-divisor silently drops the top signature bits from every
         # chunk and voids the Hamming-ball recall guarantee
         raise ValueError("chunk_bits must divide 64")
-    sigs = simhash64(df, text_col, id_col, n=n, impl=impl).persist(StorageLevel.MEMORY_AND_DISK)
-    # handle attached to the result — release_cached(result) when done
+    sigs = hold(simhash64(df, text_col, id_col, n=n, impl=impl)
+                .persist(StorageLevel.MEMORY_AND_DISK))
     n_chunks = 64 // chunk_bits
     mask = (1 << chunk_bits) - 1
     chunked = sigs.select(
@@ -640,13 +595,12 @@ def simhash_candidates(
     )
     a = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_a"))
     b = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_b"))
-    out = (
+    return (
         a.join(b, ["chunk_idx", "chunk_val"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    return _attach_cached(out, [sigs])
 
 
 def contamination_check(
@@ -695,8 +649,9 @@ def contamination_check(
     # the per-eval-doc gram count is ROW-LOCAL: doc_grams explodes the
     # already-distinct word_ngrams_expr array, so n_grams == size(array)
     # — no second explode pass and no groupBy(id) exchange over the
-    # eval gram frame (NULL-text rows produce a NULL size and are
-    # dropped by the inner join below, exactly as explode dropped them)
+    # eval gram frame. A NULL-text row's size may read -1 rather than
+    # NULL; either way it has no grams, so it never reaches ``shared``
+    # and the inner join against ``shared`` drops it
     sizes = eval_df.select(
         F.col(id_col).alias("id"),
         F.size(word_ngrams_expr(F.col(text_col), n)).alias("n_grams"))
@@ -836,8 +791,8 @@ def containment_pairs(
     # groupBy-count + broadcast anti-join (house cap shape; the previous
     # inner join against the <=cap gram table broadcast the near-complete
     # distinct-gram frame — unbroadcastable at web scale)
-    cached = grams = doc_grams(df, text_col, id_col, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    grams = hold(doc_grams(df, text_col, id_col, n)
+                 .persist(StorageLevel.MEMORY_AND_DISK))
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     if max_gram_df is not None:
         hot = (
@@ -848,7 +803,7 @@ def containment_pairs(
         grams = grams.join(F.broadcast(hot), "gram", "left_anti")
     # co-partitioned cached index, zero-exchange self-join (see
     # ngram_jaccard_pairs — same measured rationale)
-    grams = grams.repartition("gram").persist(StorageLevel.MEMORY_AND_DISK)
+    grams = hold(grams.repartition("gram").persist(StorageLevel.MEMORY_AND_DISK))
     a = grams.select(F.col("id").alias("id_a"), "gram")
     b = grams.select(F.col("id").alias("id_b"), "gram")
     common = (
@@ -860,7 +815,7 @@ def containment_pairs(
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
     small = F.least(F.col("n_a"), F.col("n_b"))
-    out = (
+    return (
         common.join(sa, "id_a")
         .join(sb, "id_b")
         .where(F.col("n_common") * 1_000_000 >= F.lit(threshold_ppm) * small)
@@ -871,7 +826,6 @@ def containment_pairs(
              .alias("containment_ppm"),
         )
     )
-    return _attach_cached(out, [cached, sizes, grams])
 
 
 def source_dup_matrix(
@@ -915,7 +869,7 @@ def source_dup_matrix(
     # anti-join, the size agg and both self-join sides all read the one
     # cached distinct frame — otherwise the corpus-scanning distinct agg
     # re-runs per consumer
-    cached = pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
     if max_sources_per_content is not None:
         hot = (
             pairs.groupBy("__d__")
@@ -939,7 +893,7 @@ def source_dup_matrix(
     sa = sizes.select(F.col("__s__").alias("source_a"), F.col("n_contents").alias("n_a"))
     sb = sizes.select(F.col("__s__").alias("source_b"), F.col("n_contents").alias("n_b"))
     small = F.least(F.col("n_a"), F.col("n_b"))
-    out = (
+    return (
         shared.join(F.broadcast(sa), "source_a")
         .join(F.broadcast(sb), "source_b")
         .select(
@@ -952,7 +906,6 @@ def source_dup_matrix(
              .alias("share_ppm"),
         )
     )
-    return _attach_cached(out, [cached])
 
 
 def canonical_representatives(
@@ -1016,15 +969,13 @@ def canonical_representatives(
         # contract: ONLY set this when every edge's smaller endpoint is
         # its component's root — arbitrary pair sets (jaccard/LSH
         # output) must keep the connected_components closure.
-        p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+        p = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
         lo, hi = F.least(id_a, id_b), F.greatest(id_a, id_b)
         cc = (
             p.select(hi.alias("id"), lo.alias("cluster_id"))
             .unionAll(p.select(lo.alias("id"), lo.alias("cluster_id")))
             .distinct()
         )
-        cc = _attach_cached(
-            cc, list(getattr(pairs, "_psf_cached", []) or []) + [p])
     else:
         cc = connected_components(pairs, id_a, id_b, max_iter=max_iter)
     labeled = (
@@ -1043,15 +994,11 @@ def canonical_representatives(
     agg = labeled.groupBy("cluster_id").agg(
         packed.alias("__top__"),
         F.count(F.lit(1)).cast("long").alias("n_members"))
-    out = agg.select(
+    return agg.select(
         "cluster_id",
         F.col("__top__.__id__").alias(id_col),
         *[F.col("__top__." + c).alias(c) for c in order_cols + extras],
         "n_members")
-    # carry the pair generator's persist handles through (the cc frame
-    # propagates them from ``pairs``): release_cached(result) must reach
-    # everything the composition pinned
-    return _attach_cached(out, list(getattr(cc, "_psf_cached", []) or []))
 
 
 def windowed_duplicate_ids(
@@ -1209,8 +1156,8 @@ def gram_overlap_score(
 
     Scale shape at 10^12 docs: the shared doc_grams projection
     (codegen shingles) feeds BOTH the gram document-frequency agg and
-    the join-back, so it persists with the release-handle convention
-    (``release_cached(out)`` when done); what shuffles is the exploded
+    the join-back, so it is persisted (held by the caller's
+    ``resources.scope``); what shuffles is the exploded
     (id, gram) frame once for the df agg — with map-side combine — and
     once for the final per-doc count; no pair explosion anywhere, so
     no hot-gram cap is needed (a hot gram costs one counter row, not
@@ -1218,8 +1165,8 @@ def gram_overlap_score(
     """
     if min_gram_df < 2:
         raise ValueError("min_gram_df must be >= 2")
-    grams = doc_grams(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK)
+    grams = hold(doc_grams(df, text_col, id_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK))
     gdf = (grams.groupBy("gram")
            .agg(F.count(F.lit(1)).alias("__df__"))
            .where(F.col("__df__") >= min_gram_df)
@@ -1233,4 +1180,4 @@ def gram_overlap_score(
                           .cast("decimal(38,0)") * 1_000_000,
                           F.count(F.lit(1)).cast("decimal(38,0)"))
                  .alias("overlap_ppm")))
-    return _attach_cached(out, [grams])
+    return out

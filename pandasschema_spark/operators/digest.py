@@ -19,7 +19,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .dedup import _attach_cached
+from ..resources import hold
 
 _MAP_SCHEMA = T.StructType(
     [
@@ -49,9 +49,8 @@ def violations_digest(violations: DataFrame, k: int = 5) -> DataFrame:
     union of per-partition k smallest (any row outside a partition's
     top-k has k smaller rows in that partition alone), and partial
     counts sum to the exact
-    total. The reduced union is persisted (it feeds both the rank window
-    and the totals agg) with the repo's release-handle convention —
-    ``operators.dedup.release_cached(result)`` in long-lived sessions.
+    total. The reduced union is persisted: it feeds both the rank window
+    and the totals agg.
 
     The rank window partitions by check_id over the REDUCED set: at most
     batches x k rows per check land in one task, bounded regardless of how
@@ -92,7 +91,7 @@ def violations_digest(violations: DataFrame, k: int = 5) -> DataFrame:
         cols = [f.name for f in _MAP_SCHEMA.fields]
         yield pd.concat([cand[cols], counts[cols]], ignore_index=True)
 
-    reduced = (
+    reduced = hold(
         violations.select("row", "column", "value", "message", "check_id")
         .mapInPandas(_reduce, schema=_MAP_SCHEMA)
         .persist()
@@ -108,7 +107,7 @@ def violations_digest(violations: DataFrame, k: int = 5) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
     )
-    out = exemplars.join(F.broadcast(totals), "check_id").select(
+    return exemplars.join(F.broadcast(totals), "check_id").select(
         "check_id",
         "column",
         "message",
@@ -117,4 +116,3 @@ def violations_digest(violations: DataFrame, k: int = 5) -> DataFrame:
         "row",
         "value",
     )
-    return _attach_cached(out, [reduced])

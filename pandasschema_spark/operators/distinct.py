@@ -33,7 +33,7 @@ from ..plans.compiler import VIOLATION_SCHEMA, value_repr
 from ..validation import is_numeric_spark_type
 
 
-def duplicate_keys(df: DataFrame, value_col: str, row_col: str, salt_buckets: int = 64) -> DataFrame:
+def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
     """ONE map-side-combined aggregation -> (value, cnt, min_row) for
     cnt > 1. Spark's partial (map-side) hash aggregation already bounds
     any reducer's share of a hot key to one pre-combined row per map
@@ -42,11 +42,10 @@ def duplicate_keys(df: DataFrame, value_col: str, row_col: str, salt_buckets: in
     column meant shuffling the whole (value, ordinal) projection TWICE
     (stage-1 output ~= input rows when values are unique). One
     aggregation halves the shuffle and drops an exchange (and its AQE
-    stage barrier) from every uniqueness check. ``salt_buckets`` is
-    retained for API stability; partial aggregation makes an explicit
-    salt redundant at every scale (a hot value pre-collapses to one
-    partial row per mapper before it ever crosses the wire)."""
-    del salt_buckets  # see docstring: subsumed by map-side partial agg
+    stage barrier) from every uniqueness check; partial aggregation
+    makes an explicit salt redundant at every scale (a hot value
+    pre-collapses to one partial row per mapper before it ever crosses
+    the wire)."""
     base = df.select(F.col(value_col).alias("__v__"), F.col(row_col).cast("long").alias("__r__"))
     return (
         base.groupBy("__v__")
@@ -64,7 +63,6 @@ def distinct_violations(
     message: str,
     check_id: str,
     seq: int,
-    salt_buckets: int = 64,
     broadcast_dupes: bool = True,
     allow_empty: bool = False,
     verify_row_key: bool = False,
@@ -81,7 +79,7 @@ def distinct_violations(
     default: the keeper join itself assumes duplicates are rare, and a
     sound row key makes the guard a no-op)."""
     spark_type = df.schema[value_col].dataType
-    dupes = duplicate_keys(df, value_col, row_col, salt_buckets)
+    dupes = duplicate_keys(df, value_col, row_col)
     if broadcast_dupes:
         dupes = F.broadcast(dupes)
     base = df.select(F.col(value_col).alias("__v__"), F.col(row_col).cast("long").alias("__r__"))

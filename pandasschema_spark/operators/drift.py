@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import stats as _stats
 from ..functions.exact import floor_div
+from ..resources import hold
 from ..validation_warning import ValidationWarning
 
 
@@ -370,7 +371,7 @@ def chi_square_onset(
     hist = (df.where(F.col(ts_col).isNotNull() & F.col(column).isNotNull())
               .groupBy(bucket, F.col(column).alias("__cat__"))
               .agg(F.count(F.lit(1)).alias("__a__")))
-    hist = hist.persist()
+    hist = hold(hist.persist())
     # all further inputs derive from the aggregated histogram: O(buckets
     # x categories) rows, no second raw scan
     cat_tot = hist.groupBy("__cat__").agg(F.sum("__a__").alias("__g__"))
@@ -398,9 +399,7 @@ def chi_square_onset(
                  .alias("n_rest"),
                 F.sum(num_j).cast("long").alias("chi2_num"),
                 F.first(na * nb).cast("long").alias("chi2_den")))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [hist])
+    return out
 
 
 def ks_onset(
@@ -444,7 +443,7 @@ def ks_onset(
     hist = (df.where(F.col(ts_col).isNotNull() & F.col(column).isNotNull())
               .groupBy(bucket, F.col(column).alias("__v__"))
               .agg(F.count(F.lit(1)).alias("__a__")))
-    hist = hist.persist()
+    hist = hold(hist.persist())
     val_tot = hist.groupBy("__v__").agg(F.sum("__a__").alias("__g__"))
     buck_tot = hist.groupBy("bucket_start").agg(F.sum("__a__").alias("__na__"))
     grand = val_tot.agg(F.sum("__g__").alias("__n__"))
@@ -473,9 +472,7 @@ def ks_onset(
                  .alias("n_rest"),
                 F.max(gap).cast("long").alias("ks_num"),
                 F.first(na * nb).cast("long").alias("ks_den")))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [hist])
+    return out
 
 
 def embedding_centroid_drift(

@@ -27,10 +27,9 @@ scale uses:
 
 The normalized/blocked frame is consumed by the hot-block count AND
 both self-join sides, so :func:`blocked_pairs` persists it once
-(MEMORY_AND_DISK) instead of re-scanning the corpus ~4x; results carry
-the repo's release-handle convention (``operators.dedup.release_cached``
-/ ``with released(...)``) — :func:`resolve_entities` releases it
-internally once the closure has materialized.
+(MEMORY_AND_DISK) instead of re-scanning the corpus ~4x;
+:func:`resolve_entities` unpersists it itself once the closure has
+materialized.
 
 Determinism: normalization, blocking, the levenshtein predicate and
 min-id closure are pure functions of the data — the DuckDB oracle
@@ -45,7 +44,7 @@ import typing
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .dedup import _attach_cached, release_cached
+from ..resources import hold
 from .graph import connected_components
 
 #: default hot-block cap, consistent with the dedup family's
@@ -113,9 +112,7 @@ def blocked_pairs(
     """(id_a, id_b) with id_a < id_b: pairs whose normalized names share
     a ``block_len``-char prefix and sit within ``max_dist`` edits. The
     match-candidate stage on its own — feed a human review queue, or
-    :func:`resolve_entities` for the full closure. The result carries a
-    persist handle for the blocked frame (release via
-    ``operators.dedup.release_cached`` / ``with released(...):``).
+    :func:`resolve_entities` for the full closure.
 
     Plan shape (locked by tests/test_plan_quality.py): an equi-join on
     the block key over ONE persisted blocked frame (shuffle/sort-merge —
@@ -123,6 +120,13 @@ def blocked_pairs(
     broadcast LEFT ANTI, and the levenshtein verify as a post-join
     filter inside codegen.
     """
+    pairs, blk = _blocked_pairs(df, name_col, id_col, block_len, max_dist, max_block)
+    hold(blk)
+    return pairs
+
+
+def _blocked_pairs(df, name_col, id_col, block_len, max_dist, max_block):
+    """:func:`blocked_pairs` plus its persisted blocked frame."""
     blk = _normalized_blocks(df, name_col, id_col, block_len).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -147,7 +151,7 @@ def blocked_pairs(
         )
         .select("id_a", "id_b")
     )
-    return _attach_cached(pairs, [blk])
+    return pairs, blk
 
 
 def assign_entities(
@@ -174,17 +178,16 @@ def assign_entities(
     The hot-block cap counts over the UNION of both sides, so a
     boilerplate block is dropped from both — the capped configuration
     is the one the oracle replays. The small NEW side is persisted (it
-    feeds the cap count, the join, and the final spine) and the result
-    carries its release handle; the STORE side deliberately re-scans
-    instead — at 10^12 rows a second pass over a pruned narrow column
-    scan beats caching the whole dictionary. Scale shape: the store
-    shuffles once on the block key (names only, never payloads); a
-    small new batch is broadcast by AQE; the min-agg is map-side
-    combinable.
+    feeds the cap count, the join, and the final spine); the STORE side
+    deliberately re-scans instead — at 10^12 rows a second pass over a
+    pruned narrow column scan beats caching the whole dictionary.
+    Scale shape: the store shuffles once on the block key (names only,
+    never payloads); a small new batch is broadcast by AQE; the min-agg
+    is map-side combinable.
     """
-    nb = _normalized_blocks(new_df, name_col, id_col, block_len).persist(
+    nb = hold(_normalized_blocks(new_df, name_col, id_col, block_len).persist(
         StorageLevel.MEMORY_AND_DISK
-    )
+    ))
     sb = store_df.select(
         normalized_name_expr(F.col(name_col)).alias("snm"),
         F.col(entity_col).cast("long").alias("entity_id"),
@@ -204,12 +207,11 @@ def assign_entities(
         .groupBy("id")
         .agg(F.min("entity_id").alias("entity_id"))
     )
-    out = (
+    return (
         nb.select("id")
         .join(matched, "id", "left")
         .select("id", F.coalesce("entity_id", F.col("id")).alias("entity_id"))
     )
-    return _attach_cached(out, [nb])
 
 
 def resolve_entities(
@@ -225,8 +227,7 @@ def resolve_entities(
     reachable through :func:`blocked_pairs` edges; singletons (and rows
     whose block was capped away) resolve to their own id. The pair
     stage's persist is released internally once the closure has
-    materialized (connected_components is eager), so the result carries
-    no handle.
+    materialized (connected_components is eager).
 
     Blocking recall is intentionally not 1.0 — an edit inside the
     prefix moves a row to a different block, exactly like production
@@ -234,18 +235,15 @@ def resolve_entities(
     comparisons) not by widening the verify. The oracle replays the
     identical blocking so both engines miss the same pairs.
     """
-    pairs = blocked_pairs(
-        df, name_col, id_col,
-        block_len=block_len, max_dist=max_dist, max_block=max_block,
-    )
+    pairs, blk = _blocked_pairs(df, name_col, id_col, block_len, max_dist, max_block)
     # eager star rounds: the edge list is localCheckpointed inside, so
     # the blocked frame is no longer referenced afterwards. finally:
     # a non-convergence RuntimeError must not leak the blocked frame's
-    # persist in a long-lived session (the caller has no handle).
+    # persist in a long-lived session.
     try:
         cc = connected_components(pairs, "id_a", "id_b")
     finally:
-        release_cached(pairs)
+        blk.unpersist()
     return (
         df.select(F.col(id_col).cast("long").alias("id"))
         .join(cc, "id", "left")

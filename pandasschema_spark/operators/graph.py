@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..resources import hold
+
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Distinct (hi, lo) with hi > lo; drops self-loops and nulls."""
@@ -124,7 +126,7 @@ def connected_components(
     round, and star-shaped INPUTS (exact-dup pairs are (id, min id)
     stars by construction) run zero rounds."""
     edges = _canon(pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
-    edges = edges.localCheckpoint(eager=True)
+    edges = hold(edges.localCheckpoint(eager=True))
 
     for i in range(max_iter + 1):
         if _is_star_forest(edges):
@@ -132,20 +134,14 @@ def connected_components(
         if i == max_iter:
             raise RuntimeError(
                 "connected_components did not converge in {} rounds".format(max_iter))
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        edges = hold(_small_star(_large_star(edges)).localCheckpoint(eager=True))
 
     # final edges are (node, root): root rows map to themselves. The
     # checkpointed edge set is already materialized, so these two
     # selects never recompute the iteration.
-    out = edges.select(F.col("a").alias("id"), F.col("b").alias("cluster_id")) \
+    return edges.select(F.col("a").alias("id"), F.col("b").alias("cluster_id")) \
         .unionAll(edges.select(F.col("b").alias("id"), F.col("b").alias("cluster_id"))) \
         .distinct()
-    # propagate the pair generator's persist handles (ngram grams, digest
-    # projections): the eager checkpoint above consumed ``pairs``, so the
-    # caller's release_cached(result) is the only reachable release point
-    # — without this the generator's persist pins storage for the session
-    out._psf_cached = list(getattr(pairs, "_psf_cached", []) or [])
-    return out
 
 
 def duplicate_clusters(
@@ -160,7 +156,5 @@ def duplicate_clusters(
     transitive-closure generalization of exact_duplicate_ids' star
     output (chains collapse to ONE keeper)."""
     cc = connected_components(pairs, id_a, id_b, max_iter=max_iter)
-    out = cc.where(F.col("id") != F.col("cluster_id")) \
+    return cc.where(F.col("id") != F.col("cluster_id")) \
         .select("id", F.col("cluster_id").alias("keep_id"))
-    out._psf_cached = list(getattr(cc, "_psf_cached", []) or [])
-    return out

@@ -41,6 +41,7 @@ import typing
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.exact import floor_div
+from ..resources import hold
 
 DEFAULT_SALT_BUCKETS = 16
 
@@ -242,6 +243,9 @@ def point_in_interval_join(
         # for negative epochs), the division is even, and truncation
         # toward zero on an even division is exact with sign intact —
         # verified against // for negatives and 2^61-scale values.
+        # Boundary: exact for |col| < 2^63 - band; within one band of
+        # Long.MIN the subtraction overflows (an ANSI error, or a wrap
+        # with ANSI off).
         # This replaced a decimal(38,0) floor_div ride that planned the
         # same result 5x slower (measured 5.0 -> 1.0 s on the gated
         # interval_join: decimal pmod/divide per row, including
@@ -317,7 +321,7 @@ def join_cardinality(
         "key", "cnt_a", "cnt_b",
         (F.col("cnt_a").cast("decimal(38,0)")
          * F.col("cnt_b").cast("decimal(38,0)")).alias("__pair__"))
-    pairs = pairs.persist()
+    pairs = hold(pairs.persist())
     total = pairs.agg(F.sum("__pair__").alias("__total__"))
     top = pairs.orderBy(F.col("__pair__").desc(), F.col("key").asc()).limit(top_k)
     out = (top.crossJoin(F.broadcast(total))
@@ -330,6 +334,4 @@ def join_cardinality(
                floor_div(F.col("__pair__") * 1_000_000,
                          F.col("__total__"))
                 .alias("share_ppm")))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [pairs])
+    return out

@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..resources import hold
+
 try:  # real decoder, absent in this container
     from PIL import Image as _PIL_Image  # noqa: F401
 except ImportError:
@@ -374,8 +376,8 @@ def image_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
     bit_count(xor) over two joined hash columns."""
     from pyspark import StorageLevel
 
-    sigs = image_ahash(df, payload_col=payload_col, id_col=id_col) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = hold(image_ahash(df, payload_col=payload_col, id_col=id_col)
+                .persist(StorageLevel.MEMORY_AND_DISK))
     chunked = _ahash_chunks(sigs, chunk_bits, ["id"])
     if max_bucket is not None:
         hot = (chunked.groupBy("chunk_idx", "chunk_val")
@@ -400,9 +402,7 @@ def image_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
                F.col("__ha__").bitwiseXOR(F.col("__hb__"))).cast("long"))
            .where(F.col("hamming") <= max_hamming)
            .select("id_a", "id_b", "hamming"))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [sigs])
+    return out
 
 
 #: frame-id packing for video_dup_pairs: fid = media_id * FID_BASE +
@@ -454,7 +454,7 @@ def video_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
                      "ahash"))
     from pyspark import StorageLevel
 
-    fhash = fhash.persist(StorageLevel.MEMORY_AND_DISK)
+    fhash = hold(fhash.persist(StorageLevel.MEMORY_AND_DISK))
     chunked = _ahash_chunks(fhash, chunk_bits, ["vid", "frame_idx"])
     if max_bucket is not None:
         hot = (chunked.groupBy("frame_idx", "chunk_idx", "chunk_val")
@@ -494,9 +494,7 @@ def video_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
            .select("id_a", "id_b",
                    F.col("__nm__").cast("long").alias("n_frames"),
                    "max_hamming_seen"))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [fhash])
+    return out
 
 
 def media_integrity_checks(df: DataFrame):

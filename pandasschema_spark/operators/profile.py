@@ -19,6 +19,7 @@ import typing
 
 from pyspark.sql import Column as SparkColumn, DataFrame, functions as F
 
+from ..resources import hold
 from ..validation import is_numeric_spark_type
 
 
@@ -433,8 +434,8 @@ def timeline_anomaly(
 
     from pyspark.sql import Window
 
-    counts = timeline_completeness(
-        df, ts_col, bucket_s=bucket_s, max_buckets=max_buckets).persist()
+    counts = hold(timeline_completeness(
+        df, ts_col, bucket_s=bucket_s, max_buckets=max_buckets).persist())
     n_buckets = counts.count()
     if n_buckets == 0:
         counts.unpersist()
@@ -457,16 +458,13 @@ def timeline_anomaly(
     devs = counts.select(
         F.abs(F.col("n_events") - F.lit(med)).alias("dev"))
     mad = _ceil_rank_median(devs, "dev")
-    out = (counts.where(
+    return (counts.where(
         F.abs(F.col("n_events") - F.lit(med)) * 10 > F.lit(k_tenths * mad))
         .select("bucket_start", "n_events",
                 F.lit(med).cast("long").alias("med"),
                 F.lit(mad).cast("long").alias("mad"),
                 F.abs(F.col("n_events") - F.lit(med)).cast("long")
                  .alias("dev")))
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [counts])
 
 
 def timeline_trend(

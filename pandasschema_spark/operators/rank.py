@@ -20,10 +20,8 @@ ordinal with a range repartition instead:
 
 So the whole job is ONE data shuffle (the range exchange) + one O(P)
 driver row set, vs the window form's all-rows-to-one-task sort. The
-repartitioned/sorted frame is persisted (attached as a release handle,
-repo convention — ``operators.dedup.release_cached(out)`` /
-``with released(out):`` when done) so the counts job and the output job
-see one consistent set of range boundaries.
+repartitioned/sorted frame is persisted so the counts job and the
+output job see one consistent set of range boundaries.
 
 Determinism contract: ``order_cols`` must form a TOTAL order (include a
 unique tiebreak column, e.g. the primary key). Under that contract the
@@ -45,7 +43,7 @@ import typing
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .dedup import _attach_cached
+from ..resources import hold
 
 _PART_SHIFT = 8589934592  # 2^33, monotonically_increasing_id's stride
 
@@ -67,17 +65,16 @@ def global_ordinal(
         partitions = int(df.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "200"))
     sort_keys = [F.col(c).asc_nulls_first() for c in order_cols]
-    rb = (df.repartitionByRange(partitions, *sort_keys)
-            .sortWithinPartitions(*sort_keys)
-            .withColumn("__mid__", F.monotonically_increasing_id())
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    rb = hold(df.repartitionByRange(partitions, *sort_keys)
+              .sortWithinPartitions(*sort_keys)
+              .withColumn("__mid__", F.monotonically_increasing_id())
+              .persist(StorageLevel.MEMORY_AND_DISK))
     pid = F.shiftright(F.col("__mid__"), 33)
     counts = (rb.groupBy(pid.alias("__pid__"))
                 .agg(F.count(F.lit(1)).alias("__cnt__"))
                 .collect())
     if not counts:
-        out = rb.withColumn(name, F.lit(start).cast("long")).drop("__mid__")
-        return _attach_cached(out, [rb])
+        return rb.withColumn(name, F.lit(start).cast("long")).drop("__mid__")
     # ascending pid == ascending key range under repartitionByRange, so a
     # pid-ordered running sum IS the global offset table. The shared
     # helpers add the two fail-loud guards rowindex established: a
@@ -89,6 +86,5 @@ def global_ordinal(
     offsets = offsets_from_counts(counts, overflow_ctx="global_ordinal")
     expr = offset_case_expr(offsets, pid, ctx="global_ordinal")
     intra = F.col("__mid__") % F.lit(_PART_SHIFT)
-    out = (rb.withColumn(name, (expr + intra + F.lit(start)).cast("long"))
-             .drop("__mid__"))
-    return _attach_cached(out, [rb])
+    return (rb.withColumn(name, (expr + intra + F.lit(start)).cast("long"))
+              .drop("__mid__"))

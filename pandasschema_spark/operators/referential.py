@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.exact import floor_div
 
 from ..plans.compiler import value_repr
+from ..resources import hold
 
 
 def referential_violations(
@@ -261,8 +262,8 @@ def bloom_screen_violations(
     # in EVERY Python worker process; the broadcast ships once per
     # executor and is shared — the difference between "1.25 GB bitmap is
     # shippable" and multiplying it by the worker count
-    bc = df.sparkSession.sparkContext.broadcast(
-        build_bloom(dim_df, dim_col, n_bits=n_bits, k=k))
+    bc = hold(df.sparkSession.sparkContext.broadcast(
+        build_bloom(dim_df, dim_col, n_bits=n_bits, k=k)))
 
     def miss_bloom(s):
         bitmap = np.frombuffer(bc.value, dtype=np.uint8)
@@ -280,15 +281,9 @@ def bloom_screen_violations(
     from pyspark.sql.functions import pandas_udf
 
     miss_udf = pandas_udf(miss_bloom, "boolean")
-    out = (df.select(*keep_cols, F.col(value_col))
-           .where(F.col(value_col).isNotNull())
-           .where(miss_udf(F.col(value_col).cast("string"))))
-    # the broadcast bitmap (up to ~GB) outlives this call in a long-lived
-    # session; attach it the same way dedup attaches persist handles so
-    # release_cached(out) / `with released(out):` destroys it
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [bc])
+    return (df.select(*keep_cols, F.col(value_col))
+            .where(F.col(value_col).isNotNull())
+            .where(miss_udf(F.col(value_col).cast("string"))))
 
 
 def coverage_gaps(

@@ -34,6 +34,8 @@ import typing
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..resources import hold
+
 DEFAULT_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
 
 #: default hot-user cap: a real user does not produce 100k events in one
@@ -369,7 +371,7 @@ def timeline_completeness(
     # counts is read twice (the O(buckets) lo/hi collect AND the fill
     # join): persist so the full event scan + hash agg runs ONCE — the
     # collect below materializes it while it is still small
-    counts = counts.persist()
+    counts = hold(counts.persist())
     lim = counts.agg(F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi")).collect()[0]
     spark = df.sparkSession
     if lim["lo"] is None:
@@ -384,14 +386,10 @@ def timeline_completeness(
             "or max_buckets".format(n_buckets, max_buckets)
         )
     spine = spark.range(lo, hi + bucket_s, bucket_s).select(F.col("id").alias("bucket_start"))
-    from .dedup import _attach_cached
-
-    return _attach_cached(
-        spine.join(F.broadcast(counts), "bucket_start", "left")
-        .select(
-            "bucket_start",
-            F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
-        ), [counts])
+    return spine.join(F.broadcast(counts), "bucket_start", "left").select(
+        "bucket_start",
+        F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
+    )
 
 
 def interval_overlap_violations(

@@ -24,6 +24,8 @@ import typing
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..resources import hold
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Deterministic double-precision dot product: elementwise product via
@@ -885,18 +887,15 @@ def cosine_lsh_candidates(
     Hot chunks (degenerate corpora: many zero vectors, constant
     embeddings) are capped by the house rule — groupBy-count +
     broadcast anti-join at ``max_bucket`` members per (chunk_idx,
-    value); None = exact. The signature frame persists (two consumers);
-    release via operators.dedup.release_cached(result).
+    value); None = exact. The signature frame persists (two consumers).
     """
     if n_planes % chunk_bits != 0:
         raise ValueError("n_planes must be a multiple of chunk_bits")
     from pyspark import StorageLevel
 
-    from .dedup import _attach_cached
-
-    sigs = hyperplane_signature(
+    sigs = hold(hyperplane_signature(
         df, dim, id_col=id_col, vec_col=vec_col, n_planes=n_planes,
-        quant=quant, salt=salt).persist(StorageLevel.MEMORY_AND_DISK)
+        quant=quant, salt=salt).persist(StorageLevel.MEMORY_AND_DISK))
     n_chunks = n_planes // chunk_bits
     mask = (1 << chunk_bits) - 1
     chunked = sigs.select(
@@ -919,7 +918,6 @@ def cosine_lsh_candidates(
                        F.col(id_col).alias("id_a"))
     b = chunked.select("chunk_idx", "chunk_val",
                        F.col(id_col).alias("id_b"))
-    out = (a.join(b, ["chunk_idx", "chunk_val"])
-           .where(F.col("id_a") < F.col("id_b"))
-           .select("id_a", "id_b").distinct())
-    return _attach_cached(out, [sigs])
+    return (a.join(b, ["chunk_idx", "chunk_val"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b").distinct())

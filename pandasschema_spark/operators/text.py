@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..functions.exact import floor_div
+from ..resources import hold
 
 # ---------------------------------------------------------------------------
 # tokenization
@@ -672,11 +673,9 @@ def boilerplate_scan(
     frequent-line dictionary itself is too large to ship (low
     thresholds over huge corpora) and the join falls back to a
     digest-keyed shuffle join. The distinct (doc, digest) frame feeds
-    BOTH the frequency agg and the join-back, so it persists with the
-    release-handle convention (``operators.dedup.release_cached(out)``
-    / ``with released(out):`` when done) — without it the
-    split+normalize+md5 pipeline scans the corpus twice (measured in
-    PLANS.md before this persist).
+    BOTH the frequency agg and the join-back, so it is persisted —
+    without it the split+normalize+md5 pipeline scans the corpus twice
+    (measured in PLANS.md before this persist).
     """
     if min_doc_freq < 2:
         raise ValueError("min_doc_freq must be >= 2")
@@ -702,7 +701,7 @@ def boilerplate_scan(
         .select("id", F.md5(F.encode(F.col("__n__"), "UTF-8")).alias("__d__"))
     )
     from pyspark.storagelevel import StorageLevel
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
     hot = (
         pairs.groupBy("__d__")
         .agg(F.count(F.lit(1)).alias("__df__"))
@@ -712,7 +711,7 @@ def boilerplate_scan(
     if broadcast_dict:
         hot = F.broadcast(hot)
     flagged = pairs.join(hot, "__d__", "left")
-    out = (
+    return (
         flagged.groupBy("id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
@@ -724,12 +723,6 @@ def boilerplate_scan(
             ).alias("boiler_ppm"),
         )
     )
-    # release-handle convention; the import is deferred to call time so
-    # the dedup<->text module cycle never bites (dedup is fully loaded
-    # in sys.modules by the time any operator runs)
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [pairs])
 
 
 def sequence_pack(
@@ -789,7 +782,7 @@ def sequence_pack(
     # a persist the full text scan + tokenization runs twice per action
     from pyspark.storagelevel import StorageLevel
 
-    slim = slim.persist(StorageLevel.MEMORY_AND_DISK)
+    slim = hold(slim.persist(StorageLevel.MEMORY_AND_DISK))
     bsum = slim.groupBy("__b__").agg(F.sum("n_tokens").alias("__bt__"))
     wb = Window.orderBy("__b__").rowsBetween(Window.unboundedPreceding, -1)
     base = bsum.select(
@@ -805,7 +798,7 @@ def sequence_pack(
     first = F.expr("tok_offset div {}".format(context_len))
     last = F.expr("(tok_offset + n_tokens - 1) div {}".format(context_len))
     has = F.col("n_tokens") > 0
-    out = packed.select(
+    return packed.select(
         id_col,
         "n_tokens",
         "tok_offset",
@@ -813,9 +806,6 @@ def sequence_pack(
         F.when(has, last).cast("long").alias("chunk_last"),
         F.when(has, last - first + 1).otherwise(0).cast("long").alias("n_chunks"),
     )
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [slim])
 
 
 def lang_confusion(

@@ -33,6 +33,7 @@ from .column import Column
 from .errors import PanSchArgumentError, PanSchInvalidSchemaError
 from .plans import compiler as _compiler
 from .plans.rowindex import ROW_IDX_COL, with_row_index
+from .resources import hold
 from .validation import (
     InTableValidation,
     IsDistinctValidation,
@@ -105,16 +106,12 @@ class ValidationResult:
         The distinct violating-key set is PERSISTED before fanning out to
         the two sides — both returned frames embed it, and without the
         persist acting on both (the normal two-table ingest write) would
-        run the full validation scan twice. The persist handle rides on
-        both frames: call ``operators.dedup.release_cached`` on either
-        after the downstream actions in long-lived sessions.
+        run the full validation scan twice.
 
         Raises PanSchArgumentError on an early-returned result (the
         column-count precheck failed — there is no row-level verdict)."""
         from pyspark import StorageLevel
         from pyspark.sql import functions as F
-
-        from .operators.dedup import _attach_cached
 
         if self.violations is None:
             raise PanSchArgumentError(
@@ -132,8 +129,8 @@ class ValidationResult:
                 "integral key column (e.g. an ingest ordinal).".format(
                     row_key, key_type))
 
-        bad = (self.violations.select(F.col("row").alias("__bad_row__"))
-               .distinct().persist(StorageLevel.MEMORY_AND_DISK))
+        bad = hold(self.violations.select(F.col("row").alias("__bad_row__"))
+                   .distinct().persist(StorageLevel.MEMORY_AND_DISK))
         bad_side = F.broadcast(bad) if broadcast_bad else bad
         key = F.col(row_key).cast("long")
         clean = df.where(key.isNotNull()).join(
@@ -141,7 +138,7 @@ class ValidationResult:
         quarantined = df.where(key.isNotNull()).join(
             bad_side, key == F.col("__bad_row__"), "left_semi",
         ).unionByName(df.where(key.isNull()))
-        return _attach_cached(clean, [bad]), _attach_cached(quarantined, [bad])
+        return clean, quarantined
 
     def collect_warnings(self, limit: int = None) -> typing.List[ValidationWarning]:
         """Materialize the reference's sorted warning list.
@@ -347,7 +344,6 @@ class Schema:
                 message=v.message,
                 check_id=check_id,
                 seq=seq,
-                salt_buckets=v.salt_buckets,
                 broadcast_dupes=v.broadcast_dupes,
                 allow_empty=allow_empty,
             )
@@ -433,7 +429,7 @@ class Schema:
 
             base = df.select(F.col(df_col).alias("__v__"),
                              F.col(row_col).cast("long").alias("__r__"))
-            dupes = duplicate_keys(df, df_col, row_col, v.salt_buckets)
+            dupes = duplicate_keys(df, df_col, row_col)
             if v.broadcast_dupes:
                 dupes = F.broadcast(dupes)
             return (base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]))

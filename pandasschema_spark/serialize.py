@@ -12,7 +12,7 @@ the table. This module gives every declarative check a stable spec form::
          "checks": [{"type": "in_range", "min": 1}]},
         {"name": "clip_id", "checks": [
             {"type": "matches_pattern", "pattern": "^clip_\\\\d{12}$"},
-            {"type": "is_distinct", "salt_buckets": 64}]}
+            {"type": "is_distinct"}]}
     ]}
 
 Combinators nest (``{"type": "or", "a": ..., "b": ...}``, ``{"type":
@@ -146,8 +146,6 @@ def check_to_spec(v) -> dict:
         return s
     if isinstance(v, IsDistinctValidation):
         s["type"] = "is_distinct"
-        if v.salt_buckets != 64:
-            s["salt_buckets"] = v.salt_buckets
         if not v.broadcast_dupes:
             s["broadcast_dupes"] = False
         return s
@@ -274,8 +272,8 @@ def spec_to_check(spec: dict, spark=None):
     if t == "not_null":
         return NotNullValidation(**kw)
     if t == "is_distinct":
-        return IsDistinctValidation(spec.get("salt_buckets", 64),
-                                    spec.get("broadcast_dupes", True), **kw)
+        # a "salt_buckets" key in older specs is accepted and ignored
+        return IsDistinctValidation(spec.get("broadcast_dupes", True), **kw)
     if t == "in_table":
         if spark is None:
             raise PanSchArgumentError(

@@ -826,17 +826,14 @@ class IsDistinctValidation(_SeriesValidation):
     hash aggregation per value (count + min row ordinal; Spark's partial
     aggregation pre-collapses hot keys per map task, see
     operators/distinct.py) followed by a broadcast join-back of the (rare)
-    duplicate keys. ``salt_buckets`` is retained for API stability (the
-    partial agg subsumes explicit salting); ``broadcast_dupes=False``
-    switches the join-back to a shuffle join — pass it when the duplicate
+    duplicate keys. ``broadcast_dupes=False`` switches the join-back to a shuffle join — pass it when the duplicate
     KEY set itself is too large to broadcast (there is no automatic
     size-based fallback).
     """
 
     is_global = True
 
-    def __init__(self, salt_buckets: int = 64, broadcast_dupes: bool = True, **kw):
-        self.salt_buckets = salt_buckets
+    def __init__(self, broadcast_dupes: bool = True, **kw):
         self.broadcast_dupes = broadcast_dupes
         super().__init__(**kw)
 

@@ -7,6 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from pandasschema_spark.resources import scope
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -22,3 +24,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def scoped():
+    """Run the test inside one resources.scope(): everything the
+    operators under test pin is released when it ends."""
+    with scope():
+        yield
+
+
+@pytest.fixture
+def pinned(spark):
+    """Callable: the ids of the RDDs the session keeps persisted now."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet())

@@ -1,5 +1,6 @@
 """acoustic_incremental_pairs: incremental acoustic dedup vs a store."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pandasschema_spark.operators.audio import (
@@ -7,11 +8,12 @@ from pandasschema_spark.operators.audio import (
     acoustic_incremental_pairs,
     spectral_fingerprint,
 )
-from pandasschema_spark.operators.dedup import release_cached
 from pandasschema_spark.sources.datagen import (
     expected_near_dup_pairs,
     near_dup_clips_df,
 )
+
+pytestmark = pytest.mark.usefixtures("scoped")
 
 N = 2000
 
@@ -32,11 +34,9 @@ def test_incremental_equals_batch_over_union_cross_pairs(spark):
              for a, b in [(r["clip_a"], r["clip_b"])
                           for r in batch.collect()]
              if (a in store_ids) != (b in store_ids)}
-    release_cached(batch)
 
     inc = acoustic_incremental_pairs(spectral_fingerprint(store), store, new)
     got = {(r["clip_store"], r["clip_new"]) for r in inc.collect()}
-    release_cached(inc)
     assert got == cross
     # the parity split makes EVERY injected pair a cross pair (offset 5
     # is odd), so the full planted set must be here
@@ -54,7 +54,6 @@ def test_same_side_pairs_never_reported(spark):
     store = df.where(~F.col("row_ord").isin([0, 5]))
     out = acoustic_incremental_pairs(spectral_fingerprint(store), store, new)
     got = {(r["clip_store"], r["clip_new"]) for r in out.collect()}
-    release_cached(out)
     assert got == set()  # (0,5) is new-internal; (163,168) is store-internal
 
 
@@ -65,7 +64,6 @@ def test_union_bucket_cap_drops_hot_fingerprints(spark):
     # every candidate bucket has >= 2 members (one per side), so cap=1
     # wholesale-drops everything
     assert out.count() == 0
-    release_cached(out)
 
 
 def test_plan_bytes_never_shuffle(spark):
@@ -74,7 +72,6 @@ def test_plan_bytes_never_shuffle(spark):
     store, new = _split(spark, 200)
     out = acoustic_incremental_pairs(spectral_fingerprint(store), store, new)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    release_cached(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "Window" not in plan

@@ -124,15 +124,12 @@ def test_normalized_snr_margins():
     assert _normalized_snr_db(a, other.astype(np.int64)) < 10.0
 
 
-def test_acoustic_dup_pairs_exact(spark):
-    from pandasschema_spark.operators.dedup import release_cached
-
+def test_acoustic_dup_pairs_exact(spark, scoped):
     n = 2000
     df = near_dup_clips_df(spark, n, seed=42, partitions=4)
     out = acoustic_dup_pairs(df)
     got = {(r["clip_a"], r["clip_b"]) for r in out.collect()}
     assert got == set(expected_near_dup_pairs(n))
-    release_cached(out)  # frees the slim fingerprint persist
 
 
 def test_resample_kernel_integer_exact():

@@ -135,15 +135,15 @@ def test_salted_distinct_matches_window_oracle(spark):
         .withColumn("r", F.col("id"))
     )
     fast = distinct_violations(
-        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0, salt_buckets=16
+        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0
     ).select("row").collect()
     oracle = distinct_violations_window_oracle(df, "v", "r").select("row").collect()
     assert sorted(r["row"] for r in fast) == sorted(r["row"] for r in oracle)
-    # same result with salting disabled (salt_buckets=1)
-    unsalted = distinct_violations(
-        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0, salt_buckets=1
+    # same result with the shuffle join-back instead of the broadcast
+    shuffled = distinct_violations(
+        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0, broadcast_dupes=False
     ).select("row").collect()
-    assert sorted(r["row"] for r in unsalted) == sorted(r["row"] for r in oracle)
+    assert sorted(r["row"] for r in shuffled) == sorted(r["row"] for r in oracle)
 
 
 def test_distinct_nulls_count_as_equal(spark):

@@ -6,11 +6,11 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from pandasschema_spark.operators.dedup import (containment_pairs,
-                                                release_cached,
-                                                source_dup_matrix)
+from pandasschema_spark.operators.dedup import containment_pairs, source_dup_matrix
 from pandasschema_spark.operators.profile import timeline_trend
 from pandasschema_spark.operators.text import boilerplate_scan
+
+pytestmark = pytest.mark.usefixtures("scoped")
 
 
 # ---------------------------------------------------------------- boilerplate
@@ -77,7 +77,6 @@ def test_containment_catches_what_jaccard_misses(spark):
         [(1, short), (2, wrapper)], "id long, text string")
     res = containment_pairs(df, "text", "id", n=3, threshold_ppm=900_000)
     out = res.collect()
-    release_cached(res)
     assert len(out) == 1
     r = out[0]
     # every one of short's 8 trigrams appears in wrapper (plus the two
@@ -136,7 +135,6 @@ def test_source_matrix_hot_content_cap(spark):
     res = source_dup_matrix(df, "text", "id", "src",
                             max_sources_per_content=None)
     exact = res.collect()
-    release_cached(res)
     # C(6,2) = 15 distinct pairs; the (s0, s1) row merges both contents
     assert len(exact) == 15
     assert {(r["source_a"], r["source_b"]): r["n_shared"]
@@ -224,7 +222,6 @@ def test_containment_plan_no_cartesian(spark):
     df = spark.createDataFrame([(1, "a b c d")], "id long, text string")
     res = containment_pairs(df, "text", "id")
     plan = res._jdf.queryExecution().executedPlan().toString()
-    release_cached(res)
     # the similarity self-join is an EQUI-join on the gram key
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

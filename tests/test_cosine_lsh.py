@@ -2,11 +2,12 @@
 
 import pytest
 
-from pandasschema_spark.operators.dedup import release_cached
 from pandasschema_spark.operators.similarity import (
     cosine_lsh_candidates,
     hyperplane_signature,
 )
+
+pytestmark = pytest.mark.usefixtures("scoped")
 
 DIM = 8
 
@@ -46,7 +47,6 @@ def test_candidates_catch_duplicates_not_orthogonals(spark):
     df = _emb(spark, [(0, a), (1, list(a)), (2, b)])
     out = cosine_lsh_candidates(df, DIM, n_planes=16, chunk_bits=8)
     got = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    release_cached(out)
     assert (0, 1) in got  # identical vectors share every chunk
     # the orthogonal vector may collide on a coarse chunk by chance at
     # these widths, but never on BOTH while also matching exactly;
@@ -59,11 +59,9 @@ def test_hot_chunk_cap_wholesale_drops(spark):
     out = cosine_lsh_candidates(df, DIM, n_planes=16, chunk_bits=8,
                                 max_bucket=3)
     assert out.count() == 0  # 6 identical sigs > cap in every chunk
-    release_cached(out)
     exact = cosine_lsh_candidates(df, DIM, n_planes=16, chunk_bits=8,
                                   max_bucket=None)
     assert exact.count() == 15  # all C(6,2) pairs
-    release_cached(exact)
 
 
 def test_guards_and_plan(spark):

@@ -4,8 +4,8 @@ import pytest
 from pyspark.sql import Row
 
 from pandasschema_spark import Column, Schema
-from pandasschema_spark.operators.dedup import release_cached
 from pandasschema_spark.operators.digest import violations_digest
+from pandasschema_spark.resources import scope
 from pandasschema_spark.validation import InListValidation, InRangeValidation
 
 
@@ -38,13 +38,8 @@ def _expected(violations, k):
 
 def test_digest_matches_bruteforce(violations):
     exp = _expected(violations, 3)
-    dig = violations_digest(violations, k=3)
-    got = {}
-    for r in dig.collect():
-        tot, rows = got.setdefault(r["check_id"], (r["total_fails"], []))
-        assert tot == r["total_fails"]
-        rows.append((r["rn"], r["row"]))
-    release_cached(dig)
+    with scope():
+        got = _collect(violations_digest(violations, k=3))
     for cid, (tot, rows) in got.items():
         rows.sort()
         assert exp[cid] == (tot, [row for _, row in rows])
@@ -59,12 +54,10 @@ def test_digest_exact_across_small_arrow_batches(violations, spark):
     spark.conf.set(key, "3")
     try:
         exp = _expected(violations, 2)
-        dig = violations_digest(violations, k=2)
-        got = {
-            cid: (tot, [row for _, row in sorted(pairs)])
-            for cid, (tot, pairs) in _collect(dig).items()
-        }
-        release_cached(dig)
+        with scope():
+            acc = _collect(violations_digest(violations, k=2))
+        got = {cid: (tot, [row for _, row in sorted(pairs)])
+               for cid, (tot, pairs) in acc.items()}
         assert got == exp
     finally:
         if old is None:
@@ -84,23 +77,19 @@ def _collect(dig):
 
 def test_k_larger_than_group(violations):
     exp = _expected(violations, 10_000)
-    dig = violations_digest(violations, k=10_000)
-    got = {
-        cid: (tot, [row for _, row in sorted(pairs)])
-        for cid, (tot, pairs) in _collect(dig).items()
-    }
-    release_cached(dig)
+    with scope():
+        acc = _collect(violations_digest(violations, k=10_000))
+    got = {cid: (tot, [row for _, row in sorted(pairs)])
+           for cid, (tot, pairs) in acc.items()}
     assert got == exp
 
 
-def test_release_handle_attached(violations, spark):
-    dig = violations_digest(violations, k=1)
-    dig.count()
-    assert dig._psf_cached
-    reduced = dig._psf_cached[0]
-    assert reduced.storageLevel.useMemory or reduced.storageLevel.useDisk
-    release_cached(dig)
-    assert dig._psf_cached == []
+def test_release_handle_attached(violations, pinned):
+    before = pinned()
+    with scope():
+        violations_digest(violations, k=1).count()
+        assert pinned() - before, "the reduced union must be persisted"
+    assert not pinned() - before
 
 
 def test_k_validation(violations):

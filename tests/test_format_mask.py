@@ -28,6 +28,27 @@ def test_collapsed_masks_merge_widths(spark):
     assert out["9-A"]["share_ppm"] == 2 * 1_000_000 // 3
 
 
+def test_collapse_runs_regroups_the_exact_histogram(spark):
+    """collapse_runs=True equals re-aggregating the exact masks under the
+    run collapse: per-column counts merge, shares keep the column total
+    (nulls included) as their denominator."""
+    import re
+
+    df = spark.createDataFrame(
+        [("AB-12", "x"), ("A-1", "xy"), ("abc-999", None), (None, "42"),
+         ("7", "x y"), ("77", "Z")], "a string, b string")
+    exact = format_mask_profile(df, ["a", "b"], collapse_runs=False).collect()
+    want = {}
+    for r in exact:
+        m = r["mask"] and re.sub("A+", "A", re.sub("9+", "9", r["mask"]))
+        want[(r["column"], m)] = want.get((r["column"], m), 0) + r["n_rows"]
+    got = format_mask_profile(df, ["a", "b"], collapse_runs=True).collect()
+    assert {(r["column"], r["mask"]): r["n_rows"] for r in got} == want
+    assert {(r["column"], r["mask"]): r["share_ppm"] for r in got} == {
+        k: n * 1_000_000 // 6 for k, n in want.items()}
+    assert want[("a", "A-9")] == 3 and want[("b", "A")] == 3
+
+
 def test_null_is_its_own_mask_row_and_counts_in_total(spark):
     df = spark.createDataFrame([("a1",), (None,), (None,), ("b2",)],
                                "c string")

@@ -2,8 +2,9 @@
 
 import pytest
 
-from pandasschema_spark.operators.dedup import (gram_overlap_score,
-                                                release_cached)
+from pandasschema_spark.operators.dedup import gram_overlap_score
+
+pytestmark = pytest.mark.usefixtures("scoped")
 
 
 def test_overlap_counts_exact(spark):
@@ -14,7 +15,6 @@ def test_overlap_counts_exact(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     res = gram_overlap_score(df, "text", "id", n=3, min_gram_df=3)
     out = {r["id"]: r for r in res.collect()}
-    release_cached(res)
     # docs 1..3 share 'alpha beta gamma' and 'beta gamma delta' (df=3)
     assert (out[1]["n_grams"], out[1]["n_common"]) == (2, 2)
     assert out[1]["overlap_ppm"] == 1_000_000
@@ -29,7 +29,6 @@ def test_within_doc_repeat_counts_one_doc(spark):
         [(1, "x y z x y z"), (2, "x y z")], "id long, text string")
     res = gram_overlap_score(df, "text", "id", min_gram_df=2)
     out = {r["id"]: r["n_common"] for r in res.collect()}
-    release_cached(res)
     # doc 1 trigrams: {xyz, yzx, zxy} distinct; only xyz reaches df 2
     assert out == {1: 1, 2: 1}
 
@@ -40,7 +39,6 @@ def test_guard_and_plan_no_selfjoin(spark):
         gram_overlap_score(df, "text", "id", min_gram_df=1)
     res = gram_overlap_score(df, "text", "id")
     plan = res._jdf.queryExecution().executedPlan().toString()
-    release_cached(res)
     # O(docs) output: no pair explosion, no window; the gram frame is
     # read from cache by both consumers
     assert "Window" not in plan, plan

@@ -5,6 +5,8 @@ from pyspark.sql import functions as F
 
 from pandasschema_spark.operators import dedup as D
 
+pytestmark = pytest.mark.usefixtures("scoped")
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
@@ -24,14 +26,12 @@ def test_matches_batch_cross_pairs(spark, corpus):
     store_sigs = D.minhash_signatures(corpus, "text", "doc_id")
     inc = D.incremental_lsh_pairs(new, store_sigs, "text", "doc_id")
     got = sorted((r["id_new"], r["id_store"]) for r in inc.collect())
-    D.release_cached(inc)
     # reference: batch LSH over store+new restricted to cross pairs
     both = corpus.unionByName(new)
     batch = D.lsh_candidate_pairs(both, "text", "doc_id")
     want = sorted(
         (r["id_b"], r["id_a"]) for r in batch.collect()
         if r["id_a"] <= 3 and r["id_b"] >= 101)
-    D.release_cached(batch)
     assert got == want
     assert len(got) >= 3  # every mutation finds its source
 
@@ -49,7 +49,6 @@ def test_store_never_rehashed(spark, corpus):
     inc = D.incremental_lsh_pairs(new, store_sigs, "text", "doc_id")
     assert inc.count() >= 3
     plan = inc._jdf.queryExecution().executedPlan().toString()
-    D.release_cached(inc)
     # store side is a bare (id, sig) scan — no text column, no UDF over
     # it anywhere in the plan (the only Python eval is the new batch's
     # persisted signature projection, visible as InMemoryTableScan after
@@ -65,7 +64,6 @@ def test_unrelated_new_doc_matches_nothing(spark, corpus):
     store_sigs = D.minhash_signatures(corpus, "text", "doc_id")
     inc = D.incremental_lsh_pairs(new, store_sigs, "text", "doc_id")
     assert inc.count() == 0
-    D.release_cached(inc)
 
 
 def test_hot_bucket_cap_drops_both_sides(spark):
@@ -77,7 +75,5 @@ def test_hot_bucket_cap_drops_both_sides(spark):
     sigs = D.minhash_signatures(store, "text", "doc_id")
     capped = D.incremental_lsh_pairs(new, sigs, "text", "doc_id", max_bucket=4)
     assert capped.count() == 0  # bucket of 8 > 4 dropped wholesale
-    D.release_cached(capped)
     exact = D.incremental_lsh_pairs(new, sigs, "text", "doc_id", max_bucket=None)
     assert exact.count() == 15  # 3 x 5 cross pairs
-    D.release_cached(exact)

@@ -127,27 +127,23 @@ def test_salted_join_spreads_hot_key_deterministically(spark):
         assert j.count() == 500
 
 
-def test_bloom_screen_broadcast_released(spark):
-    """The bitmap broadcast is attached to the result and destroyed by
-    release_cached / the released() context manager — long-lived sessions
-    must not accumulate executor copies of up-to-GB bitmaps."""
-    from pandasschema_spark.operators.dedup import released
+def test_bloom_screen_broadcast_destroyed_by_scope(spark, monkeypatch):
+    """The bitmap broadcast is held by the caller's scope and destroyed
+    when it exits — long-lived sessions must not accumulate executor
+    copies of up-to-GB bitmaps."""
+    from pandasschema_spark import resources
 
+    freed, release = [], resources._release
+    monkeypatch.setattr(resources, "_release", lambda x: (freed.append(x), release(x)))
     dim = spark.range(0, 100).select(F.col("id").alias("k"))
     fact = spark.createDataFrame([(1, 5), (2, 12345)], "event_id long, k long")
-    out = bloom_screen_violations(fact, "k", dim, "k", n_bits=1 << 12, k=3,
-                                  keep_cols=["event_id"])
-    handles = list(getattr(out, "_psf_cached", []))
-    assert len(handles) == 1 and hasattr(handles[0], "destroy")
-    with released(out) as df:
-        assert {r["event_id"] for r in df.collect()} == {2}
-    # destroyed + idempotent: a second release must be a no-op, and the
-    # broadcast's value is gone
-    from pandasschema_spark.operators.dedup import release_cached
-
-    release_cached(out)
+    with resources.scope():
+        out = bloom_screen_violations(fact, "k", dim, "k", n_bits=1 << 12, k=3,
+                                      keep_cols=["event_id"])
+        assert {r["event_id"] for r in out.collect()} == {2}
+    assert len(freed) == 1 and hasattr(freed[0], "destroy")
     with pytest.raises(Exception):
-        handles[0].value  # destroyed broadcasts refuse access
+        freed[0].value  # destroyed broadcasts refuse access
 
 
 def test_edit_distance_pairs_matches_python(spark):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pandasschema_spark.operators import dedup as D
 from pandasschema_spark.operators import similarity as S
 from pandasschema_spark.operators import text as TX
+from pandasschema_spark.resources import scope
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -149,13 +150,12 @@ def test_near_dup_multi_probe_beats_single_probe(spark, emb):
     assert {(i, i + 1000) for i in range(20)} <= p1  # identical -> same cells
 
 
-def test_release_cached_unpersists(spark, docs):
-    out = D.lsh_candidate_pairs(docs.limit(40), "text", "doc_id")
-    out.count()
-    cached = list(getattr(out, "_psf_cached", []))
-    assert cached and all(c.storageLevel.useMemory for c in cached)
-    D.release_cached(out)
-    assert all(not c.storageLevel.useMemory for c in cached)
+def test_scope_unpersists(spark, docs, pinned):
+    before = pinned()
+    with scope():
+        D.lsh_candidate_pairs(docs.limit(40), "text", "doc_id").count()
+        assert pinned() - before, "the signature frame must be persisted"
+    assert not pinned() - before
 
 
 def test_minhash_arrow_native_equivalence(spark, docs):

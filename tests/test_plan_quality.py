@@ -27,6 +27,8 @@ from pandasschema_spark.validation import (
 
 SF_DIR = "/root/testdata/sf0.001"
 
+pytestmark = pytest.mark.usefixtures("scoped")
+
 
 @pytest.fixture(scope="module")
 def li(spark):
@@ -114,7 +116,6 @@ def test_lsh_bucket_cap_no_window(spark):
     plan = plan_of(cands)
     assert "Window" not in plan
     assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
-    D.release_cached(cands)
 
 
 def test_binary_column_read_only_when_checked(spark):
@@ -194,15 +195,12 @@ def test_quarantine_split_broadcasts_bad_keys(spark):
     li = spark.read.parquet(SF_DIR + "/lineitem.parquet")
     schema = Schema([Column("l_quantity", [IR(1, 25)])])
     res = schema.validate(li, columns=["l_quantity"], row_key="l_orderkey")
-    from pandasschema_spark.operators.dedup import release_cached
-
     clean, quar = res.split(li, "l_orderkey")
     for side in (clean, quar):
         plan = plan_of(side)
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
         assert "Exchange hashpartitioning" not in plan.split("BroadcastExchange")[0], \
             "fact side must not shuffle"
-    release_cached(clean)
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "orc"])
@@ -349,17 +347,14 @@ def test_global_ordinal_range_shuffle_not_single_partition(spark):
     """global_ordinal must plan a rangepartitioning exchange — never the
     window form's SinglePartition funnel — and the ordinal itself must be
     a row-local projection (no Window operator anywhere)."""
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.rank import global_ordinal
 
     orders = spark.read.parquet(SF_DIR + "/orders.parquet")
-    with released(global_ordinal(
-            orders.select("o_orderkey", "o_totalprice"),
-            ["o_totalprice", "o_orderkey"], partitions=8)) as out:
-        plan = plan_of(out)
-        assert "rangepartitioning" in plan, plan[:2000]
-        assert "SinglePartition" not in plan, plan[:2000]
-        assert "Window" not in plan, plan[:2000]
+    plan = plan_of(global_ordinal(orders.select("o_orderkey", "o_totalprice"),
+                                  ["o_totalprice", "o_orderkey"], partitions=8))
+    assert "rangepartitioning" in plan, plan[:2000]
+    assert "SinglePartition" not in plan, plan[:2000]
+    assert "Window" not in plan, plan[:2000]
 
 
 def test_collocations_codegen_clean_one_scan_per_leg(spark):
@@ -407,8 +402,6 @@ def test_entity_blocked_pairs_plan(spark):
     # the blocked frame computes once: both join sides + the hot count
     # read the persisted copy, not four corpus re-scans
     assert "InMemoryTableScan" in plan
-    from pandasschema_spark.operators.dedup import release_cached
-    release_cached(pairs)
 
 
 def test_funnel_single_sort_shared_exchange(spark):
@@ -433,19 +426,17 @@ def test_drift_onset_scans_raw_once(spark):
     (bucket, category) histogram; complement stats, totals and the dense
     grid must all read the cache (InMemoryTableScan), never re-scan or
     re-shuffle the raw rows, and the grid sides are broadcast."""
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.drift import chi_square_onset
 
     ev = spark.read.parquet(SF_DIR + "/events.parquet")
-    with released(chi_square_onset(ev, "ts", "event_type")) as out:
-        plan = plan_of(out)
-        assert plan.count("InMemoryTableScan") >= 3, plan[:3000]
-        assert "BroadcastExchange" in plan, plan[:3000]
-        # every FileScan mention sits inside the cached relation dump
-        live = [l for l in plan.split("\n")
-                if "FileScan" in l and "InMemoryRelation" not in l]
-        in_cache = plan.count("InMemoryRelation")
-        assert in_cache >= 1, plan[:3000]
+    plan = plan_of(chi_square_onset(ev, "ts", "event_type"))
+    assert plan.count("InMemoryTableScan") >= 3, plan[:3000]
+    assert "BroadcastExchange" in plan, plan[:3000]
+    # every FileScan mention sits inside the cached relation dump
+    live = [l for l in plan.split("\n")
+            if "FileScan" in l and "InMemoryRelation" not in l]
+    in_cache = plan.count("InMemoryRelation")
+    assert in_cache >= 1, plan[:3000]
 
 
 def test_vocab_novelty_codegen_clean_token_path(spark):
@@ -502,7 +493,6 @@ def test_image_dup_hot_chunk_cap_no_window(spark):
     broadcast anti-join shape (never a count-over-Window funneling a
     degenerate chunk through one task), and the verify stage must be a
     row-local bit_count — no second fan-out."""
-    from pandasschema_spark.operators import dedup as D
     from pandasschema_spark.operators.multimodal import (
         image_dup_pairs,
         media_df,
@@ -514,14 +504,12 @@ def test_image_dup_hot_chunk_cap_no_window(spark):
     assert "Window" not in plan
     assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
     assert "bit_count" in plan
-    D.release_cached(pairs)
 
 
 def test_video_dup_payload_never_shuffles(spark):
     """video_dup_pairs: every Exchange must carry slim hash/id rows —
     the binary payload column exists only upstream of the two narrow
     mapInPandas stages, never in a shuffle."""
-    from pandasschema_spark.operators import dedup as D
     from pandasschema_spark.operators.multimodal import (
         media_df,
         video_dup_pairs,
@@ -535,4 +523,3 @@ def test_video_dup_payload_never_shuffles(spark):
     # no exchange partitions on or carries the payload column
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "payload" not in m.group(1), m.group(0)
-    D.release_cached(pairs)

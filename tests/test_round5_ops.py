@@ -20,8 +20,8 @@ def _ts(day, sec=0):
 
 
 def test_chi_square_onset_flags_shifted_bucket(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.drift import chi_square_onset
+    from pandasschema_spark.resources import scope
 
     rows = []
     # 4 clean days: 10 a, 10 b each; day 2 doctored: 20 a, 0 b
@@ -30,7 +30,8 @@ def test_chi_square_onset_flags_shifted_bucket(spark):
         rows += [(_ts(day, i), "a") for i in range(na)]
         rows += [(_ts(day, 100 + i), "b") for i in range(nb)]
     df = spark.createDataFrame(rows, "ts: timestamp, cat: string")
-    with released(chi_square_onset(df, "ts", "cat", bucket_s=86_400)) as out:
+    with scope():
+        out = chi_square_onset(df, "ts", "cat", bucket_s=86_400)
         got = {r["bucket_start"]: r for r in out.collect()}
     assert len(got) == 4
     day2 = [r for b, r in sorted(got.items())][2]
@@ -46,15 +47,16 @@ def test_chi_square_onset_flags_shifted_bucket(spark):
 
 
 def test_chi_square_onset_counts_vanished_category(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.drift import chi_square_onset
+    from pandasschema_spark.resources import scope
 
     # category 'b' exists globally but is absent from day 1 entirely:
     # its zero cell must still contribute (0*nb - b*na)^2 / g
     rows = [(_ts(0, i), c) for i, c in enumerate(["a"] * 5 + ["b"] * 5)]
     rows += [(_ts(1, i), "a") for i in range(10)]
     df = spark.createDataFrame(rows, "ts: timestamp, cat: string")
-    with released(chi_square_onset(df, "ts", "cat", bucket_s=86_400)) as out:
+    with scope():
+        out = chi_square_onset(df, "ts", "cat", bucket_s=86_400)
         day1 = {r["bucket_start"]: r for r in out.collect()}[
             int(_ts(1).timestamp())]
     assert day1["k"] == 2  # global categories, not bucket-local
@@ -156,14 +158,15 @@ def test_retention_matrix(spark):
 
 
 def test_join_cardinality_predicts_exact_join_size(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.joins import join_cardinality
+    from pandasschema_spark.resources import scope
 
     a = spark.createDataFrame(
         [(k,) for k in ["x"] * 5 + ["y"] * 3 + ["z"] * 2 + [None]], "k: string")
     b = spark.createDataFrame(
         [(k,) for k in ["x"] * 4 + ["y"] * 6 + ["w"] * 9 + [None]], "k: string")
-    with released(join_cardinality(a, "k", b, "k", top_k=10)) as out:
+    with scope():
+        out = join_cardinality(a, "k", b, "k", top_k=10)
         rows = out.collect()
     actual = a.join(b, "k").count()          # NULLs never match
     assert all(r["total_rows"] == actual for r in rows)
@@ -175,12 +178,13 @@ def test_join_cardinality_predicts_exact_join_size(spark):
 
 
 def test_join_cardinality_top_k_truncates_deterministically(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.joins import join_cardinality
+    from pandasschema_spark.resources import scope
 
     rows = [(str(k),) for k in range(10) for _ in range(2)]
     df = spark.createDataFrame(rows, "k: string")
-    with released(join_cardinality(df, "k", df, "k", top_k=3)) as out:
+    with scope():
+        out = join_cardinality(df, "k", df, "k", top_k=3)
         got = out.collect()
     # equal products everywhere -> key asc tie-break
     assert [r["key"] for r in got] == ["0", "1", "2"]
@@ -290,16 +294,16 @@ def test_trim_bounds_matches_frame_silence_totals(spark):
 
 
 def test_timeline_anomaly_flags_outage_and_zero_day(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.profile import timeline_anomaly
+    from pandasschema_spark.resources import scope
 
     rows = []
     for day in range(9):
         n = {4: 2, 6: 0}.get(day, 10)  # day 4 outage, day 6 silent
         rows += [(_ts(day, i),) for i in range(n)]
     df = spark.createDataFrame(rows, "ts: timestamp")
-    with released(timeline_anomaly(df, "ts", bucket_s=86_400,
-                                   k_tenths=50)) as out:
+    with scope():
+        out = timeline_anomaly(df, "ts", bucket_s=86_400, k_tenths=50)
         got = {r["bucket_start"]: r for r in out.collect()}
     d4, d6 = int(_ts(4).timestamp()), int(_ts(6).timestamp())
     # median 10, mad 0 -> any deviation flags; the zero-filled spine
@@ -310,14 +314,14 @@ def test_timeline_anomaly_flags_outage_and_zero_day(spark):
 
 
 def test_timeline_anomaly_quiet_timeline_is_clean(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.profile import timeline_anomaly
+    from pandasschema_spark.resources import scope
 
     # counts 10..15 -> median 12, MAD 1; max deviation 3 < 5 MADs
     rows = [(_ts(day, i),) for day in range(6) for i in range(10 + day)]
     df = spark.createDataFrame(rows, "ts: timestamp")
-    with released(timeline_anomaly(df, "ts", bucket_s=86_400,
-                                   k_tenths=50)) as out:
+    with scope():
+        out = timeline_anomaly(df, "ts", bucket_s=86_400, k_tenths=50)
         assert out.count() == 0
 
 
@@ -334,15 +338,16 @@ def test_timeline_anomaly_empty(spark):
 
 
 def test_ks_onset_flags_mean_shift(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.drift import ks_onset
+    from pandasschema_spark.resources import scope
 
     rows = []
     for day in range(4):
         shift = 5 if day == 2 else 0  # day 2 values shift up
         rows += [(_ts(day, i), (i % 10) + shift) for i in range(20)]
     df = spark.createDataFrame(rows, "ts: timestamp, v: long")
-    with released(ks_onset(df, "ts", "v", bucket_s=86_400)) as out:
+    with scope():
+        out = ks_onset(df, "ts", "v", bucket_s=86_400)
         got = {r["bucket_start"]: r for r in out.collect()}
     assert len(got) == 4
     assert all(r["n_bucket"] == 20 and r["n_rest"] == 60 for r in got.values())
@@ -355,12 +360,13 @@ def test_ks_onset_flags_mean_shift(spark):
 
 
 def test_ks_onset_uniform_is_flat(spark):
-    from pandasschema_spark.operators.dedup import released
     from pandasschema_spark.operators.drift import ks_onset
+    from pandasschema_spark.resources import scope
 
     rows = [(_ts(day, i), i % 5) for day in range(3) for i in range(10)]
     df = spark.createDataFrame(rows, "ts: timestamp, v: long")
-    with released(ks_onset(df, "ts", "v", bucket_s=86_400)) as out:
+    with scope():
+        out = ks_onset(df, "ts", "v", bucket_s=86_400)
         assert all(r["ks_num"] == 0 for r in out.collect())
 
 

@@ -39,7 +39,7 @@ def _full_schema():
             NotNullValidation() & LeadingWhitespaceValidation(),
             DateFormatValidation("%Y-%m-%d"),
             CanConvertValidation(int, message="must be int-like"),
-            IsDistinctValidation(salt_buckets=32),
+            IsDistinctValidation(broadcast_dupes=False),
         ], allow_empty=True),
     ], ordered=True)
 
@@ -51,6 +51,16 @@ def test_round_trip_structure():
     assert schema_to_dict(s2) == d
     assert s2.ordered and [c.name for c in s2.columns] == ["a", "b"]
     assert s2.columns[1].allow_empty
+
+
+def test_legacy_salt_buckets_key_is_ignored():
+    """Specs written before salting was dropped still load; the key has
+    no effect and is not written back."""
+    old = {"version": 1, "columns": [
+        {"name": "k", "checks": [{"type": "is_distinct", "salt_buckets": 32}]}]}
+    s = schema_from_dict(old)
+    assert isinstance(s.columns[0].validations[0], IsDistinctValidation)
+    assert schema_to_dict(s)["columns"][0]["checks"] == [{"type": "is_distinct"}]
 
 
 def test_round_trip_messages_byte_compat():

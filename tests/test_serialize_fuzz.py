@@ -27,9 +27,9 @@ _leaf = st.one_of(
               st.sampled_from(["int", "float", "str"])),
     st.builds(lambda f: {"type": "date_format", "format": f},
               st.sampled_from(["%Y-%m-%d", "%Y%m%d", "%d/%m/%Y %H:%M"])),
-    st.builds(lambda sb: {"type": "is_distinct",
-                          **({} if sb == 64 else {"salt_buckets": sb})},
-              st.sampled_from([16, 64, 128])),
+    st.builds(lambda b: {"type": "is_distinct",
+                         **({} if b else {"broadcast_dupes": False})},
+              st.booleans()),
 )
 
 _check = st.recursive(

@@ -49,19 +49,16 @@ def test_gap_boundary_is_strict(spark):
     assert session_stats(df).count() == 1
 
 
-def test_split_clean_quarantine(spark):
+def test_split_clean_quarantine(spark, scoped):
     df = spark.createDataFrame(
         [(1, 5.0), (2, 50.0), (3, None), (4, 7.0)], "k long, x double")
     schema = Schema([Column("x", [InRangeValidation(0, 10)])])
     res = schema.validate(df, columns=["x"], row_key="k")
-    from pandasschema_spark.operators.dedup import release_cached
-
     clean, quar = res.split(df, "k")
     assert {r["k"] for r in clean.collect()} == {1, 4}
     assert {r["k"] for r in quar.collect()} == {2, 3}
     # every row lands on exactly one side
     assert clean.count() + quar.count() == df.count()
-    release_cached(clean)  # split() persists the violating-key set
 
 
 def test_split_early_return_raises(spark):
@@ -107,21 +104,18 @@ def test_split_requires_integral_key(spark):
         res.split(df, "missing_key")
 
 
-def test_split_null_key_routes_to_quarantine(spark):
+def test_split_null_key_routes_to_quarantine(spark, scoped):
     """A NULL row key can never match a join predicate; the row is
     unattributable and must ship in the QUARANTINE table, never clean."""
     df = spark.createDataFrame(
         [(1, 5.0), (None, 5.0), (None, 50.0), (2, 50.0)], "k long, x double")
     schema = Schema([Column("x", [InRangeValidation(0, 10)])])
     res = schema.validate(df, columns=["x"], row_key="k")
-    from pandasschema_spark.operators.dedup import release_cached
-
     clean, quar = res.split(df, "k")
     assert [r["k"] for r in clean.collect()] == [1]
     assert sorted([r["k"] for r in quar.collect()], key=lambda v: (v is None, v)) \
         == [2, None, None]
     assert clean.count() + quar.count() == df.count()
-    release_cached(clean)
 
 
 def test_rate_limit_violations(spark):

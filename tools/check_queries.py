@@ -5,7 +5,9 @@ values stringified) AND canonical per-column types (Spark schema vs the
 DuckDB result's Arrow schema). The type check exists because bare str()
 comparison masked DuckDB HUGEINT vs Spark BIGINT in round 4 — three
 oracles passed locally but failed the driver's typed hasher. An uncast
-sum() in an oracle now fails HERE first. Usage:
+sum() in an oracle now fails HERE first. Each query runs and is
+collected inside one resources.scope(); a query that leaves RDDs
+persisted after its scope exits fails as a leak. Usage:
 
     python tools/check_queries.py [sf_dir] [query ...]
 """
@@ -22,6 +24,7 @@ import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
+from pandasschema_spark.resources import scope  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -146,26 +149,29 @@ def main():
             raise SystemExit(
                 "unknown query name(s): {} — not in queries()".format(unknown))
     failures = []
+    jsc = spark.sparkContext._jsc
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        # this harness runs all queries in ONE long-lived session: every
+        # pin a query makes must be gone once its scope exits
+        pinned = set(jsc.getPersistentRDDs().keySet())
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
             print("FAIL  {:24s} spark error: {}".format(name, str(ex)[:300]))
             failures.append(name)
             continue
-        finally:
-            # free any operator-attached persists (dedup gram indexes,
-            # split()'s violating-key set, ...) — this harness runs all
-            # queries in ONE long-lived session
-            from pandasschema_spark.operators.dedup import release_cached
-
-            release_cached(locals().get("sdf"))
         spark_t = time.time() - t0
+        leaked = set(jsc.getPersistentRDDs().keySet()) - pinned
+        if leaked:
+            print("FAIL  {:24s} leaked {} persisted RDDs".format(name, len(leaked)))
+            failures.append(name)
+            continue
         if name not in oracles:
             print("OK?   {:24s} rows={} ({:.1f}s) [rows-only: no oracle]".format(
                 name, len(srows), spark_t))

@@ -139,12 +139,13 @@ def main() -> None:
             base.where(F.col("event_id") % 2 == 0),
             base.where(F.col("event_id") % 2 == 1), "event_type", "ub"))))
 
-    from pandasschema_spark.operators.dedup import keep_latest, released
+    from pandasschema_spark.operators.dedup import keep_latest
     from pandasschema_spark.operators.rank import global_ordinal
+    from pandasschema_spark.resources import scope
 
-    with released(global_ordinal(
-            orders.select("o_orderkey", "o_totalprice"),
-            ["o_totalprice", "o_orderkey"], partitions=8)) as go:
+    with scope():
+        go = global_ordinal(orders.select("o_orderkey", "o_totalprice"),
+                            ["o_totalprice", "o_orderkey"], partitions=8)
         sections.append((
             "Global ordinal (range shuffle, not a one-task window)",
             "Claims: `Exchange rangepartitioning` + in-partition sort; the "
@@ -214,14 +215,15 @@ def main() -> None:
         plan_of(boilerplate_scan(docs, "text", "doc_id", min_doc_freq=10))))
 
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    sections.append((
-        "Canonical representative per duplicate cluster (window-free argmax)",
-        "Claims: `partial_max` of the packed (order, id, payload) struct "
-        "FUSED with `count` in one `HashAggregate` — no Window ever sorts "
-        "a hot cluster through one task; the cluster map joins in once.",
-        plan_of(canonical_representatives(
-            docs.select("doc_id", F.length("text").alias("n_chars"), "lang"),
-            "doc_id", pairs, ["n_chars"], payload_cols=["lang"]))))
+    with scope():
+        sections.append((
+            "Canonical representative per duplicate cluster (window-free argmax)",
+            "Claims: `partial_max` of the packed (order, id, payload) struct "
+            "FUSED with `count` in one `HashAggregate` — no Window ever sorts "
+            "a hot cluster through one task; the cluster map joins in once.",
+            plan_of(canonical_representatives(
+                docs.select("doc_id", F.length("text").alias("n_chars"), "lang"),
+                "doc_id", pairs, ["n_chars"], payload_cols=["lang"]))))
 
     sections.append((
         "Per-cohort OLS volume trend (two aggs, no window)",
