@@ -163,6 +163,22 @@ def ngram_jaccard_pairs(
     counts in n_a/n_b, so with the cap the reported ratio is a lower bound
     of true Jaccard — the conservative direction for dedup.
     """
+    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return _gram_overlap(df, text_col, id_col, n, max_gram_df).where(jacc >= threshold)
+
+
+def _gram_overlap(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_gram_df: typing.Optional[int],
+) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) for EVERY pair sharing at least
+    one gram under the ``max_gram_df`` cap, id_a < id_b — the
+    inverted-index self-join that Jaccard and containment threshold
+    differently. ``n_a``/``n_b`` count
+    all of a document's grams, hot ones included."""
     # persist: the gram inverted index feeds BOTH self-join sides plus the
     # size and hot-gram aggregations — without it the text->ngram->md5
     # pipeline runs per consumer (column renames on the join sides defeat
@@ -211,11 +227,9 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
-    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return (
         common.join(sa, "id_a")
         .join(sb, "id_b")
-        .where(jacc >= threshold)
         .select("id_a", "id_b", "n_common", "n_a", "n_b")
     )
 
@@ -769,10 +783,10 @@ def containment_pairs(
     (Lee et al. 2022 dedup uses containment-style overlap for exactly
     this case).
 
-    Same inverted-index shape as ngram_jaccard_pairs (shared
-    doc_grams/cap machinery, one persisted gram frame feeding both
-    join sides and the size agg); the threshold compare is the
-    integer cross-multiplication ``1e6 * n_common >= threshold_ppm *
+    Same inverted index as ngram_jaccard_pairs (one shared builder:
+    persisted gram frame and sizes, hot-gram cap, co-partitioned
+    self-join); the threshold compare is the integer
+    cross-multiplication ``1e6 * n_common >= threshold_ppm *
     least(n_a, n_b)`` — no float division anywhere, so any SQL engine
     reproduces the cut exactly. ``containment_ppm`` reports
     floor(1e6 * common / least) for ranking. ``max_gram_df`` is the
@@ -787,37 +801,9 @@ def containment_pairs(
     """
     if not 0 < threshold_ppm <= 1_000_000:
         raise ValueError("threshold_ppm must be in (0, 1e6]")
-    # same shape as ngram_jaccard_pairs, including the hot-gram cap as
-    # groupBy-count + broadcast anti-join (house cap shape; the previous
-    # inner join against the <=cap gram table broadcast the near-complete
-    # distinct-gram frame — unbroadcastable at web scale)
-    grams = hold(doc_grams(df, text_col, id_col, n)
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
-    if max_gram_df is not None:
-        hot = (
-            grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__df__"))
-            .where(F.col("__df__") > max_gram_df)
-            .select("gram")
-        )
-        grams = grams.join(F.broadcast(hot), "gram", "left_anti")
-    # co-partitioned cached index, zero-exchange self-join (see
-    # ngram_jaccard_pairs — same measured rationale)
-    grams = hold(grams.repartition("gram").persist(StorageLevel.MEMORY_AND_DISK))
-    a = grams.select(F.col("id").alias("id_a"), "gram")
-    b = grams.select(F.col("id").alias("id_b"), "gram")
-    common = (
-        a.join(b, "gram")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
     small = F.least(F.col("n_a"), F.col("n_b"))
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _gram_overlap(df, text_col, id_col, n, max_gram_df)
         .where(F.col("n_common") * 1_000_000 >= F.lit(threshold_ppm) * small)
         .select(
             "id_a", "id_b", "n_common", "n_a", "n_b",

@@ -27,10 +27,9 @@ only in tests as the semantic oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
-from ..plans.compiler import VIOLATION_SCHEMA, value_repr
-from ..validation import is_numeric_spark_type
+from ..plans.compiler import emit_violations, fail_base, violation_columns
 
 
 def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
@@ -52,6 +51,26 @@ def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("__c__"), F.min("__r__").alias("__m__"))
         .where(F.col("__c__") > 1)
     )
+
+
+def duplicate_rows(base: DataFrame, broadcast: bool = True) -> DataFrame:
+    """(__r__, __v__) rows of a (__r__, __v__) frame that repeat an
+    earlier row's value — keep='first' fails every occurrence but the
+    one at the minimum ordinal. ``broadcast`` ships the (rare) duplicate
+    keys to the join-back; pass False when the duplicate KEY set itself
+    is too large to broadcast."""
+    return (_keeper_join(base, broadcast)
+            .where(F.col("__r__") != F.col("__m__"))
+            .select("__r__", base["__v__"]))
+
+
+def _keeper_join(base: DataFrame, broadcast: bool) -> DataFrame:
+    """``base`` rows whose value is duplicated, joined (null-safe) to
+    their value's count and keeper ordinal ``__m__``."""
+    dupes = duplicate_keys(base, "__v__", "__r__")
+    if broadcast:
+        dupes = F.broadcast(dupes)
+    return base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]), "inner")
 
 
 def distinct_violations(
@@ -78,51 +97,27 @@ def distinct_violations(
     cost of a second pruned-scan pass over the broadcast join (off by
     default: the keeper join itself assumes duplicates are rare, and a
     sound row key makes the guard a no-op)."""
-    spark_type = df.schema[value_col].dataType
-    dupes = duplicate_keys(df, value_col, row_col)
-    if broadcast_dupes:
-        dupes = F.broadcast(dupes)
-    base = df.select(F.col(value_col).alias("__v__"), F.col(row_col).cast("long").alias("__r__"))
-    joined_all = base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]), "inner")
-    guard = None
-    if verify_row_key:
-        ties = (joined_all.where(F.col("__r__") == F.col("__m__"))
-                .groupBy(base["__v__"].alias("__tv__"))
-                .agg(F.count(F.lit(1)).alias("__kc__"))
-                .where(F.col("__kc__") > 1))
-        guard = ties.select(
-            F.raise_error(F.concat(
-                F.lit("distinct_violations: row key {!r} collides among "
-                      "duplicate values (value=".format(row_col)),
-                F.coalesce(F.col("__tv__").cast("string"), F.lit("NULL")),
-                F.lit(", "), F.col("__kc__").cast("string"),
-                F.lit(" rows tie at the keeper ordinal) — keep-first "
-                      "is ill-defined; use a unique row key"),
-            )).cast("long").alias("row"),
-            F.lit(warn_col).alias("column"),
-            F.lit(None).cast("string").alias("value"),
-            F.lit(message).alias("message"),
-            F.lit(check_id).alias("check_id"),
-            F.lit(seq).cast("int").alias("seq"),
-        )
-    joined = joined_all.where(F.col("__r__") != F.col("__m__"))
-    v = base["__v__"]
-    if allow_empty:
-        if is_numeric_spark_type(spark_type):
-            joined = joined.where(v.isNotNull())
-        else:
-            joined = joined.where(v.isNotNull() & (F.length(v.cast("string")) > 0))
-    out = joined.select(
-        F.col("__r__").alias("row"),
-        F.lit(warn_col).alias("column"),
-        value_repr(v, spark_type).alias("value"),
-        F.lit(message).alias("message"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(seq).cast("int").alias("seq"),
-    )
-    if guard is not None:
-        out = out.unionByName(guard)
-    return out
+    base = fail_base(df, value_col, row_col)
+    kw = dict(warn_col=warn_col, message=message, check_id=check_id, seq=seq)
+    out = emit_violations(duplicate_rows(base, broadcast_dupes),
+                          df.schema[value_col].dataType, allow_empty=allow_empty, **kw)
+    if not verify_row_key:
+        return out
+    ties = (_keeper_join(base, broadcast_dupes).where(F.col("__r__") == F.col("__m__"))
+            .groupBy(base["__v__"].alias("__tv__"))
+            .agg(F.count(F.lit(1)).alias("__kc__"))
+            .where(F.col("__kc__") > 1))
+    guard = ties.select(*violation_columns(
+        F.raise_error(F.concat(
+            F.lit("distinct_violations: row key {!r} collides among "
+                  "duplicate values (value=".format(row_col)),
+            F.coalesce(F.col("__tv__").cast("string"), F.lit("NULL")),
+            F.lit(", "), F.col("__kc__").cast("string"),
+            F.lit(" rows tie at the keeper ordinal) — keep-first "
+                  "is ill-defined; use a unique row key"),
+        )),
+        F.lit(None), **kw))
+    return out.unionByName(guard)
 
 
 def _payload_hash(cols) -> F.Column:

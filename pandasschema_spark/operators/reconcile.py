@@ -41,8 +41,8 @@ def reconcile_header_detail(
     violation (diff NULL): a header without a total cannot reconcile —
     silently passing it would hide exactly the broken rows this check
     exists to find. Detail rows with no header are a referential
-    violation, not a reconciliation one — run referential_violations
-    for those.
+    violation, not a reconciliation one — check them with
+    InTableValidation.
     """
     derived = (
         detail.groupBy(F.col(detail_key).alias("key"))

@@ -16,42 +16,14 @@ from ..plans.compiler import value_repr
 from ..resources import hold
 
 
-def referential_violations(
-    df: DataFrame,
-    value_col: str,
-    row_col: str,
-    dim_df: DataFrame,
-    dim_col: str,
-    *,
-    warn_col: str,
-    message: str,
-    check_id: str,
-    seq: int,
-    broadcast: bool = True,
-    allow_empty: bool = False,
-) -> DataFrame:
-    from ..validation import is_numeric_spark_type
-
-    spark_type = df.schema[value_col].dataType
+def missing_rows(base: DataFrame, dim_df: DataFrame, dim_col: str, broadcast: bool = True) -> DataFrame:
+    """(__r__, __v__) rows of a (__r__, __v__) frame whose value is not in
+    ``dim_df[dim_col]``: a LEFT ANTI join against the distinct dimension
+    values, broadcast unless ``broadcast=False``."""
     dim = dim_df.select(F.col(dim_col).alias("__dimv__")).distinct()
     if broadcast:
         dim = F.broadcast(dim)
-    base = df.select(F.col(value_col).alias("__v__"), F.col(row_col).cast("long").alias("__r__"))
-    miss = base.join(dim, base["__v__"] == F.col("__dimv__"), "left_anti")
-    v = F.col("__v__")
-    if allow_empty:
-        if is_numeric_spark_type(spark_type):
-            miss = miss.where(v.isNotNull())
-        else:
-            miss = miss.where(v.isNotNull() & (F.length(v.cast("string")) > 0))
-    return miss.select(
-        F.col("__r__").alias("row"),
-        F.lit(warn_col).alias("column"),
-        value_repr(v, spark_type).alias("value"),
-        F.lit(message).alias("message"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(seq).cast("int").alias("seq"),
-    )
+    return base.join(dim, base["__v__"] == F.col("__dimv__"), "left_anti")
 
 
 def cross_table_violations(
@@ -76,7 +48,7 @@ def cross_table_violations(
     Emits the house violations shape (row, column, value, message) with
     ``value`` the fact's ``value_col`` rendered as a string (dates
     render ISO via cast). Division of labor, stated plainly: this is an
-    INNER join — fact rows with no dim match are referential_violations'
+    INNER join — fact rows with no dim match are InTableValidation's
     finding, not silently re-flagged here; a NULL-valued
     ``violation_cond`` is SQL-false (no violation).
 
@@ -243,7 +215,7 @@ def bloom_screen_violations(
     row-local Arrow test against the broadcast bitmap.
 
     This is the SCREENING half of huge-dim referential integrity: the
-    exact plan (broadcast/shuffle LEFT ANTI, referential_violations)
+    exact plan (broadcast/shuffle LEFT ANTI, missing_rows)
     needs the dimension itself on the wire, which stops working
     somewhere past 10^8 distinct keys; the bloom bitmap is fixed-size.
     The screen is ONE-SIDED: every flagged row is a true violation
@@ -320,7 +292,7 @@ def orphan_rate_timeline(
     rows arriving in each ``bucket_s``-second window reference a key
     absent from the dimension — the curve that distinguishes "a few
     stragglers have always been orphaned" from "the user service
-    stopped publishing at 14:00" (referential_violations lists the
+    stopped publishing at 14:00" (InTableValidation lists the
     rows; an SLO dashboard charts this). Completes the rate-timeline
     family: null_bursts (nulls), duplication_rate (dups),
     timeline_anomaly (volume), this (orphans).
@@ -375,15 +347,14 @@ def inclusion_profile(
     denom: int = 1_000_000,
 ) -> DataFrame:
     """Inclusion-dependency discovery (FK mining) across labeled
-    column sets — the bootstrap for referential_violations /
-    InTableValidation (reference validation.py InListValidation being
-    the enumerated-list form): those CHECK a KNOWN key pair; this
-    DISCOVERS which column pairs stand in a subset relation at all,
-    the SPIDER/Bauckmann question a schema-inference pass asks before
-    writing FK contracts. ``tables`` is a sequence of
-    ``(name, DataFrame, columns)``; every labeled column becomes a
-    candidate, and each ordered pair (a, b) that shares at least
-    ``min_common`` distinct values emits
+    column sets — the bootstrap for InTableValidation (reference
+    validation.py InListValidation being the enumerated-list form):
+    that CHECKS a KNOWN key pair; this DISCOVERS which column pairs
+    stand in a subset relation at all, the SPIDER/Bauckmann question a
+    schema-inference pass asks before writing FK contracts. ``tables``
+    is a sequence of ``(name, DataFrame, columns)``; every labeled
+    column becomes a candidate, and each ordered pair (a, b) that shares
+    at least ``min_common`` distinct values emits
     (col_a, col_b, n_a, n_b, n_common, containment_ppm) with
     containment_ppm = floor(n_common * denom / n_a) — 1e6 on the row
     (a, b) reads "every distinct value of a occurs in b", the FK

@@ -19,11 +19,20 @@ global ordinal so collected warnings can reproduce the reference's stable
 from __future__ import annotations
 
 import dataclasses
+import operator
 import typing
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from ..validation import _SeriesValidation, is_numeric_spark_type
+from ..errors import PanSchArgumentError
+from ..validation import (
+    InTableValidation,
+    IsDistinctValidation,
+    _CombinedValidation,
+    _InverseValidation,
+    _SeriesValidation,
+    is_numeric_spark_type,
+)
 
 VIOLATION_FIELDS = [
     ("row", T.LongType()),
@@ -80,34 +89,30 @@ def value_repr(col, spark_type: T.DataType):
     return F.coalesce(col.cast("string"), F.lit(NULL_VALUE_REPR))
 
 
+def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing.List[Column]:
+    """The violation columns in VIOLATION_FIELDS order: ``row`` and the
+    rendered ``value`` are expressions, the rest are the check's
+    constants."""
+    cols = (row, F.lit(warn_col), value, F.lit(message), F.lit(check_id), F.lit(seq))
+    return [c.cast(t).alias(n) for c, (n, t) in zip(cols, VIOLATION_FIELDS)]
+
+
 def build_row_violations(df: DataFrame, checks: typing.List[RowCheck], row_col: str) -> DataFrame:
-    """Compile all row-local checks into one select + explode.
+    """Compile all row-local checks (at least one) into one select + explode.
 
     The produced plan is a narrow map: scan -> project(array of
     conditional structs) -> filter(non-empty) -> explode. No shuffle.
     """
-    if not checks:
-        return empty_violations(df.sparkSession)
-
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    structs = []
-    for ck in checks:
-        col = df[ck.df_col]
-        spark_type = dtypes[ck.df_col]
-        fail = _fail_predicate(df, dtypes, ck)
-        structs.append(
-            F.when(
-                fail,
-                F.struct(
-                    F.col(row_col).cast("long").alias("row"),
-                    F.lit(ck.warn_col).alias("column"),
-                    value_repr(col, spark_type).alias("value"),
-                    F.lit(ck.message).alias("message"),
-                    F.lit(ck.check_id).alias("check_id"),
-                    F.lit(ck.seq).cast("int").alias("seq"),
-                ),
-            )
+    structs = [
+        F.when(
+            _fail_predicate(df, dtypes, ck),
+            F.struct(*violation_columns(
+                F.col(row_col), value_repr(df[ck.df_col], dtypes[ck.df_col]),
+                warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq)),
         )
+        for ck in checks
+    ]
 
     # Explode ALL k struct slots (nulls included) and filter afterwards:
     # the tempting F.filter(array, isNotNull) higher-order function is
@@ -117,8 +122,82 @@ def build_row_violations(df: DataFrame, checks: typing.List[RowCheck], row_col: 
     return (
         df.select(F.explode(F.array(*structs)).alias("v"))
         .where(F.col("v").isNotNull())
-        .select("v.row", "v.column", "v.value", "v.message", "v.check_id", "v.seq")
+        .select("v.*")
     )
+
+
+# ---------------------------------------------------------------------------
+# global checks: whole-table fail sets -> one emitter
+# ---------------------------------------------------------------------------
+
+def fail_base(df: DataFrame, df_col: str, row_col: str) -> DataFrame:
+    """The (__r__ long, __v__) projection every global fail set is cut
+    from."""
+    return df.select(F.col(row_col).cast("long").alias("__r__"), F.col(df_col).alias("__v__"))
+
+
+def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v) -> DataFrame:
+    """(__r__, __v__) rows failing ``v`` over the WHOLE table — one frame
+    for any global check, standalone or composed. Reference semantics are
+    series-wide, so a combinator wrapping a global check composes fail-row
+    sets instead of per-batch masks. Set algebra mirrors the reference's
+    element-wise boolean series (a check fails where its mask is False):
+
+    - ``~v``      fails where v passes  -> complement (left_anti)
+    - ``a | b``   fails where BOTH fail -> intersection (left_semi)
+    - ``a & b``   fails where EITHER    -> union, one row per __r__
+
+    ``__v__`` rides through every step, so the source is never joined
+    back in. Leaves: duplicates (operators/distinct.py), dimension misses
+    (operators/referential.py), and a row-local check as a filter on its
+    compiled predicate."""
+    if isinstance(v, _InverseValidation):
+        inner = global_fail_rows(df, row_col, df_col, v.negated)
+        return fail_base(df, df_col, row_col).join(inner.select("__r__"), "__r__", "left_anti")
+    if isinstance(v, _CombinedValidation):
+        a = global_fail_rows(df, row_col, df_col, v.v_a)
+        b = global_fail_rows(df, row_col, df_col, v.v_b)
+        if v.operator is operator.or_:
+            return a.join(b.select("__r__"), "__r__", "left_semi")
+        return a.unionByName(b).dropDuplicates(["__r__"])
+    base = fail_base(df, df_col, row_col)
+    if isinstance(v, IsDistinctValidation):
+        from ..operators.distinct import duplicate_rows
+
+        return duplicate_rows(base, v.broadcast_dupes)
+    if isinstance(v, InTableValidation):
+        from ..operators.referential import missing_rows
+
+        return missing_rows(base, v.dim_df, v.dim_col, v.broadcast)
+    if isinstance(v, _SeriesValidation) and not getattr(v, "is_global", False):
+        # WHERE keeps only TRUE: a NULL pass-predicate is NOT a fail,
+        # exactly like build_row_violations' F.when(~pred) shape
+        pred = v.compile_predicate(F.col("__v__"), df.schema[df_col].dataType)
+        return base.where(~pred)
+    raise PanSchArgumentError(
+        "Unsupported validation in a global check: {!r}".format(type(v).__name__))
+
+
+def emit_violations(
+    fail: DataFrame,
+    spark_type: T.DataType,
+    *,
+    warn_col: str,
+    message: str,
+    check_id: str,
+    seq: int,
+    allow_empty: bool,
+) -> DataFrame:
+    """Violation rows (VIOLATION_SCHEMA) from a (__r__, __v__) fail set.
+    The allow_empty exemption applies here, ONCE, to the whole (possibly
+    composed) check — the reference's get_errors shape
+    (validation.py:79-110)."""
+    v = F.col("__v__")
+    if allow_empty:
+        fail = fail.where(_empty_exemption(v, spark_type))
+    return fail.select(*violation_columns(
+        F.col("__r__"), value_repr(v, spark_type),
+        warn_col=warn_col, message=message, check_id=check_id, seq=seq))
 
 
 def _fail_predicate(df, dtypes, ck: RowCheck):

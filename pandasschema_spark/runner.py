@@ -196,60 +196,25 @@ class ValidationRunner:
 
     def _run_global(self, spark, global_schema, validate_columns, row_key):
         """One pass over the whole table for shuffle-requiring checks
-        (salted uniqueness agg, broadcast referential anti-join)."""
+        (uniqueness hash-agg, broadcast referential anti-join)."""
         src = self.wh.read(spark, self.input_table)
-        cols = [c for c in validate_columns if c in {x.name for x in global_schema.columns}]
-        result = global_schema.validate(src, columns=cols, row_key=row_key)
-        keyed = src.select(F.col(row_key).cast("long").alias("row"), "bucket")
-        violations = (
-            result.violations.join(keyed, "row", "left")
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("phase", F.lit("global"))
-            .persist()
-        )
-        try:
-            self.wh.overwrite_partitions(
-                violations.select(
-                    "run_id", "phase", "row", "column", "value", "message", "check_id", "seq", "bucket"
-                ),
-                VIOLATIONS_TABLE,
-                partition_by=["run_id", "phase", "bucket"],
-            )
+
+        def manifest(violations):
             fail_total = violations.count()
-            manifest = spark.createDataFrame(
+            return spark.createDataFrame(
                 [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
                 "run_id string, bucket int, rows_seen long, check_id string, fail_count long, status string",
             ).withColumn("finished_at", F.current_timestamp())
-            self.wh.append(manifest, MANIFEST_TABLE)
-        finally:
-            violations.unpersist()
+
+        self._commit(src, global_schema, validate_columns, row_key, "global", manifest)
 
     def _run_batch(self, spark, schema, buckets, validate_columns, row_key):
         src = (
             self.wh.read(spark, self.input_table)
             .where(F.col("bucket").isin([int(b) for b in buckets]))  # partition pruning
         )
-        cols = [c for c in validate_columns if c in {x.name for x in schema.columns}]
-        result = schema.validate(src, columns=cols, row_key=row_key)
-        # attach lineage: map violation rows back to their bucket via the
-        # source (exact and format-agnostic; no assumption that bucket is a
-        # function of the row key)
-        keyed = src.select(F.col(row_key).cast("long").alias("row"), "bucket")
-        violations = (
-            result.violations.join(keyed, "row", "left")
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("phase", F.lit("local"))
-        )
-        # cache: violations feed both the sink write and the metrics agg
-        violations = violations.persist()
-        try:
-            self.wh.overwrite_partitions(
-                violations.select(
-                    "run_id", "phase", "row", "column", "value", "message", "check_id", "seq", "bucket"
-                ),
-                VIOLATIONS_TABLE,
-                partition_by=["run_id", "phase", "bucket"],
-            )
+
+        def manifest(violations):
             # per-partition metrics: rows_seen per bucket (+ fail counts per check)
             rows_seen = src.groupBy("bucket").agg(F.count(F.lit(1)).alias("rows_seen"))
             fails = violations.groupBy("bucket", "check_id").agg(
@@ -258,7 +223,7 @@ class ValidationRunner:
             all_buckets_df = spark.createDataFrame(
                 [(int(b),) for b in buckets], T.StructType([T.StructField("bucket", T.IntegerType(), False)])
             )
-            manifest = (
+            return (
                 all_buckets_df.join(rows_seen, "bucket", "left")
                 .join(fails, "bucket", "left")
                 .select(
@@ -271,8 +236,35 @@ class ValidationRunner:
                     F.current_timestamp().alias("finished_at"),
                 )
             )
-            # manifest append is the commit point for these buckets
-            self.wh.append(manifest, MANIFEST_TABLE)
+
+        self._commit(src, schema, validate_columns, row_key, "local", manifest)
+
+    def _commit(self, src, schema, validate_columns, row_key, phase, manifest):
+        """Validate ``src``, overwrite the phase's violations partitions,
+        then append ``manifest(violations)`` — the commit point. The
+        violations are persisted because the write and the manifest's
+        metrics both read them."""
+        cols = [c for c in validate_columns if c in {x.name for x in schema.columns}]
+        result = schema.validate(src, columns=cols, row_key=row_key)
+        # attach lineage: map violation rows back to their bucket via the
+        # source (exact and format-agnostic; no assumption that bucket is a
+        # function of the row key)
+        keyed = src.select(F.col(row_key).cast("long").alias("row"), "bucket")
+        violations = (
+            result.violations.join(keyed, "row", "left")
+            .withColumn("run_id", F.lit(self.run_id))
+            .withColumn("phase", F.lit(phase))
+            .persist()
+        )
+        try:
+            self.wh.overwrite_partitions(
+                violations.select(
+                    "run_id", "phase", "row", "column", "value", "message", "check_id", "seq", "bucket"
+                ),
+                VIOLATIONS_TABLE,
+                partition_by=["run_id", "phase", "bucket"],
+            )
+            self.wh.append(manifest(violations), MANIFEST_TABLE)
         finally:
             violations.unpersist()
 

@@ -17,13 +17,15 @@ Pairing / precheck semantics are parity with the reference
   behavior, schema.py:70-82).
 
 Execution diverges deliberately (SURVEY.md §3.4): all row-local checks of
-all columns compile into ONE select (plans/compiler.py); global checks
-(distinctness, referential) are separate small plans unioned in; dtype
-checks run driver-side against df.schema with zero jobs.
+all columns compile into ONE select (plans/compiler.py); each global
+check (distinctness, referential, or a combinator over them) is one
+whole-table fail set from the same compiler, unioned in; dtype checks run
+driver-side against df.schema with zero jobs.
 """
 
 from __future__ import annotations
 
+import functools
 import typing
 
 from pyspark.sql import Column as SparkColumn
@@ -34,12 +36,7 @@ from .errors import PanSchArgumentError, PanSchInvalidSchemaError
 from .plans import compiler as _compiler
 from .plans.rowindex import ROW_IDX_COL, with_row_index
 from .resources import hold
-from .validation import (
-    InTableValidation,
-    IsDistinctValidation,
-    IsDtypeValidation,
-    _SeriesValidation,
-)
+from .validation import IsDtypeValidation, _SeriesValidation
 from .validation_warning import ValidationWarning
 
 
@@ -201,12 +198,14 @@ class Schema:
 
         keyed, row_col = self._with_row_key(df, row_key)
 
-        violations = _compiler.build_row_violations(keyed, row_checks, row_col)
+        parts = [_compiler.build_row_violations(keyed, row_checks, row_col)] if row_checks else []
         for g_seq, check_id, df_name, warn_name, v, allow_empty in global_checks:
-            violations = violations.unionByName(
-                self._plan_global(keyed, row_col, g_seq, check_id, df_name, warn_name, v, allow_empty)
-            )
-        return ValidationResult(frame_warnings, violations)
+            parts.append(_compiler.emit_violations(
+                _compiler.global_fail_rows(keyed, row_col, df_name, v),
+                keyed.schema[df_name].dataType,
+                warn_col=warn_name, message=v.message, check_id=check_id, seq=g_seq,
+                allow_empty=allow_empty))
+        return ValidationResult(frame_warnings, functools.reduce(DataFrame.unionByName, parts))
 
     # ------------------------------------------------------------------
     def validate_bitmap(
@@ -328,130 +327,3 @@ class Schema:
                 seq += 1
 
         return frame_warnings, row_checks, global_checks, False
-
-    # ------------------------------------------------------------------
-    @staticmethod
-    def _plan_global(df, row_col, seq, check_id, df_col, warn_col, v, allow_empty):
-        from .operators.distinct import distinct_violations
-        from .operators.referential import referential_violations
-
-        if isinstance(v, IsDistinctValidation):
-            return distinct_violations(
-                df,
-                df_col,
-                row_col,
-                warn_col=warn_col,
-                message=v.message,
-                check_id=check_id,
-                seq=seq,
-                broadcast_dupes=v.broadcast_dupes,
-                allow_empty=allow_empty,
-            )
-        if isinstance(v, InTableValidation):
-            return referential_violations(
-                df,
-                df_col,
-                row_col,
-                v.dim_df,
-                v.dim_col,
-                warn_col=warn_col,
-                message=v.message,
-                check_id=check_id,
-                seq=seq,
-                broadcast=v.broadcast,
-                allow_empty=allow_empty,
-            )
-        from .validation import _CombinedValidation, _InverseValidation
-
-        if isinstance(v, (_InverseValidation, _CombinedValidation)):
-            # combinator wrapping >=1 global check (is_global propagates,
-            # so _compile_checks routed it here): compose whole-table
-            # fail-ROW sets — reference semantics are series-wide, and a
-            # per-Arrow-batch evaluation of e.g. ~IsDistinct would change
-            # answers with batch boundaries. allow_empty exemption applies
-            # ONCE to the composed result (reference get_errors shape).
-            from pyspark.sql import functions as F
-
-            from .validation import is_numeric_spark_type
-
-            spark_type = df.schema[df_col].dataType
-            fail = Schema._global_fail_rows(df, row_col, df_col, v)
-            out = (df.select(F.col(df_col).alias("__v__"),
-                             F.col(row_col).cast("long").alias("__r__"))
-                   .join(fail, "__r__"))
-            if allow_empty:
-                vv = F.col("__v__")
-                if is_numeric_spark_type(spark_type):
-                    out = out.where(vv.isNotNull())
-                else:
-                    out = out.where(vv.isNotNull()
-                                    & (F.length(vv.cast("string")) > 0))
-            return out.select(
-                F.col("__r__").alias("row"),
-                F.lit(warn_col).alias("column"),
-                _compiler.value_repr(F.col("__v__"), spark_type).alias("value"),
-                F.lit(v.message).alias("message"),
-                F.lit(check_id).alias("check_id"),
-                F.lit(seq).cast("int").alias("seq"),
-            )
-        raise PanSchArgumentError("Unknown global validation {!r}".format(type(v).__name__))
-
-    @staticmethod
-    def _global_fail_rows(df, row_col, df_col, v):
-        """(__r__ long) rows failing ``v`` over the WHOLE table — the
-        composable form behind combinators of global checks. No
-        allow_empty exemption and no message decoration here (both apply
-        once, on the composed result). Set algebra mirrors the reference's
-        element-wise boolean series:
-
-        - ``~v``      fails where v passes  -> complement (left_anti)
-        - ``a | b``   fails where BOTH fail -> intersection (inner join)
-        - ``a & b``   fails where EITHER    -> union(distinct)
-        """
-        import operator as _op
-
-        from pyspark.sql import functions as F
-
-        from .validation import _CombinedValidation, _InverseValidation
-
-        all_rows = df.select(F.col(row_col).cast("long").alias("__r__"))
-        if isinstance(v, _InverseValidation):
-            inner = Schema._global_fail_rows(df, row_col, df_col, v.negated)
-            return all_rows.join(inner, "__r__", "left_anti")
-        if isinstance(v, _CombinedValidation):
-            a = Schema._global_fail_rows(df, row_col, df_col, v.v_a)
-            b = Schema._global_fail_rows(df, row_col, df_col, v.v_b)
-            if v.operator is _op.or_:
-                return a.join(b, "__r__")
-            return a.unionByName(b).distinct()
-        if isinstance(v, IsDistinctValidation):
-            from .operators.distinct import duplicate_keys
-
-            base = df.select(F.col(df_col).alias("__v__"),
-                             F.col(row_col).cast("long").alias("__r__"))
-            dupes = duplicate_keys(df, df_col, row_col)
-            if v.broadcast_dupes:
-                dupes = F.broadcast(dupes)
-            return (base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]))
-                    .where(F.col("__r__") != F.col("__m__"))
-                    .select("__r__"))
-        if isinstance(v, InTableValidation):
-            dim = v.dim_df.select(F.col(v.dim_col).alias("__dimv__")).distinct()
-            if v.broadcast:
-                dim = F.broadcast(dim)
-            base = df.select(F.col(df_col).alias("__v__"),
-                             F.col(row_col).cast("long").alias("__r__"))
-            return (base.join(dim, base["__v__"] == F.col("__dimv__"),
-                              "left_anti").select("__r__"))
-        if isinstance(v, _SeriesValidation) and not getattr(v, "is_global", False):
-            # row-local leaf inside a global combinator: its fail set is
-            # a plain filter on the compiled predicate
-            spark_type = df.schema[df_col].dataType
-            pred = v.compile_predicate(df[df_col], spark_type)
-            # WHERE keeps only TRUE: a NULL pass-predicate is NOT a fail,
-            # exactly like build_row_violations' F.when(~pred) shape
-            return (df.where(~pred)
-                    .select(F.col(row_col).cast("long").alias("__r__")))
-        raise PanSchArgumentError(
-            "Unsupported validation inside a global combinator: {!r}".format(
-                type(v).__name__))

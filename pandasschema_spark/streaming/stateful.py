@@ -15,7 +15,7 @@ converges to the batch operator's violation set).
 State size is O(distinct keys) x ~8 bytes, sharded by Spark's state
 store across executors — viable for key spaces that fit the cluster's
 aggregate state (10^9-10^10 keys), and the honest trade-off is stated:
-for 10^12 mostly-unique keys the batch salted aggregation remains the
+for 10^12 mostly-unique keys the batch hash aggregation remains the
 right tool; this operator is for the streaming-ingest window where the
 key space since the last batch reconciliation is bounded.
 """

@@ -822,7 +822,7 @@ class IsDistinctValidation(_SeriesValidation):
 
     Row-order-sensitive => needs a stable row ordinal and global state, so
     the Spark plan is NOT a row-local predicate: the schema compiler routes
-    this to operators.distinct.distinct_violations — ONE map-side-combined
+    this to operators.distinct.duplicate_rows — ONE map-side-combined
     hash aggregation per value (count + min row ordinal; Spark's partial
     aggregation pre-collapses hot keys per map task, see
     operators/distinct.py) followed by a broadcast join-back of the (rare)

@@ -88,3 +88,53 @@ def test_conditional_refuses_global_then(spark):
         ConditionalValidation(
             ["k", "v"], lambda d: F.col("v") > 0,
             ~IsDistinctValidation(), "k")
+
+
+def test_intable_inside_and_or_with_row_local_leaf(spark):
+    from pandasschema_spark.validation import InListValidation
+
+    df = _df(spark)
+    dim = spark.createDataFrame([("a",), ("b",)], "code string")
+    s = pd.Series(["a", "a", "b", "c", "a"])
+    # fail(InTable) = {3} ('c'), fail(InList(['a'])) = {2, 3}
+    for v, want in ((InTableValidation(dim, "code") | InListValidation(["a"]), [3]),
+                    (InTableValidation(dim, "code") & InListValidation(["a"]), [2, 3])):
+        assert _rows(Schema([Column("k", [v])]), df) == want
+        mask = v.pandas_validate(s)
+        assert list(mask[~mask].index) == want
+
+
+def _empties(spark):
+    rows = [(0, None), (1, ""), (2, ""), (3, None), (4, "x"), (5, "x"), (6, "y")]
+    return (spark.createDataFrame(rows, "row_ord long, k string"),
+            pd.Series([k for _, k in rows], dtype=object, name="k"))
+
+
+def test_allow_empty_applies_once_to_the_composed_check(spark):
+    from pandasschema_spark.validation import InListValidation
+
+    df, s = _empties(spark)
+    cases = [
+        # fail(~IsDistinct) = first occurrences {0, 1, 4, 6}; exempting the
+        # empties of the INNER check instead would fail rows 2 and 3 too
+        (lambda: ~IsDistinctValidation(), [0, 1, 4, 6], [4, 6]),
+        # fail = dupes {2, 3, 5} | not 'x' {0, 1, 2, 3, 6}
+        (lambda: IsDistinctValidation() & InListValidation(["x"]), [0, 1, 2, 3, 5, 6], [5, 6]),
+    ]
+    for make, strict, exempt in cases:
+        for allow_empty, want in ((False, strict), (True, exempt)):
+            col = Column("k", [make()], allow_empty=allow_empty)
+            assert _rows(Schema([col]), df) == want
+            assert sorted(w.row for w in make().get_errors(s, column=col)) == want
+
+
+def test_null_renders_nan_in_combinator_output(spark):
+    df, _ = _empties(spark)
+    res = Schema([Column("k", [~IsDistinctValidation()])]).validate(
+        df, columns=["k"], row_key="row_ord")
+    got = {r["row"]: r["value"] for r in res.violations.collect()}
+    assert got == {0: "nan", 1: "", 4: "x", 6: "y"}
+    nums = spark.createDataFrame([(0, None), (1, 7), (2, None)], "row_ord long, v long")
+    res = Schema([Column("v", [IsDistinctValidation() | InRangeValidation(0, 5)])]).validate(
+        nums, columns=["v"], row_key="row_ord")
+    assert [(r["row"], r["value"]) for r in res.violations.collect()] == [(2, "nan")]

@@ -5,7 +5,8 @@ Locked-in findings from the plan audit:
 - row-local validation = ONE parquet scan, column-pruned to the
   validated columns + row key, codegen-friendly (no CodegenFallback
   higher-order functions in the violations projection)
-- uniqueness = two-phase hash aggregation + BROADCAST join-back
+- uniqueness = one map-side-combined hash aggregation + BROADCAST
+  join-back
   (never a sort or a window at scale)
 - referential = BROADCAST left-anti join
 - upstream filters reach the parquet scan (PushedFilters)
@@ -59,7 +60,7 @@ def test_row_local_single_pruned_scan(spark, li):
     assert "ArrayFilter" not in plan and "lambdafunction" not in plan.lower()
 
 
-def test_distinct_salted_agg_broadcast_joinback(spark, li):
+def test_distinct_one_agg_broadcast_joinback(spark, li):
     schema = Schema([Column("l_orderkey", [IsDistinctValidation()])])
     v = schema.validate(li, columns=["l_orderkey"], row_key=F.expr("l_orderkey*10+l_linenumber")).violations
     plan = plan_of(v)
@@ -71,6 +72,27 @@ def test_distinct_salted_agg_broadcast_joinback(spark, li):
     # both the agg scan and the join-back scan read only key+ordinal inputs
     for read in re.findall(r"ReadSchema: struct<([^>]*)>", plan):
         assert set(c.split(":")[0] for c in read.split(",")) == {"l_orderkey", "l_linenumber"}
+
+
+def test_global_combinators_share_one_fail_set_plan(spark, li):
+    part = li.sparkSession.read.parquet(SF_DIR + "/part.parquet")
+    rk = F.expr("l_orderkey*10+l_linenumber")
+
+    def plan(v):
+        return plan_of(Schema([Column("l_partkey", [v])]).validate(
+            li, columns=["l_partkey"], row_key=rk).violations)
+
+    # the value rides through the fail set: the duplicate-key agg, its
+    # join-back and the other operand read the source; nothing joins it
+    # back in to recover the value
+    for v in (~IsDistinctValidation(),
+              IsDistinctValidation() | InRangeValidation(1, 150),
+              IsDistinctValidation() & InRangeValidation(1, 150)):
+        assert plan(v).count("FileScan parquet") == 3, v.message
+    # a schema without row-local checks unions no empty placeholder
+    for v in (IsDistinctValidation(), InTableValidation(part, "p_partkey"),
+              ~IsDistinctValidation()):
+        assert "Scan ExistingRDD" not in plan(v), v.message
 
 
 def test_referential_broadcast_anti(spark, li):

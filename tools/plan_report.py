@@ -72,9 +72,9 @@ def main() -> None:
         li, columns=["l_orderkey"],
         row_key=F.expr("l_orderkey*10+l_linenumber")).violations
     sections.append((
-        "Uniqueness (salted two-phase hash-agg + broadcast join-back)",
-        "Claims: 4 `HashAggregate`s (partial+final over (value, salt), then "
-        "per value), `BroadcastHashJoin` back to rows — no Sort, no Window.",
+        "Uniqueness (one map-side-combined hash-agg + broadcast join-back)",
+        "Claims: 2 `HashAggregate`s (partial+final per value), "
+        "`BroadcastHashJoin` back to rows — no Sort, no Window.",
         plan_of(v2)))
 
     v3 = Schema([Column("l_partkey", [InTableValidation(part, "p_partkey")])]) \
