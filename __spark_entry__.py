@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pandasschema_spark import Column, Schema  # noqa: E402
+from pandasschema_spark.frames import local_frame  # noqa: E402
 from pandasschema_spark.operators import dedup as D  # noqa: E402
 from pandasschema_spark.operators import similarity as S  # noqa: E402
 from pandasschema_spark.operators import text as TX  # noqa: E402
@@ -1333,7 +1334,7 @@ def q_schema_dispatch(spark, sf_dir):
     r3 = s3.validate(orders.select("o_orderkey"), columns=["o_orderkey"], row_key="o_orderkey")
     out += [("dtype", w.row, str(w.column), w.message) for w in r3.frame_warnings]
 
-    return spark.createDataFrame(out, "scenario string, row long, col string, message string")
+    return local_frame(spark, out, "scenario string, row long, col string, message string")
 
 
 def q_audio_sr_drift(spark, sf_dir):

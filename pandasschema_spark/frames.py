@@ -1,0 +1,58 @@
+"""Frames built from rows the driver already holds.
+
+``spark.createDataFrame(list_of_rows)`` plans a ``Scan ExistingRDD``
+over a parallelized Python RDD: every execution of such a frame starts
+one Python worker task per default-parallelism slot (about 1 CPU-s at
+local[4]) just to unpickle a handful of rows. :func:`local_frame` turns
+the rows into one ``pyarrow.Table`` on the driver instead, which Spark
+plans as a ``LocalTableScan``: the rows live in the plan, no Python
+worker ever starts, and a bare collect runs no job.
+
+Every frame the package builds from Python rows goes through here.
+"""
+
+from __future__ import annotations
+
+import typing
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+#: field types whose Python values pyarrow reads differently from
+#: ``createDataFrame``: pyarrow takes a naive datetime as UTC and drops
+#: an aware one's offset, pyspark reads a naive one in the process's
+#: local time. Their values go through the type's own ``toInternal``
+#: (epoch micros / days), so both paths store the same instant.
+_VIA_INTERNAL = (T.TimestampType, T.TimestampNTZType, T.DateType)
+
+
+def local_frame(spark: SparkSession, rows: typing.Iterable[typing.Sequence],
+                schema: typing.Union[T.StructType, str]) -> DataFrame:
+    """A DataFrame of ``rows`` (tuples in ``schema`` field order) with
+    exactly ``schema`` -- a StructType or a DDL string, non-nullable
+    fields kept -- planned as a ``LocalTableScan``.
+
+    Values follow ``createDataFrame(rows, schema)``'s conversions for
+    the types the package builds frames of: int, long, string, bool,
+    double, float arrays, maps, binary, decimal, dates and top-level
+    timestamps. A row of the wrong length or a None in a non-nullable
+    field raises, as there."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    n = len(schema.fields)
+    for r in rows:
+        if len(r) != n:
+            raise ValueError("row {!r} has {} values for {} fields".format(r, len(r), n))
+    columns = list(zip(*rows)) if rows else [()] * n
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow, columns):
+        if isinstance(field.dataType, _VIA_INTERNAL):
+            values = [field.dataType.toInternal(v) for v in values]
+        arr = pa.array(list(values), type=arrow_field.type)
+        if arr.null_count and not field.nullable:
+            raise ValueError("field {}: not nullable, but got None".format(field.name))
+        arrays.append(arr)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

@@ -26,6 +26,8 @@ import typing
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..frames import local_frame
+
 OUT_SCHEMA = T.StructType(
     [
         T.StructField("column", T.StringType(), False),
@@ -71,7 +73,7 @@ def table_checksum(df: DataFrame, cols: typing.Sequence[str]) -> DataFrame:
                 int(hi) % _MOD if hi is not None else 0,
             )
         )
-    return df.sparkSession.createDataFrame(out, OUT_SCHEMA)
+    return local_frame(df.sparkSession, out, OUT_SCHEMA)
 
 
 def table_checksum_by(

@@ -40,6 +40,7 @@ import typing
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..frames import local_frame
 from ..functions.exact import floor_div
 
 
@@ -74,7 +75,7 @@ def exact_quantiles(
     cum = h.withColumn("cum", F.sum("c").over(w)) \
            .crossJoin(h.agg(F.sum("c").alias("n")))
     spark = df.sparkSession
-    qdf = spark.createDataFrame([(int(q),) for q in qs_pm], "q_pm long")
+    qdf = local_frame(spark, [(int(q),) for q in qs_pm], "q_pm long")
     # ceil(q*n/denom) as pure integer arithmetic: (a + b - 1) div b
     rank = F.expr("(q_pm * n + {d} - 1) div {d}".format(d=denom))
     return (cum.join(F.broadcast(qdf),
@@ -150,7 +151,7 @@ def zscore_outliers(
         list(schema_src.fields)
         + [T.StructField("lo_cut", T.LongType()),
            T.StructField("hi_cut", T.LongType())])
-    cut_df = spark.createDataFrame(cut_rows, cut_schema)
+    cut_df = local_frame(spark, cut_rows, cut_schema)
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     left = (df.select(*group_cols, *keep_cols, v.alias("value"))
               .where(F.col("value").isNotNull()))
@@ -446,8 +447,8 @@ def benford_audit(
     counts = (df.select(digit.alias("digit")).where(v > 0)
               .groupBy("digit").agg(F.count(F.lit(1)).alias("n")))
     spark = df.sparkSession
-    exp = spark.createDataFrame(
-        [(d, int(p)) for d, p in enumerate(BENFORD_PPM, start=1)],
+    exp = local_frame(
+        spark, [(d, int(p)) for d, p in enumerate(BENFORD_PPM, start=1)],
         "digit long, exp_ppm long")
     j = (exp.join(counts, "digit", "left")
          .select("digit", F.coalesce("n", F.lit(0)).alias("n"), "exp_ppm")
@@ -518,8 +519,8 @@ def corr2_by(
     gtypes = dict(zip(base.schema.names, base.schema))
     gdef = ", ".join("{} {}".format(g, gtypes[g].dataType.simpleString())
                      for g in group_cols)
-    return spark.createDataFrame(
-        out, gdef + ", n long, corr2_ppm long, sign long")
+    return local_frame(
+        spark, out, gdef + ", n long, corr2_ppm long, sign long")
 
 
 class ColumnContract(typing.NamedTuple):
@@ -572,7 +573,8 @@ def contract_audit(
         F.coalesce(F.sum(F.when(F.col("__v__").isNull(), F.col("__c__"))),
                    F.lit(0)).cast("long").alias("n_null"))
     spark = df.sparkSession
-    spec = spark.createDataFrame(
+    spec = local_frame(
+        spark,
         [(i, c.column, int(c.min_distinct),
           None if c.max_distinct is None else int(c.max_distinct),
           int(c.max_null_ppm))
@@ -693,7 +695,7 @@ def group_quantiles(
         F.sum("c").over(wc).alias("cum"),
         F.sum("c").over(wg).alias("n"))
     spark = df.sparkSession
-    qdf = spark.createDataFrame([(int(q),) for q in qs_pm], "q_pm long")
+    qdf = local_frame(spark, [(int(q),) for q in qs_pm], "q_pm long")
     rank = F.expr("(q_pm * n + {d} - 1) div {d}".format(d=denom))
     return (cum.join(F.broadcast(qdf),
                      (F.col("cum") >= rank) & ((F.col("cum") - F.col("c")) < rank))
@@ -894,7 +896,7 @@ def key_discovery(
         else:
             out.append((label, n, None, screened[label], None, False, False))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        out, "candidate string, n_rows long, n_nonnull long, "
-             "n_distinct long, unique_ppm long, is_key boolean, "
-             "exact boolean")
+    return local_frame(
+        spark, out, "candidate string, n_rows long, n_nonnull long, "
+                    "n_distinct long, unique_ppm long, is_key boolean, "
+                    "exact boolean")

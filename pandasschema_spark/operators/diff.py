@@ -21,6 +21,8 @@ import typing
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..frames import local_frame
+
 
 def violations_diff(
     old: DataFrame,
@@ -156,6 +158,6 @@ def schema_diff(left: DataFrame, right: DataFrame) -> DataFrame:
             rows.append((c, "added", None, rt[c]))
         elif lt[c] != rt[c]:
             rows.append((c, "type_changed", lt[c], rt[c]))
-    return left.sparkSession.createDataFrame(
-        rows, "column string, status string, left_type string, right_type string"
-    )
+    return local_frame(
+        left.sparkSession, rows,
+        "column string, status string, left_type string, right_type string")

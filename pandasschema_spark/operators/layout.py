@@ -25,6 +25,8 @@ import typing
 
 from pyspark.sql import Column as SparkColumn, DataFrame, functions as F, types as T
 
+from ..frames import local_frame
+
 
 def layout_audit(
     df: DataFrame,
@@ -94,4 +96,4 @@ def layout_audit(
             T.StructField("n_overlaps", T.LongType(), False),
         ]
     )
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)

@@ -19,6 +19,7 @@ import typing
 
 from pyspark.sql import Column as SparkColumn, DataFrame, functions as F
 
+from ..frames import local_frame
 from ..resources import hold
 from ..validation import is_numeric_spark_type
 
@@ -439,9 +440,10 @@ def timeline_anomaly(
     n_buckets = counts.count()
     if n_buckets == 0:
         counts.unpersist()
-        return df.sparkSession.createDataFrame(
-            [], "bucket_start: bigint, n_events: bigint, med: bigint, "
-                "mad: bigint, dev: bigint")
+        return local_frame(
+            df.sparkSession, [],
+            "bucket_start: bigint, n_events: bigint, med: bigint, "
+            "mad: bigint, dev: bigint")
     rank = (n_buckets + 1) // 2
 
     def _ceil_rank_median(frame, col):

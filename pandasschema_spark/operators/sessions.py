@@ -34,6 +34,7 @@ import typing
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..frames import local_frame
 from ..resources import hold
 
 DEFAULT_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
@@ -376,7 +377,7 @@ def timeline_completeness(
     spark = df.sparkSession
     if lim["lo"] is None:
         counts.unpersist()
-        return spark.createDataFrame([], "bucket_start: bigint, n_events: bigint")
+        return local_frame(spark, [], "bucket_start: bigint, n_events: bigint")
     lo, hi = int(lim["lo"]), int(lim["hi"])
     n_buckets = (hi - lo) // bucket_s + 1
     if n_buckets > max_buckets:

@@ -24,6 +24,7 @@ import typing
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..frames import local_frame
 from ..resources import hold
 
 
@@ -536,8 +537,8 @@ def train_ivf_centroids(
     spark = df.sparkSession
     dim = cents.shape[1]
     for _ in range(n_iter):
-        cdf = spark.createDataFrame(
-            [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
+        cdf = local_frame(
+            spark, [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
             "cell int, cvec array<float>",
         )
         memb = assign_probe_cells(
@@ -565,8 +566,8 @@ def train_ivf_centroids(
         nn[nn == 0.0] = 1.0
         cents = new / nn
 
-    return spark.createDataFrame(
-        [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
+    return local_frame(
+        spark, [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
         "cell int, cvec array<float>",
     )
 

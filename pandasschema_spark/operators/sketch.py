@@ -30,6 +30,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from ..frames import local_frame
+
 _MAP_SCHEMA = T.StructType(
     [
         T.StructField("column", T.StringType()),
@@ -108,7 +110,7 @@ def kmv_distinct(df: DataFrame, cols: typing.Sequence[str], k: int = 1024) -> Da
             h_k = max(int(r["h_max"], 16), 1)  # md5 of all-zero top-64 is ~2^-64 improbable
             est = (k - 1) * (1 << 64) // h_k
             out.append((c, int(r["n_kept"]), r["h_max"], est))
-    return spark.createDataFrame(out, OUT_SCHEMA)
+    return local_frame(spark, out, OUT_SCHEMA)
 
 
 def _bottomk_reduce(k: int, group_col: typing.Optional[str] = None):
@@ -283,7 +285,7 @@ def kmv_similarity(
     n_inter = sum(1 for h in union_k if h in ka and h in kb_)
     jacc = (n_inter * 1_000_000 // n_union) if n_union else None
     spark = df_a.sparkSession
-    return spark.createDataFrame(
-        [(len(ka), len(kb_), n_union, n_inter, jacc)],
+    return local_frame(
+        spark, [(len(ka), len(kb_), n_union, n_inter, jacc)],
         "n_kept_a long, n_kept_b long, n_union_kept long, "
         "n_inter long, jaccard_ppm long")

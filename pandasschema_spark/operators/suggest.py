@@ -25,6 +25,7 @@ import typing
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..frames import local_frame
 from .profile import COERCION_PATTERNS as SHAPES
 
 _NUMERIC = (
@@ -149,4 +150,4 @@ def suggest_rules(
             if mn is not None:
                 out.append((c, "inrange", "[{}, {}]".format(mn, mx)))
     per_val.unpersist()
-    return spark.createDataFrame(out, OUT_SCHEMA)
+    return local_frame(spark, out, OUT_SCHEMA)

@@ -25,6 +25,7 @@ import typing
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..errors import PanSchArgumentError
+from ..frames import local_frame
 from ..validation import (
     InTableValidation,
     IsDistinctValidation,
@@ -64,7 +65,7 @@ class RowCheck:
 
 
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
+    return local_frame(spark, [], VIOLATION_SCHEMA)
 
 
 def _empty_exemption(col, spark_type: T.DataType):

@@ -6,10 +6,10 @@ partition coalescing" (AQE conf set by ensure_session in bench/entry).
 
 Unit of lineage = the warehouse's `bucket` partition column (written by
 sources.datagen.write_clips; an Iceberg deployment would use its partition
-values). A run processes buckets in batches:
+values). A run reads the input once and processes buckets in batches:
 
     for each batch of pending buckets:
-        read input WHERE bucket IN (...)           <- partition pruning
+        filter the input WHERE bucket IN (...)     <- partition pruning
         validate (clips constraint suite)
         overwrite-violations partitions for batch  <- idempotent on retry
         append manifest rows (bucket x check metrics, status='ok')
@@ -17,7 +17,7 @@ values). A run processes buckets in batches:
 Manifest append happens only AFTER the violations write commits, so a kill
 anywhere leaves either (no manifest row, replayable partial output that the
 retry's dynamic-partition overwrite replaces) or (manifest row, committed
-output). resume = anti-join of bucket list against the manifest — no bucket
+output). resume = the bucket listing minus the manifest's buckets — no bucket
 is validated twice, and the final violations equal an uninterrupted run
 (tested in tests/test_resume.py).
 
@@ -31,6 +31,7 @@ import typing
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .frames import local_frame
 from .schema import Schema
 from .sources.warehouse import Warehouse
 
@@ -67,19 +68,17 @@ class ValidationRunner:
         if not self.wh.exists(MANIFEST_TABLE):
             return set()
         m = self.wh.read(spark, MANIFEST_TABLE)
+        # a run's manifest holds one row per (bucket, check): deduplicated
+        # on the driver, not by a shuffle
         rows = (
             m.where((F.col("run_id") == self.run_id) & (F.col("status") == "ok"))
-            .select("bucket").distinct().collect()
+            .select("bucket").collect()
         )
         return {r["bucket"] for r in rows}
 
     def all_buckets(self, spark: SparkSession) -> typing.List[int]:
-        # partition listing — metadata-only on Parquet dirs and on Iceberg
-        rows = (
-            self.wh.read(spark, self.input_table)
-            .select("bucket").distinct().collect()
-        )
-        return sorted(r["bucket"] for r in rows)
+        # the input's bucket=<int> directories: a file listing, no Spark job
+        return self.wh.partition_values(self.input_table, "bucket")
 
     # -- the run ------------------------------------------------------------
     GLOBAL_BUCKET = -1  # manifest lineage marker for the global phase
@@ -128,6 +127,12 @@ class ValidationRunner:
     ) -> dict:
         """Validate all pending buckets; returns run summary."""
         local_schema, global_schema = self.split_schema(schema)
+        # one read of the input serves the precheck, every batch and the
+        # global phase, so the run lists and infers the table once
+        src = self.wh.read(spark, self.input_table)
+        if "bucket" not in src.columns:
+            raise ValueError("input table {!r} is not partitioned by bucket".format(
+                self.input_table))
         # frame-level precheck (schema-vs-frame drift: missing columns,
         # dtype warnings): these depend only on (schema, table schema),
         # not on data, and Schema.validate SKIPS checks for columns it
@@ -136,7 +141,7 @@ class ValidationRunner:
         # Written once per run under the FRAME_BUCKET marker (idempotent
         # overwrite) and surfaced in the summary.
         frame_warnings = self._write_frame_warnings(
-            spark, schema, validate_columns, row_key)
+            spark, src, schema, validate_columns, row_key)
         done_all = self.completed_buckets(spark)
         # the GLOBAL_BUCKET manifest marker is a PHASE, not a data
         # bucket — counting it would inflate buckets_total /
@@ -151,13 +156,13 @@ class ValidationRunner:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure after {} batches".format(n_batches))
             if local_schema is not None:
-                self._run_batch(spark, local_schema, batch, validate_columns, row_key)
+                self._run_batch(spark, src, local_schema, batch, validate_columns, row_key)
             n_batches += 1
         global_ran = False
         if global_schema is not None and self.GLOBAL_BUCKET not in done_all:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure before global phase")
-            self._run_global(spark, global_schema, validate_columns, row_key)
+            self._run_global(spark, src, global_schema, validate_columns, row_key)
             global_ran = True
         return {
             "run_id": self.run_id,
@@ -171,12 +176,11 @@ class ValidationRunner:
 
     FRAME_BUCKET = -2  # violations-table marker for frame-level warnings
 
-    def _write_frame_warnings(self, spark, schema, validate_columns, row_key):
+    def _write_frame_warnings(self, spark, src, schema, validate_columns, row_key):
         """Run the compile-time precheck against the table schema and
         persist any frame warnings as row=-1 violation rows (phase
         'frame', bucket FRAME_BUCKET — overwritten idempotently on
         resume). Returns the warning count."""
-        src = self.wh.read(spark, self.input_table)
         names = {c.name for c in schema.columns}
         cols = [c for c in validate_columns if c in names]
         result = schema.validate(src.limit(0), columns=cols, row_key=row_key)
@@ -185,8 +189,8 @@ class ValidationRunner:
             return 0
         rows = [(self.run_id, "frame", -1, w.column, None, w.message,
                  "__frame__", -1, self.FRAME_BUCKET) for w in warns]
-        fw = spark.createDataFrame(
-            rows,
+        fw = local_frame(
+            spark, rows,
             "run_id string, phase string, row long, column string, "
             "value string, message string, check_id string, seq int, "
             "bucket int")
@@ -194,25 +198,21 @@ class ValidationRunner:
             fw, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
         return len(warns)
 
-    def _run_global(self, spark, global_schema, validate_columns, row_key):
+    def _run_global(self, spark, src, global_schema, validate_columns, row_key):
         """One pass over the whole table for shuffle-requiring checks
         (uniqueness hash-agg, broadcast referential anti-join)."""
-        src = self.wh.read(spark, self.input_table)
 
         def manifest(violations):
             fail_total = violations.count()
-            return spark.createDataFrame(
-                [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
+            return local_frame(
+                spark, [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
                 "run_id string, bucket int, rows_seen long, check_id string, fail_count long, status string",
             ).withColumn("finished_at", F.current_timestamp())
 
         self._commit(src, global_schema, validate_columns, row_key, "global", manifest)
 
-    def _run_batch(self, spark, schema, buckets, validate_columns, row_key):
-        src = (
-            self.wh.read(spark, self.input_table)
-            .where(F.col("bucket").isin([int(b) for b in buckets]))  # partition pruning
-        )
+    def _run_batch(self, spark, table, schema, buckets, validate_columns, row_key):
+        src = table.where(F.col("bucket").isin([int(b) for b in buckets]))  # partition pruning
 
         def manifest(violations):
             # per-partition metrics: rows_seen per bucket (+ fail counts per check)
@@ -220,9 +220,9 @@ class ValidationRunner:
             fails = violations.groupBy("bucket", "check_id").agg(
                 F.count(F.lit(1)).alias("fail_count")
             )
-            all_buckets_df = spark.createDataFrame(
-                [(int(b),) for b in buckets], T.StructType([T.StructField("bucket", T.IntegerType(), False)])
-            )
+            all_buckets_df = local_frame(
+                spark, [(int(b),) for b in buckets],
+                T.StructType([T.StructField("bucket", T.IntegerType(), False)]))
             return (
                 all_buckets_df.join(rows_seen, "bucket", "left")
                 .join(fails, "bucket", "left")

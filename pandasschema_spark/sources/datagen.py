@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..frames import local_frame
 from ..functions import audio as A
 
 INJECT_MOD = 997
@@ -121,7 +122,8 @@ def write_clips(spark: SparkSession, path: str, n: int, seed: int = 42, *,
 
 def codec_dim(spark: SparkSession) -> DataFrame:
     """FIXTURES.md §C1: the 4-row codec dimension table."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("pcm_s16le", "wav", False), ("flac", "flac", False),
          ("opus", "ogg", True), ("mp3", "mp3", True)],
         T.StructType([

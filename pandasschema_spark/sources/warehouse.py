@@ -56,6 +56,30 @@ class Warehouse:
                 for f in os.listdir(p))
         )
 
+    def partition_values(self, name: str, column: str) -> typing.List[int]:
+        """Sorted values of the integer partition column ``column``: the
+        ``<column>=<int>`` directories, at any depth, that hold a data
+        file (the suffix rule of exists()). A file listing, no Spark job;
+        names starting with '_' or '.' are skipped, as Spark's own
+        listing skips them. Iceberg equivalent: the table's
+        ``.partitions`` metadata table."""
+        root = self.path(name)
+        prefix = column + "="
+        out = set()
+        for dirpath, dirs, files in os.walk(root):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if not any(f.endswith(self.suffix) and not f.startswith(("_", "."))
+                       for f in files):
+                continue
+            for part in os.path.relpath(dirpath, root).split(os.sep):
+                if part.startswith(prefix):
+                    try:
+                        out.add(int(part[len(prefix):]))
+                    except ValueError:
+                        raise ValueError("{}: partition {!r} is not an integer".format(
+                            name, part)) from None
+        return sorted(out)
+
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))
 

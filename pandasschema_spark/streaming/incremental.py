@@ -30,6 +30,7 @@ import typing
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..frames import local_frame
 from ..schema import Schema
 from ..sources.warehouse import Warehouse
 
@@ -84,8 +85,8 @@ def stream_validate(
             )
             rows_seen = batch_df.count()
             fails = violations.count()
-            metrics = spark.createDataFrame(
-                [(int(batch_id), rows_seen, fails)],
+            metrics = local_frame(
+                spark, [(int(batch_id), rows_seen, fails)],
                 "batch_id long, rows_seen long, fail_count long",
             ).withColumn("finished_at", F.current_timestamp())
             warehouse.overwrite_partitions(metrics, STREAM_METRICS_TABLE, partition_by=["batch_id"])

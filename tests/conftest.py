@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -39,3 +40,24 @@ def pinned(spark):
     """Callable: the ids of the RDDs the session keeps persisted now."""
     jsc = spark.sparkContext._jsc
     return lambda: set(jsc.getPersistentRDDs().keySet())
+
+
+_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """Callable: the number of Spark jobs ``action()`` starts, counted
+    through a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(action):
+        group = "jobs_of_{}".format(next(_GROUPS))
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -198,6 +198,7 @@ def main() -> None:
         "both join sides and the hot count — not four corpus re-scans).",
         plan_of(blocked_pairs(ent, "name", "id", max_block=100))))
 
+    from pandasschema_spark.frames import local_frame
     from pandasschema_spark.operators.colstats import concentration_profile
     from pandasschema_spark.operators.dedup import canonical_representatives
     from pandasschema_spark.operators.profile import timeline_trend
@@ -214,7 +215,7 @@ def main() -> None:
         "joins back via `BroadcastHashJoin` — no Window, no sort.",
         plan_of(boilerplate_scan(docs, "text", "doc_id", min_doc_freq=10))))
 
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    pairs = local_frame(spark, [(1, 2)], "id_a long, id_b long")
     with scope():
         sections.append((
             "Canonical representative per duplicate cluster (window-free argmax)",

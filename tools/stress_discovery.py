@@ -39,6 +39,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from pandasschema_spark.frames import local_frame
     from pandasschema_spark.operators.profile import format_mask_profile
     from pandasschema_spark.operators.referential import inclusion_profile
     from pandasschema_spark.operators.sampling import quota_sample
@@ -86,8 +87,8 @@ def main() -> None:
 
     ev = spark.range(0, n, 1, cpus * 2).select(
         F.col("id"), (F.col("id") % 5).cast("string").alias("g"))
-    quotas = spark.createDataFrame(
-        [(str(i), 10_000) for i in range(5)], "value string, quota long")
+    quotas = local_frame(
+        spark, [(str(i), 10_000) for i in range(5)], "value string, quota long")
     t0 = time.time()
     cnt = (quota_sample(ev, "g", "id", quotas)
            .groupBy("g").count().collect())
