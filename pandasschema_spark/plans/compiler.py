@@ -19,6 +19,7 @@ global ordinal so collected warnings can reproduce the reference's stable
 from __future__ import annotations
 
 import dataclasses
+import functools
 import operator
 import typing
 
@@ -52,8 +53,9 @@ NULL_VALUE_REPR = "nan"
 
 
 @dataclasses.dataclass
-class RowCheck:
-    """One compiled row-local check bound to a concrete df column."""
+class Check:
+    """One compiled check bound to a concrete df column: row-local
+    (build_row_violations) or global (build_global_violations)."""
 
     seq: int
     check_id: str
@@ -98,7 +100,7 @@ def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing
     return [c.cast(t).alias(n) for c, (n, t) in zip(cols, VIOLATION_FIELDS)]
 
 
-def build_row_violations(df: DataFrame, checks: typing.List[RowCheck], row_col: str) -> DataFrame:
+def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str) -> DataFrame:
     """Compile all row-local checks (at least one) into one select + explode.
 
     The produced plan is a narrow map: scan -> project(array of
@@ -201,7 +203,20 @@ def emit_violations(
         warn_col=warn_col, message=message, check_id=check_id, seq=seq))
 
 
-def _fail_predicate(df, dtypes, ck: RowCheck):
+def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: str) -> DataFrame:
+    """Compile global checks (at least one) into the union of their
+    emitted whole-table fail sets — the twin of build_row_violations."""
+    return functools.reduce(DataFrame.unionByName, [
+        emit_violations(
+            global_fail_rows(df, row_col, ck.df_col, ck.validation),
+            df.schema[ck.df_col].dataType,
+            warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq,
+            allow_empty=ck.allow_empty)
+        for ck in checks
+    ])
+
+
+def _fail_predicate(df, dtypes, ck: Check):
     """The compiled FAIL predicate for one row check (shared by the
     violations explode and the bitmap projection)."""
     col = df[ck.df_col]
@@ -218,7 +233,7 @@ def _fail_predicate(df, dtypes, ck: RowCheck):
 
 def build_violation_bitmap(
     df: DataFrame,
-    checks: typing.List[RowCheck],
+    checks: typing.List[Check],
     row_col: str,
     keep_clean: bool = False,
 ) -> DataFrame:

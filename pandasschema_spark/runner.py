@@ -6,13 +6,18 @@ partition coalescing" (AQE conf set by ensure_session in bench/entry).
 
 Unit of lineage = the warehouse's `bucket` partition column (written by
 sources.datagen.write_clips; an Iceberg deployment would use its partition
-values). A run reads the input once and processes buckets in batches:
+values). A run reads the input once, compiles the caller's schema once
+against that read (Schema.compile: the check ids are Schema.validate's),
+and processes buckets in batches:
 
     for each batch of pending buckets:
         filter the input WHERE bucket IN (...)     <- partition pruning
-        validate (clips constraint suite)
+        build the row-local violations of the batch
         overwrite-violations partitions for batch  <- idempotent on retry
         append manifest rows (bucket x check metrics, status='ok')
+
+then builds the global checks (distinctness, referential) once over the
+whole input as one more committed phase.
 
 Manifest append happens only AFTER the violations write commits, so a kill
 anywhere leaves either (no manifest row, replayable partial output that the
@@ -32,6 +37,7 @@ import typing
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .frames import local_frame
+from .plans.compiler import build_global_violations, build_row_violations
 from .schema import Schema
 from .sources.warehouse import Warehouse
 
@@ -83,39 +89,6 @@ class ValidationRunner:
     # -- the run ------------------------------------------------------------
     GLOBAL_BUCKET = -1  # manifest lineage marker for the global phase
 
-    @staticmethod
-    def split_schema(schema: Schema):
-        """(row-local schema, global schema). Distinctness/referential are
-        properties of the WHOLE table — they cannot be checkpointed per
-        bucket without auxiliary state, so they run as one dedicated phase
-        whose lineage unit is the phase itself (manifest bucket = -1)."""
-        from .column import Column as _Col
-
-        local_cols, global_cols = [], []
-        for c in schema.columns:
-            loc = [v for v in c.validations if not getattr(v, "is_global", False)]
-            glo = [v for v in c.validations if getattr(v, "is_global", False)]
-            if schema.ordered:
-                # ordered pairing is POSITIONAL (Schema.validate zips
-                # df columns against schema columns): every column must
-                # keep its slot in both sub-schemas — dropping the
-                # check-free ones would shift later checks onto the
-                # wrong DataFrame columns. Empty-validation placeholders
-                # produce no checks and cost nothing.
-                local_cols.append(_Col(c.name, loc, c.allow_empty))
-                global_cols.append(_Col(c.name, glo, c.allow_empty))
-            else:
-                if loc:
-                    local_cols.append(_Col(c.name, loc, c.allow_empty))
-                if glo:
-                    global_cols.append(_Col(c.name, glo, c.allow_empty))
-        has_local = any(c.validations for c in local_cols)
-        has_global = any(c.validations for c in global_cols)
-        return (
-            Schema(local_cols, schema.ordered) if has_local else None,
-            Schema(global_cols, schema.ordered) if has_global else None,
-        )
-
     def run(
         self,
         spark: SparkSession,
@@ -126,22 +99,20 @@ class ValidationRunner:
         fail_after_batches: int = None,  # test hook: simulate a crash
     ) -> dict:
         """Validate all pending buckets; returns run summary."""
-        local_schema, global_schema = self.split_schema(schema)
-        # one read of the input serves the precheck, every batch and the
+        # one read of the input serves the compile, every batch and the
         # global phase, so the run lists and infers the table once
         src = self.wh.read(spark, self.input_table)
         if "bucket" not in src.columns:
             raise ValueError("input table {!r} is not partitioned by bucket".format(
                 self.input_table))
-        # frame-level precheck (schema-vs-frame drift: missing columns,
-        # dtype warnings): these depend only on (schema, table schema),
-        # not on data, and Schema.validate SKIPS checks for columns it
-        # warned about — discarding them would let a renamed/dropped
-        # column report a green run with the column never validated.
-        # Written once per run under the FRAME_BUCKET marker (idempotent
-        # overwrite) and surfaced in the summary.
-        frame_warnings = self._write_frame_warnings(
-            spark, src, schema, validate_columns, row_key)
+        # one compile of the caller's schema, so check ids are the ones
+        # Schema.validate gives. Its frame warnings (missing columns,
+        # dtype) need no plan; the checks of a column they name are not
+        # compiled, so discarding them would let a renamed/dropped column
+        # report a green run. Written once per run under the FRAME_BUCKET
+        # marker (idempotent overwrite) and surfaced in the summary.
+        compiled = schema.compile(src, validate_columns)
+        frame_warnings = self._write_frame_warnings(spark, compiled.frame_warnings)
         done_all = self.completed_buckets(spark)
         # the GLOBAL_BUCKET manifest marker is a PHASE, not a data
         # bucket — counting it would inflate buckets_total /
@@ -155,14 +126,14 @@ class ValidationRunner:
         for batch in batches:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure after {} batches".format(n_batches))
-            if local_schema is not None:
-                self._run_batch(spark, src, local_schema, batch, validate_columns, row_key)
+            if compiled.row_checks:
+                self._run_batch(spark, src, compiled.row_checks, batch, row_key)
             n_batches += 1
         global_ran = False
-        if global_schema is not None and self.GLOBAL_BUCKET not in done_all:
+        if compiled.global_checks and self.GLOBAL_BUCKET not in done_all:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure before global phase")
-            self._run_global(spark, src, global_schema, validate_columns, row_key)
+            self._run_global(spark, src, compiled.global_checks, row_key)
             global_ran = True
         return {
             "run_id": self.run_id,
@@ -176,15 +147,10 @@ class ValidationRunner:
 
     FRAME_BUCKET = -2  # violations-table marker for frame-level warnings
 
-    def _write_frame_warnings(self, spark, src, schema, validate_columns, row_key):
-        """Run the compile-time precheck against the table schema and
-        persist any frame warnings as row=-1 violation rows (phase
-        'frame', bucket FRAME_BUCKET — overwritten idempotently on
+    def _write_frame_warnings(self, spark, warns):
+        """Persist the compile's frame warnings as row=-1 violation rows
+        (phase 'frame', bucket FRAME_BUCKET — overwritten idempotently on
         resume). Returns the warning count."""
-        names = {c.name for c in schema.columns}
-        cols = [c for c in validate_columns if c in names]
-        result = schema.validate(src.limit(0), columns=cols, row_key=row_key)
-        warns = result.frame_warnings
         if not warns:
             return 0
         rows = [(self.run_id, "frame", -1, w.column, None, w.message,
@@ -198,9 +164,12 @@ class ValidationRunner:
             fw, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
         return len(warns)
 
-    def _run_global(self, spark, src, global_schema, validate_columns, row_key):
+    def _run_global(self, spark, src, checks, row_key):
         """One pass over the whole table for shuffle-requiring checks
-        (uniqueness hash-agg, broadcast referential anti-join)."""
+        (uniqueness hash-agg, broadcast referential anti-join). They are
+        properties of the WHOLE table and cannot be checkpointed per
+        bucket without auxiliary state, so they commit as one phase whose
+        lineage unit is the phase itself (manifest bucket GLOBAL_BUCKET)."""
 
         def manifest(violations):
             fail_total = violations.count()
@@ -209,9 +178,10 @@ class ValidationRunner:
                 "run_id string, bucket int, rows_seen long, check_id string, fail_count long, status string",
             ).withColumn("finished_at", F.current_timestamp())
 
-        self._commit(src, global_schema, validate_columns, row_key, "global", manifest)
+        self._commit(src, build_global_violations(src, checks, row_key), row_key, "global",
+                     manifest)
 
-    def _run_batch(self, spark, table, schema, buckets, validate_columns, row_key):
+    def _run_batch(self, spark, table, checks, buckets, row_key):
         src = table.where(F.col("bucket").isin([int(b) for b in buckets]))  # partition pruning
 
         def manifest(violations):
@@ -237,21 +207,20 @@ class ValidationRunner:
                 )
             )
 
-        self._commit(src, schema, validate_columns, row_key, "local", manifest)
+        self._commit(src, build_row_violations(src, checks, row_key), row_key, "local",
+                     manifest)
 
-    def _commit(self, src, schema, validate_columns, row_key, phase, manifest):
-        """Validate ``src``, overwrite the phase's violations partitions,
-        then append ``manifest(violations)`` — the commit point. The
-        violations are persisted because the write and the manifest's
-        metrics both read them."""
-        cols = [c for c in validate_columns if c in {x.name for x in schema.columns}]
-        result = schema.validate(src, columns=cols, row_key=row_key)
+    def _commit(self, src, built, row_key, phase, manifest):
+        """Overwrite the phase's violations partitions with ``built`` (the
+        violations of ``src``), then append ``manifest(violations)`` — the
+        commit point. The violations are persisted because the write and
+        the manifest's metrics both read them."""
         # attach lineage: map violation rows back to their bucket via the
         # source (exact and format-agnostic; no assumption that bucket is a
         # function of the row key)
         keyed = src.select(F.col(row_key).cast("long").alias("row"), "bucket")
         violations = (
-            result.violations.join(keyed, "row", "left")
+            built.join(keyed, "row", "left")
             .withColumn("run_id", F.lit(self.run_id))
             .withColumn("phase", F.lit(phase))
             .persist()

@@ -160,6 +160,17 @@ class ValidationResult:
         return sorted(warnings, key=lambda e: e.row)
 
 
+class CompiledSchema(typing.NamedTuple):
+    """Schema.compile's record: driver-side frame warnings, the row-local
+    and the global checks in ``seq`` order, and whether validation
+    early-returns on the column-count precheck."""
+
+    frame_warnings: typing.List[ValidationWarning]
+    row_checks: typing.List[_compiler.Check]
+    global_checks: typing.List[_compiler.Check]
+    early_return: bool
+
+
 class Schema:
     def __init__(self, columns: typing.Iterable[Column], ordered: bool = False):
         # constructor checks: parity with reference schema.py:14-30
@@ -189,7 +200,7 @@ class Schema:
         warehouse scale pass a persisted natural key column name/expr
         (e.g. a clip ordinal) to avoid the extra scan.
         """
-        frame_warnings, row_checks, global_checks, early = self._compile_checks(df, columns)
+        frame_warnings, row_checks, global_checks, early = self.compile(df, columns)
         if early:
             return ValidationResult(frame_warnings, None)
 
@@ -199,12 +210,8 @@ class Schema:
         keyed, row_col = self._with_row_key(df, row_key)
 
         parts = [_compiler.build_row_violations(keyed, row_checks, row_col)] if row_checks else []
-        for g_seq, check_id, df_name, warn_name, v, allow_empty in global_checks:
-            parts.append(_compiler.emit_violations(
-                _compiler.global_fail_rows(keyed, row_col, df_name, v),
-                keyed.schema[df_name].dataType,
-                warn_col=warn_name, message=v.message, check_id=check_id, seq=g_seq,
-                allow_empty=allow_empty))
+        if global_checks:
+            parts.append(_compiler.build_global_violations(keyed, global_checks, row_col))
         return ValidationResult(frame_warnings, functools.reduce(DataFrame.unionByName, parts))
 
     # ------------------------------------------------------------------
@@ -224,7 +231,7 @@ class Schema:
         have no row-local bit) and on any frame-level precheck warning,
         instead of silently dropping bits.
         """
-        frame_warnings, row_checks, global_checks, early = self._compile_checks(df, columns)
+        frame_warnings, row_checks, global_checks, early = self.compile(df, columns)
         if early or frame_warnings:
             raise PanSchArgumentError(
                 "validate_bitmap precheck failed: "
@@ -233,7 +240,7 @@ class Schema:
         if global_checks:
             raise PanSchArgumentError(
                 "validate_bitmap covers row-local checks only; schema has global "
-                "checks: {}".format([c[1] for c in global_checks])
+                "checks: {}".format([c.check_id for c in global_checks])
             )
         keyed, row_col = self._with_row_key(df, row_key)
         return _compiler.build_violation_bitmap(keyed, row_checks, row_col, keep_clean=keep_clean)
@@ -248,10 +255,14 @@ class Schema:
         return df.withColumn(ROW_IDX_COL, row_key), ROW_IDX_COL
 
     # ------------------------------------------------------------------
-    def _compile_checks(self, df, columns):
-        """Pairing + per-check compilation shared by validate/validate_bitmap.
+    def compile(self, df: DataFrame, columns: typing.List[str] = None) -> CompiledSchema:
+        """Pairing + per-check compilation, done once per caller: validate,
+        validate_bitmap, the batch runner and the stream all build from
+        this record, so ``seq`` and ``check_id`` are the same everywhere.
 
-        Returns (frame_warnings, row_checks, global_checks, early_return).
+        Reads only ``df.columns`` and ``df.schema`` (no plan, no job), so
+        the checks may be built against any frame with those columns — a
+        batch of ``df`` or a micro-batch of a stream.
         """
         frame_warnings: typing.List[ValidationWarning] = []
         df_cols = list(df.columns)
@@ -265,7 +276,7 @@ class Schema:
                         )
                     )
                 )
-                return frame_warnings, [], [], True
+                return CompiledSchema(frame_warnings, [], [], True)
             columns_to_pair = self.columns
         else:
             if set(columns).issubset(self.get_column_names()):
@@ -297,22 +308,19 @@ class Schema:
                     pairs.append((schema_col.name, schema_col.name, schema_col))
 
         # -- split checks by kind ------------------------------------------
-        row_checks: typing.List[_compiler.RowCheck] = []
-        global_checks = []  # (seq, check_id, df_col, warn_col, validation, allow_empty)
+        row_checks: typing.List[_compiler.Check] = []
+        global_checks: typing.List[_compiler.Check] = []
         dtypes = {f.name: f.dataType for f in df.schema.fields}
         seq = 0
         for df_name, warn_name, schema_col in pairs:
             for v in schema_col.validations:
-                check_id = "{}#{}:{}".format(df_name, seq, type(v).__name__)
                 if isinstance(v, IsDtypeValidation):
                     frame_warnings.extend(v.get_errors_for_type(schema_col.name, dtypes[df_name]))
-                elif getattr(v, "is_global", False):
-                    global_checks.append((seq, check_id, df_name, warn_name, v, schema_col.allow_empty))
                 elif isinstance(v, _SeriesValidation):
-                    row_checks.append(
-                        _compiler.RowCheck(
+                    (global_checks if getattr(v, "is_global", False) else row_checks).append(
+                        _compiler.Check(
                             seq=seq,
-                            check_id=check_id,
+                            check_id="{}#{}:{}".format(df_name, seq, type(v).__name__),
                             df_col=df_name,
                             warn_col=warn_name,
                             message=v.message,
@@ -326,4 +334,4 @@ class Schema:
                     )
                 seq += 1
 
-        return frame_warnings, row_checks, global_checks, False
+        return CompiledSchema(frame_warnings, row_checks, global_checks, False)

@@ -8,8 +8,10 @@ validate clip files AS THEY ARRIVE, with exactly-once violation output.
 Design:
 - source: file stream over the warehouse directory (new parquet files =
   new data; Iceberg's streaming read slots in behind the same DataFrame).
-- row-local checks run INSIDE foreachBatch by reusing Schema.validate —
-  the whole compiled one-scan plan applies unchanged to each micro-batch.
+- the schema is compiled once against the stream (Schema.compile) and
+  its row-local checks are built INSIDE foreachBatch — the whole
+  compiled one-scan plan applies unchanged to each micro-batch, with the
+  check ids Schema.validate gives.
 - exactly-once: violations are written partitioned by batch_id with
   dynamic-partition overwrite, so a replayed micro-batch (failure between
   sink write and checkpoint commit) overwrites its own partition instead
@@ -31,6 +33,7 @@ import typing
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..frames import local_frame
+from ..plans.compiler import build_row_violations
 from ..schema import Schema
 from ..sources.warehouse import Warehouse
 
@@ -53,12 +56,6 @@ def stream_validate(
 ):
     """Start (and with available-now trigger, run to completion) the
     incremental validation stream. Returns the StreamingQuery."""
-    from ..runner import ValidationRunner
-
-    local_schema, _global = ValidationRunner.split_schema(schema)
-    if local_schema is None:
-        raise ValueError("no row-local checks in schema; nothing to stream")
-
     reader = (
         spark.readStream.schema(source_schema)
         .option("recursiveFileLookup", "true")
@@ -66,13 +63,13 @@ def stream_validate(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(source_dir)
-
-    cols = [c for c in validate_columns if c in {x.name for x in local_schema.columns}]
+    row_checks = schema.compile(stream, validate_columns).row_checks
+    if not row_checks:
+        raise ValueError("no row-local checks in schema; nothing to stream")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        res = local_schema.validate(batch_df, columns=cols, row_key=row_key)
         violations = (
-            res.violations
+            build_row_violations(batch_df, row_checks, row_key)
             .withColumn("batch_id", F.lit(int(batch_id)))
             .persist()
         )

@@ -122,8 +122,6 @@ class _BaseValidation:
     #: True when the check needs global state (a shuffle) rather than a
     #: row-local predicate — routed to pandasschema_spark.operators.*
     is_global: bool = False
-    #: True for frame-level (driver-side, no per-row output) checks
-    is_frame_level: bool = False
 
 
 class _SeriesValidation(_BaseValidation):
@@ -942,8 +940,6 @@ class IsDtypeValidation(_BaseValidation):
     validation.py:217-237 checks np.issubdtype(series.dtype, expected); we
     map the Spark type to its numpy equivalent and run the same
     issubdtype lattice, so int32 passes a required np.number etc.)."""
-
-    is_frame_level = True
 
     def __init__(self, dtype: np.dtype, message: str = None):
         # engine extension: the reference ctor rejects message= (its

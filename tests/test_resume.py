@@ -188,10 +188,11 @@ def test_append_schema_guard(spark, tmp_path_factory):
         wh.append(bad_col, "t")
 
 
-def test_ordered_schema_split_keeps_positions(spark, wh_root):
-    """split_schema on an ordered=True schema must keep EVERY column's
-    positional slot — dropping check-free columns shifts later checks
-    onto the wrong DataFrame columns (silent wrong results)."""
+def test_ordered_schema_split_keeps_positions(spark, tmp_path):
+    """An ordered=True schema pairs by POSITION, once, on the caller's
+    schema: the runner's local and global phases must keep every
+    column's slot, so the regex check runs against TRANSCRIPT (the
+    table's second column) and the distinct check against clip_id."""
     from pandasschema_spark.column import Column
     from pandasschema_spark.schema import Schema
     from pandasschema_spark.validation import (
@@ -201,21 +202,53 @@ def test_ordered_schema_split_keeps_positions(spark, wh_root):
         Column("clip_id", [IsDistinctValidation()]),
         Column("transcript", [MatchesPatternValidation(r"^x-never-matches$")]),
     ], ordered=True)
-    local, glob = ValidationRunner.split_schema(sch)
-    assert [c.name for c in local.columns] == ["clip_id", "transcript"]
-    assert [c.name for c in glob.columns] == ["clip_id", "transcript"]
-    assert not local.columns[0].validations          # placeholder slot
-    assert glob.columns[0].validations and not glob.columns[1].validations
-    # end-to-end: the regex check must run against TRANSCRIPT (df col 2
-    # when pairing a 2-col frame positionally), not clip_id
-    df = spark.createDataFrame(
-        [("c1", "hello"), ("c2", "world")],
-        "clip_id string, transcript string").withColumn(
-            "row_ord", F.monotonically_increasing_id())
-    res = local.validate(df.select("clip_id", "transcript", "row_ord"),
-                         columns=["clip_id", "transcript"], row_key="row_ord")
-    cols = {r["column"] for r in res.violations.collect()}
-    assert cols == {"transcript"}
+    wh = Warehouse(str(tmp_path))
+    # columns (clip_id, transcript, row_ord, bucket); odd rows repeat the
+    # previous clip_id
+    spark.createDataFrame(
+        [("c{}".format(i // 2), "hello", i, i % 3) for i in range(6)],
+        "clip_id string, transcript string, row_ord long, bucket int",
+    ).write.partitionBy("bucket").parquet(wh.path("clips"))
+    runner = ValidationRunner(wh, "ordered", batch_buckets=2)
+    summary = runner.run(spark, sch, validate_columns=["clip_id", "transcript"])
+    assert summary["global_phase_ran"] and summary["frame_warnings"] == 0
+
+    got = {(r["phase"], r["column"], r["row"]) for r in runner.violations(spark).collect()}
+    assert got == ({("local", "transcript", i) for i in range(6)}
+                   | {("global", "clip_id", i) for i in (1, 3, 5)})
+    ids = {r["check_id"] for r in runner.violations(spark).select("check_id").collect()}
+    want = sch.validate(wh.read(spark, "clips"), columns=["clip_id", "transcript"],
+                        row_key="row_ord").violations
+    assert ids == {r["check_id"] for r in want.select("check_id").collect()}
+
+
+def test_resumed_check_ids_match_schema_validate(spark, tmp_path):
+    """The runner compiles the caller's schema once, so after a crash and
+    a resume its (check_id, seq) pairs are exactly Schema.validate's over
+    the same table, and no seq names two checks. 6000 rows carry every
+    injection class, the cross-bucket duplicate (global phase) included."""
+    wh = Warehouse(str(tmp_path))
+    G.write_clips(spark, wh.path("clips"), 6000, SEED, with_audio=False,
+                  partitions=2, bucket_count=4)
+    schema = _schema(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ValidationRunner(wh, "ids", batch_buckets=2).run(
+            spark, schema, validate_columns=PUBLIC_COLUMNS, fail_after_batches=1)
+    runner = ValidationRunner(wh, "ids", batch_buckets=2)
+    runner.run(spark, schema, validate_columns=PUBLIC_COLUMNS)
+
+    def pairs(df):
+        return {(r["check_id"], r["seq"]) for r in
+                df.select("check_id", "seq").distinct().collect()}
+
+    got = pairs(runner.violations(spark).where(F.col("phase") != "frame"))
+    want = pairs(schema.validate(wh.read(spark, "clips"), columns=PUBLIC_COLUMNS,
+                                 row_key="row_ord").violations)
+    assert got == want
+    assert len({seq for _, seq in got}) == len(got)
+    assert {c.split(":")[1] for c, _ in got} >= {
+        "IsDistinctValidation", "InListValidation", "InTableValidation",
+        "InRangeValidation", "NotNullValidation", "MatchesPatternValidation"}
 
 
 def test_runner_surfaces_frame_warnings(spark, wh_root, tmp_path):

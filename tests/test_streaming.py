@@ -59,6 +59,12 @@ def test_stream_validate_and_resume(spark, tmp_path_factory):
     # exactly one batch partition per micro-batch)
     batches = {r["batch_id"] for r in v2.collect()}
     assert len(batches) == 2
+    # the stream builds from the compiled schema: its check ids are the
+    # ones Schema.validate gives over the same rows
+    whole = clips_schema(None, with_pcm_checks=False).validate(
+        spark.read.parquet(src), columns=PUBLIC_COLUMNS, row_key="row_ord")
+    want = {r["check_id"] for r in whole.violations.select("check_id").collect()}
+    assert {r["check_id"] for r in v2.collect()} <= want
 
 
 def test_stateful_duplicates_across_batches(spark, tmp_path_factory):
