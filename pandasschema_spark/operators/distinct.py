@@ -54,14 +54,14 @@ def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
 
 
 def duplicate_rows(base: DataFrame, broadcast: bool = True) -> DataFrame:
-    """(__r__, __v__) rows of a (__r__, __v__) frame that repeat an
-    earlier row's value — keep='first' fails every occurrence but the
-    one at the minimum ordinal. ``broadcast`` ships the (rare) duplicate
-    keys to the join-back; pass False when the duplicate KEY set itself
-    is too large to broadcast."""
+    """Rows of a (__r__, __v__, ...) frame that repeat an earlier row's
+    value, with all of ``base``'s columns — keep='first' fails every
+    occurrence but the one at the minimum ordinal. ``broadcast`` ships
+    the (rare) duplicate keys to the join-back; pass False when the
+    duplicate KEY set itself is too large to broadcast."""
     return (_keeper_join(base, broadcast)
             .where(F.col("__r__") != F.col("__m__"))
-            .select("__r__", base["__v__"]))
+            .select(*[base[c] for c in base.columns]))
 
 
 def _keeper_join(base: DataFrame, broadcast: bool) -> DataFrame:

@@ -100,11 +100,14 @@ def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing
     return [c.cast(t).alias(n) for c, (n, t) in zip(cols, VIOLATION_FIELDS)]
 
 
-def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str) -> DataFrame:
+def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str,
+                         carry: typing.Sequence[str] = ()) -> DataFrame:
     """Compile all row-local checks (at least one) into one select + explode.
 
     The produced plan is a narrow map: scan -> project(array of
     conditional structs) -> filter(non-empty) -> explode. No shuffle.
+    Each violation also keeps the ``carry`` columns of the row that
+    produced it (the runner carries ``bucket``).
     """
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     structs = [
@@ -123,9 +126,9 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
     # expression - into interpreted mode (measured 4x slower than
     # Generate + null filter, which stays on the codegen path).
     return (
-        df.select(F.explode(F.array(*structs)).alias("v"))
+        df.select(F.explode(F.array(*structs)).alias("v"), *carry)
         .where(F.col("v").isNotNull())
-        .select("v.*")
+        .select("v.*", *carry)
     )
 
 
@@ -133,14 +136,17 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
 # global checks: whole-table fail sets -> one emitter
 # ---------------------------------------------------------------------------
 
-def fail_base(df: DataFrame, df_col: str, row_col: str) -> DataFrame:
-    """The (__r__ long, __v__) projection every global fail set is cut
-    from."""
-    return df.select(F.col(row_col).cast("long").alias("__r__"), F.col(df_col).alias("__v__"))
+def fail_base(df: DataFrame, df_col: str, row_col: str,
+              carry: typing.Sequence[str] = ()) -> DataFrame:
+    """The (__r__ long, __v__, *carry) projection every global fail set
+    is cut from."""
+    return df.select(F.col(row_col).cast("long").alias("__r__"), F.col(df_col).alias("__v__"),
+                     *carry)
 
 
-def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v) -> DataFrame:
-    """(__r__, __v__) rows failing ``v`` over the WHOLE table — one frame
+def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v,
+                     carry: typing.Sequence[str] = ()) -> DataFrame:
+    """(__r__, __v__, *carry) rows failing ``v`` over the WHOLE table — one frame
     for any global check, standalone or composed. Reference semantics are
     series-wide, so a combinator wrapping a global check composes fail-row
     sets instead of per-batch masks. Set algebra mirrors the reference's
@@ -150,20 +156,21 @@ def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v) -> DataFrame:
     - ``a | b``   fails where BOTH fail -> intersection (left_semi)
     - ``a & b``   fails where EITHER    -> union, one row per __r__
 
-    ``__v__`` rides through every step, so the source is never joined
-    back in. Leaves: duplicates (operators/distinct.py), dimension misses
-    (operators/referential.py), and a row-local check as a filter on its
-    compiled predicate."""
+    ``__v__`` and the ``carry`` columns ride through every step, so the
+    source is never joined back in. Leaves: duplicates
+    (operators/distinct.py), dimension misses (operators/referential.py),
+    and a row-local check as a filter on its compiled predicate."""
     if isinstance(v, _InverseValidation):
         inner = global_fail_rows(df, row_col, df_col, v.negated)
-        return fail_base(df, df_col, row_col).join(inner.select("__r__"), "__r__", "left_anti")
+        return fail_base(df, df_col, row_col, carry).join(
+            inner.select("__r__"), "__r__", "left_anti")
     if isinstance(v, _CombinedValidation):
-        a = global_fail_rows(df, row_col, df_col, v.v_a)
-        b = global_fail_rows(df, row_col, df_col, v.v_b)
+        a = global_fail_rows(df, row_col, df_col, v.v_a, carry)
+        b = global_fail_rows(df, row_col, df_col, v.v_b, carry)
         if v.operator is operator.or_:
             return a.join(b.select("__r__"), "__r__", "left_semi")
         return a.unionByName(b).dropDuplicates(["__r__"])
-    base = fail_base(df, df_col, row_col)
+    base = fail_base(df, df_col, row_col, carry)
     if isinstance(v, IsDistinctValidation):
         from ..operators.distinct import duplicate_rows
 
@@ -190,8 +197,10 @@ def emit_violations(
     check_id: str,
     seq: int,
     allow_empty: bool,
+    carry: typing.Sequence[str] = (),
 ) -> DataFrame:
-    """Violation rows (VIOLATION_SCHEMA) from a (__r__, __v__) fail set.
+    """Violation rows (VIOLATION_SCHEMA, then ``carry``) from a
+    (__r__, __v__, *carry) fail set.
     The allow_empty exemption applies here, ONCE, to the whole (possibly
     composed) check — the reference's get_errors shape
     (validation.py:79-110)."""
@@ -200,18 +209,20 @@ def emit_violations(
         fail = fail.where(_empty_exemption(v, spark_type))
     return fail.select(*violation_columns(
         F.col("__r__"), value_repr(v, spark_type),
-        warn_col=warn_col, message=message, check_id=check_id, seq=seq))
+        warn_col=warn_col, message=message, check_id=check_id, seq=seq), *carry)
 
 
-def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: str) -> DataFrame:
+def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: str,
+                            carry: typing.Sequence[str] = ()) -> DataFrame:
     """Compile global checks (at least one) into the union of their
-    emitted whole-table fail sets — the twin of build_row_violations."""
+    emitted whole-table fail sets — the twin of build_row_violations,
+    ``carry`` included."""
     return functools.reduce(DataFrame.unionByName, [
         emit_violations(
-            global_fail_rows(df, row_col, ck.df_col, ck.validation),
+            global_fail_rows(df, row_col, ck.df_col, ck.validation, carry),
             df.schema[ck.df_col].dataType,
             warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq,
-            allow_empty=ck.allow_empty)
+            allow_empty=ck.allow_empty, carry=carry)
         for ck in checks
     ])
 

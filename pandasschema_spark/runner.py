@@ -12,12 +12,20 @@ and processes buckets in batches:
 
     for each batch of pending buckets:
         filter the input WHERE bucket IN (...)     <- partition pruning
-        build the row-local violations of the batch
+        build the row-local violations of the batch, each carrying
+          the bucket of the row that produced it   <- the batch's one read
         overwrite-violations partitions for batch  <- idempotent on retry
         append manifest rows (bucket x check metrics, status='ok')
 
 then builds the global checks (distinctness, referential) once over the
-whole input as one more committed phase.
+whole input as one more committed phase; its violations carry their
+row's bucket the same way. Nothing joins a violation back to the source.
+A bucket's rows_seen comes from the bucket listing, which reads the
+input's file metadata; the fail counts are one aggregate over the
+persisted violations after their write. (``DataFrame.observe`` is not
+used: an empty batch's violations go through ``overwrite_partitions``'
+repartition, AQE replaces the empty shuffle stage, CollectMetrics
+nodes included, and ``Observation.get`` fails.)
 
 Manifest append happens only AFTER the violations write commits, so a kill
 anywhere leaves either (no manifest row, replayable partial output that the
@@ -32,6 +40,8 @@ fail_count, status, finished_at.
 
 from __future__ import annotations
 
+import collections
+import datetime
 import typing
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -82,9 +92,10 @@ class ValidationRunner:
         )
         return {r["bucket"] for r in rows}
 
-    def all_buckets(self, spark: SparkSession) -> typing.List[int]:
-        # the input's bucket=<int> directories: a file listing, no Spark job
-        return self.wh.partition_values(self.input_table, "bucket")
+    def all_buckets(self, spark: SparkSession) -> typing.Dict[int, int]:
+        # {bucket: rows} in bucket order, read off the input's file
+        # metadata: no Spark job
+        return self.wh.partition_rows(self.input_table, "bucket")
 
     # -- the run ------------------------------------------------------------
     GLOBAL_BUCKET = -1  # manifest lineage marker for the global phase
@@ -118,7 +129,8 @@ class ValidationRunner:
         # bucket — counting it would inflate buckets_total /
         # buckets_skipped_resume by one after the global phase commits
         done = [b for b in done_all if b != self.GLOBAL_BUCKET]
-        todo = [b for b in self.all_buckets(spark) if b not in done]
+        rows_seen = self.all_buckets(spark)
+        todo = [b for b in rows_seen if b not in done]
         batches = [
             todo[i : i + self.batch_buckets] for i in range(0, len(todo), self.batch_buckets)
         ]
@@ -127,7 +139,8 @@ class ValidationRunner:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure after {} batches".format(n_batches))
             if compiled.row_checks:
-                self._run_batch(spark, src, compiled.row_checks, batch, row_key)
+                self._run_batch(spark, src, compiled.row_checks,
+                                {b: rows_seen[b] for b in batch}, row_key)
             n_batches += 1
         global_ran = False
         if compiled.global_checks and self.GLOBAL_BUCKET not in done_all:
@@ -170,72 +183,42 @@ class ValidationRunner:
         properties of the WHOLE table and cannot be checkpointed per
         bucket without auxiliary state, so they commit as one phase whose
         lineage unit is the phase itself (manifest bucket GLOBAL_BUCKET)."""
+        built = build_global_violations(src, checks, row_key, carry=["bucket"])
+        self._commit(spark, built, "global", None)
 
-        def manifest(violations):
-            fail_total = violations.count()
-            return local_frame(
-                spark, [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
-                "run_id string, bucket int, rows_seen long, check_id string, fail_count long, status string",
-            ).withColumn("finished_at", F.current_timestamp())
+    def _run_batch(self, spark, table, checks, rows_seen, row_key):
+        src = table.where(F.col("bucket").isin(list(rows_seen)))  # partition pruning
+        built = build_row_violations(src, checks, row_key, carry=["bucket"])
+        self._commit(spark, built, "local", rows_seen)
 
-        self._commit(src, build_global_violations(src, checks, row_key), row_key, "global",
-                     manifest)
-
-    def _run_batch(self, spark, table, checks, buckets, row_key):
-        src = table.where(F.col("bucket").isin([int(b) for b in buckets]))  # partition pruning
-
-        def manifest(violations):
-            # per-partition metrics: rows_seen per bucket (+ fail counts per check)
-            rows_seen = src.groupBy("bucket").agg(F.count(F.lit(1)).alias("rows_seen"))
-            fails = violations.groupBy("bucket", "check_id").agg(
-                F.count(F.lit(1)).alias("fail_count")
-            )
-            all_buckets_df = local_frame(
-                spark, [(int(b),) for b in buckets],
-                T.StructType([T.StructField("bucket", T.IntegerType(), False)]))
-            return (
-                all_buckets_df.join(rows_seen, "bucket", "left")
-                .join(fails, "bucket", "left")
-                .select(
-                    F.lit(self.run_id).alias("run_id"),
-                    F.col("bucket").cast("int"),
-                    F.coalesce("rows_seen", F.lit(0)).cast("long").alias("rows_seen"),
-                    F.coalesce("check_id", F.lit("__all__")).alias("check_id"),
-                    F.coalesce("fail_count", F.lit(0)).cast("long").alias("fail_count"),
-                    F.lit("ok").alias("status"),
-                    F.current_timestamp().alias("finished_at"),
-                )
-            )
-
-        self._commit(src, build_row_violations(src, checks, row_key), row_key, "local",
-                     manifest)
-
-    def _commit(self, src, built, row_key, phase, manifest):
-        """Overwrite the phase's violations partitions with ``built`` (the
-        violations of ``src``), then append ``manifest(violations)`` — the
-        commit point. The violations are persisted because the write and
-        the manifest's metrics both read them."""
-        # attach lineage: map violation rows back to their bucket via the
-        # source (exact and format-agnostic; no assumption that bucket is a
-        # function of the row key)
-        keyed = src.select(F.col(row_key).cast("long").alias("row"), "bucket")
-        violations = (
-            built.join(keyed, "row", "left")
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("phase", F.lit(phase))
-            .persist()
-        )
+    def _commit(self, spark, built, phase, rows_seen):
+        """Overwrite the phase's violations partitions with ``built`` (each
+        violation carries its row's bucket), then append the manifest —
+        the commit point. ``rows_seen`` maps each bucket of a local batch
+        to its listed row count; None marks the global phase. The
+        violations are persisted because the write and the fail counts
+        both read them."""
+        violations = built.select(
+            F.lit(self.run_id).alias("run_id"), F.lit(phase).alias("phase"),
+            "row", "column", "value", "message", "check_id", "seq", "bucket",
+        ).persist()
         try:
             self.wh.overwrite_partitions(
-                violations.select(
-                    "run_id", "phase", "row", "column", "value", "message", "check_id", "seq", "bucket"
-                ),
-                VIOLATIONS_TABLE,
-                partition_by=["run_id", "phase", "bucket"],
-            )
-            self.wh.append(manifest(violations), MANIFEST_TABLE)
+                violations, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
+            fails = violations.groupBy("bucket", "check_id").count().collect()
         finally:
             violations.unpersist()
+        if rows_seen is None:
+            metrics = [(self.GLOBAL_BUCKET, 0, "__global__", sum(r["count"] for r in fails))]
+        else:
+            per_bucket = collections.defaultdict(list)
+            for r in fails:
+                per_bucket[r["bucket"]].append((r["check_id"], r["count"]))
+            metrics = [(b, n, check, count) for b, n in rows_seen.items()
+                       for check, count in sorted(per_bucket[b]) or [("__all__", 0)]]
+        now = datetime.datetime.now()
+        self.wh.append(local_frame(spark, [(self.run_id, *m, "ok", now) for m in metrics],
+                                   MANIFEST_SCHEMA), MANIFEST_TABLE)
 
     # -- results ------------------------------------------------------------
     def violations(self, spark: SparkSession) -> DataFrame:

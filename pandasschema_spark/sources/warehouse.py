@@ -56,29 +56,29 @@ class Warehouse:
                 for f in os.listdir(p))
         )
 
-    def partition_values(self, name: str, column: str) -> typing.List[int]:
-        """Sorted values of the integer partition column ``column``: the
-        ``<column>=<int>`` directories, at any depth, that hold a data
-        file (the suffix rule of exists()). A file listing, no Spark job;
+    def partition_rows(self, name: str, column: str) -> typing.Dict[int, int]:
+        """Row count per value of the integer hive partition column
+        ``column`` (at any depth), in value order. Read off the data
+        files' metadata through ``pyarrow.dataset``: no Spark job, and
         names starting with '_' or '.' are skipped, as Spark's own
-        listing skips them. Iceberg equivalent: the table's
-        ``.partitions`` metadata table."""
-        root = self.path(name)
-        prefix = column + "="
-        out = set()
-        for dirpath, dirs, files in os.walk(root):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if not any(f.endswith(self.suffix) and not f.startswith(("_", "."))
-                       for f in files):
-                continue
-            for part in os.path.relpath(dirpath, root).split(os.sep):
-                if part.startswith(prefix):
-                    try:
-                        out.add(int(part[len(prefix):]))
-                    except ValueError:
-                        raise ValueError("{}: partition {!r} is not an integer".format(
-                            name, part)) from None
-        return sorted(out)
+        listing skips them. Iceberg equivalent: the ``.partitions``
+        metadata table's ``record_count``."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        hive = ds.partitioning(pa.schema([(column, pa.int64())]), flavor="hive")
+        try:
+            fragments = list(ds.dataset(self.path(name), format=self.fmt,
+                                        partitioning=hive).get_fragments())
+        except pa.ArrowInvalid as e:
+            raise ValueError("{}: a {} partition is not an integer ({})".format(
+                name, column, e)) from None
+        rows: typing.Dict[int, int] = {}
+        for frag in fragments:
+            value = ds.get_partition_keys(frag.partition_expression).get(column)
+            if value is not None:
+                rows[value] = rows.get(value, 0) + frag.count_rows()
+        return dict(sorted(rows.items()))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))

@@ -138,3 +138,32 @@ def test_null_renders_nan_in_combinator_output(spark):
     res = Schema([Column("v", [IsDistinctValidation() | InRangeValidation(0, 5)])]).validate(
         nums, columns=["v"], row_key="row_ord")
     assert [(r["row"], r["value"]) for r in res.violations.collect()] == [(2, "nan")]
+
+
+def test_runner_violations_carry_their_row_bucket_through_combinators(spark, tmp_path):
+    from pandasschema_spark.runner import ValidationRunner
+    from pandasschema_spark.sources.warehouse import Warehouse
+    from pandasschema_spark.validation import InListValidation
+
+    rows = [(i, "abcab"[i % 5], "xyzq"[i % 4], "pqr"[i % 3], i % 3) for i in range(12)]
+    wh = Warehouse(str(tmp_path))
+    (spark.createDataFrame(rows, "row_ord long, k string, m string, n string, bucket int")
+     .write.partitionBy("bucket").parquet(wh.path("t")))
+    dim = spark.createDataFrame([("p",), ("q",)], "code string")
+    schema = Schema([
+        Column("k", [~IsDistinctValidation()]),
+        Column("m", [IsDistinctValidation() & InListValidation(["x", "y"])]),
+        Column("n", [InTableValidation(dim, "code") | InListValidation(["p"])]),
+    ])
+    runner = ValidationRunner(wh, "carry", input_table="t", batch_buckets=2)
+    runner.run(spark, schema, validate_columns=["k", "m", "n"])
+
+    cols = ["row", "column", "value", "message", "check_id", "seq"]
+    got = runner.violations(spark).where(F.col("phase") == "global")
+    want = schema.validate(wh.read(spark, "t"), columns=["k", "m", "n"],
+                           row_key="row_ord").violations
+    assert sorted(map(tuple, got.select(*cols).collect())) == \
+        sorted(map(tuple, want.select(*cols).collect()))
+    assert {r["column"] for r in got.collect()} == {"k", "m", "n"}
+    bucket_of = {r[0]: r[-1] for r in rows}
+    assert all(r["bucket"] == bucket_of[r["row"]] for r in got.collect())

@@ -1,6 +1,7 @@
-"""The runner's lineage reads: the bucket listing comes from the input's
-partition directories without a Spark job, and after a crash and a
-resume the manifest carries exactly the per-bucket rows seen and the
+"""The runner's lineage reads: the bucket listing and its row counts come
+from the input's file metadata without a Spark job, a batch reads its
+input once and never joins violations back to it, and after a crash and
+a resume the manifest carries exactly the per-bucket rows seen and the
 per-(bucket, check) fail counts of the input and the committed
 violations."""
 
@@ -9,13 +10,19 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from pandasschema_spark.clips_suite import PUBLIC_COLUMNS, clips_schema
+from pandasschema_spark.column import Column
+from pandasschema_spark.plans.compiler import build_global_violations
 from pandasschema_spark.runner import ValidationRunner
+from pandasschema_spark.schema import Schema
 from pandasschema_spark.sources import datagen as G
 from pandasschema_spark.sources.warehouse import Warehouse
+from pandasschema_spark.validation import MatchesPatternValidation
 
 N = 2000
 BUCKETS = 8
@@ -34,11 +41,11 @@ def wh(spark):
 
 def test_all_buckets_lists_directories_without_a_job(spark, wh, jobs_of):
     runner = ValidationRunner(wh, "listing")
-    got = []
-    assert jobs_of(lambda: got.extend(runner.all_buckets(spark))) == 0
+    got = {}
+    assert jobs_of(lambda: got.update(runner.all_buckets(spark))) == 0
     want = sorted(r["bucket"] for r in
                   wh.read(spark, "clips").select("bucket").distinct().collect())
-    assert got == want == list(range(BUCKETS))
+    assert list(got) == want == list(range(BUCKETS))
 
 
 def test_unpartitioned_input_is_refused(spark, wh):
@@ -52,25 +59,99 @@ def test_unpartitioned_input_is_refused(spark, wh):
                    validate_columns=PUBLIC_COLUMNS)
 
 
-def test_partition_values_reads_only_data_directories(tmp_path):
+def test_partition_rows_reads_only_data_directories(tmp_path):
+    def put(*parts):
+        path = tmp_path.joinpath("t", *parts)
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"x": [1]}), str(path))
+
     def touch(*parts):
         path = tmp_path.joinpath("t", *parts)
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_bytes(b"")
 
-    touch("bucket=3", "part-0.parquet")
-    touch("bucket=04", "part-0.parquet")           # Spark reads 04 as 4
+    put("bucket=3", "part-0.parquet")
+    put("bucket=04", "part-0.parquet")             # Spark reads 04 as 4
     touch("bucket=5", "_SUCCESS")                  # no data file
     touch("bucket=6", ".part-0.parquet")           # hidden
-    touch("_temporary", "bucket=7", "part-0.parquet")
-    touch("run_id=a", "bucket=-1", "part-0.parquet")
+    put("_temporary", "bucket=7", "part-0.parquet")
+    put("run_id=a", "bucket=-1", "part-0.parquet")
     os.makedirs(tmp_path / "t" / "bucket=8")       # empty
     w = Warehouse(str(tmp_path))
-    assert w.partition_values("t", "bucket") == [-1, 3, 4]
-    assert w.partition_values("t", "day") == []
-    touch("bucket=x", "part-0.parquet")
+    assert w.partition_rows("t", "bucket") == {-1: 1, 3: 1, 4: 1}
+    assert w.partition_rows("t", "day") == {}
+    put("bucket=x", "part-0.parquet")
     with pytest.raises(ValueError, match="not an integer"):
-        w.partition_values("t", "bucket")
+        w.partition_rows("t", "bucket")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_partition_rows_match_spark_counts(spark, tmp_path, jobs_of, fmt):
+    w = Warehouse(str(tmp_path), fmt=fmt)
+    (spark.range(1000).withColumn("bucket", (F.col("id") % 7).cast("int"))
+     .where(F.col("bucket") != 3).repartition(3)
+     .write.partitionBy("bucket").format(fmt).save(w.path("t")))
+    names = [f for _, _, files in os.walk(w.path("t")) for f in files]
+    assert "_SUCCESS" in names and any(f.endswith(".crc") for f in names)
+    got = {}
+    assert jobs_of(lambda: got.update(w.partition_rows("t", "bucket"))) == 0
+    want = {r["bucket"]: r["count"] for r in
+            w.read(spark, "t").groupBy("bucket").count().collect()}
+    assert got == want and list(got) == sorted(want)
+
+
+def _optimized(df):
+    """``df``'s optimized logical plan, ignoring the cache: the runner
+    persists the frame it writes, and a cached frame's own optimized
+    plan is one InMemoryRelation."""
+    qe = df._jdf.queryExecution()
+    return df.sparkSession._jsparkSession.sessionState().optimizer().execute(qe.analyzed())
+
+
+def test_batches_read_once_without_a_lineage_join(spark, wh, monkeypatch):
+    written = []
+    real = Warehouse.overwrite_partitions
+
+    def spy(self, df, name, partition_by):
+        written.append(_optimized(df))
+        return real(self, df, name, partition_by)
+
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", spy)
+    schema = clips_schema(G.codec_dim(spark), seed=SEED, with_pcm_checks=False)
+    runner = ValidationRunner(wh, "plan_lock", batch_buckets=3)
+    runner.run(spark, schema, validate_columns=PUBLIC_COLUMNS)
+
+    *local, glob = written
+    assert len(local) == 3
+    for plan in local:
+        assert plan.collectLeaves().size() == 1
+        assert "Join" not in plan.toString()
+    src = wh.read(spark, "clips")
+    alone = _optimized(build_global_violations(
+        src, schema.compile(src, PUBLIC_COLUMNS).global_checks, "row_ord"))
+    assert glob.collectLeaves().size() <= alone.collectLeaves().size()
+
+
+def test_non_unique_row_key_keeps_each_violation_in_its_bucket(spark, tmp_path):
+    w = Warehouse(str(tmp_path))
+    rows = [("a", "BAD!", 5, 0), ("b", "ok", 5, 1), ("d", "ok", 7, 1)]
+    (spark.createDataFrame(rows, "clip_id string, transcript string, row_ord long, bucket int")
+     .write.partitionBy("bucket").parquet(w.path("clips")))
+    schema = Schema([Column("transcript", [MatchesPatternValidation("^[a-z]+$")])])
+    runner = ValidationRunner(w, "dup_key", batch_buckets=2)
+    runner.run(spark, schema, validate_columns=["transcript"])
+
+    cols = ["row", "column", "value", "message"]
+    want = schema.validate(w.read(spark, "clips"), columns=["transcript"],
+                           row_key="row_ord").violations
+    got = runner.violations(spark)
+    assert sorted(map(tuple, got.select(*cols).collect())) == \
+        sorted(map(tuple, want.select(*cols).collect()))
+    assert [r["bucket"] for r in got.collect()] == [0]
+    check = want.first()["check_id"]
+    manifest = sorted(tuple(r) for r in runner.manifest(spark)
+                      .select("bucket", "rows_seen", "check_id", "fail_count").collect())
+    assert manifest == [(0, 1, check, 1), (1, 2, "__all__", 0)]
 
 
 def test_resumed_manifest_matches_input_and_violations(spark, wh):
