@@ -8,7 +8,9 @@ the rows into one ``pyarrow.Table`` on the driver instead, which Spark
 plans as a ``LocalTableScan``: the rows live in the plan, no Python
 worker ever starts, and a bare collect runs no job.
 
-Every frame the package builds from Python rows goes through here.
+Every frame the package builds from Python rows goes through here, and
+so does every driver-side metadata file (:func:`arrow_table`): the
+warehouse writes the runner's manifest from it with no Spark job.
 """
 
 from __future__ import annotations
@@ -27,19 +29,16 @@ from pyspark.sql.pandas.types import to_arrow_schema
 _VIA_INTERNAL = (T.TimestampType, T.TimestampNTZType, T.DateType)
 
 
-def local_frame(spark: SparkSession, rows: typing.Iterable[typing.Sequence],
-                schema: typing.Union[T.StructType, str]) -> DataFrame:
-    """A DataFrame of ``rows`` (tuples in ``schema`` field order) with
-    exactly ``schema`` -- a StructType or a DDL string, non-nullable
-    fields kept -- planned as a ``LocalTableScan``.
+def arrow_table(rows: typing.Iterable[typing.Sequence], schema: T.StructType) -> pa.Table:
+    """``rows`` (tuples in ``schema`` field order) as one ``pyarrow.Table``
+    whose Arrow schema is ``to_arrow_schema(schema)``, non-nullable fields
+    kept.
 
     Values follow ``createDataFrame(rows, schema)``'s conversions for
     the types the package builds frames of: int, long, string, bool,
     double, float arrays, maps, binary, decimal, dates and top-level
-    timestamps. A row of the wrong length or a None in a non-nullable
-    field raises, as there."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
+    timestamps (stored as UTC instants). A row of the wrong length or a
+    None in a non-nullable field raises, as there."""
     rows = list(rows)
     n = len(schema.fields)
     for r in rows:
@@ -55,4 +54,14 @@ def local_frame(spark: SparkSession, rows: typing.Iterable[typing.Sequence],
         if arr.null_count and not field.nullable:
             raise ValueError("field {}: not nullable, but got None".format(field.name))
         arrays.append(arr)
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+    return pa.Table.from_arrays(arrays, schema=arrow)
+
+
+def local_frame(spark: SparkSession, rows: typing.Iterable[typing.Sequence],
+                schema: typing.Union[T.StructType, str]) -> DataFrame:
+    """A DataFrame of ``rows`` with exactly ``schema`` -- a StructType or
+    a DDL string -- planned as a ``LocalTableScan`` over
+    :func:`arrow_table`'s table."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

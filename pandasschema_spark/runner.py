@@ -27,12 +27,17 @@ used: an empty batch's violations go through ``overwrite_partitions``'
 repartition, AQE replaces the empty shuffle stage, CollectMetrics
 nodes included, and ``Observation.get`` fails.)
 
-Manifest append happens only AFTER the violations write commits, so a kill
-anywhere leaves either (no manifest row, replayable partial output that the
-retry's dynamic-partition overwrite replaces) or (manifest row, committed
-output). resume = the bucket listing minus the manifest's buckets — no bucket
-is validated twice, and the final violations equal an uninterrupted run
-(tested in tests/test_resume.py).
+The manifest append happens only AFTER the violations write commits,
+and is itself a driver-side metadata commit: one file in the warehouse's
+format, written under a hidden name and renamed into place. That rename
+is the commit point. A kill anywhere leaves either (no manifest file,
+replayable partial output that the retry's dynamic-partition overwrite
+replaces) or (manifest file, committed output). resume = the bucket
+listing minus the manifest's buckets — no bucket is validated twice,
+and the final violations equal an uninterrupted run (tested in
+tests/test_resume.py). The runner's own manifest reads go through
+pyarrow on the driver, so neither the commit nor the resume runs a
+Spark job.
 
 Manifest schema (FIXTURES.md §C3): run_id, bucket, rows_seen, check_id,
 fail_count, status, finished_at.
@@ -44,6 +49,7 @@ import collections
 import datetime
 import typing
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .frames import local_frame
@@ -83,14 +89,11 @@ class ValidationRunner:
     def completed_buckets(self, spark: SparkSession) -> typing.Set[int]:
         if not self.wh.exists(MANIFEST_TABLE):
             return set()
-        m = self.wh.read(spark, MANIFEST_TABLE)
-        # a run's manifest holds one row per (bucket, check): deduplicated
-        # on the driver, not by a shuffle
-        rows = (
-            m.where((F.col("run_id") == self.run_id) & (F.col("status") == "ok"))
-            .select("bucket").collect()
-        )
-        return {r["bucket"] for r in rows}
+        # read on the driver off the manifest's files: no Spark job
+        done = self.wh.dataset(MANIFEST_TABLE).to_table(
+            columns=["bucket"],
+            filter=(ds.field("run_id") == self.run_id) & (ds.field("status") == "ok"))
+        return set(done.column("bucket").to_pylist())
 
     def all_buckets(self, spark: SparkSession) -> typing.Dict[int, int]:
         # {bucket: rows} in bucket order, read off the input's file
@@ -139,14 +142,14 @@ class ValidationRunner:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure after {} batches".format(n_batches))
             if compiled.row_checks:
-                self._run_batch(spark, src, compiled.row_checks,
+                self._run_batch(src, compiled.row_checks,
                                 {b: rows_seen[b] for b in batch}, row_key)
             n_batches += 1
         global_ran = False
         if compiled.global_checks and self.GLOBAL_BUCKET not in done_all:
             if fail_after_batches is not None and n_batches >= fail_after_batches:
                 raise RuntimeError("injected failure before global phase")
-            self._run_global(spark, src, compiled.global_checks, row_key)
+            self._run_global(src, compiled.global_checks, row_key)
             global_ran = True
         return {
             "run_id": self.run_id,
@@ -177,21 +180,21 @@ class ValidationRunner:
             fw, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
         return len(warns)
 
-    def _run_global(self, spark, src, checks, row_key):
+    def _run_global(self, src, checks, row_key):
         """One pass over the whole table for shuffle-requiring checks
         (uniqueness hash-agg, broadcast referential anti-join). They are
         properties of the WHOLE table and cannot be checkpointed per
         bucket without auxiliary state, so they commit as one phase whose
         lineage unit is the phase itself (manifest bucket GLOBAL_BUCKET)."""
         built = build_global_violations(src, checks, row_key, carry=["bucket"])
-        self._commit(spark, built, "global", None)
+        self._commit(built, "global", None)
 
-    def _run_batch(self, spark, table, checks, rows_seen, row_key):
+    def _run_batch(self, table, checks, rows_seen, row_key):
         src = table.where(F.col("bucket").isin(list(rows_seen)))  # partition pruning
         built = build_row_violations(src, checks, row_key, carry=["bucket"])
-        self._commit(spark, built, "local", rows_seen)
+        self._commit(built, "local", rows_seen)
 
-    def _commit(self, spark, built, phase, rows_seen):
+    def _commit(self, built, phase, rows_seen):
         """Overwrite the phase's violations partitions with ``built`` (each
         violation carries its row's bucket), then append the manifest —
         the commit point. ``rows_seen`` maps each bucket of a local batch
@@ -217,8 +220,8 @@ class ValidationRunner:
             metrics = [(b, n, check, count) for b, n in rows_seen.items()
                        for check, count in sorted(per_bucket[b]) or [("__all__", 0)]]
         now = datetime.datetime.now()
-        self.wh.append(local_frame(spark, [(self.run_id, *m, "ok", now) for m in metrics],
-                                   MANIFEST_SCHEMA), MANIFEST_TABLE)
+        self.wh.append([(self.run_id, *m, "ok", now) for m in metrics],
+                       MANIFEST_SCHEMA, MANIFEST_TABLE)
 
     # -- results ------------------------------------------------------------
     def violations(self, spark: SparkSession) -> DataFrame:

@@ -3,21 +3,35 @@
 No Iceberg runtime jar ships in this sandbox and Maven Central is
 unreachable (SURVEY.md environment facts), so the local implementation is
 partitioned Parquet (or ORC — both builtin columnar formats are
-supported end-to-end incl. compaction) plus our own manifest table, behind an interface whose
-Iceberg implementation differs only in DDL/DML strings
-(``USING iceberg`` + MERGE for the manifest) — partition listing, pruning
-and dynamic-partition overwrite have direct Iceberg equivalents.
+supported end-to-end incl. compaction) plus our own manifest table, behind
+an interface whose Iceberg implementation differs only in DDL/DML strings
+(``USING iceberg``) — partition listing, pruning and dynamic-partition
+overwrite have direct Iceberg equivalents.
+
+Small driver-side tables (the runner's manifest) are metadata commits,
+not Spark jobs: :meth:`Warehouse.append` writes one data file per call
+with pyarrow and publishes it with a rename, the equivalent of an
+Iceberg append of one data file per commit. Their reads on the driver go
+through :meth:`Warehouse.dataset`.
 """
 
 from __future__ import annotations
 
 import os
 import typing
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.orc as orc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.functions import (col as F_col, concat_ws as F_concat_ws,
                                    hash as F_hash, lit as F_lit,
                                    pmod as F_pmod, when as F_when)
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..frames import arrow_table
 
 
 class Warehouse:
@@ -49,12 +63,21 @@ class Warehouse:
         # any hive partition dir ('<col>=...') counts, not just the
         # 'bucket=' layout: a day-partitioned table written where
         # _SUCCESS markers are disabled must still be seen, or append()'s
-        # mixed-schema guard silently skips
+        # mixed-schema guard silently skips. Names starting with '.' or
+        # '_' are not data, as for Spark's and pyarrow's listings: a
+        # temporary file left by a crash inside append() is invisible
         p = self.path(name)
-        return os.path.isdir(p) and (
-            any(f.endswith(self.suffix) or ("=" in f) or f == "_SUCCESS"
-                for f in os.listdir(p))
-        )
+        return os.path.isdir(p) and any(
+            f == "_SUCCESS" or (not f.startswith((".", "_"))
+                                and (f.endswith(self.suffix) or "=" in f))
+            for f in os.listdir(p))
+
+    def dataset(self, name: str, partitioning=None) -> ds.Dataset:
+        """The table's data files as a ``pyarrow.dataset``: footer
+        schema, file metadata and driver-side reads without a Spark job.
+        Names starting with '_' or '.' are skipped, as Spark's own
+        listing skips them."""
+        return ds.dataset(self.path(name), format=self.fmt, partitioning=partitioning)
 
     def partition_rows(self, name: str, column: str) -> typing.Dict[int, int]:
         """Row count per value of the integer hive partition column
@@ -63,13 +86,9 @@ class Warehouse:
         names starting with '_' or '.' are skipped, as Spark's own
         listing skips them. Iceberg equivalent: the ``.partitions``
         metadata table's ``record_count``."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
         hive = ds.partitioning(pa.schema([(column, pa.int64())]), flavor="hive")
         try:
-            fragments = list(ds.dataset(self.path(name), format=self.fmt,
-                                        partitioning=hive).get_fragments())
+            fragments = list(self.dataset(name, partitioning=hive).get_fragments())
         except pa.ArrowInvalid as e:
             raise ValueError("{}: a {} partition is not an integer ({})".format(
                 name, column, e)) from None
@@ -96,37 +115,44 @@ class Warehouse:
             w = w.partitionBy(*partition_by)
         w.format(self.fmt).save(self.path(name))
 
-    def append(self, df: DataFrame, name: str,
-               partition_by: typing.Sequence[str] = ()) -> None:
-        """Append with a SCHEMA GUARD: parquet/ORC appends with a
-        mismatched schema do not fail at write time — they land mixed
-        files that surface later as missing columns or unreadable
-        scans. Appending to an existing table therefore requires the
-        incoming frame's (name, type) set to equal the table's
-        (order-insensitive; partition columns compare by name only,
-        since hive-partition values read back as their directory-parsed
-        types)."""
+    def append(self, rows: typing.Iterable[typing.Sequence], schema: T.StructType,
+               name: str) -> None:
+        """Append ``rows`` (tuples in ``schema`` field order) to the
+        unpartitioned table ``name`` as exactly one new data file, written
+        on the driver with pyarrow: no Spark job. The file is written
+        under a '.'-prefixed name, which every reader skips, and renamed
+        into place: the rename is the commit, so a crash leaves the file
+        either absent or complete. Iceberg equivalent: an append of one
+        data file per commit.
+
+        SCHEMA GUARD: parquet/ORC appends with a mismatched schema do not
+        fail at write time — they land mixed files that surface later as
+        missing columns or unreadable scans. Appending to an existing
+        table therefore requires ``schema``'s (name, Spark type) set to
+        equal the one read off the table's footer (order-insensitive)."""
         if self.exists(name):
             have = {f.name: f.dataType.simpleString()
-                    for f in df.sparkSession.read.format(self.fmt)
-                    .load(self.path(name)).schema.fields}
-            got = {f.name: f.dataType.simpleString()
-                   for f in df.schema.fields}
-            part = set(partition_by)
-            mismatch = {
-                c for c in set(have) | set(got)
-                if (have.get(c) != got.get(c)) and not (
-                    c in part and c in have and c in got)
-            }
+                    for f in from_arrow_schema(self.dataset(name).schema).fields}
+            got = {f.name: f.dataType.simpleString() for f in schema.fields}
+            mismatch = {c for c in set(have) | set(got) if have.get(c) != got.get(c)}
             if mismatch:
                 raise ValueError(
                     "append() schema mismatch on {!r} for columns {} "
-                    "(table: {}; frame: {}) — appending would create a "
+                    "(table: {}; rows: {}) — appending would create a "
                     "mixed-schema table; migrate explicitly instead".format(
                         name, sorted(mismatch),
                         {c: have.get(c) for c in sorted(mismatch)},
                         {c: got.get(c) for c in sorted(mismatch)}))
-        self.write(df, name, mode="append", partition_by=partition_by)
+        table = arrow_table(rows, schema)
+        path = self.path(name)
+        os.makedirs(path, exist_ok=True)
+        part = "part-{}{}".format(uuid.uuid4().hex, self.suffix)
+        tmp = os.path.join(path, "." + part)
+        if self.fmt == "orc":
+            orc.write_table(_orc_wall_clock(table), tmp)
+        else:
+            pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(path, part))
 
     def overwrite_partitions(self, df: DataFrame, name: str,
                              partition_by: typing.Sequence[str]) -> None:
@@ -302,3 +328,19 @@ class Warehouse:
             os.rename(old, path)
             return True
         return False
+
+
+def _orc_wall_clock(table: pa.Table) -> pa.Table:
+    """``table`` with each UTC-instant timestamp column as the naive wall
+    clock of its instant in the process's local time zone. Spark reads
+    an ORC ``timestamp`` as a wall clock in the JVM's default time zone,
+    which the driver JVM takes from the process's environment (the
+    session time zone plays no part), and it cannot parse the ``timestamp
+    with local time zone`` pyarrow writes for an instant."""
+    for i, field in enumerate(table.schema):
+        if pa.types.is_timestamp(field.type) and field.type.tz is not None:
+            local = [None if v is None else v.astimezone().replace(tzinfo=None)
+                     for v in table.column(i).to_pylist()]
+            table = table.set_column(i, field.with_type(pa.timestamp("us")),
+                                     pa.array(local, pa.timestamp("us")))
+    return table

@@ -843,6 +843,18 @@ class IsDistinctValidation(_SeriesValidation):
         return ~series.duplicated(keep="first")
 
 
+_NAN = object()  # the one dedupe key of every NaN
+
+
+def _distinct(values) -> list:
+    """``values`` without repeats, in first-seen order, equal as Spark's
+    ``distinct`` sees them: every NaN is one value."""
+    seen = {}
+    for v in values:
+        seen.setdefault(_NAN if v != v else v, v)
+    return list(seen.values())
+
+
 class InTableValidation(_SeriesValidation):
     """Engine extension (no reference analog — SURVEY.md §2.4): referential
     integrity against a dimension table. Pass iff the value exists in
@@ -872,13 +884,17 @@ class InTableValidation(_SeriesValidation):
         self._inline_values = None
         super().__init__(**kw)
         if inline_max_rows:
-            rows = (dim_df.select(dim_col).distinct()
-                    .limit(int(inline_max_rows) + 1).collect())
-            if len(rows) <= inline_max_rows:
+            if dim_df.isLocal():
+                # the rows live in the plan: a collect runs no job, and
+                # the driver dedupes them as distinct() would
+                values = _distinct(r[0] for r in dim_df.select(dim_col).collect())
+            else:
+                values = [r[0] for r in dim_df.select(dim_col).distinct()
+                          .limit(int(inline_max_rows) + 1).collect()]
+            if len(values) <= inline_max_rows:
                 # NULL dim values can never equal anything — drop them so
                 # isin() keeps pure two-valued semantics under _leaf
-                self._inline_values = [r[dim_col] for r in rows
-                                       if r[dim_col] is not None]
+                self._inline_values = [v for v in values if v is not None]
                 self.is_global = False  # instance shadows the class attr
 
     def spark_predicate(self, col: SparkColumn, spark_type: T.DataType):

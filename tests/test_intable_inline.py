@@ -58,3 +58,25 @@ def test_inline_fuses_into_single_scan_plan(spark, tmp_path):
         out._jdf.queryExecution(), "simple")
     assert plan.count("FileScan parquet") == 1, "inlined dim must not add a branch"
     assert "Join" not in plan
+
+
+def test_local_dim_inlines_without_a_job(spark, jobs_of):
+    """A dim planned as a LocalTableScan is deduplicated on the driver:
+    building the check runs no job, and its inline values, the cap and
+    the NULL drop are the Spark-distinct path's (every NaN one value)."""
+    from pandasschema_spark.frames import local_frame
+
+    rows = [(1.0,), (float("nan"),), (None,), (1.0,), (float("nan"),), (2.5,), (None,)]
+    local = local_frame(spark, rows, "d double")
+    remote = spark.createDataFrame(rows, "d double")
+    assert local.isLocal() and not remote.isLocal()
+    for cap in (3, 4, 8):
+        built = []
+        assert jobs_of(lambda: built.append(
+            InTableValidation(local, "d", inline_max_rows=cap))) == 0
+        want = InTableValidation(remote, "d", inline_max_rows=cap)
+        got = built[0]
+        assert got.is_global is want.is_global is (cap < 4)
+        if cap >= 4:
+            assert sorted(map(repr, got._inline_values)) == \
+                sorted(map(repr, want._inline_values)) == ["1.0", "2.5", "nan"]

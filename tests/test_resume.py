@@ -3,15 +3,19 @@ re-run with the same run_id, verify no bucket validated twice and the final
 violations equal an uninterrupted run. Cross-bucket duplicates must be
 caught by the dedicated global phase."""
 
+import datetime
 import os
 import shutil
 import tempfile
+import time
 
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from pandasschema_spark.clips_suite import PUBLIC_COLUMNS, clips_schema
-from pandasschema_spark.runner import ValidationRunner
+from pandasschema_spark.frames import arrow_table, local_frame
+from pandasschema_spark.runner import MANIFEST_SCHEMA, MANIFEST_TABLE, ValidationRunner
 from pandasschema_spark.sources import datagen as G
 from pandasschema_spark.sources.warehouse import Warehouse
 
@@ -169,23 +173,115 @@ def test_compact_partitioned_respects_target(spark, tmp_path_factory):
 
 
 def test_append_schema_guard(spark, tmp_path_factory):
-    """Appending a mismatched-schema frame must refuse up front —
-    a silent mixed-schema table is a read-time landmine."""
-    import pytest
-
-    from pandasschema_spark.sources.warehouse import Warehouse
-
+    """Appending rows of a mismatched schema must refuse up front —
+    a silent mixed-schema table is a read-time landmine. The guard reads
+    a Spark-written table's footer."""
     wh = Warehouse(str(tmp_path_factory.mktemp("append_guard")))
     a = spark.range(0, 10).selectExpr("id AS k", "CAST(id AS STRING) AS v")
     wh.write(a, "t")
-    wh.append(a, "t")  # same schema: fine
+    wh.append([(i, str(i)) for i in range(10)], a.schema, "t")  # same schema: fine
     assert wh.read(spark, "t").count() == 20
-    bad_type = spark.range(0, 5).selectExpr("id AS k", "id AS v")
+    bad_type = T.StructType.fromDDL("k long, v long")
     with pytest.raises(ValueError, match="schema mismatch"):
-        wh.append(bad_type, "t")
-    bad_col = spark.range(0, 5).selectExpr("id AS k", "CAST(id AS STRING) AS w")
+        wh.append([(0, 0)], bad_type, "t")
+    bad_col = T.StructType.fromDDL("k long, w string")
     with pytest.raises(ValueError, match="schema mismatch"):
-        wh.append(bad_col, "t")
+        wh.append([(0, "0")], bad_col, "t")
+
+
+SMALL_N = 6000  # every injection class, the cross-bucket duplicate included
+SMALL_BUCKETS = 4
+
+
+def _small_warehouse(spark, root, fmt="parquet"):
+    """A 4-bucket clips table in ``fmt`` at ``root``."""
+    wh = Warehouse(str(root), fmt=fmt)
+    src = os.path.join(str(root), "src")
+    G.write_clips(spark, src, SMALL_N, SEED, with_audio=False, partitions=2,
+                  bucket_count=SMALL_BUCKETS)
+    spark.read.parquet(src).write.partitionBy("bucket").format(fmt).save(wh.path("clips"))
+    return wh
+
+
+@pytest.fixture(scope="module")
+def small_wh(spark, tmp_path_factory):
+    """The small parquet warehouse, with one uninterrupted run ('full')."""
+    wh = _small_warehouse(spark, tmp_path_factory.mktemp("small"))
+    ValidationRunner(wh, "full", batch_buckets=2).run(
+        spark, _schema(spark), validate_columns=PUBLIC_COLUMNS)
+    return wh
+
+
+@pytest.mark.parametrize("committed", [0, 1])
+def test_crash_inside_manifest_append_leaves_nothing_visible(spark, small_wh, committed):
+    """A crash inside append() leaves its file under the temporary '.'
+    name. Whether or not an earlier append committed, neither the resume
+    nor a Spark read of the manifest sees it: the torn batch is
+    validated again and the violations equal an uninterrupted run's."""
+    run_id = "torn{}".format(committed)
+    schema = _schema(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ValidationRunner(small_wh, run_id, batch_buckets=2).run(
+            spark, schema, validate_columns=PUBLIC_COLUMNS, fail_after_batches=committed)
+    runner = ValidationRunner(small_wh, run_id, batch_buckets=2)
+    done = runner.completed_buckets(spark)
+    assert len(done) == 2 * committed
+    torn = [b for b in range(SMALL_BUCKETS) if b not in done][:2]
+    leftover = arrow_table([(run_id, b, 1, "__torn__", 0, "ok", datetime.datetime.now())
+                            for b in torn], MANIFEST_SCHEMA)
+    manifest = small_wh.path(MANIFEST_TABLE)
+    os.makedirs(manifest, exist_ok=True)
+    pq.write_table(leftover, os.path.join(manifest, ".part-torn.parquet"))
+    assert runner.completed_buckets(spark) == done
+
+    summary = runner.run(spark, schema, validate_columns=PUBLIC_COLUMNS)
+    assert summary["buckets_skipped_resume"] == len(done)
+    assert summary["buckets_validated"] == SMALL_BUCKETS - len(done)
+    m = runner.manifest(spark)
+    assert m.where(F.col("check_id") == "__torn__").count() == 0
+    commits = {r["bucket"]: r["n"] for r in m.groupBy("bucket")
+               .agg(F.countDistinct("finished_at").alias("n")).collect()}
+    assert commits == dict.fromkeys(
+        list(range(SMALL_BUCKETS)) + [ValidationRunner.GLOBAL_BUCKET], 1)
+    full = ValidationRunner(small_wh, "full")
+    assert _collect_violations(runner, spark) == _collect_violations(full, spark)
+
+
+@pytest.mark.parametrize("spark_written", [False, True])
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_manifest_round_trips_under_session_time_zone(spark, tmp_path, fmt, spark_written):
+    """Under a non-UTC session time zone Spark reads the driver-written
+    manifest back with MANIFEST_SCHEMA's types and the instants written.
+    With ``spark_written`` the crashed run's manifest is a Spark-written
+    table, as a run started before the driver-side commit leaves it, and
+    the resume appends to it."""
+    wh = _small_warehouse(spark, tmp_path, fmt)
+    schema = _schema(spark)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        start = time.time()
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ValidationRunner(wh, "tz", batch_buckets=2).run(
+                spark, schema, validate_columns=PUBLIC_COLUMNS, fail_after_batches=1)
+        if spark_written:
+            rows = [tuple(r) for r in wh.read(spark, MANIFEST_TABLE).collect()]
+            shutil.rmtree(wh.path(MANIFEST_TABLE))
+            local_frame(spark, rows, MANIFEST_SCHEMA).write.format(fmt).save(
+                wh.path(MANIFEST_TABLE))
+            assert "_SUCCESS" in os.listdir(wh.path(MANIFEST_TABLE))
+        runner = ValidationRunner(wh, "tz", batch_buckets=2)
+        summary = runner.run(spark, schema, validate_columns=PUBLIC_COLUMNS)
+        end = time.time()
+        assert summary["buckets_skipped_resume"] == 2
+        m = runner.manifest(spark)
+        assert [(f.name, f.dataType) for f in m.schema] == \
+            [(f.name, f.dataType) for f in MANIFEST_SCHEMA]
+        written = [r[0] for r in m.select(F.unix_micros("finished_at")).collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert len(set(written)) == 3  # one instant per commit: two batches, the global phase
+    assert all(int(start * 1e6) <= t <= int(end * 1e6) for t in written)
 
 
 def test_ordered_schema_split_keeps_positions(spark, tmp_path):

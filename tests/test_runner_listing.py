@@ -181,3 +181,44 @@ def test_resumed_manifest_matches_input_and_violations(spark, wh):
            .collect()]
     assert sorted(got) == sorted(want)
     assert sum(local[b].get(c, 0) for b in local for c in local[b]) > 0
+
+
+def test_crash_and_resume_commit_and_list_without_jobs(spark, wh, jobs_of, monkeypatch):
+    """The manifest is a driver-side commit: a crash and a resume run no
+    Spark job inside the manifest append or the completed-bucket read,
+    and the whole of it runs a pinned number of jobs."""
+    sc = spark.sparkContext
+    inner = collections.Counter()
+    calls = collections.Counter()
+
+    def count_jobs(cls, name):
+        real = getattr(cls, name)
+
+        def spy(*args, **kw):
+            calls[name] += 1
+            group = "{}_{}".format(name, calls[name])
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                return real(*args, **kw)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", outer)
+                inner[name] += len(sc.statusTracker().getJobIdsForGroup(group))
+
+        monkeypatch.setattr(cls, name, spy)
+
+    count_jobs(Warehouse, "append")
+    count_jobs(ValidationRunner, "completed_buckets")
+    schema = clips_schema(G.codec_dim(spark), seed=SEED, with_pcm_checks=False)
+
+    def crash_and_resume():
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ValidationRunner(wh, "pinned", batch_buckets=4).run(
+                spark, schema, validate_columns=PUBLIC_COLUMNS, fail_after_batches=1)
+        ValidationRunner(wh, "pinned", batch_buckets=4).run(
+            spark, schema, validate_columns=PUBLIC_COLUMNS)
+
+    outer_jobs = jobs_of(crash_and_resume)
+    assert calls == {"append": 3, "completed_buckets": 2}
+    assert inner == {"append": 0, "completed_buckets": 0}
+    assert outer_jobs == 16
