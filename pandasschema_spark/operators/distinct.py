@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.compiler import emit_violations, fail_base, violation_columns
+from ..plans.compiler import VIOLATION_NAMES, emit_violations, fail_base, violation_columns
 
 
 def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
@@ -115,8 +115,8 @@ def distinct_violations(
             F.lit(", "), F.col("__kc__").cast("string"),
             F.lit(" rows tie at the keeper ordinal) — keep-first "
                   "is ill-defined; use a unique row key"),
-        )),
-        F.lit(None), **kw))
+        )).cast("bigint"),
+        F.lit(None).cast("string"), **kw)).toDF(*VIOLATION_NAMES)
     return out.unionByName(guard)
 
 

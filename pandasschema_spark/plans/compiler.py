@@ -46,6 +46,7 @@ VIOLATION_FIELDS = [
 ]
 
 VIOLATION_SCHEMA = T.StructType([T.StructField(n, t, True) for n, t in VIOLATION_FIELDS])
+VIOLATION_NAMES = [n for n, _ in VIOLATION_FIELDS]
 
 #: rendering of a null failing value — mirrors pandas CSV semantics where a
 #: missing cell is NaN and str(nan) == 'nan' (reference validation.py:103)
@@ -93,11 +94,14 @@ def value_repr(col, spark_type: T.DataType):
 
 
 def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing.List[Column]:
-    """The violation columns in VIOLATION_FIELDS order: ``row`` and the
-    rendered ``value`` are expressions, the rest are the check's
-    constants."""
-    cols = (row, F.lit(warn_col), value, F.lit(message), F.lit(check_id), F.lit(seq))
-    return [c.cast(t).alias(n) for c, (n, t) in zip(cols, VIOLATION_FIELDS)]
+    """The violation columns in VIOLATION_FIELDS order, unnamed: ``row``
+    (a bigint) and the rendered ``value`` are expressions, the rest are
+    the check's constants as plain literals. A caller names them once,
+    with ``toDF(*VIOLATION_NAMES, ...)``, instead of a cast and an alias
+    per field: each pyspark Column call costs about 11 py4j round trips
+    of call-site bookkeeping, which made those 12 calls most of a
+    check's plan-build cost."""
+    return [row, F.lit(warn_col), value, F.lit(message), F.lit(check_id), F.lit(seq)]
 
 
 def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str,
@@ -107,14 +111,17 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
     The produced plan is a narrow map: scan -> project(array of
     conditional structs) -> filter(non-empty) -> explode. No shuffle.
     Each violation also keeps the ``carry`` columns of the row that
-    produced it (the runner carries ``bucket``).
+    produced it (the runner carries ``bucket``). Every check's struct
+    shares one bigint cast of the row key; its fields keep Spark's
+    default names until the one ``toDF`` after the explode.
     """
     dtypes = {f.name: f.dataType for f in df.schema.fields}
+    row = F.col(row_col).cast("bigint")
     structs = [
         F.when(
             _fail_predicate(df, dtypes, ck),
             F.struct(*violation_columns(
-                F.col(row_col), value_repr(df[ck.df_col], dtypes[ck.df_col]),
+                row, value_repr(df[ck.df_col], dtypes[ck.df_col]),
                 warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq)),
         )
         for ck in checks
@@ -129,6 +136,7 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
         df.select(F.explode(F.array(*structs)).alias("v"), *carry)
         .where(F.col("v").isNotNull())
         .select("v.*", *carry)
+        .toDF(*VIOLATION_NAMES, *carry)
     )
 
 
@@ -139,7 +147,8 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
 def fail_base(df: DataFrame, df_col: str, row_col: str,
               carry: typing.Sequence[str] = ()) -> DataFrame:
     """The (__r__ long, __v__, *carry) projection every global fail set
-    is cut from."""
+    is cut from: ``__r__`` is the bigint row that emit_violations emits
+    as is."""
     return df.select(F.col(row_col).cast("long").alias("__r__"), F.col(df_col).alias("__v__"),
                      *carry)
 
@@ -209,7 +218,8 @@ def emit_violations(
         fail = fail.where(_empty_exemption(v, spark_type))
     return fail.select(*violation_columns(
         F.col("__r__"), value_repr(v, spark_type),
-        warn_col=warn_col, message=message, check_id=check_id, seq=seq), *carry)
+        warn_col=warn_col, message=message, check_id=check_id, seq=seq), *carry
+    ).toDF(*VIOLATION_NAMES, *carry)
 
 
 def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: str,

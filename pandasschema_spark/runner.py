@@ -21,9 +21,11 @@ then builds the global checks (distinctness, referential) once over the
 whole input as one more committed phase; its violations carry their
 row's bucket the same way. Nothing joins a violation back to the source.
 A bucket's rows_seen comes from the bucket listing, which reads the
-input's file metadata; the fail counts are one aggregate over the
-persisted violations after their write. (``DataFrame.observe`` is not
-used: an empty batch's violations go through ``overwrite_partitions``'
+input's file metadata. The violations are not persisted: the fail
+counts are read back on the driver, through pyarrow, from the
+partitions the violations write just committed, so a commit runs no
+Spark job beyond that write. (``DataFrame.observe`` is not used: an
+empty batch's violations go through ``overwrite_partitions``'
 repartition, AQE replaces the empty shuffle stage, CollectMetrics
 nodes included, and ``Observation.get`` fails.)
 
@@ -35,9 +37,9 @@ replayable partial output that the retry's dynamic-partition overwrite
 replaces) or (manifest file, committed output). resume = the bucket
 listing minus the manifest's buckets — no bucket is validated twice,
 and the final violations equal an uninterrupted run (tested in
-tests/test_resume.py). The runner's own manifest reads go through
-pyarrow on the driver, so neither the commit nor the resume runs a
-Spark job.
+tests/test_resume.py). The runner's own reads of its committed files
+(the manifest, the fail counts) go through pyarrow on the driver, so
+neither the manifest commit nor the resume runs a Spark job.
 
 Manifest schema (FIXTURES.md §C3): run_id, bucket, rows_seen, check_id,
 fail_count, status, finished_at.
@@ -49,6 +51,7 @@ import collections
 import datetime
 import typing
 
+import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -69,6 +72,8 @@ MANIFEST_SCHEMA = T.StructType([
 
 VIOLATIONS_TABLE = "violations"
 MANIFEST_TABLE = "manifest"
+# the violations table's hive partition columns, outermost first
+VIOLATION_PARTITIONS = {"run_id": pa.string(), "phase": pa.string(), "bucket": pa.int32()}
 
 
 class ValidationRunner:
@@ -177,7 +182,7 @@ class ValidationRunner:
             "value string, message string, check_id string, seq int, "
             "bucket int")
         self.wh.overwrite_partitions(
-            fw, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
+            fw, VIOLATIONS_TABLE, partition_by=list(VIOLATION_PARTITIONS))
         return len(warns)
 
     def _run_global(self, src, checks, row_key):
@@ -198,30 +203,43 @@ class ValidationRunner:
         """Overwrite the phase's violations partitions with ``built`` (each
         violation carries its row's bucket), then append the manifest —
         the commit point. ``rows_seen`` maps each bucket of a local batch
-        to its listed row count; None marks the global phase. The
-        violations are persisted because the write and the fail counts
-        both read them."""
+        to its listed row count; None marks the global phase. Nothing is
+        persisted: the fail counts are read back from the partitions the
+        write committed, so the write is the commit's only Spark job."""
         violations = built.select(
             F.lit(self.run_id).alias("run_id"), F.lit(phase).alias("phase"),
             "row", "column", "value", "message", "check_id", "seq", "bucket",
-        ).persist()
-        try:
-            self.wh.overwrite_partitions(
-                violations, VIOLATIONS_TABLE, partition_by=["run_id", "phase", "bucket"])
-            fails = violations.groupBy("bucket", "check_id").count().collect()
-        finally:
-            violations.unpersist()
+        )
+        self.wh.overwrite_partitions(
+            violations, VIOLATIONS_TABLE, partition_by=list(VIOLATION_PARTITIONS))
+        fails = self._fail_counts(phase, None if rows_seen is None else list(rows_seen))
         if rows_seen is None:
-            metrics = [(self.GLOBAL_BUCKET, 0, "__global__", sum(r["count"] for r in fails))]
+            metrics = [(self.GLOBAL_BUCKET, 0, "__global__", sum(fails.values()))]
         else:
             per_bucket = collections.defaultdict(list)
-            for r in fails:
-                per_bucket[r["bucket"]].append((r["check_id"], r["count"]))
+            for (bucket, check), count in fails.items():
+                per_bucket[bucket].append((check, count))
             metrics = [(b, n, check, count) for b, n in rows_seen.items()
                        for check, count in sorted(per_bucket[b]) or [("__all__", 0)]]
         now = datetime.datetime.now()
         self.wh.append([(self.run_id, *m, "ok", now) for m in metrics],
                        MANIFEST_SCHEMA, MANIFEST_TABLE)
+
+    def _fail_counts(self, phase, buckets) -> typing.Dict[typing.Tuple[int, str], int]:
+        """{(bucket, check_id): violations} in this run's committed
+        ``phase`` partitions, of ``buckets`` only when given. Read on the
+        driver off the violations files: O(violations) and no Spark job.
+        Only ``check_id`` is read from the files; ``bucket`` is a path
+        key."""
+        where = (ds.field("run_id") == self.run_id) & (ds.field("phase") == phase)
+        if buckets is not None:
+            where &= ds.field("bucket").isin(buckets)
+        data = self.wh.dataset(VIOLATIONS_TABLE, VIOLATION_PARTITIONS)
+        if "check_id" not in data.schema.names:  # no data file yet
+            return {}
+        counts = (data.to_table(columns=["bucket", "check_id"], filter=where)
+                  .group_by(["bucket", "check_id"]).aggregate([([], "count_all")]))
+        return {(r["bucket"], r["check_id"]): r["count_all"] for r in counts.to_pylist()}
 
     # -- results ------------------------------------------------------------
     def violations(self, spark: SparkSession) -> DataFrame:

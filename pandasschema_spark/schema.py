@@ -209,7 +209,11 @@ class Schema:
 
         keyed, row_col = self._with_row_key(df, row_key)
 
-        parts = [_compiler.build_row_violations(keyed, row_checks, row_col)] if row_checks else []
+        # the global emitters' constants are non-null literals; without a
+        # row part, the empty frame's nullable fields keep the result at
+        # VIOLATION_SCHEMA (the optimizer drops the empty branch)
+        parts = [_compiler.build_row_violations(keyed, row_checks, row_col) if row_checks
+                 else _compiler.empty_violations(df.sparkSession)]
         if global_checks:
             parts.append(_compiler.build_global_violations(keyed, global_checks, row_col))
         return ValidationResult(frame_warnings, functools.reduce(DataFrame.unionByName, parts))

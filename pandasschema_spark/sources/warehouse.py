@@ -72,23 +72,30 @@ class Warehouse:
                                 and (f.endswith(self.suffix) or "=" in f))
             for f in os.listdir(p))
 
-    def dataset(self, name: str, partitioning=None) -> ds.Dataset:
+    def dataset(self, name: str,
+                partitions: typing.Mapping[str, pa.DataType] = None) -> ds.Dataset:
         """The table's data files as a ``pyarrow.dataset``: footer
         schema, file metadata and driver-side reads without a Spark job.
-        Names starting with '_' or '.' are skipped, as Spark's own
-        listing skips them."""
-        return ds.dataset(self.path(name), format=self.fmt, partitioning=partitioning)
+        Names starting with '_' or '.' are skipped at any depth, as
+        Spark's own listing skips them, so the ``_temporary`` and
+        ``.spark-staging-*`` directories a crashed write leaves are not
+        read. ``partitions`` maps hive partition columns (the keys of
+        ``<column>=<value>`` directories, at any depth; other keys are
+        ignored) to their arrow types. Their values are URI-decoded,
+        which undoes Spark's escaping of partition paths."""
+        hive = None
+        if partitions:
+            hive = ds.partitioning(pa.schema(list(partitions.items())), flavor="hive")
+        return ds.dataset(self.path(name), format=self.fmt, partitioning=hive)
 
     def partition_rows(self, name: str, column: str) -> typing.Dict[int, int]:
         """Row count per value of the integer hive partition column
         ``column`` (at any depth), in value order. Read off the data
-        files' metadata through ``pyarrow.dataset``: no Spark job, and
-        names starting with '_' or '.' are skipped, as Spark's own
-        listing skips them. Iceberg equivalent: the ``.partitions``
-        metadata table's ``record_count``."""
-        hive = ds.partitioning(pa.schema([(column, pa.int64())]), flavor="hive")
+        files' metadata through :meth:`dataset`: no Spark job. Iceberg
+        equivalent: the ``.partitions`` metadata table's
+        ``record_count``."""
         try:
-            fragments = list(self.dataset(name, partitioning=hive).get_fragments())
+            fragments = list(self.dataset(name, {column: pa.int64()}).get_fragments())
         except pa.ArrowInvalid as e:
             raise ValueError("{}: a {} partition is not an integer ({})".format(
                 name, column, e)) from None

@@ -9,6 +9,7 @@ import shutil
 import tempfile
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -243,6 +244,45 @@ def test_crash_inside_manifest_append_leaves_nothing_visible(spark, small_wh, co
                .agg(F.countDistinct("finished_at").alias("n")).collect()}
     assert commits == dict.fromkeys(
         list(range(SMALL_BUCKETS)) + [ValidationRunner.GLOBAL_BUCKET], 1)
+    full = ValidationRunner(small_wh, "full")
+    assert _collect_violations(runner, spark) == _collect_violations(full, spark)
+
+
+def test_crash_inside_violations_write_leaves_nothing_countable(spark, small_wh):
+    """A crash inside the violations write leaves files under the
+    table's '.spark-staging-*' and '_temporary' directories. Neither
+    the resume's fail counts nor completed_buckets count them, and the
+    resumed violations equal an uninterrupted run's."""
+    run_id = "torn_write"
+    schema = _schema(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ValidationRunner(small_wh, run_id, batch_buckets=2).run(
+            spark, schema, validate_columns=PUBLIC_COLUMNS, fail_after_batches=1)
+    runner = ValidationRunner(small_wh, run_id, batch_buckets=2)
+    done = runner.completed_buckets(spark)
+    leftover = pa.table({"row": pa.array([0], pa.int64()), "column": ["clip_id"],
+                         "value": ["x"], "message": ["torn"], "check_id": ["__torn__"],
+                         "seq": pa.array([0], pa.int32())})
+    table = small_wh.path("violations")
+    for stage in (".spark-staging-torn", os.path.join("_temporary", "0")):
+        for b in range(SMALL_BUCKETS):
+            part = os.path.join(table, stage, "run_id={}".format(run_id), "phase=local",
+                                "bucket={}".format(b))
+            os.makedirs(part)
+            pq.write_table(leftover, os.path.join(part, "part-torn.parquet"))
+    assert runner.completed_buckets(spark) == done
+
+    summary = runner.run(spark, schema, validate_columns=PUBLIC_COLUMNS)
+    assert summary["buckets_skipped_resume"] == len(done) == 2
+    v = runner.violations(spark)
+    want = {(r["bucket"], r["check_id"]): r["count"] for r in
+            v.where(F.col("phase") == "local").groupBy("bucket", "check_id").count().collect()}
+    want.update({(b, "__all__"): 0 for b in range(SMALL_BUCKETS)
+                 if not any(k[0] == b for k in want)})
+    want[(ValidationRunner.GLOBAL_BUCKET, "__global__")] = \
+        v.where(F.col("phase") == "global").count()
+    got = {(r["bucket"], r["check_id"]): r["fail_count"] for r in runner.manifest(spark).collect()}
+    assert got == want
     full = ValidationRunner(small_wh, "full")
     assert _collect_violations(runner, spark) == _collect_violations(full, spark)
 

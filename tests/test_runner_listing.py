@@ -22,7 +22,7 @@ from pandasschema_spark.runner import ValidationRunner
 from pandasschema_spark.schema import Schema
 from pandasschema_spark.sources import datagen as G
 from pandasschema_spark.sources.warehouse import Warehouse
-from pandasschema_spark.validation import MatchesPatternValidation
+from pandasschema_spark.validation import IsDistinctValidation, MatchesPatternValidation
 
 N = 2000
 BUCKETS = 8
@@ -186,7 +186,9 @@ def test_resumed_manifest_matches_input_and_violations(spark, wh):
 def test_crash_and_resume_commit_and_list_without_jobs(spark, wh, jobs_of, monkeypatch):
     """The manifest is a driver-side commit: a crash and a resume run no
     Spark job inside the manifest append or the completed-bucket read,
-    and the whole of it runs a pinned number of jobs."""
+    and the whole of it runs a pinned number of jobs: one per run for the
+    input read's schema inference, two per batch's violations write and
+    three for the global phase's write (its distinct check broadcasts)."""
     sc = spark.sparkContext
     inner = collections.Counter()
     calls = collections.Counter()
@@ -221,4 +223,94 @@ def test_crash_and_resume_commit_and_list_without_jobs(spark, wh, jobs_of, monke
     outer_jobs = jobs_of(crash_and_resume)
     assert calls == {"append": 3, "completed_buckets": 2}
     assert inner == {"append": 0, "completed_buckets": 0}
-    assert outer_jobs == 16
+    assert outer_jobs == 9
+
+
+def test_commit_runs_only_its_write_and_persists_nothing(spark, wh, pinned, monkeypatch):
+    """A commit's only Spark jobs are those of its violations write: the
+    fail counts are read back from the committed files on the driver.
+    Nothing is persisted during the write, and nothing is left pinned."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    commit_jobs, write_jobs, held = [], [], []
+    real_commit, real_write = ValidationRunner._commit, Warehouse.overwrite_partitions
+
+    def commit(self, *args):
+        group = "commit_{}".format(len(commit_jobs))
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            real_commit(self, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        commit_jobs.append(len(tracker.getJobIdsForGroup(group)))
+
+    def write(self, df, name, partition_by):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before = len(tracker.getJobIdsForGroup(group))
+        real_write(self, df, name, partition_by)
+        write_jobs.append(len(tracker.getJobIdsForGroup(group)) - before)
+        held.append(pinned())
+
+    monkeypatch.setattr(ValidationRunner, "_commit", commit)
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", write)
+    before = pinned()
+    schema = clips_schema(G.codec_dim(spark), seed=SEED, with_pcm_checks=False)
+    ValidationRunner(wh, "commit_jobs", batch_buckets=4).run(
+        spark, schema, validate_columns=PUBLIC_COLUMNS)
+
+    assert len(commit_jobs) == 3  # two batches and the global phase
+    assert commit_jobs == write_jobs and min(write_jobs) > 0
+    assert held == [before] * 3
+    assert pinned() == before
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_fail_counts_match_committed_violations(spark, tmp_path, fmt):
+    """The manifest's fail counts equal the committed violations'
+    (bucket, check_id) counts for a batch with violations, a batch with
+    none (committed as '__all__'/0) and the global phase's total, after
+    a crash and a resume. The run id holds characters Spark escapes in
+    partition paths, so the driver's hive decoding must agree with it."""
+    w = Warehouse(str(tmp_path), fmt=fmt)
+    rows = [("a", "BAD!", 0, 0), ("a", "ok", 1, 1), ("b", "BAD?", 2, 1),
+            ("c", "ok", 3, 2), ("d", "ok", 4, 3), ("d", "ok", 5, 2)]
+    (spark.createDataFrame(rows, "clip_id string, transcript string, row_ord long, bucket int")
+     .write.partitionBy("bucket").format(fmt).save(w.path("clips")))
+    schema = Schema([Column("clip_id", [IsDistinctValidation()]),
+                     Column("transcript", [MatchesPatternValidation("^[a-z]+$")])])
+    run_id = "nightly:2026/10 a=b%"
+    cols = ["clip_id", "transcript"]
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ValidationRunner(w, run_id, batch_buckets=2).run(
+            spark, schema, validate_columns=cols, fail_after_batches=1)
+    runner = ValidationRunner(w, run_id, batch_buckets=2)
+    runner.run(spark, schema, validate_columns=cols)
+    assert any("%3A" in d for d in os.listdir(w.path("violations")))
+
+    v = runner.violations(spark)
+    local = {(r["bucket"], r["check_id"]): r["count"] for r in
+             v.where(F.col("phase") == "local").groupBy("bucket", "check_id").count().collect()}
+    n_global = v.where(F.col("phase") == "global").count()
+    assert set(b for b, _ in local) == {0, 1} and n_global == 2
+    want = {(b, c): n for (b, c), n in local.items()}
+    want.update({(2, "__all__"): 0, (3, "__all__"): 0,
+                 (ValidationRunner.GLOBAL_BUCKET, "__global__"): n_global})
+    got = {(r["bucket"], r["check_id"]): r["fail_count"] for r in runner.manifest(spark).collect()}
+    assert got == want
+
+
+def test_clean_first_commit_counts_nothing(spark, tmp_path):
+    """A run whose commits write no violation leaves the violations
+    table without a data file; the driver's fail-count read then
+    commits '__all__'/0 for every bucket."""
+    w = Warehouse(str(tmp_path))
+    (spark.createDataFrame([("ok", 0, 0), ("ok", 1, 1)],
+                           "transcript string, row_ord long, bucket int")
+     .write.partitionBy("bucket").parquet(w.path("clips")))
+    schema = Schema([Column("transcript", [MatchesPatternValidation("^[a-z]+$")])])
+    runner = ValidationRunner(w, "clean", batch_buckets=1)
+    runner.run(spark, schema, validate_columns=["transcript"])
+    assert not w.exists("violations")
+    got = sorted(tuple(r) for r in runner.manifest(spark)
+                 .select("bucket", "rows_seen", "check_id", "fail_count").collect())
+    assert got == [(0, 1, "__all__", 0), (1, 1, "__all__", 0)]

@@ -307,3 +307,55 @@ def test_distinct_verify_row_key_guard(spark):
         collided, "v", "r", **kw).collect()] == [2]
     with pytest.raises(Exception, match="keeper ordinal"):
         distinct_violations(collided, "v", "r", verify_row_key=True, **kw).collect()
+
+
+def _round_trips_to_build(spark, schema, df, columns):
+    """py4j round trips ``schema.validate(df, columns)`` makes with no
+    action. Memory-release commands are left out: Python's collector
+    sends one whenever it frees a JVM handle, made by this build or an
+    earlier one, so their count is the collector's timing, not the
+    build's."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    sent = []
+
+    def spy(self, command, *args, **kw):
+        sent.append(command)
+        return real(self, command, *args, **kw)
+
+    gc.collect()
+    ClientServerConnection.send_command = spy
+    try:
+        schema.validate(df, columns=columns)
+    finally:
+        ClientServerConnection.send_command = real
+    return sum(1 for c in sent if not c.startswith("m"))
+
+
+def test_check_projection_round_trips_and_schema(spark):
+    """The fused check projection costs at most 200 py4j round trips per
+    added row check (a cast and an alias per violation field made it
+    about 300), and the violations of a row-only, a global-only and a
+    mixed schema all have exactly VIOLATION_SCHEMA: names, types and
+    nullability."""
+    from pandasschema_spark.plans.compiler import VIOLATION_SCHEMA
+
+    df = spark.createDataFrame(
+        [(i, str(i), i) for i in range(20)], "a long, b string, k long")
+
+    def schema(copies):
+        return Schema([Column("a", [InRangeValidation(0, 10)] * copies),
+                       Column("b", [InListValidation(["1", "2"])] * copies)])
+
+    _round_trips_to_build(spark, schema(1), df, ["a", "b"])  # warm the lookups
+    one = _round_trips_to_build(spark, schema(1), df, ["a", "b"])
+    five = _round_trips_to_build(spark, schema(5), df, ["a", "b"])
+    assert (five - one) / 8 <= 200, (one, five)
+
+    for checks in ([InRangeValidation(0, 10)], [IsDistinctValidation()],
+                   [IsDistinctValidation(), InRangeValidation(0, 10)]):
+        res = Schema([Column("a", checks)]).validate(df, columns=["a"], row_key="k")
+        assert res.violations.schema == VIOLATION_SCHEMA, checks
