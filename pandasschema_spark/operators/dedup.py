@@ -33,6 +33,7 @@ from ..functions.exact import floor_div
 from ..resources import hold
 from pyspark.storagelevel import StorageLevel
 
+from .banding import bit_chunks, bucket_pairs, drop_hot_keys
 from .text import normalized_text_expr
 
 # 32-bit md5-prefix gram hash, then affine universal hashing mod a prime.
@@ -192,22 +193,15 @@ def _gram_overlap(
     # agg instead of two, O(docs) slim rows cached
     sizes = hold(grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
                  .persist(StorageLevel.MEMORY_AND_DISK))
-    if max_gram_df is not None:
-        # hot-gram cap as groupBy-count + BROADCAST ANTI-JOIN (the house
-        # cap shape, same as lsh/sessionize/entity): the hot set is
-        # tiny/empty by construction. The previous inner join against
-        # the <=cap gram table made Spark broadcast the near-COMPLETE
-        # distinct-gram frame — unbroadcastable at web scale. (Carrying
-        # n_grams on every gram row through the self-join instead of
-        # joining sizes back was measured SLOWER — +16 bytes on the
-        # candidate-pair exchange and a 4-key partial agg cost more than
-        # the two small join-backs, interleaved A/B 11.0s vs 8.0s.)
-        hot = (
-            grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__df__"))
-            .where(F.col("__df__") > max_gram_df)
-            .select("gram")
-        )
-        grams = grams.join(F.broadcast(hot), "gram", "left_anti")
+    # hot-gram cap, the banding.drop_hot_keys rule: the hot set is
+    # tiny/empty by construction. The previous inner join against the
+    # <=cap gram table made Spark broadcast the near-COMPLETE
+    # distinct-gram frame — unbroadcastable at web scale. (Carrying
+    # n_grams on every gram row through the self-join instead of
+    # joining sizes back was measured SLOWER — +16 bytes on the
+    # candidate-pair exchange and a 4-key partial agg cost more than
+    # the two small join-backs, interleaved A/B 11.0s vs 8.0s.)
+    [grams] = drop_hot_keys([grams], "gram", max_gram_df)
     # co-partition the (capped) index ONCE and cache it: both self-join
     # sides read the same hash(gram)-partitioned cache, whose
     # partitioning the InMemoryRelation preserves, so the join plans
@@ -359,31 +353,9 @@ def lsh_candidate_pairs(
     # ngram->md5->k-fold signature pipeline (the expensive part)
     sigs = hold(minhash_signatures(df, text_col, id_col, n=n, k=k, impl=impl)
                 .persist(StorageLevel.MEMORY_AND_DISK))
-    banded = _banded_sigs(sigs, bands, r)
-    if max_bucket is not None:
-        hot = (
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bc__"))
-            .where(F.col("__bc__") > max_bucket)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
-        )
-    # NOTE: the jaccard-index co-partition-and-cache trick was tried
-    # here and measured SLOWER (1.25s -> 1.77s): the banded frame is a
-    # cheap projection of the small sigs cache, so the extra
-    # repartition + cache materialization exceeds the per-side replay
-    # it saves. It pays only when each side replays an expensive
-    # subtree (the gram index case).
-    a = banded.select("band_idx", "band_key", F.col("id").alias("id_a"))
-    b = banded.select("band_idx", "band_key", F.col("id").alias("id_b"))
-    return (
-        a.join(b, ["band_idx", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    [banded] = drop_hot_keys(
+        [_banded_sigs(sigs, bands, r)], ["band_idx", "band_key"], max_bucket)
+    return bucket_pairs(banded, ["band_idx", "band_key"], "id")
 
 
 def _banded_sigs(sigs: DataFrame, bands: int, r: int) -> DataFrame:
@@ -441,19 +413,9 @@ def incremental_lsh_pairs(
     r = k // bands
     new_sigs = hold(minhash_signatures(new_df, text_col, id_col, n=n, k=k, impl=impl)
                     .persist(StorageLevel.MEMORY_AND_DISK))
-    nb = _banded_sigs(new_sigs, bands, r)
-    sb = _banded_sigs(store_sigs, bands, r)
-    if max_bucket is not None:
-        hot = (
-            nb.select("band_idx", "band_key").unionByName(
-                sb.select("band_idx", "band_key"))
-            .groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bc__"))
-            .where(F.col("__bc__") > max_bucket)
-            .select("band_idx", "band_key")
-        )
-        nb = nb.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
-        sb = sb.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
+    nb, sb = drop_hot_keys(
+        [_banded_sigs(new_sigs, bands, r), _banded_sigs(store_sigs, bands, r)],
+        ["band_idx", "band_key"], max_bucket)
     return (
         nb.select("band_idx", "band_key", F.col("id").alias("id_new"))
         .join(sb.select("band_idx", "band_key", F.col("id").alias("id_store")),
@@ -590,31 +552,11 @@ def simhash_candidates(
     """Near-dup candidates: pairs agreeing on >=1 of the 16-bit signature
     chunks (classic Hamming-ball banding — any pair within Hamming distance
     3 of a 64-bit signature shares at least one of 4 chunks)."""
-    if chunk_bits < 1 or 64 % chunk_bits:
-        # a non-divisor silently drops the top signature bits from every
-        # chunk and voids the Hamming-ball recall guarantee
-        raise ValueError("chunk_bits must divide 64")
+    chunks = bit_chunks(F.col("simhash"), 64, chunk_bits)
     sigs = hold(simhash64(df, text_col, id_col, n=n, impl=impl)
                 .persist(StorageLevel.MEMORY_AND_DISK))
-    n_chunks = 64 // chunk_bits
-    mask = (1 << chunk_bits) - 1
-    chunked = sigs.select(
-        "id",
-        F.posexplode(
-            F.array(*[
-                (F.shiftright(F.col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask)))
-                for i in range(n_chunks)
-            ])
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    a = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_a"))
-    b = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_b"))
-    return (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    chunked = sigs.select("id", F.posexplode(chunks).alias("chunk_idx", "chunk_val"))
+    return bucket_pairs(chunked, ["chunk_idx", "chunk_val"], "id")
 
 
 def contamination_check(
@@ -856,17 +798,8 @@ def source_dup_matrix(
     # cached distinct frame — otherwise the corpus-scanning distinct agg
     # re-runs per consumer
     pairs = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
-    if max_sources_per_content is not None:
-        hot = (
-            pairs.groupBy("__d__")
-            .agg(F.count(F.lit(1)).alias("__ns__"))
-            .where(F.col("__ns__") > max_sources_per_content)
-            .select("__d__")
-        )
-        pairs = pairs.join(F.broadcast(hot), "__d__", "left_anti")
-    # (the jaccard-index co-partition-and-cache trick measured slower
-    # here — 1.36s -> 1.57s: the distinct (digest, source) frame is
-    # already the persisted cache, see the lsh_candidate_pairs note)
+    [pairs] = drop_hot_keys([pairs], "__d__", max_sources_per_content)
+    # (no co-partition-and-cache: measured slower, see banding.bucket_pairs)
     sizes = pairs.groupBy("__s__").agg(F.count(F.lit(1)).alias("n_contents"))
     a = pairs.select("__d__", F.col("__s__").alias("source_a"))
     b = pairs.select("__d__", F.col("__s__").alias("source_b"))
@@ -1021,13 +954,8 @@ def windowed_duplicate_ids(
 
     if window < 1:
         raise ValueError("window must be >= 1")
-    base = window_fingerprints(df, text_col, id_col)
-    if max_content_df is not None:
-        hot = (base.groupBy("fingerprint")
-               .agg(F.count(F.lit(1)).alias("__c__"))
-               .where(F.col("__c__") > max_content_df)
-               .select("fingerprint"))
-        base = base.join(F.broadcast(hot), "fingerprint", "left_anti")
+    [base] = drop_hot_keys(
+        [window_fingerprints(df, text_col, id_col)], "fingerprint", max_content_df)
     w = Window.partitionBy("fingerprint").orderBy("id")
     return (base
             .withColumn("prev_id", F.lag("id").over(w))
@@ -1101,12 +1029,7 @@ def incremental_window_duplicates(
     union = (store_fps.select("id", "fingerprint", F.lit(0).alias("__new__"))
              .unionByName(new_fp.select(
                  "id", "fingerprint", F.lit(1).alias("__new__"))))
-    if max_content_df is not None:
-        hot = (union.groupBy("fingerprint")
-               .agg(F.count(F.lit(1)).alias("__c__"))
-               .where(F.col("__c__") > max_content_df)
-               .select("fingerprint"))
-        union = union.join(F.broadcast(hot), "fingerprint", "left_anti")
+    [union] = drop_hot_keys([union], "fingerprint", max_content_df)
     # secondary sort on the side flag: store (0) before new (1) at equal
     # id — the deterministic replayed-ingest rule from the docstring
     w = Window.partitionBy("fingerprint").orderBy("id", "__new__")

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..resources import hold
+from .banding import drop_hot_keys
 from .graph import connected_components
 
 #: default hot-block cap, consistent with the dedup family's
@@ -57,19 +58,6 @@ def normalized_name_expr(col: Column) -> Column:
     """lower -> collapse every non-alphanumeric run to one space ->
     trim. Codegen-clean (regexp_replace, no higher-order functions)."""
     return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
-
-
-def _hot_keys(keys: DataFrame, key: str, cap: int) -> DataFrame:
-    """Keys whose row count exceeds ``cap``: groupBy-count (map-side
-    combinable), never a count-over-window. One definition so the cap
-    RULE cannot drift between the batch and incremental paths (the
-    oracles replay `count > cap` verbatim)."""
-    return (
-        keys.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__bc__"))
-        .where(F.col("__bc__") > cap)
-        .select(key)
-    )
 
 
 def _normalized_blocks(
@@ -130,16 +118,8 @@ def _blocked_pairs(df, name_col, id_col, block_len, max_dist, max_block):
     blk = _normalized_blocks(df, name_col, id_col, block_len).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if max_block is not None:
-        hot = _hot_keys(blk.select("b"), "b", max_block)
-        blk_kept = blk.join(F.broadcast(hot), "b", "left_anti")
-    else:
-        blk_kept = blk
-    # NOTE: the jaccard-index co-partition-and-cache trick was tried
-    # here and measured SLOWER (entity_resolution 2.05s -> 2.51s): the
-    # blocked frame is itself the persisted cache, so each side's
-    # "replay" is just a cache read + broadcast anti filter — cheaper
-    # than an extra repartition + second cache materialization.
+    [blk_kept] = drop_hot_keys([blk], "b", max_block)
+    # (no co-partition-and-cache: measured slower, see banding.bucket_pairs)
     a = blk_kept.select("b", F.col("id").alias("id_a"), F.col("nm").alias("nm_a"))
     bb = blk_kept.select("b", F.col("id").alias("id_b"), F.col("nm").alias("nm_b"))
     pairs = (
@@ -192,12 +172,7 @@ def assign_entities(
         normalized_name_expr(F.col(name_col)).alias("snm"),
         F.col(entity_col).cast("long").alias("entity_id"),
     ).select("snm", "entity_id", F.substring("snm", 1, block_len).alias("b"))
-    nb_kept, sb_kept = nb, sb
-    if max_block is not None:
-        hot = _hot_keys(
-            nb.select("b").unionByName(sb.select("b")), "b", max_block)
-        nb_kept = nb.join(F.broadcast(hot), "b", "left_anti")
-        sb_kept = sb.join(F.broadcast(hot), "b", "left_anti")
+    nb_kept, sb_kept = drop_hot_keys([nb, sb], "b", max_block)
     matched = (
         nb_kept.join(sb_kept, "b")
         .where(

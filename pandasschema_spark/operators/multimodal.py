@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..resources import hold
+from .banding import bit_chunks, bucket_pairs, drop_hot_keys
 
 try:  # real decoder, absent in this container
     from PIL import Image as _PIL_Image  # noqa: F401
@@ -333,24 +334,6 @@ def image_ahash(df: DataFrame, *, payload_col: str = "payload",
     return df.select(id_col, payload_col).mapInPandas(run, AHASH_SCHEMA)
 
 
-def _ahash_chunks(df: DataFrame, chunk_bits: int, extra_cols) -> DataFrame:
-    """posexplode a 56-bit ``ahash`` column into (chunk_idx, chunk_val)
-    rows — shared by image_dup_pairs and video_dup_pairs (the
-    _banded_sigs convention: both losslessness contracts depend on
-    IDENTICAL chunking, so the rule lives in exactly one place)."""
-    if chunk_bits < 1 or 56 % chunk_bits:
-        raise ValueError("chunk_bits must divide 56")
-    n_chunks = 56 // chunk_bits
-    mask = (1 << chunk_bits) - 1
-    return df.select(
-        *extra_cols,
-        F.posexplode(F.array(*[
-            (F.shiftright(F.col("ahash"), i * chunk_bits)
-             .bitwiseAND(F.lit(mask)))
-            for i in range(n_chunks)
-        ])).alias("chunk_idx", "chunk_val"))
-
-
 def image_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
                     id_col: str = "media_id", max_hamming: int = 3,
                     chunk_bits: int = 14,
@@ -376,25 +359,13 @@ def image_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
     bit_count(xor) over two joined hash columns."""
     from pyspark import StorageLevel
 
+    chunks = bit_chunks(F.col("ahash"), 56, chunk_bits)
     sigs = hold(image_ahash(df, payload_col=payload_col, id_col=id_col)
                 .persist(StorageLevel.MEMORY_AND_DISK))
-    chunked = _ahash_chunks(sigs, chunk_bits, ["id"])
-    if max_bucket is not None:
-        hot = (chunked.groupBy("chunk_idx", "chunk_val")
-               .agg(F.count(F.lit(1)).alias("__c__"))
-               .where(F.col("__c__") > max_bucket)
-               .select("chunk_idx", "chunk_val"))
-        chunked = chunked.join(F.broadcast(hot),
-                               ["chunk_idx", "chunk_val"], "left_anti")
-    # NOTE: the jaccard-index co-partition-and-cache trick measured
-    # SLOWER here (1.20s -> 1.59s): the chunk frame is a cheap
-    # posexplode of the small cached sigs, so the extra repartition +
-    # cache materialization exceeds the per-side replay it saves
-    a = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_a"))
-    b = chunked.select("chunk_idx", "chunk_val", F.col("id").alias("id_b"))
-    cands = (a.join(b, ["chunk_idx", "chunk_val"])
-             .where(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct())
+    [chunked] = drop_hot_keys(
+        [sigs.select("id", F.posexplode(chunks).alias("chunk_idx", "chunk_val"))],
+        ["chunk_idx", "chunk_val"], max_bucket)
+    cands = bucket_pairs(chunked, ["chunk_idx", "chunk_val"], "id")
     ha = sigs.select(F.col("id").alias("id_a"), F.col("ahash").alias("__ha__"))
     hb = sigs.select(F.col("id").alias("id_b"), F.col("ahash").alias("__hb__"))
     out = (cands.join(ha, "id_a").join(hb, "id_b")
@@ -436,6 +407,7 @@ def video_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
     bounds degenerate patterns, and the verify agg joins the two slim
     hash frames on (pair, frame_idx) and reduces map-side to one row
     per pair."""
+    chunks = bit_chunks(F.col("ahash"), 56, chunk_bits)
     frames = sample_frames(df, every_k=every_k, payload_col=payload_col,
                            id_col=id_col)
     # fid packing must not overflow int64 — fail LOUD on out-of-range
@@ -455,24 +427,12 @@ def video_dup_pairs(df: DataFrame, *, payload_col: str = "payload",
     from pyspark import StorageLevel
 
     fhash = hold(fhash.persist(StorageLevel.MEMORY_AND_DISK))
-    chunked = _ahash_chunks(fhash, chunk_bits, ["vid", "frame_idx"])
-    if max_bucket is not None:
-        hot = (chunked.groupBy("frame_idx", "chunk_idx", "chunk_val")
-               .agg(F.count(F.lit(1)).alias("__c__"))
-               .where(F.col("__c__") > max_bucket)
-               .select("frame_idx", "chunk_idx", "chunk_val"))
-        chunked = chunked.join(F.broadcast(hot),
-                               ["frame_idx", "chunk_idx", "chunk_val"],
-                               "left_anti")
-    # (co-partition-and-cache measured slower here too — see the
-    # image_dup_pairs note)
-    a = chunked.select("frame_idx", "chunk_idx", "chunk_val",
-                       F.col("vid").alias("id_a"))
-    b = chunked.select("frame_idx", "chunk_idx", "chunk_val",
-                       F.col("vid").alias("id_b"))
-    cands = (a.join(b, ["frame_idx", "chunk_idx", "chunk_val"])
-             .where(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct())
+    keys = ["frame_idx", "chunk_idx", "chunk_val"]
+    [chunked] = drop_hot_keys(
+        [fhash.select("vid", "frame_idx", F.posexplode(chunks)
+                      .alias("chunk_idx", "chunk_val"))],
+        keys, max_bucket)
+    cands = bucket_pairs(chunked, keys, "vid")
     counts = fhash.groupBy("vid").agg(
         F.count(F.lit(1)).alias("__nf__"))
     ha = fhash.select(F.col("vid").alias("id_a"), "frame_idx",

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..frames import local_frame
 from ..resources import hold
+from .banding import hot_keys
 
 DEFAULT_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
 
@@ -46,21 +47,20 @@ DEFAULT_MAX_EVENTS_PER_USER = 100_000
 
 
 def _drop_hot_users(df, user_col, max_events_per_user):
-    """Exclude users whose total event count exceeds the cap: slim
-    groupBy-count (map-side combined, shuffles one long per user) +
-    broadcast LEFT ANTI join — the event rows themselves are only
-    filtered, never shuffled by the cap. The join is NULL-SAFE
-    (eqNullSafe): groupBy collects all NULL-user rows into one group —
-    the classic unauthenticated-bot signature — and a plain equi-anti
-    predicate would never match that group's key, silently exempting
-    exactly the hottest group from the cap."""
+    """Exclude users whose total event count exceeds the cap: the
+    banding.hot_keys count (map-side combined, shuffles one long per
+    user) + broadcast LEFT ANTI join — the event rows themselves are
+    only filtered, never shuffled by the cap. The join is NULL-SAFE
+    (eqNullSafe), unlike banding.drop_hot_keys: groupBy collects all
+    NULL-user rows into one group — the classic unauthenticated-bot
+    signature, real traffic here — and a plain equi-anti predicate
+    would never match that group's key, silently exempting exactly the
+    hottest group from the cap."""
     if max_events_per_user is None:
         return df
-    hot = (df.groupBy(user_col)
-             .agg(F.count(F.lit(1)).alias("__n_events__"))
-             .where(F.col("__n_events__") > max_events_per_user)
-             .select(F.col(user_col).alias("__hot_user__")))
-    return (df.join(F.broadcast(hot),
+    bots = (hot_keys([df], user_col, max_events_per_user)
+            .select(F.col(user_col).alias("__hot_user__")))
+    return (df.join(F.broadcast(bots),
                     F.col(user_col).eqNullSafe(F.col("__hot_user__")),
                     "left_anti"))
 

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..frames import local_frame
 from ..resources import hold
+from .banding import bit_chunks, bucket_pairs, drop_hot_keys
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -890,35 +891,13 @@ def cosine_lsh_candidates(
     broadcast anti-join at ``max_bucket`` members per (chunk_idx,
     value); None = exact. The signature frame persists (two consumers).
     """
-    if n_planes % chunk_bits != 0:
-        raise ValueError("n_planes must be a multiple of chunk_bits")
     from pyspark import StorageLevel
 
+    chunks = bit_chunks(F.col("sig"), n_planes, chunk_bits)
     sigs = hold(hyperplane_signature(
         df, dim, id_col=id_col, vec_col=vec_col, n_planes=n_planes,
         quant=quant, salt=salt).persist(StorageLevel.MEMORY_AND_DISK))
-    n_chunks = n_planes // chunk_bits
-    mask = (1 << chunk_bits) - 1
-    chunked = sigs.select(
-        id_col,
-        F.posexplode(F.array(*[
-            (F.shiftright(F.col("sig"), i * chunk_bits)
-             .bitwiseAND(F.lit(mask)))
-            for i in range(n_chunks)])).alias("chunk_idx", "chunk_val"))
-    if max_bucket is not None:
-        hot = (chunked.groupBy("chunk_idx", "chunk_val")
-               .agg(F.count(F.lit(1)).alias("__n__"))
-               .where(F.col("__n__") > int(max_bucket))
-               .select("chunk_idx", "chunk_val"))
-        chunked = chunked.join(F.broadcast(hot),
-                               ["chunk_idx", "chunk_val"], "left_anti")
-    # (the jaccard-index co-partition-and-cache trick measured slower
-    # on the sibling chunk self-joins — cheap chunk projections of a
-    # small cache; see image_dup_pairs)
-    a = chunked.select("chunk_idx", "chunk_val",
-                       F.col(id_col).alias("id_a"))
-    b = chunked.select("chunk_idx", "chunk_val",
-                       F.col(id_col).alias("id_b"))
-    return (a.join(b, ["chunk_idx", "chunk_val"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    [chunked] = drop_hot_keys(
+        [sigs.select(id_col, F.posexplode(chunks).alias("chunk_idx", "chunk_val"))],
+        ["chunk_idx", "chunk_val"], max_bucket)
+    return bucket_pairs(chunked, ["chunk_idx", "chunk_val"], id_col)

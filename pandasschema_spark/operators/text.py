@@ -702,15 +702,15 @@ def boilerplate_scan(
     )
     from pyspark.storagelevel import StorageLevel
     pairs = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
-    hot = (
+    boiler = (
         pairs.groupBy("__d__")
         .agg(F.count(F.lit(1)).alias("__df__"))
         .where(F.col("__df__") >= min_doc_freq)
         .select("__d__", F.lit(1).alias("__hot__"))
     )
     if broadcast_dict:
-        hot = F.broadcast(hot)
-    flagged = pairs.join(hot, "__d__", "left")
+        boiler = F.broadcast(boiler)
+    flagged = pairs.join(boiler, "__d__", "left")
     return (
         flagged.groupBy("id")
         .agg(

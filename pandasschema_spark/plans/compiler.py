@@ -93,6 +93,23 @@ def value_repr(col, spark_type: T.DataType):
     return F.coalesce(col.cast("string"), F.lit(NULL_VALUE_REPR))
 
 
+class _ColumnExprs:
+    """The per-column expressions of a check projection (the column, its
+    rendered ``value_repr`` and its ``allow_empty`` exemption), each built
+    on first use and shared by every check on that column: the pyspark
+    Column calls behind them cost about 11 py4j round trips each, which
+    a second check on a column would otherwise pay again. The plan is
+    the same either way."""
+
+    def __init__(self, df: DataFrame):
+        self.types = {f.name: f.dataType for f in df.schema.fields}
+        self.col = functools.cache(lambda name: df[name])
+        self.value = functools.cache(
+            lambda name: value_repr(self.col(name), self.types[name]))
+        self.not_empty = functools.cache(
+            lambda name: _empty_exemption(self.col(name), self.types[name]))
+
+
 def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing.List[Column]:
     """The violation columns in VIOLATION_FIELDS order, unnamed: ``row``
     (a bigint) and the rendered ``value`` are expressions, the rest are
@@ -112,16 +129,17 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
     conditional structs) -> filter(non-empty) -> explode. No shuffle.
     Each violation also keeps the ``carry`` columns of the row that
     produced it (the runner carries ``bucket``). Every check's struct
-    shares one bigint cast of the row key; its fields keep Spark's
-    default names until the one ``toDF`` after the explode.
+    shares one bigint cast of the row key, and the checks of one column
+    share its rendered value and empty exemption; the fields keep
+    Spark's default names until the one ``toDF`` after the explode.
     """
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    exprs = _ColumnExprs(df)
     row = F.col(row_col).cast("bigint")
     structs = [
         F.when(
-            _fail_predicate(df, dtypes, ck),
+            _fail_predicate(df, exprs, ck),
             F.struct(*violation_columns(
-                row, value_repr(df[ck.df_col], dtypes[ck.df_col]),
+                row, exprs.value(ck.df_col),
                 warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq)),
         )
         for ck in checks
@@ -237,18 +255,17 @@ def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: 
     ])
 
 
-def _fail_predicate(df, dtypes, ck: Check):
+def _fail_predicate(df, exprs: _ColumnExprs, ck: Check):
     """The compiled FAIL predicate for one row check (shared by the
     violations explode and the bitmap projection)."""
-    col = df[ck.df_col]
-    spark_type = dtypes[ck.df_col]
     if getattr(ck.validation, "is_multi_column", False):
         pass_pred = ck.validation.compile_row_predicate(df)
     else:
-        pass_pred = ck.validation.compile_predicate(col, spark_type)
+        pass_pred = ck.validation.compile_predicate(
+            exprs.col(ck.df_col), exprs.types[ck.df_col])
     fail = ~pass_pred
     if ck.allow_empty:
-        fail = fail & _empty_exemption(col, spark_type)
+        fail = fail & exprs.not_empty(ck.df_col)
     return fail
 
 
@@ -282,10 +299,10 @@ def build_violation_bitmap(
             "violation bitmap supports at most 63 row-local checks (got {}); "
             "split the schema or use build_row_violations".format(len(checks))
         )
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    exprs = _ColumnExprs(df)
     bitmap = None
     for i, ck in enumerate(checks):
-        bit = F.when(_fail_predicate(df, dtypes, ck), F.lit(1 << i).cast("long")).otherwise(
+        bit = F.when(_fail_predicate(df, exprs, ck), F.lit(1 << i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         bitmap = bit if bitmap is None else bitmap + bit

@@ -25,7 +25,7 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.orc as orc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, types as T
 from pyspark.sql.functions import (col as F_col, concat_ws as F_concat_ws,
                                    hash as F_hash, lit as F_lit,
                                    pmod as F_pmod, when as F_when)
@@ -111,16 +111,20 @@ class Warehouse:
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
               partition_by: typing.Sequence[str] = ()) -> None:
+        self._writer(df, mode, partition_by).save(self.path(name))
+
+    def _writer(self, df: DataFrame, mode: str,
+                partition_by: typing.Sequence[str]) -> DataFrameWriter:
         if partition_by:
             # the CLAUDE.md parquet-writer rule: repartition by the
             # partition columns first, or every task writes a sliver
             # into every partition dir (tasks x partitions small files —
             # measured 8192 ~170 KB files for one 200k-row table)
             df = df.repartition(*[df[c] for c in partition_by])
-        w = df.write.mode(mode)
+        w = df.write.mode(mode).format(self.fmt)
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(self.path(name))
+        return w
 
     def append(self, rows: typing.Iterable[typing.Sequence], schema: T.StructType,
                name: str) -> None:
@@ -166,16 +170,13 @@ class Warehouse:
         """Dynamic partition overwrite: replaces only the partitions present
         in df — the idempotence primitive for checkpoint re-runs (a killed
         batch's partial output is replaced wholesale on retry). Iceberg
-        equivalent: INSERT OVERWRITE / replaceWhere."""
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (df.repartition(*[df[c] for c in partition_by])
-               .write.mode("overwrite").partitionBy(*partition_by)
-               .format(self.fmt).save(self.path(name)))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        equivalent: INSERT OVERWRITE / replaceWhere. The mode is a
+        per-write option: the session conf is never touched, so another
+        writer on the same session (a stream beside a runner) neither
+        sees it flipped nor has it restored under it."""
+        (self._writer(df, "overwrite", partition_by)
+         .option("partitionOverwriteMode", "dynamic")
+         .save(self.path(name)))
 
     def write_bucketed(self, df: DataFrame, table: str, bucket_col: str,
                        n_buckets: int,

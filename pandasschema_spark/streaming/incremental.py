@@ -16,12 +16,13 @@ Design:
   dynamic-partition overwrite, so a replayed micro-batch (failure between
   sink write and checkpoint commit) overwrites its own partition instead
   of duplicating — idempotence without a transactional sink.
-- global checks (cross-row uniqueness, referential vs a dim snapshot):
-  uniqueness is windowed WITHIN the stream's state horizon — exact global
-  keep-first over an unbounded stream needs unbounded state, so the
-  streaming layer checks within-batch duplicates and defers the global
-  pass to the batch runner (the honest scale trade-off, stated here
-  rather than hidden).
+- global checks (cross-row uniqueness, referential vs a dim snapshot)
+  are skipped per micro-batch: stream_validate compiles the schema's
+  row-local checks only, so a duplicate key is not reported here, not
+  even within one batch. The global pass stays with the batch runner;
+  uniqueness across batches is the stateful
+  ``streaming/stateful.streaming_duplicate_violations`` (keep-first
+  over group state).
 - drift monitoring: watermarked event-time windowed histograms
   (streaming_histogram) feed the same numpy chi-square/KS stats as batch.
 """
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..frames import local_frame
 from ..plans.compiler import build_row_violations
+from ..resources import hold, scope
 from ..schema import Schema
 from ..sources.warehouse import Warehouse
 
@@ -68,12 +70,12 @@ def stream_validate(
         raise ValueError("no row-local checks in schema; nothing to stream")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        violations = (
-            build_row_violations(batch_df, row_checks, row_key)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .persist()
-        )
-        try:
+        with scope():
+            violations = hold(
+                build_row_violations(batch_df, row_checks, row_key)
+                .withColumn("batch_id", F.lit(int(batch_id)))
+                .persist()
+            )
             # idempotent on replay: a re-run of batch N replaces partition N
             warehouse.overwrite_partitions(
                 violations.select("batch_id", "row", "column", "value", "message", "check_id", "seq"),
@@ -87,8 +89,6 @@ def stream_validate(
                 "batch_id long, rows_seen long, fail_count long",
             ).withColumn("finished_at", F.current_timestamp())
             warehouse.overwrite_partitions(metrics, STREAM_METRICS_TABLE, partition_by=["batch_id"])
-        finally:
-            violations.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -97,19 +97,6 @@ def stream_validate(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def within_batch_duplicates(batch_df: DataFrame, value_col: str, row_col: str) -> DataFrame:
-    """Streaming-scope uniqueness: non-first duplicates WITHIN the batch
-    (the global pass stays in the batch runner — exact keep-first over an
-    unbounded stream would need unbounded state)."""
-    from ..operators.distinct import distinct_violations
-
-    return distinct_violations(
-        batch_df, value_col, row_col,
-        warn_col=value_col, message="contains values that are not unique (within batch)",
-        check_id="stream:{}".format(value_col), seq=0,
-    )
 
 
 def streaming_histogram(

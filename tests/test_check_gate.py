@@ -13,7 +13,8 @@ from pyspark.sql import types as T
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from check_queries import canon_arrow_type, canon_spark_type, type_mismatches  # noqa: E402
+from check_queries import (  # noqa: E402
+    canon_arrow_type, canon_spark_type, session_size, type_mismatches)
 
 
 def _arrow(sql):
@@ -61,3 +62,17 @@ def test_canon_names_cover_common_types():
     arrow = _arrow("SELECT 1.5::DOUBLE AS d, 'x' AS s, DATE '2020-01-01' AS dt")
     names = {f.name: canon_arrow_type(f.type) for f in arrow}
     assert names == {"d": "float64", "s": "string", "dt": "date"}
+
+
+def test_session_is_sized_from_the_host():
+    """The gate's session takes one slot per core up to its 32 shuffle
+    partitions and a quarter of RAM for the heap, capped at 8g: a
+    32-core host with room keeps local[32]/8g, a 4-core 16 GB host
+    gets local[4] and a 4 GB heap."""
+    gb = 1 << 30
+    assert session_size(32, 64 * gb) == ("local[32]", "8g")
+    assert session_size(32, 32 * gb) == ("local[32]", "8g")
+    assert session_size(64, 256 * gb) == ("local[32]", "8g")
+    assert session_size(4, 16 * gb) == ("local[4]", "4096m")
+    assert session_size(4, 16479424 * 1024) == ("local[4]", "4023m")
+    assert session_size(None, 8 * gb) == ("local[1]", "2048m")

@@ -100,6 +100,43 @@ def test_partition_rows_match_spark_counts(spark, tmp_path, jobs_of, fmt):
     assert got == want and list(got) == sorted(want)
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_overwrite_partitions_leaves_the_session_conf_alone(spark, tmp_path, monkeypatch, fmt):
+    """With the session's partitionOverwriteMode at static,
+    overwrite_partitions still replaces only the partitions its frame
+    holds, and it never sets a session conf: dynamic overwrite is a
+    per-write option, so another writer on the session (a stream beside
+    a runner) neither sees the mode flipped nor has it restored under
+    it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        w = Warehouse(str(tmp_path), fmt=fmt)
+        w.write(spark.range(6).select((F.col("id") % 3).alias("p"), F.col("id").alias("v")),
+                "t", partition_by=["p"])
+        sets = []
+        real = RuntimeConfig.set
+
+        def spy(self, k, v):
+            sets.append((k, v))
+            return real(self, k, v)
+
+        monkeypatch.setattr(RuntimeConfig, "set", spy)
+        w.overwrite_partitions(
+            spark.range(1).select(F.lit(1).cast("long").alias("p"),
+                                  F.lit(100).cast("long").alias("v")),
+            "t", partition_by=["p"])
+        monkeypatch.undo()
+        assert sets == [] and spark.conf.get(key) == "static"
+        assert sorted((r["p"], r["v"]) for r in w.read(spark, "t").collect()) == [
+            (0, 0), (0, 3), (1, 100), (2, 2), (2, 5)]
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _optimized(df):
     """``df``'s optimized logical plan, ignoring the cache: the runner
     persists the frame it writes, and a cached frame's own optimized

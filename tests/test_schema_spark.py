@@ -338,13 +338,16 @@ def _round_trips_to_build(spark, schema, df, columns):
 def test_check_projection_round_trips_and_schema(spark):
     """The fused check projection costs at most 200 py4j round trips per
     added row check (a cast and an alias per violation field made it
-    about 300), and the violations of a row-only, a global-only and a
-    mixed schema all have exactly VIOLATION_SCHEMA: names, types and
-    nullability."""
+    about 300); a repeat check on an already-checked column costs at
+    least 20 fewer than a check on a new column, with and without
+    allow_empty, because a column's rendered value and empty exemption
+    are built once and shared by its checks; and the violations of a
+    row-only, a global-only and a mixed schema all have exactly
+    VIOLATION_SCHEMA: names, types and nullability."""
     from pandasschema_spark.plans.compiler import VIOLATION_SCHEMA
 
     df = spark.createDataFrame(
-        [(i, str(i), i) for i in range(20)], "a long, b string, k long")
+        [(i, str(i), i, i) for i in range(20)], "a long, b string, c long, k long")
 
     def schema(copies):
         return Schema([Column("a", [InRangeValidation(0, 10)] * copies),
@@ -354,6 +357,18 @@ def test_check_projection_round_trips_and_schema(spark):
     one = _round_trips_to_build(spark, schema(1), df, ["a", "b"])
     five = _round_trips_to_build(spark, schema(5), df, ["a", "b"])
     assert (five - one) / 8 <= 200, (one, five)
+
+    for allow_empty in (False, True):
+        def cost(a_checks, c_checks):
+            return _round_trips_to_build(spark, Schema([
+                Column("a", [InRangeValidation(0, 10)] * a_checks, allow_empty),
+                Column("c", [InRangeValidation(0, 10)] * c_checks, allow_empty),
+            ]), df, ["a", "c"])
+
+        cost(1, 0)  # warm the lookups
+        base = cost(1, 0)
+        repeat, new = cost(2, 0) - base, cost(1, 1) - base
+        assert repeat <= new - 20, (allow_empty, repeat, new)
 
     for checks in ([InRangeValidation(0, 10)], [IsDistinctValidation()],
                    [IsDistinctValidation(), InRangeValidation(0, 10)]):

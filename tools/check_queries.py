@@ -121,14 +121,29 @@ def type_mismatches(spark_schema, arrow_schema):
     return out
 
 
+def session_size(cpus, mem_bytes):
+    """(master, driver heap) for a host with ``cpus`` cores and
+    ``mem_bytes`` of RAM: one task slot per core up to the 32 shuffle
+    partitions, and a quarter of RAM for the heap, capped at 8g. The JVM
+    runs well past its heap (an 8g heap reached 6.3 GB RSS at sf0.1) and
+    DuckDB and the collected rows share the host, so a fixed 8g heap was
+    OOM-killed on a 16 GB host."""
+    heap_mb = min(8 << 10, mem_bytes // 4 >> 20)
+    heap = "8g" if heap_mb == 8 << 10 else "{}m".format(heap_mb)
+    return "local[{}]".format(min(32, cpus or 1)), heap
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    # physical pages x page size is the kernel's MemTotal
+    master, heap = session_size(
+        os.cpu_count(), os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(master)
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", heap)
         .appName("check_queries")
         .getOrCreate()
     )
