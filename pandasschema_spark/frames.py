@@ -10,13 +10,16 @@ worker ever starts, and a bare collect runs no job.
 
 Every frame the package builds from Python rows goes through here, and
 so does every driver-side metadata file (:func:`arrow_table`): the
-warehouse writes the runner's manifest from it with no Spark job.
+warehouse writes the runner's manifest from it with no Spark job. The
+executor-side twin is :func:`row_map`, the one per-row Arrow map: a
+kernel over one input row's values, run inside ``mapInPandas``.
 """
 
 from __future__ import annotations
 
 import typing
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -65,3 +68,30 @@ def local_frame(spark: SparkSession, rows: typing.Iterable[typing.Sequence],
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def row_map(df: DataFrame, cols: typing.Sequence, schema: T.StructType,
+            fn: typing.Callable[..., typing.Iterable[typing.Sequence]]) -> DataFrame:
+    """One narrow ``mapInPandas`` pass over ``df.select(*cols)`` that calls
+    ``fn(*values)`` once per input row, in batch order.
+
+    ``fn`` returns (or, as a generator, yields) zero or more output
+    tuples in ``schema`` field order: none for a skipped row, several
+    for a fan-out. Each Arrow batch yields one
+    ``pd.DataFrame(rows, columns=schema.fieldNames())``, and a batch with
+    no output rows yields nothing: an empty pandas column can type as
+    float64, which Arrow cannot convert to an array field. NULL handling
+    and per-row error isolation are the kernel's: a value is whatever
+    the Arrow batch holds (a NULL int is NaN in a float64 column)."""
+    names = schema.fieldNames()
+
+    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
+        for b in batches:
+            # zip over numpy columns, not iterrows(): a pandas Series per
+            # row costs more than the decode of a small payload
+            values = [b.iloc[:, k].to_numpy() for k in range(b.shape[1])]
+            rows = [out for row in zip(*values) for out in fn(*row)]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(gen, schema)

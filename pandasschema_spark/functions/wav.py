@@ -41,7 +41,10 @@ def parse_wav_header(raw: typing.Optional[bytes]) -> dict:
     Deterministic on any input: short/None payloads yield zeroed fields
     with every ok-flag False; fields are extracted positionally even when
     the magic is wrong, so one corrupt aspect flips exactly its own flag
-    (the per-check attribution the validation engine needs).
+    (the per-check attribution the validation engine needs). The sample
+    rate is read as a signed int32, the type of the ``sr_hdr`` column it
+    fills: on a non-WAV payload bytes 24-27 can hold any value, and an
+    unsigned read above 2^31 - 1 would not fit that column.
 
     Returned flags:
       riff_ok        -- b'RIFF' .. b'WAVE' .. b'fmt ' .. b'data' magics
@@ -53,7 +56,7 @@ def parse_wav_header(raw: typing.Optional[bytes]) -> dict:
                 "bits": 0, "data_len": 0, "len_ok": False}
     riff_size = struct.unpack_from("<I", raw, 4)[0]
     fmt_size, fmt_code, channels, sr, _byte_rate, _block_align, bits = \
-        struct.unpack_from("<IHHIIHH", raw, 16)
+        struct.unpack_from("<IHHiIHH", raw, 16)
     data_len = struct.unpack_from("<I", raw, 40)[0]
     return {
         "riff_ok": (raw[0:4] == b"RIFF" and raw[8:12] == b"WAVE"

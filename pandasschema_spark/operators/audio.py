@@ -6,11 +6,11 @@ These extend the validation engine with the audio side of the graft cell
 (it validates pandas Series — /root/reference/pandas_schema/validation.py),
 so everything here is engine extension, designed Spark-first:
 
-- every operator is ``mapInPandas`` over an Arrow batch iterator; inside a
-  batch the per-clip kernel is numpy (clips have different lengths so the
-  per-clip loop is irreducible, but each iteration is a vectorized
-  numpy kernel over thousands of samples — never per-row Python at the
-  Spark layer);
+- every payload operator is a per-clip kernel run through
+  ``frames.row_map`` (one ``mapInPandas`` pass over Arrow batches); the
+  kernel is numpy (clips have different lengths so the per-clip loop is
+  irreducible, but each iteration is a vectorized numpy kernel over
+  thousands of samples — never per-row Python at the Spark layer);
 - all emitted metrics are INTEGERS (exact across engines): sums of int16
   squares are exact int64, "rms" is ``isqrt(sum_sq // n)``, ratios are
   parts-per-million via integer division — so results hash identically in
@@ -20,8 +20,10 @@ so everything here is engine extension, designed Spark-first:
   same-fingerprint clips ever meet), then an expensive VERIFY stage
   (scale-normalized SNR) on the candidate pairs only. The self-join
   shuffles fingerprints + bytes of *candidate buckets only*; hot buckets
-  are capped exactly like operators/dedup.py's LSH (groupBy-count +
-  broadcast anti-join, never a count-over-window).
+  are capped inside the bucket-count aggregate the operator already
+  computes (``count <= max_bucket``, then an inner join of the surviving
+  fingerprints — never a count-over-window), not by banding.py's
+  broadcast anti-join.
 
 Scale notes per operator are in SCALE.md §audio.
 """
@@ -32,9 +34,9 @@ import math
 import typing
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..frames import row_map
 from ..resources import hold
 
 AUDIO_STATS_SCHEMA = T.StructType([
@@ -80,7 +82,7 @@ def _meta_int(v) -> typing.Optional[int]:
 
 def audio_stats(df: DataFrame, *, id_col: str = "clip_id",
                 bytes_col: str = "bytes") -> DataFrame:
-    """Per-clip PCM statistics, one narrow mapInPandas pass (no shuffle).
+    """Per-clip PCM statistics, one narrow row_map pass (no shuffle).
 
     Integer-exact by construction: peak/counts are integers, ``rms`` is
     ``isqrt(sum(s^2) // n)`` (sum of int16 squares is exact in int64 up to
@@ -91,39 +93,43 @@ def audio_stats(df: DataFrame, *, id_col: str = "clip_id",
     semantics only if mirrored — the oracle-facing queries only use the
     closed-form columns, see __spark_entry__).
     """
-    cols = [id_col, bytes_col]
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            out = {k: [] for k in AUDIO_STATS_SCHEMA.fieldNames()}
-            for j in range(len(b)):
-                s = _decode(raws[j])
-                n = int(s.size)
-                ln = 0 if raws[j] is None else len(raws[j])
-                if n:
-                    a = np.abs(s)
-                    peak = int(a.max())
-                    n_clip = int((a >= CLIP_MAG).sum())
-                    ssq = int(np.dot(s, s))
-                    rms = math.isqrt(ssq // n)
-                    total = int(s.sum())
-                    dc = (1000 * abs(total) // n) * (1 if total >= 0 else -1)
-                    zc = int((np.signbit(s[1:]) != np.signbit(s[:-1])).sum())
-                else:
-                    peak = n_clip = rms = dc = zc = 0
-                out["clip_id"].append(ids[j])
-                out["n_samples"].append(n)
-                out["len_bytes"].append(ln)
-                out["peak_abs"].append(peak)
-                out["n_clipped"].append(n_clip)
-                out["rms"].append(rms)
-                out["dc_offset_milli"].append(dc)
-                out["zero_crossings"].append(zc)
-            yield pd.DataFrame(out)
+    def stats(cid, raw):
+        s = _decode(raw)
+        n = int(s.size)
+        if n:
+            a = np.abs(s)
+            peak = int(a.max())
+            n_clip = int((a >= CLIP_MAG).sum())
+            ssq = int(np.dot(s, s))
+            rms = math.isqrt(ssq // n)
+            total = int(s.sum())
+            dc = (1000 * abs(total) // n) * (1 if total >= 0 else -1)
+            zc = int((np.signbit(s[1:]) != np.signbit(s[:-1])).sum())
+        else:
+            peak = n_clip = rms = dc = zc = 0
+        yield (cid, n, 0 if raw is None else len(raw), peak, n_clip, rms, dc, zc)
 
-    return df.select(*cols).mapInPandas(gen, AUDIO_STATS_SCHEMA)
+    return row_map(df, [id_col, bytes_col], AUDIO_STATS_SCHEMA, stats)
+
+
+def _frame_peaks(mag: np.ndarray, sr: int, frame_ms: int) -> np.ndarray:
+    """Per-frame peak of the sample magnitudes ``mag`` (``np.abs`` of a
+    decoded clip): the one frame rule of frame_silence, defect_triage,
+    trim_bounds and utterances. Frame length is ``sr * frame_ms // 1000``
+    samples (at least 1), full frames only; the tail is dropped, so the
+    result has ``len(mag) // frame_length`` entries."""
+    fl = max(sr * frame_ms // 1000, 1)
+    nf = int(mag.size) // fl
+    return mag[: nf * fl].reshape(nf, fl).max(axis=1)
+
+
+def _runs(mask: np.ndarray) -> typing.Tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the maximal True runs of a frame mask, ends
+    exclusive: padded with False sentinels, the mask's diff exposes every
+    run start (+1) and end (-1), interior or at the clip's edges."""
+    edges = np.diff(np.concatenate(([False], mask, [False])).astype(np.int8))
+    return np.flatnonzero(edges == 1), np.flatnonzero(edges == -1)
 
 
 FRAME_STATS_SCHEMA = T.StructType([
@@ -145,34 +151,20 @@ def frame_silence(df: DataFrame, *, id_col: str = "clip_id",
     warehouse), and report the silent fraction in parts-per-million
     (integer: ``1_000_000 * silent // frames``).
 
-    One narrow pass; the frame reshape is a zero-copy numpy view.
+    One narrow pass; frames follow :func:`_frame_peaks`, whose reshape
+    is a zero-copy numpy view.
     """
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            rows = {k: [] for k in FRAME_STATS_SCHEMA.fieldNames()}
-            for j in range(len(b)):
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # no frame length without a sample rate
-                s = _decode(raws[j])
-                fl = max(sr * frame_ms // 1000, 1)
-                nf = int(s.size) // fl
-                if nf:
-                    fr = np.abs(s[: nf * fl].reshape(nf, fl)).max(axis=1)
-                    silent = int((fr < silent_peak_below).sum())
-                else:
-                    silent = 0
-                rows["clip_id"].append(ids[j])
-                rows["n_frames"].append(nf)
-                rows["n_silent_frames"].append(silent)
-                rows["silence_ppm"].append(1_000_000 * silent // nf if nf else 0)
-            yield pd.DataFrame(rows)
+    def silence(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # no frame length without a sample rate
+        fr = _frame_peaks(np.abs(_decode(raw)), sr, frame_ms)
+        nf = int(fr.size)
+        silent = int((fr < silent_peak_below).sum())
+        yield (cid, nf, silent, 1_000_000 * silent // nf if nf else 0)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, FRAME_STATS_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], FRAME_STATS_SCHEMA, silence)
 
 
 TRIAGE_SCHEMA = T.StructType([
@@ -203,47 +195,32 @@ def defect_triage(df: DataFrame, *, id_col: str = "clip_id",
     rule as frame_silence), so labels are engine-reproducible.
     """
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            durs = b[dur_col].to_numpy()
-            out = {"clip_id": [], "label": []}
-            for j in range(len(b)):
-                sr, dur = _meta_int(srs[j]), _meta_int(durs[j])
-                if sr is None or dur is None:
-                    # triage FLAGS broken rows rather than skipping: a
-                    # clip without sr/dur metadata is its own defect
-                    # class (never fires on the gated corpora, whose
-                    # metadata is valid by construction)
-                    out["clip_id"].append(ids[j])
-                    out["label"].append("bad_meta")
-                    continue
-                s = _decode(raws[j])
-                n = int(s.size)
-                expected = sr * dur // 1000
-                a = np.abs(s) if n else None
-                if n == 0 or int(a.max()) == 0:
-                    label = "silent"
-                elif int(a.max()) >= CLIP_MAG:
-                    label = "clipped"
-                elif n != expected:
-                    label = "truncated"
-                else:
-                    fl = max(sr * frame_ms // 1000, 1)
-                    nf = n // fl
-                    if nf:
-                        fr = a[: nf * fl].reshape(nf, fl).max(axis=1)
-                        ppm = 1_000_000 * int((fr < 1).sum()) // nf
-                    else:
-                        ppm = 0
-                    label = "half_silent" if ppm >= half_silent_ppm else "ok"
-                out["clip_id"].append(ids[j])
-                out["label"].append(label)
-            yield pd.DataFrame(out)
+    def triage(cid, raw, sr, dur):
+        sr, dur = _meta_int(sr), _meta_int(dur)
+        if sr is None or dur is None:
+            # triage FLAGS broken rows rather than skipping: a clip
+            # without sr/dur metadata is its own defect class (never
+            # fires on the gated corpora, whose metadata is valid by
+            # construction)
+            yield (cid, "bad_meta")
+            return
+        s = _decode(raw)
+        n = int(s.size)
+        a = np.abs(s) if n else None
+        if n == 0 or int(a.max()) == 0:
+            label = "silent"
+        elif int(a.max()) >= CLIP_MAG:
+            label = "clipped"
+        elif n != sr * dur // 1000:
+            label = "truncated"
+        else:
+            fr = _frame_peaks(a, sr, frame_ms)
+            nf = int(fr.size)
+            ppm = 1_000_000 * int((fr < 1).sum()) // nf if nf else 0
+            label = "half_silent" if ppm >= half_silent_ppm else "ok"
+        yield (cid, label)
 
-    return df.select(id_col, bytes_col, sr_col, dur_col).mapInPandas(gen, TRIAGE_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col, dur_col], TRIAGE_SCHEMA, triage)
 
 
 # ---------------------------------------------------------------------------
@@ -275,7 +252,7 @@ def segment(df: DataFrame, seg_ms: int, *, hop_ms: typing.Optional[int] = None,
     ragged tail as a final short segment (unsupported for overlapping
     strides, where "the tail" is ill-defined — raises).
 
-    One narrow mapInPandas pass fanning each input row out to its
+    One narrow row_map pass fanning each input row out to its
     windows; fan-out is row-local, so at 10^12 clips this stays a
     narrow map (overlap multiplies output bytes by ~seg/hop — size the
     write partitioning for the POST-fan-out volume). The segment id is
@@ -285,42 +262,22 @@ def segment(df: DataFrame, seg_ms: int, *, hop_ms: typing.Optional[int] = None,
         raise ValueError("drop_tail=False requires disjoint windows "
                          "(hop_ms == seg_ms or None)")
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            out_id, out_idx, out_off, out_b, out_sr = [], [], [], [], []
-            for j in range(len(b)):
-                raw = raws[j] or b""
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # windows are sized in samples: no sr, no segments
-                seg_bytes = 2 * max(sr * seg_ms // 1000, 1)
-                hop_bytes = seg_bytes if hop_ms is None else \
-                    2 * max(sr * hop_ms // 1000, 1)
-                n_full = 0 if len(raw) < seg_bytes else \
-                    (len(raw) - seg_bytes) // hop_bytes + 1
-                for k in range(n_full):
-                    out_id.append(ids[j])
-                    out_idx.append(k)
-                    out_off.append(k * hop_bytes)
-                    out_b.append(raw[k * hop_bytes:k * hop_bytes + seg_bytes])
-                    out_sr.append(sr)
-                tail = len(raw) - n_full * seg_bytes
-                if tail > 0 and not drop_tail:
-                    out_id.append(ids[j])
-                    out_idx.append(n_full)
-                    out_off.append(n_full * seg_bytes)
-                    out_b.append(raw[n_full * seg_bytes:])
-                    out_sr.append(sr)
-            yield pd.DataFrame({"clip_id": out_id,
-                                "seg_idx": np.array(out_idx, dtype=np.int32),
-                                "start_byte": np.array(out_off, dtype=np.int64),
-                                "bytes": out_b,
-                                "sr_hz": np.array(out_sr, dtype=np.int32)})
+    def windows(cid, raw, sr):
+        raw = raw or b""
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # windows are sized in samples: no sr, no segments
+        seg_bytes = 2 * max(sr * seg_ms // 1000, 1)
+        hop_bytes = seg_bytes if hop_ms is None else \
+            2 * max(sr * hop_ms // 1000, 1)
+        n_full = 0 if len(raw) < seg_bytes else \
+            (len(raw) - seg_bytes) // hop_bytes + 1
+        for k in range(n_full):
+            yield (cid, k, k * hop_bytes, raw[k * hop_bytes:k * hop_bytes + seg_bytes], sr)
+        if len(raw) > n_full * seg_bytes and not drop_tail:
+            yield (cid, n_full, n_full * seg_bytes, raw[n_full * seg_bytes:], sr)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, SEGMENT_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], SEGMENT_SCHEMA, windows)
 
 
 # ---------------------------------------------------------------------------
@@ -346,25 +303,13 @@ def to_wav(df: DataFrame, *, id_col: str = "clip_id", bytes_col: str = "bytes",
     (clip_id, bytes, sr_hz)."""
     from ..functions.wav import wrap_wav
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            keep, out = [], []
-            for j in range(len(b)):
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # a WAV header needs a sample rate
-                keep.append(j)
-                out.append(wrap_wav(raws[j] or b"", sr))
-            if not keep:
-                continue
-            yield pd.DataFrame({
-                "clip_id": ids[keep], "bytes": out,
-                "sr_hz": np.asarray(srs[keep], dtype=np.int64)})
+    def wrap(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # a WAV header needs a sample rate
+        yield (cid, wrap_wav(raw or b"", sr), sr)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, CLIPS_AUDIO_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], CLIPS_AUDIO_SCHEMA, wrap)
 
 
 def wav_header_stats(df: DataFrame, *, id_col: str = "clip_id",
@@ -374,18 +319,13 @@ def wav_header_stats(df: DataFrame, *, id_col: str = "clip_id",
     result hashes identically across engines."""
     from ..functions.wav import parse_wav_header
 
-    cols = ["riff_ok", "fmt_pcm", "channels", "sr_hdr", "bits", "data_len", "len_ok"]
+    fields = WAV_STATS_SCHEMA.fieldNames()[1:]
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            parsed = [parse_wav_header(raws[j]) for j in range(len(b))]
-            out = {"clip_id": ids}
-            out.update({c: [p[c] for p in parsed] for c in cols})
-            yield pd.DataFrame(out)
+    def header(cid, raw):
+        p = parse_wav_header(raw)
+        yield (cid, *(p[f] for f in fields))
 
-    return df.select(id_col, bytes_col).mapInPandas(gen, WAV_STATS_SCHEMA)
+    return row_map(df, [id_col, bytes_col], WAV_STATS_SCHEMA, header)
 
 
 # ---------------------------------------------------------------------------
@@ -432,24 +372,15 @@ def audio_embed(df: DataFrame, *, n_bands: int = N_EMBED_BANDS,
     """Per-clip spectral embedding (log band-energy ratios) as an
     ``array<float>`` column — the audio analog of a text/image embedding,
     feeding directly into operators/similarity.py (cosine top-k, IVF ANN,
-    embedding_near_dup_pairs). One narrow mapInPandas pass; amplitude-
+    embedding_near_dup_pairs). One narrow row_map pass; amplitude-
     scale invariant by construction (energy ratios)."""
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            keep = [j for j in range(len(b)) if _meta_int(srs[j]) is not None]
-            if not keep:
-                continue  # empty pandas cols type as float64 and break Arrow
-            embs = [
-                _embed_one(_decode(raws[j]), _meta_int(srs[j]), n_bands, top_hz)
-                for j in keep
-            ]
-            yield pd.DataFrame({"clip_id": ids[keep], "embedding": embs})
+    def embed(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is not None:
+            yield (cid, _embed_one(_decode(raw), sr, n_bands, top_hz))
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, EMBED_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], EMBED_SCHEMA, embed)
 
 
 # ---------------------------------------------------------------------------
@@ -494,28 +425,17 @@ def resample_linear_kernel(s: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray
 
 def resample(df: DataFrame, target_sr: int, *, id_col: str = "clip_id",
              bytes_col: str = "bytes", sr_col: str = "sr_hz") -> DataFrame:
-    """Resample every clip to ``target_sr`` (one narrow mapInPandas pass);
+    """Resample every clip to ``target_sr`` (one narrow row_map pass);
     returns (clip_id, bytes, sr_hz=target_sr)."""
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            keep, out = [], []
-            for j in range(len(b)):
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # cannot resample without the source rate
-                keep.append(j)
-                res = resample_linear_kernel(_decode(raws[j]), sr, target_sr)
-                out.append(np.clip(res, -32768, 32767).astype("<i2").tobytes())
-            if not keep:
-                continue
-            yield pd.DataFrame({"clip_id": ids[keep], "bytes": out,
-                                "sr_hz": np.full(len(keep), target_sr, dtype=np.int32)})
+    def resample_one(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # cannot resample without the source rate
+        res = resample_linear_kernel(_decode(raw), sr, target_sr)
+        yield (cid, np.clip(res, -32768, 32767).astype("<i2").tobytes(), target_sr)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, CLIPS_AUDIO_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], CLIPS_AUDIO_SCHEMA, resample_one)
 
 
 #: normalization target: 32000 leaves ~0.2 dB headroom below int16 full
@@ -527,7 +447,8 @@ def peak_normalize(df: DataFrame, *, target_peak: int = NORMALIZE_PEAK,
                    id_col: str = "clip_id", bytes_col: str = "bytes",
                    sr_col: str = "sr_hz") -> DataFrame:
     """Scale every clip so its peak magnitude is exactly ``target_peak``
-    (all-zero clips pass through). One narrow mapInPandas pass.
+    (all-zero clips pass through); rows with a NULL sample rate are
+    skipped, as in resample and to_wav. One narrow row_map pass.
 
     Exactness argument (why the post-condition ``peak_abs == target_peak``
     holds bit-for-bit, tested + used by the audio_normalize oracle): with
@@ -536,21 +457,17 @@ def peak_normalize(df: DataFrame, *, target_peak: int = NORMALIZE_PEAK,
     it, and every |s| <= peak maps below target + 0.5, so no sample can
     exceed the target after rounding."""
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            out = []
-            for j in range(len(b)):
-                s = _decode(raws[j]).astype(np.float64)
-                peak = np.abs(s).max() if s.size else 0.0
-                if peak > 0.0:
-                    np.rint(s * (float(target_peak) / peak), out=s)
-                out.append(s.astype("<i2").tobytes())
-            yield pd.DataFrame({"clip_id": ids, "bytes": out, "sr_hz": srs})
+    def normalize(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # sr_hz is non-nullable in the output
+        s = _decode(raw).astype(np.float64)
+        peak = np.abs(s).max() if s.size else 0.0
+        if peak > 0.0:
+            np.rint(s * (float(target_peak) / peak), out=s)
+        yield (cid, s.astype("<i2").tobytes(), sr)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, CLIPS_AUDIO_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], CLIPS_AUDIO_SCHEMA, normalize)
 
 
 # ---------------------------------------------------------------------------
@@ -606,45 +523,19 @@ def _fingerprint_one(s: np.ndarray, sr: int) -> str:
     return "{}:{}:{}:{}".format(sr, n, b1, b2)
 
 
-def _fingerprint_pass(df: DataFrame, id_col: str, bytes_col: str, sr_col: str,
-                      carry_bytes: bool) -> DataFrame:
-    """One narrow mapInPandas pass computing the fingerprint, optionally
-    carrying the raw bytes through (so downstream joins need no second
-    scan / join-back of the fact table)."""
-    fields = [
-        T.StructField("clip_id", T.StringType(), False),
-        T.StructField("fingerprint", T.StringType(), False),
-    ]
-    if carry_bytes:
-        fields.append(T.StructField("bytes", T.BinaryType(), True))
-    schema = T.StructType(fields)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            keep = [j for j in range(len(b)) if _meta_int(srs[j]) is not None]
-            if not keep:
-                continue
-            fps = [
-                _fingerprint_one(_decode(raws[j]), _meta_int(srs[j]))
-                for j in keep
-            ]
-            out = {"clip_id": ids[keep], "fingerprint": fps}
-            if carry_bytes:
-                out["bytes"] = raws[keep]
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, schema)
-
-
 def spectral_fingerprint(df: DataFrame, *, id_col: str = "clip_id",
                          bytes_col: str = "bytes",
                          sr_col: str = "sr_hz") -> DataFrame:
     """Per-clip spectral blocking key (see _fingerprint_one); one narrow
-    mapInPandas pass, rFFT per clip inside the Arrow batch."""
-    return _fingerprint_pass(df, id_col, bytes_col, sr_col, carry_bytes=False)
+    row_map pass, rFFT per clip inside the Arrow batch. Rows with a NULL
+    sample rate have no key and are skipped."""
+
+    def fingerprint(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is not None:
+            yield (cid, _fingerprint_one(_decode(raw), sr))
+
+    return row_map(df, [id_col, bytes_col, sr_col], FINGERPRINT_SCHEMA, fingerprint)
 
 
 DUP_PAIRS_SCHEMA = T.StructType([
@@ -670,6 +561,23 @@ def _normalized_snr_db(a: np.ndarray, b: np.ndarray) -> float:
     if p_res <= 0.0:
         return float("inf")
     return 10.0 * math.log10(p_a / p_res)
+
+
+def _verify_pairs(pairs: DataFrame, cols: typing.Sequence[str], schema: T.StructType,
+                  snr_threshold_db: float) -> DataFrame:
+    """The verify stage of both acoustic pair operators: ``cols`` are
+    (id_a, id_b, bytes_a, bytes_b); a pair is kept when its
+    :func:`_normalized_snr_db` is at least ``snr_threshold_db`` and is
+    emitted as (id_a, id_b, snr in integer centi-dB, 10**9 for an exact
+    copy) for cross-engine hashing."""
+    thr = float(snr_threshold_db)
+
+    def verify(id_a, id_b, raw_a, raw_b):
+        snr = _normalized_snr_db(_decode(raw_a), _decode(raw_b))
+        if snr >= thr:
+            yield (id_a, id_b, 10 ** 9 if math.isinf(snr) else int(snr * 100))
+
+    return row_map(pairs, cols, schema, verify)
 
 
 def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
@@ -718,8 +626,8 @@ def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
     # re-read from the source scan only for candidate rows below. At
     # warehouse scale the persist's equivalent is staging the fingerprint
     # table to a temp table.
-    fps = hold(_fingerprint_pass(df, id_col, bytes_col, sr_col,
-                                 carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK))
+    fps = hold(spectral_fingerprint(df, id_col=id_col, bytes_col=bytes_col, sr_col=sr_col)
+               .persist(StorageLevel.MEMORY_AND_DISK))
 
     counts = fps.groupBy("fingerprint").count()
     dup_fp = counts.where(F.col("count") >= 2)
@@ -750,27 +658,8 @@ def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
         F.col("bytes").alias("bytes_b"),
     )
     cand = a.join(b, "fingerprint").where(F.col("clip_a") < F.col("clip_b"))
-
-    thr = float(snr_threshold_db)
-
-    def verify(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for batch in batches:
-            ca = batch["clip_a"].to_numpy()
-            cb = batch["clip_b"].to_numpy()
-            ra = batch["bytes_a"].to_numpy()
-            rb = batch["bytes_b"].to_numpy()
-            keep_a, keep_b, keep_snr = [], [], []
-            for j in range(len(batch)):
-                snr = _normalized_snr_db(_decode(ra[j]), _decode(rb[j]))
-                if snr >= thr:
-                    keep_a.append(ca[j])
-                    keep_b.append(cb[j])
-                    keep_snr.append(10 ** 9 if math.isinf(snr) else int(snr * 100))
-            yield pd.DataFrame({"clip_a": keep_a, "clip_b": keep_b,
-                                "snr_centi_db": keep_snr})
-
-    return cand.select("clip_a", "clip_b", "bytes_a", "bytes_b").mapInPandas(
-        verify, DUP_PAIRS_SCHEMA)
+    return _verify_pairs(cand, ["clip_a", "clip_b", "bytes_a", "bytes_b"],
+                         DUP_PAIRS_SCHEMA, snr_threshold_db)
 
 
 INCR_PAIRS_SCHEMA = T.StructType([
@@ -819,9 +708,8 @@ def acoustic_incremental_pairs(
     """
     from pyspark import StorageLevel
 
-    new_fps = hold(_fingerprint_pass(
-        new_df, id_col, bytes_col, sr_col,
-        carry_bytes=False).persist(StorageLevel.MEMORY_AND_DISK))
+    new_fps = hold(spectral_fingerprint(new_df, id_col=id_col, bytes_col=bytes_col,
+                                        sr_col=sr_col).persist(StorageLevel.MEMORY_AND_DISK))
 
     tagged = (store_fps.select("fingerprint")
               .withColumn("__new__", F.lit(0))
@@ -851,29 +739,8 @@ def acoustic_incremental_pairs(
 
     pairs = (_fetch(store_src, store_fps, "store")
              .join(_fetch(new_df, new_fps, "new"), "fingerprint"))
-
-    thr = float(snr_threshold_db)
-
-    def verify(batches: typing.Iterator[pd.DataFrame]
-               ) -> typing.Iterator[pd.DataFrame]:
-        for batch in batches:
-            cs = batch["clip_store"].to_numpy()
-            cn = batch["clip_new"].to_numpy()
-            rs = batch["bytes_store"].to_numpy()
-            rn = batch["bytes_new"].to_numpy()
-            keep_s, keep_n, keep_snr = [], [], []
-            for j in range(len(batch)):
-                snr = _normalized_snr_db(_decode(rs[j]), _decode(rn[j]))
-                if snr >= thr:
-                    keep_s.append(cs[j])
-                    keep_n.append(cn[j])
-                    keep_snr.append(
-                        10 ** 9 if math.isinf(snr) else int(snr * 100))
-            yield pd.DataFrame({"clip_store": keep_s, "clip_new": keep_n,
-                                "snr_centi_db": keep_snr})
-
-    return pairs.select("clip_store", "clip_new", "bytes_store",
-                        "bytes_new").mapInPandas(verify, INCR_PAIRS_SCHEMA)
+    return _verify_pairs(pairs, ["clip_store", "clip_new", "bytes_store", "bytes_new"],
+                         INCR_PAIRS_SCHEMA, snr_threshold_db)
 
 
 def speech_rate(
@@ -1006,55 +873,35 @@ def trim_bounds(df: DataFrame, *, id_col: str = "clip_id",
     50% silent reads very differently when the silence is one leading
     block versus scattered dead air.
 
-    Frame classification is IDENTICAL to frame_silence (same frame
-    length ``sr * frame_ms // 1000``, full frames only, silent = peak
-    magnitude strictly below ``silent_peak_below``) — shared-rule
-    convention (the _banded_sigs pattern): an oracle or downstream
+    Frame classification is frame_silence's: both call
+    :func:`_frame_peaks` (frame length ``sr * frame_ms // 1000``, full
+    frames only), and a frame is silent when its peak magnitude is
+    strictly below ``silent_peak_below``, so an oracle or downstream
     check derived for one operator transfers to the other verbatim.
 
-    One narrow mapInPandas pass over (id, bytes, sr): corpus bytes
-    never shuffle, output is 5 scalars per clip, the run-length scan
-    is vectorized numpy (flatnonzero over the padded mask diff), and
-    the per-clip loop is the same irreducible ragged-length iteration
-    every audio kernel here pays.
+    One narrow row_map pass over (id, bytes, sr): corpus bytes never
+    shuffle, output is 5 scalars per clip, the run-length scan is
+    :func:`_runs` (vectorized numpy over the padded mask diff), and the
+    per-clip loop is the same irreducible ragged-length iteration every
+    audio kernel here pays.
     """
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            rows = {k: [] for k in TRIM_BOUNDS_SCHEMA.fieldNames()}
-            for j in range(len(b)):
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # no frame length without a sample rate
-                s = _decode(raws[j])
-                fl = max(sr * frame_ms // 1000, 1)
-                nf = int(s.size) // fl
-                lead = trail = max_run = 0
-                if nf:
-                    fr = np.abs(s[: nf * fl].reshape(nf, fl)).max(axis=1)
-                    silent = fr < silent_peak_below
-                    # pad with non-silent sentinels: diff exposes run
-                    # starts (+1) and ends (-1) at interior boundaries
-                    padded = np.concatenate(([False], silent, [False]))
-                    edges = np.diff(padded.astype(np.int8))
-                    starts = np.flatnonzero(edges == 1)
-                    ends = np.flatnonzero(edges == -1)
-                    if starts.size:
-                        runs = ends - starts
-                        max_run = int(runs.max())
-                        lead = int(runs[0]) if starts[0] == 0 else 0
-                        trail = int(runs[-1]) if ends[-1] == nf else 0
-                rows["clip_id"].append(ids[j])
-                rows["n_frames"].append(nf)
-                rows["lead_silent"].append(lead)
-                rows["trail_silent"].append(trail)
-                rows["max_silent_run"].append(max_run)
-            yield pd.DataFrame(rows)
+    def bounds(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # no frame length without a sample rate
+        fr = _frame_peaks(np.abs(_decode(raw)), sr, frame_ms)
+        nf = int(fr.size)
+        starts, ends = _runs(fr < silent_peak_below)
+        lead = trail = max_run = 0
+        if starts.size:
+            runs = ends - starts
+            max_run = int(runs.max())
+            lead = int(runs[0]) if starts[0] == 0 else 0
+            trail = int(runs[-1]) if ends[-1] == nf else 0
+        yield (cid, nf, lead, trail, max_run)
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, TRIM_BOUNDS_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], TRIM_BOUNDS_SCHEMA, bounds)
 
 
 UTTERANCE_SCHEMA = T.StructType([
@@ -1079,55 +926,33 @@ def utterances(df: DataFrame, *, id_col: str = "clip_id",
     training"): a long recording becomes the voiced spans an aligner
     or transcript matcher consumes.
 
-    Frame classification is IDENTICAL to frame_silence / trim_bounds
-    (frame length ``sr * frame_ms // 1000``, full frames only, silent =
-    peak magnitude strictly below ``silent_peak_below``) — the
-    shared-rule convention: the closed-form injection oracles derived
-    for those operators transfer verbatim. ``utt_idx`` numbers the
+    Frame classification is frame_silence's and trim_bounds': all three
+    call :func:`_frame_peaks` (frame length ``sr * frame_ms // 1000``,
+    full frames only), and a frame is silent when its peak magnitude is
+    strictly below ``silent_peak_below``, so the closed-form injection
+    oracles derived for those operators transfer verbatim. ``utt_idx`` numbers the
     EMITTED runs 0..k-1 (runs shorter than ``min_frames`` are dropped,
     not merged — two long spans separated by one sub-threshold blip
     stay two utterances and the blip vanishes; merging across short
     SILENCE gaps is the caller's policy via a larger frame_ms).
 
-    One narrow mapInPandas over (id, bytes, sr): corpus bytes never
-    shuffle, the voiced-run scan is the same vectorized padded-diff
-    RLE as trim_bounds, and output rows are 6 scalars per utterance.
+    One narrow row_map pass over (id, bytes, sr): corpus bytes never
+    shuffle, the voiced-run scan is trim_bounds' :func:`_runs`, and
+    output rows are 6 scalars per utterance.
     """
     if min_frames < 1:
         raise ValueError("min_frames must be >= 1")
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            raws = b[bytes_col].to_numpy()
-            srs = b[sr_col].to_numpy()
-            rows = {k: [] for k in UTTERANCE_SCHEMA.fieldNames()}
-            for j in range(len(b)):
-                sr = _meta_int(srs[j])
-                if sr is None:
-                    continue  # no frame length without a sample rate
-                s = _decode(raws[j])
-                fl = max(sr * frame_ms // 1000, 1)
-                nf = int(s.size) // fl
-                if not nf:
-                    continue
-                fr = np.abs(s[: nf * fl].reshape(nf, fl)).max(axis=1)
-                voiced = fr >= silent_peak_below
-                padded = np.concatenate(([False], voiced, [False]))
-                edges = np.diff(padded.astype(np.int8))
-                starts = np.flatnonzero(edges == 1)
-                ends = np.flatnonzero(edges == -1)
-                idx = 0
-                for st, en in zip(starts.tolist(), ends.tolist()):
-                    if en - st < min_frames:
-                        continue
-                    rows["clip_id"].append(ids[j])
-                    rows["utt_idx"].append(idx)
-                    rows["start_frame"].append(st)
-                    rows["n_frames"].append(en - st)
-                    rows["start_ms"].append(st * frame_ms)
-                    rows["dur_ms"].append((en - st) * frame_ms)
-                    idx += 1
-            yield pd.DataFrame(rows)
+    def spans(cid, raw, sr):
+        sr = _meta_int(sr)
+        if sr is None:
+            return  # no frame length without a sample rate
+        starts, ends = _runs(_frame_peaks(np.abs(_decode(raw)), sr, frame_ms)
+                             >= silent_peak_below)
+        idx = 0
+        for st, en in zip(starts.tolist(), ends.tolist()):
+            if en - st >= min_frames:
+                yield (cid, idx, st, en - st, st * frame_ms, (en - st) * frame_ms)
+                idx += 1
 
-    return df.select(id_col, bytes_col, sr_col).mapInPandas(gen, UTTERANCE_SCHEMA)
+    return row_map(df, [id_col, bytes_col, sr_col], UTTERANCE_SCHEMA, spans)

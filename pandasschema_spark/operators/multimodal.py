@@ -1,9 +1,9 @@
 """Multimodal (image/video) binary-column operators.
 
 Engine extension for training-data pipelines: media payloads are opaque
-``binary`` columns with typed metadata, processed by Arrow-batched
-``mapInPandas`` stages — the same pattern the audio layer
-(functions/audio.py) uses for PCM.
+``binary`` columns with typed metadata, processed by per-payload kernels
+run through ``frames.row_map`` (Arrow-batched ``mapInPandas`` stages) —
+the same pattern the audio layer (operators/audio.py) uses for PCM.
 
 This container ships no image/video codecs (no PIL/ffmpeg), so REAL
 decode is stubbed: each operator first tries the real library behind an
@@ -32,6 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..frames import row_map
 from ..resources import hold
 from .banding import bit_chunks, bucket_pairs, drop_hot_keys
 
@@ -144,13 +145,8 @@ def _media_table(spark: SparkSession, n: int, seed: int, inject: bool,
     # never drift apart structurally (the media_integrity oracle relies
     # on non-injected rows being byte-identical across the two)
     rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_media_row(seed, int(i), inject=inject) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return rng.mapInPandas(gen, MEDIA_SCHEMA)
+    return row_map(rng, ["id"], MEDIA_SCHEMA,
+                   lambda i: (_media_row(seed, int(i), inject=inject),))
 
 
 def media_df(spark: SparkSession, n: int, seed: int = 42, *, partitions: int = None) -> DataFrame:
@@ -185,30 +181,21 @@ FEATURES_SCHEMA = T.StructType([
 def image_features(df: DataFrame, *, payload_col: str = "payload",
                    id_col: str = "media_id") -> DataFrame:
     """Decode + feature-extract: (id, actual w/h/c, mean intensity, ok).
-    One mapInPandas pass; rows whose payload fails to decode or whose
+    One row_map pass; rows whose payload fails to decode or whose
     header disagrees with the frame shape come back ok=false instead of
     failing the stage (poison-pill isolation — at 100 TB one corrupt blob
     must not kill a 10^5-task job)."""
-    cols = df.columns
 
-    def run(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        # zip over .to_numpy() columns, not iterrows(): materializing a
-        # pandas Series per row costs more than the decode itself on
-        # small images (the per-payload decode is inherently per-row;
-        # the row plumbing around it need not be pandas machinery)
-        for b in batches:
-            out = []
-            for rid, payload in zip(b[id_col].to_numpy(), b[payload_col].to_numpy()):
-                try:
-                    arr = decode_image(payload)
-                    h, w, c = arr.shape
-                    out.append((rid, w, h, c, float(arr.mean()), True))
-                except Exception:
-                    out.append((rid, None, None, None, None, False))
-            yield pd.DataFrame(out, columns=[f.name for f in FEATURES_SCHEMA.fields])
+    def features(rid, payload):
+        try:
+            arr = decode_image(payload)
+            h, w, c = arr.shape
+            return ((rid, w, h, c, float(arr.mean()), True),)
+        except Exception:
+            return ((rid, None, None, None, None, False),)
 
-    assert id_col in cols and payload_col in cols
-    return df.select(id_col, payload_col).mapInPandas(run, FEATURES_SCHEMA)
+    assert id_col in df.columns and payload_col in df.columns
+    return row_map(df, [id_col, payload_col], FEATURES_SCHEMA, features)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -225,22 +212,18 @@ def resize_images(df: DataFrame, target_w: int, target_h: int, *,
     format. (A real deployment swaps the numpy index-sampling for
     PIL.Image.resize — the Spark stage is unchanged.)"""
 
-    def run(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for rid, payload in zip(b[id_col].to_numpy(), b[payload_col].to_numpy()):
-                try:
-                    arr = decode_image(payload)
-                    h, w, _ = arr.shape
-                    yi = (np.arange(target_h) * h // target_h)
-                    xi = (np.arange(target_w) * w // target_w)
-                    res = arr[yi[:, None], xi[None, :], :]
-                    out.append((rid, encode_fake_image(res), target_w, target_h))
-                except Exception:
-                    out.append((rid, None, None, None))
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def resize(rid, payload):
+        try:
+            arr = decode_image(payload)
+            h, w, _ = arr.shape
+            yi = (np.arange(target_h) * h // target_h)
+            xi = (np.arange(target_w) * w // target_w)
+            res = arr[yi[:, None], xi[None, :], :]
+            return ((rid, encode_fake_image(res), target_w, target_h),)
+        except Exception:
+            return ((rid, None, None, None),)
 
-    return df.select(id_col, payload_col).mapInPandas(run, RESIZE_SCHEMA)
+    return row_map(df, [id_col, payload_col], RESIZE_SCHEMA, resize)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -256,19 +239,15 @@ def sample_frames(df: DataFrame, every_k: int = 2, *, payload_col: str = "payloa
     image row: (media_id, frame_idx, payload). Fan-out stage — still
     narrow (no shuffle), output partitioning follows the input."""
 
-    def run(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for rid, payload in zip(b[id_col].to_numpy(), b[payload_col].to_numpy()):
-                try:
-                    frames = decode_video(payload)
-                except Exception:
-                    continue
-                for idx in range(0, frames.shape[0], every_k):
-                    out.append((rid, idx, encode_fake_image(frames[idx])))
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def explode(rid, payload):
+        try:
+            frames = decode_video(payload)
+        except Exception:
+            return ()
+        return [(rid, idx, encode_fake_image(frames[idx]))
+                for idx in range(0, frames.shape[0], every_k)]
 
-    return df.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
+    return row_map(df, [id_col, payload_col], FRAME_SCHEMA, explode)
 
 
 AHASH_GRID_W, AHASH_GRID_H = 8, 7  # 56 bits — int64-positive (the <=62-bit rule)
@@ -292,46 +271,37 @@ def image_ahash(df: DataFrame, *, payload_col: str = "payload",
     int64-positive (the hyperplane_signature <= 62-bit rule). Rows that
     fail to decode are ABSENT (poison-pill isolation: dedup ranges over
     what decodes; media_integrity_checks owns the failures). One narrow
-    mapInPandas pass; payload bytes never leave their scan task — only
+    row_map pass; payload bytes never leave their scan task — only
     (id, 8-byte hash) rows shuffle downstream."""
     gw, gh = AHASH_GRID_W, AHASH_GRID_H
     n_cells = gw * gh
     bit_weights = (1 << np.arange(n_cells, dtype=np.int64))  # 56 bits < 2^63
 
-    def run(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        # zip over .to_numpy() columns + a vectorized bit pack (dot with
-        # the power-of-two weights), not iterrows() + a per-bit shift
-        # loop: the per-payload decode is inherently per-row, but the
-        # row plumbing around it was the hottest Python loop in the
-        # operator (measured ~4x per-batch on 16x16 FIMG payloads).
-        for b in batches:
-            ids, hashes = [], []
-            for rid, payload in zip(b[id_col].to_numpy(), b[payload_col].to_numpy()):
-                # The WHOLE per-row body sits inside the try: a payload
-                # that decodes but is degenerate (zero width/height, 2-D
-                # grayscale under a real codec, NULL id) must be skipped
-                # like a decode failure, never kill the task.
-                try:
-                    arr = decode_image(payload).astype(np.int64)
-                    h, w, _ = arr.shape
-                    if h < 1 or w < 1:
-                        continue
-                    yi = np.arange(gh) * h // gh
-                    xi = np.arange(gw) * w // gw
-                    cells = arr[yi[:, None], xi[None, :], :]
-                    gray = cells.sum(axis=2) // 3          # (gh, gw) ints
-                    total = int(gray.sum())
-                    bits = (n_cells * gray.reshape(-1) > total)
-                    val = int(bits.astype(np.int64) @ bit_weights)
-                    rid = int(rid)
-                except Exception:
-                    continue
-                ids.append(rid)
-                hashes.append(val)
-            yield pd.DataFrame({"id": pd.Series(ids, dtype="int64"),
-                                "ahash": pd.Series(hashes, dtype="int64")})
+    def ahash(rid, payload):
+        # a vectorized bit pack (dot with the power-of-two weights), not
+        # a per-bit shift loop: the per-payload decode is inherently
+        # per-row, but the plumbing around it was the hottest Python
+        # loop in the operator (measured ~4x per-batch on 16x16 FIMG
+        # payloads). The WHOLE body sits inside the try: a payload that
+        # decodes but is degenerate (zero width/height, 2-D grayscale
+        # under a real codec, NULL id) is skipped like a decode failure,
+        # never kills the task.
+        try:
+            arr = decode_image(payload).astype(np.int64)
+            h, w, _ = arr.shape
+            if h < 1 or w < 1:
+                return ()
+            yi = np.arange(gh) * h // gh
+            xi = np.arange(gw) * w // gw
+            cells = arr[yi[:, None], xi[None, :], :]
+            gray = cells.sum(axis=2) // 3          # (gh, gw) ints
+            total = int(gray.sum())
+            bits = (n_cells * gray.reshape(-1) > total)
+            return ((int(rid), int(bits.astype(np.int64) @ bit_weights)),)
+        except Exception:
+            return ()
 
-    return df.select(id_col, payload_col).mapInPandas(run, AHASH_SCHEMA)
+    return row_map(df, [id_col, payload_col], AHASH_SCHEMA, ahash)
 
 
 def image_dup_pairs(df: DataFrame, *, payload_col: str = "payload",

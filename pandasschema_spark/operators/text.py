@@ -17,12 +17,13 @@ tests/test_plan_quality.py asserts the property for these operators.
 
 from __future__ import annotations
 
+import collections
 import re
 import typing
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
+from ..frames import row_map
 from ..functions.exact import floor_div
 from ..resources import hold
 
@@ -369,7 +370,7 @@ def doc_repetition(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ``n_types/n_tokens``) downstream at its own precision.
 
     Scale shape: the metrics are row-local, so this is ONE narrow Arrow
-    pass (``mapInPandas`` over just (id, text)) with ZERO shuffle — the
+    pass (``row_map`` over just (id, text)) with ZERO shuffle — the
     alternative, explode + two groupBys, ships every token of a 100 TB
     corpus through an exchange keyed (doc, token). Inside a batch the
     per-doc loop is a numpy/Counter kernel (same irreducible-inner-loop
@@ -388,43 +389,27 @@ def doc_repetition(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         T.StructField("max_run", T.LongType(), False),
     ])
 
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        import collections
+    def profile(i, t):
+        if t is None:
+            return
+        # space-class strip only: bare str.strip() is Unicode-aware and
+        # would drop a leading NBSP the SQL tokenization rule keeps
+        toks = _WS_RE.split(str(t).lower().strip(" \t\n\x0b\f\r"))
+        if toks == [""]:
+            return
+        counts = collections.Counter(toks)
+        if len(toks) == 1:
+            max_run = 1
+        else:
+            arr = np.asarray(toks, dtype=object)
+            # boundaries of equal-runs: positions where the token
+            # changes, padded with the ends
+            chg = np.flatnonzero(arr[1:] != arr[:-1])
+            edges = np.concatenate(([-1], chg, [len(arr) - 1]))
+            max_run = int(np.max(np.diff(edges)))
+        yield (i, len(toks), len(counts), max(counts.values()), max_run)
 
-        for b in batches:
-            ids, nt, ty, tc, mr = [], [], [], [], []
-            for i, t in zip(b[id_col].values, b[text_col].values):
-                if t is None:
-                    continue
-                # space-class strip only: bare str.strip() is
-                # Unicode-aware and would drop a leading NBSP the SQL
-                # tokenization rule keeps
-                toks = _WS_RE.split(str(t).lower().strip(" \t\n\x0b\f\r"))
-                if toks == [""]:
-                    continue
-                counts = collections.Counter(toks)
-                ids.append(i)
-                nt.append(len(toks))
-                ty.append(len(counts))
-                tc.append(max(counts.values()))
-                if len(toks) == 1:
-                    mr.append(1)
-                else:
-                    arr = np.asarray(toks, dtype=object)
-                    # boundaries of equal-runs: positions where the token
-                    # changes, padded with the ends
-                    chg = np.flatnonzero(arr[1:] != arr[:-1])
-                    edges = np.concatenate(([-1], chg, [len(arr) - 1]))
-                    mr.append(int(np.max(np.diff(edges))))
-            yield pd.DataFrame({
-                id_field.name: ids,
-                "n_tokens": pd.Series(nt, dtype="int64"),
-                "n_types": pd.Series(ty, dtype="int64"),
-                "top_count": pd.Series(tc, dtype="int64"),
-                "max_run": pd.Series(mr, dtype="int64"),
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
+    return row_map(df, [id_col, text_col], out_schema, profile)
 
 
 def collocations(

@@ -6,7 +6,7 @@ Generates the audio+transcript main table per BASELINE.json's input_hint::
     transcript string
 
 fully distributed: ``spark.range(n)`` fans the ordinal space over
-partitions and a mapInPandas batch synthesizer derives every field of row
+partitions and a ``frames.row_map`` synthesizer derives every field of row
 ``i`` from ``sha256(f"{seed}:{i}")`` (functions/audio.py) — no data ever
 moves to the driver, generation scales linearly with cores, and re-running
 at any partitioning yields identical rows.
@@ -31,10 +31,9 @@ from __future__ import annotations
 import typing
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..frames import local_frame
+from ..frames import local_frame, row_map
 from ..functions import audio as A
 
 INJECT_MOD = 997
@@ -87,17 +86,24 @@ def _synth_row(seed: int, i: int, with_audio: bool) -> dict:
     return row
 
 
+def _clips_frame(spark: SparkSession, n: int, partitions: typing.Optional[int],
+                 make_row: typing.Callable[[int], dict]) -> DataFrame:
+    """The CLIPS_SCHEMA table of ``make_row(i)`` (a dict keyed by field
+    name) for every ordinal ``i`` of ``spark.range(n)``."""
+    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
+    names = CLIPS_SCHEMA.fieldNames()
+
+    def clip(i):
+        row = make_row(int(i))
+        yield tuple(row[k] for k in names)
+
+    return row_map(rng, ["id"], CLIPS_SCHEMA, clip)
+
+
 def clips_df(spark: SparkSession, n: int, seed: int = 42, *,
              with_audio: bool = True, partitions: int = None) -> DataFrame:
     """Distributed deterministic clips table of n rows."""
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_synth_row(seed, int(i), with_audio) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in CLIPS_SCHEMA.fields])
-
-    return rng.mapInPandas(gen, CLIPS_SCHEMA)
+    return _clips_frame(spark, n, partitions, lambda i: _synth_row(seed, i, with_audio))
 
 
 def write_clips(spark: SparkSession, path: str, n: int, seed: int = 42, *,
@@ -197,14 +203,7 @@ def audio_quality_clips_df(spark: SparkSession, n: int, seed: int = 42, *,
     ``audio_injected_class`` — drives the audio_stats / frame_silence /
     length-consistency oracles. Metadata columns carry NO injected
     violations (unlike clips_df)."""
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_audio_quality_row(seed, int(i)) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in CLIPS_SCHEMA.fields])
-
-    return rng.mapInPandas(gen, CLIPS_SCHEMA)
+    return _clips_frame(spark, n, partitions, lambda i: _audio_quality_row(seed, i))
 
 
 #: acoustic near-duplicate injection: every row with
@@ -258,14 +257,7 @@ def near_dup_clips_df(spark: SparkSession, n: int, seed: int = 42, *,
     near_dup_source) — drives the acoustic_dup_pairs oracle. Base metadata
     injection is suppressed (clip_id is always the row's own ordinal) so
     the expected pair set is exactly the closed-form injection rule."""
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_near_dup_row(seed, int(i)) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in CLIPS_SCHEMA.fields])
-
-    return rng.mapInPandas(gen, CLIPS_SCHEMA)
+    return _clips_frame(spark, n, partitions, lambda i: _near_dup_row(seed, i))
 
 
 #: WAV-container corruption injection: every row with
@@ -319,14 +311,7 @@ def wav_clips_df(spark: SparkSession, n: int, seed: int = 42, *,
     header + the synthesized samples), with deterministic header
     corruption per wav_injected_class — drives the wav_header_stats
     oracle. Metadata columns carry no injected violations."""
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def gen(batches: typing.Iterator[pd.DataFrame]) -> typing.Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_wav_row(seed, int(i)) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in CLIPS_SCHEMA.fields])
-
-    return rng.mapInPandas(gen, CLIPS_SCHEMA)
+    return _clips_frame(spark, n, partitions, lambda i: _wav_row(seed, i))
 
 
 def expected_near_dup_pairs(n: int) -> typing.List[typing.Tuple[str, str]]:

@@ -7,6 +7,7 @@ flags and the near-dup pair set (the same closed forms the DuckDB gate
 re-derives via sha256)."""
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -248,6 +249,22 @@ def test_wav_corruption_flags(spark):
         assert r["len_ok"] == (cls not in (1, 3))
 
 
+def test_wav_header_stats_on_raw_pcm(spark, quality_df):
+    """Raw PCM is not a WAV container: every row reads riff_ok = false
+    and the stage survives. Bytes 24-27, the header's sample-rate field,
+    hold two samples there; negative ones read above 2^31 - 1 as an
+    unsigned int and must still fit the int sr_hdr column."""
+    from pandasschema_spark.operators.audio import wav_header_stats
+
+    neg = np.full(64, -3, dtype="<i2").tobytes()
+    df = spark.createDataFrame([("neg", neg)], "clip_id string, bytes binary")
+    (r,) = wav_header_stats(df).collect()
+    assert not r["riff_ok"] and not r["len_ok"]
+    assert r["sr_hdr"] == struct.unpack_from("<i", neg, 24)[0] < 0
+    rows = wav_header_stats(quality_df).collect()
+    assert len(rows) == N and not any(r["riff_ok"] for r in rows)
+
+
 def test_audio_embed_near_dup_integration(spark):
     """audio -> spectral embedding -> generic IVF near-dup recovers the
     injected re-encodes exactly, on both the arrow and expr impls."""
@@ -453,8 +470,8 @@ def test_null_metadata_rows_never_kill_the_stage(spark):
     triage — never a dead Python worker (the _decode contract applied
     to metadata)."""
     from pandasschema_spark.operators.audio import (
-        audio_embed, defect_triage, frame_silence, resample, segment,
-        spectral_fingerprint, to_wav, trim_bounds, utterances)
+        audio_embed, defect_triage, frame_silence, peak_normalize, resample,
+        segment, spectral_fingerprint, to_wav, trim_bounds, utterances)
 
     pcm = (np.arange(800, dtype="<i2") % 201 - 100).astype("<i2").tobytes()
     df = spark.createDataFrame(
@@ -469,6 +486,7 @@ def test_null_metadata_rows_never_kill_the_stage(spark):
     assert {r["clip_id"] for r in to_wav(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in audio_embed(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in resample(df, 16000).collect()} == {"ok", "no_dur"}
+    assert {r["clip_id"] for r in peak_normalize(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in spectral_fingerprint(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in trim_bounds(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in utterances(df).collect()} <= {"ok", "no_dur"}
