@@ -50,10 +50,18 @@ efficiency = (clips/s @ wide budget / clips/s @ narrow budget)
 
 Results: the FULL result object goes to BENCH.json and BENCH.md (with a
 run-history table persisted across rewrites via BENCH_history.jsonl);
-stdout gets exactly ONE compact JSON line (<~600 bytes) as the final
-line so a tail-capturing driver always parses it (r2's driver artifact
-was `parsed: null` because the multi-KB detailed object was printed as
-one stdout line and truncated).
+stdout gets exactly ONE compact JSON line (compact_line: the headline,
+the efficiency keys and every per-query median; 786 bytes for 28
+queries at 4-character values, plus 53-81 when a stormy or overlap flag
+is set) as the final line so a harness that reads only the last line
+always parses it. r2's recorded result was `parsed: null` because the
+multi-KB detailed object was printed as one stdout line and truncated;
+789 bytes is r05's line, the largest one known to have parsed.
+
+`python bench.py queries NAME [NAME ...]` runs only the per-query phase
+on the named registry queries (same session, warm pass, rounds and
+steal gate), prints one JSON line with their medians and samples, and
+writes no result file.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32, the headline/full-width budget; the
@@ -152,6 +160,10 @@ BENCH_QUERIES = [
     "pipeline_quota_sample",
     "pipeline_reconcile",
     "entity_resolution",
+    # the row_map decode path (image hashes, video frames, media decode)
+    "dedup_image_ahash",
+    "dedup_video_frames",
+    "media_features",
 ]
 
 
@@ -383,11 +395,22 @@ def _median(xs):
 # ---------------------------------------------------------------------------
 
 
-def _query_phase():
-    """Per-query timings on a fresh full-width session. Same weather
-    discipline as the headline: Q_ROUNDS timed samples per query with
-    per-sample /proc/stat steal, median over samples at-or-under the
-    pre-registered steal gate — single-shot per-query numbers made
+def _check_names(names) -> None:
+    """Refuse names outside __spark_entry__.queries() before any session
+    starts (a typo would otherwise surface after the scaling phase)."""
+    import __spark_entry__ as E
+
+    unknown = [n for n in names if n not in E.queries()]
+    if unknown or not names:
+        raise SystemExit("bench: not in __spark_entry__.queries(): {}".format(
+            ", ".join(unknown) or "(no query named)"))
+
+
+def _query_phase(names):
+    """Per-query timings of ``names`` on a fresh full-width session.
+    Same weather discipline as the headline: Q_ROUNDS timed samples per
+    query with per-sample /proc/stat steal, median over samples at-or-
+    under the pre-registered steal gate — single-shot per-query numbers made
     round-over-round comparisons weather-bound (r4 read 2-4x r3 across
     the board purely from co-tenant bursts while the gated headline
     IMPROVED 20%)."""
@@ -399,16 +422,13 @@ def _query_phase():
     from pandasschema_spark.resources import scope
 
     qs = E.queries()
-    missing = [n for n in BENCH_QUERIES if n not in qs]
-    if missing:
-        raise KeyError("BENCH_QUERIES not in queries(): {}".format(missing))
     all_cpus = list(range(os.cpu_count() or CPUS))
-    for name in BENCH_QUERIES:  # warm pass: parquet footers, codegen, plans
+    for name in names:  # warm pass: parquet footers, codegen, plans
         with scope():  # each invocation pins fresh persists
             qs[name](spark, SF_DIR).count()
-    q_samples = {name: [] for name in BENCH_QUERIES}
+    q_samples = {name: [] for name in names}
     for _ in range(Q_ROUNDS):
-        for name in BENCH_QUERIES:
+        for name in names:
             steal0, busy0 = _cpu_ticks(all_cpus)
             t0 = time.time()
             with scope():
@@ -437,6 +457,14 @@ def main() -> None:
     if leg_budget:
         leg_server(int(leg_budget), int(os.environ.get("SPARK_GRAFT_LEG_CLIPS", N_CLIPS)))
         return
+    if sys.argv[1:2] == ["queries"]:
+        _check_names(sys.argv[2:])
+        q_times, q_detail = _query_phase(sys.argv[2:])
+        print(json.dumps({"queries": q_times, "samples": q_detail}))
+        return
+    if sys.argv[1:]:
+        raise SystemExit("usage: python bench.py [queries NAME [NAME ...]]")
+    _check_names(BENCH_QUERIES)
 
     skip_scaling = os.environ.get("SPARK_GRAFT_SKIP_SCALING") == "1"
 
@@ -600,7 +628,7 @@ def main() -> None:
     # the ~30-minute scaling measurement collected above (everything is
     # still persisted with queries = {} + a query_phase_error note)
     try:
-        q_times, q_detail = _query_phase()
+        q_times, q_detail = _query_phase(BENCH_QUERIES)
         q_err = None
     except Exception as ex:  # noqa: BLE001 — persist what we measured
         q_times, q_detail = {}, {}
@@ -630,38 +658,39 @@ def main() -> None:
     # full detail -> BENCH.json (machine-readable, no size limit)
     with open(os.path.join(REPO, "BENCH.json"), "w") as fh:
         json.dump(out, fh, indent=1)
-    # stdout: exactly ONE compact final line so a tail-capturing driver
-    # always parses the result (r2's multi-KB single line was truncated
-    # to `parsed: null`)
+    print(compact_line(out))
+
+
+def compact_line(out: dict) -> str:
+    """The one stdout line a last-line reader parses: the headline,
+    the efficiency keys and every per-query median, within the 789 bytes
+    of r05's line, the largest one known to have parsed (r2's multi-KB
+    line came back as `parsed: null`). Compact separators; query seconds
+    keep 2 decimals under 1 s and 1 decimal above; everything else stays
+    in BENCH.json. With 28 queries at 4-character values a flag-free
+    line is 786 bytes; the stormy/overlap flags add 53-81 bytes."""
     compact = {
-        "metric": "clips/sec validated (full suite)",
+        "metric": "clips/s",
         "value": out["value"],
-        "unit": "clips/sec",
-        "sf": SF,
-        # NO per-query timings here: 25+ entries blew the <~600-byte
-        # single-line budget that keeps tail-capturing drivers from
-        # truncating to parsed:null (they live in BENCH.json); n_q keeps
-        # the coverage visible
-        "n_queries": len(q_times),
+        "sf": out["sf"],
     }
-    if q_err:
-        compact["query_phase_error"] = q_err
-    if scaling is not None:
-        s = scaling
+    s = out.get("scaling")
+    if s is not None:
         compact.update({
             "efficiency_n_to_4n": s["efficiency_n_to_4n"],
             "efficiency_from_medians": s["efficiency_from_medians"],
             "probe_median": s["machine_parallel_capacity"]["median"],
-            "rounds_kept": s["rounds_kept"],
-            "rounds_dropped_steal": len(s["rounds_dropped_steal"]),
-            "detail": "BENCH.json",
         })
         if s.get("steal_gate_exhausted"):
             compact["steal_gate_exhausted"] = True
             compact["efficiency_stormy"] = s.get("efficiency_stormy")
         if s.get("overlapping_cpusets"):
             compact["overlapping_cpusets"] = True
-    print(json.dumps(compact))
+    if out.get("query_phase_error"):
+        compact["query_phase_error"] = out["query_phase_error"]
+    compact["queries"] = {k: round(v, 2 if v < 1 else 1)
+                          for k, v in out["queries"].items()}
+    return json.dumps(compact, separators=(",", ":"))
 
 
 def append_history(out: dict) -> None:

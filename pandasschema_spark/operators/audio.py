@@ -426,12 +426,16 @@ def resample_linear_kernel(s: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray
 def resample(df: DataFrame, target_sr: int, *, id_col: str = "clip_id",
              bytes_col: str = "bytes", sr_col: str = "sr_hz") -> DataFrame:
     """Resample every clip to ``target_sr`` (one narrow row_map pass);
-    returns (clip_id, bytes, sr_hz=target_sr)."""
+    returns (clip_id, bytes, sr_hz=target_sr). A row whose sample rate
+    is NULL or not positive is skipped; ``target_sr <= 0`` raises
+    ValueError before anything is planned."""
+    if target_sr <= 0:
+        raise ValueError("target_sr must be positive, got {}".format(target_sr))
 
     def resample_one(cid, raw, sr):
         sr = _meta_int(sr)
-        if sr is None:
-            return  # cannot resample without the source rate
+        if sr is None or sr <= 0:
+            return  # no source rate to interpolate from
         res = resample_linear_kernel(_decode(raw), sr, target_sr)
         yield (cid, np.clip(res, -32768, 32767).astype("<i2").tobytes(), target_sr)
 

@@ -490,3 +490,12 @@ def test_null_metadata_rows_never_kill_the_stage(spark):
     assert {r["clip_id"] for r in spectral_fingerprint(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in trim_bounds(df).collect()} == {"ok", "no_dur"}
     assert {r["clip_id"] for r in utterances(df).collect()} <= {"ok", "no_dur"}
+
+    # a zero or negative source rate is skipped like a NULL one: zero
+    # divided inside the kernel and killed the stage, a negative rate
+    # gave an empty clip; a non-positive target is refused up front
+    bad_sr = df.union(spark.createDataFrame(
+        [("zero_sr", pcm, 0, 100), ("neg_sr", pcm, -8000, 100)], df.schema))
+    assert {r["clip_id"] for r in resample(bad_sr, 16000).collect()} == {"ok", "no_dur"}
+    with pytest.raises(ValueError, match="target_sr"):
+        resample(df, 0)

@@ -4,11 +4,18 @@ claims (one pruned scan, broadcast joins, single exchanges, codegen),
 without having to re-run anything.
 
 Usage: python tools/plan_report.py [sf_dir]
+       python tools/plan_report.py SF_DIR NAME [NAME ...]
+
+The second form prints the executed plan of each named
+__spark_entry__.queries() entry under a `## NAME` header instead, with
+expression and exchange ids masked (`#123` -> `#`, `plan_id=45` ->
+`plan_id=`) so two runs or two checkouts diff line by line.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,14 +34,34 @@ def plan_of(df) -> str:
     )
 
 
+def query_plans(spark, sf_dir: str, names) -> str:
+    """One `## NAME` section per registry query: its executed plan,
+    built inside resources.scope(), with the per-session ids masked."""
+    import __spark_entry__ as E
+    from pandasschema_spark.resources import scope
+
+    qs = E.queries()
+    out = []
+    for name in names:
+        with scope():
+            plan = re.sub(r"(#|plan_id=)\d+", r"\1",
+                          plan_of(qs[name](spark, sf_dir)))
+        out += ["## " + name, "", plan.rstrip(), ""]
+    return "\n".join(out)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    names = sys.argv[2:]
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
+    if names:
+        print(query_plans(spark, sf_dir, names))
+        return
 
     from pandasschema_spark import Column, Schema
     from pandasschema_spark.operators.colstats import zscore_outliers
