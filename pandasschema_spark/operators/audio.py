@@ -587,23 +587,17 @@ def _verify_pairs(pairs: DataFrame, cols: typing.Sequence[str], schema: T.Struct
 def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
                        bytes_col: str = "bytes", sr_col: str = "sr_hz",
                        snr_threshold_db: float = 25.0,
-                       max_bucket: typing.Optional[int] = 10_000,
-                       broadcast_dup_fp: bool = True) -> DataFrame:
+                       max_bucket: typing.Optional[int] = 10_000) -> DataFrame:
     """Acoustic near-duplicate pairs: block on the spectral fingerprint,
     verify candidates with scale-normalized SNR >= ``snr_threshold_db``.
 
-    Plan shape (the one that survives 10^12 clips). With the default
-    ``broadcast_dup_fp=True``, full-corpus PCM bytes never enter a
-    shuffle — only candidate-bucket rows do. With
-    ``broadcast_dup_fp=False`` (corpora that are mostly duplicates, so
-    the candidate id set itself is huge) the candidate fetch is a
-    shuffle join whose probe side is the byte-carrying source scan:
-    non-candidate bytes then cross the wire too unless the engine
-    injects a runtime filter — on a real cluster enable
-    ``spark.sql.optimizer.runtime.bloomFilter.enabled`` (Spark 3.3+) so
-    the candidate-id bloom filter prunes the scan before the exchange;
-    AQE may also demote the join back to broadcast if the candidate set
-    turns out small at runtime.
+    Plan shape (the one that survives 10^12 clips): full-corpus PCM
+    bytes never enter a shuffle — only candidate-bucket rows do. Limit:
+    the duplicate-bucket keys and the candidate (clip_id, fingerprint)
+    set are broadcast, so each must fit Spark's per-relation broadcast
+    limit (8 GB). A corpus that is mostly duplicates, whose candidate
+    set is past it, fails the job with Spark's broadcast error; it does
+    not fall back to a shuffle join.
 
     1. one narrow pass computes the slim (clip_id, fingerprint) table
        (~40 B/row, persisted — it has three consumers; bytes stay in the
@@ -637,19 +631,14 @@ def acoustic_dup_pairs(df: DataFrame, *, id_col: str = "clip_id",
     dup_fp = counts.where(F.col("count") >= 2)
     if max_bucket is not None:
         dup_fp = dup_fp.where(F.col("count") <= max_bucket)
-    dup_keys = dup_fp.select("fingerprint")
-    if broadcast_dup_fp:
-        # a dedup workload's duplicate-bucket key set is small; pass
-        # broadcast_dup_fp=False when it is not (corpora that are mostly
-        # duplicates) and Spark plans a shuffle join instead
-        dup_keys = F.broadcast(dup_keys)
+    # a dedup workload's duplicate-bucket key set is small: broadcast it
+    dup_keys = F.broadcast(dup_fp.select("fingerprint"))
     cand_ids = fps.join(dup_keys, "fingerprint")  # slim (clip_id, fingerprint)
 
     # fetch bytes for candidate rows only: broadcast the (rare) candidate
     # id set against the source scan — corpus bytes never shuffle
-    fetch_keys = cand_ids if not broadcast_dup_fp else F.broadcast(cand_ids)
     cand = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col).alias("bytes")) \
-             .join(fetch_keys, "clip_id")
+             .join(F.broadcast(cand_ids), "clip_id")
 
     a = cand.select(
         F.col("fingerprint"),
@@ -677,8 +666,7 @@ def acoustic_incremental_pairs(
         store_fps: DataFrame, store_src: DataFrame, new_df: DataFrame, *,
         id_col: str = "clip_id", bytes_col: str = "bytes",
         sr_col: str = "sr_hz", snr_threshold_db: float = 25.0,
-        max_bucket: typing.Optional[int] = 10_000,
-        broadcast_candidates: bool = True) -> DataFrame:
+        max_bucket: typing.Optional[int] = 10_000) -> DataFrame:
     """Incremental acoustic dedup against a persisted fingerprint store
     — the daily-ingest form of ``acoustic_dup_pairs`` (the
     dedup_incremental convention applied to audio): only the NEW batch
@@ -705,9 +693,10 @@ def acoustic_incremental_pairs(
     map-side-combined tagged-union agg over SLIM rows; candidate
     fingerprints broadcast back against both slim tables; candidate
     BYTES are fetched by broadcast id-joins against the two source
-    scans, so corpus bytes never enter a shuffle on either side
-    (``broadcast_candidates=False`` for mostly-duplicate corpora —
-    same trade as acoustic_dup_pairs' broadcast_dup_fp). Verify is the
+    scans, so corpus bytes never enter a shuffle on either side. The
+    broadcast candidate sets must fit Spark's per-relation broadcast
+    limit (8 GB), the same limit as acoustic_dup_pairs': past it the
+    job fails with Spark's broadcast error. Verify is the
     batch op's Arrow-batched scale-normalized SNR, centi-dB integer.
     """
     from pyspark import StorageLevel
@@ -726,17 +715,13 @@ def acoustic_incremental_pairs(
     if max_bucket is not None:
         cand_fp = cand_fp.where(
             (F.col("n_store") + F.col("n_new")) <= int(max_bucket))
-    cand_fp = cand_fp.select("fingerprint")
-    if broadcast_candidates:
-        cand_fp = F.broadcast(cand_fp)
+    cand_fp = F.broadcast(cand_fp.select("fingerprint"))
 
     def _fetch(src: DataFrame, slim: DataFrame, side: str) -> DataFrame:
         keys = slim.join(cand_fp, "fingerprint")  # slim (clip_id, fp)
-        if broadcast_candidates:
-            keys = F.broadcast(keys)
         return (src.select(F.col(id_col).alias("clip_id"),
                            F.col(bytes_col).alias("bytes"))
-                .join(keys, "clip_id")
+                .join(F.broadcast(keys), "clip_id")
                 .select(F.col("fingerprint"),
                         F.col("clip_id").alias("clip_" + side),
                         F.col("bytes").alias("bytes_" + side)))

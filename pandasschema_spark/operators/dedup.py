@@ -34,7 +34,7 @@ from ..resources import hold
 from pyspark.storagelevel import StorageLevel
 
 from .banding import bit_chunks, bucket_pairs, drop_hot_keys
-from .text import normalized_text_expr
+from .text import content_digest, normalized_text_expr
 
 # 32-bit md5-prefix gram hash, then affine universal hashing mod a prime.
 MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne)
@@ -71,7 +71,7 @@ def exact_duplicate_ids(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     At warehouse scale the equivalent is staging the digest projection
     to a temp table.
     """
-    digest = F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8"))
+    digest = content_digest(F.col(text_col))
     base = hold(df.select(F.col(id_col).alias("id"), digest.alias("__fp__"))
                 .persist(StorageLevel.MEMORY_AND_DISK))
     dupes = (
@@ -686,7 +686,7 @@ def duplication_rate(
     """
     if bucket_size < 1:
         raise ValueError("bucket_size must be >= 1")
-    digest = F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8"))
+    digest = content_digest(F.col(text_col))
     base = (df.where(F.col(text_col).isNotNull())
               .select(F.col(id_col).alias("__id__"), digest.alias("__fp__")))
     firsts = base.groupBy("__fp__").agg(F.min("__id__").alias("__keep__"))
@@ -785,7 +785,7 @@ def source_dup_matrix(
     is O(sources^2) worst case — sources are a bounded catalog
     dimension, not a data-scale one.
     """
-    digest = F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8"))
+    digest = content_digest(F.col(text_col))
     pairs = (
         df.where(F.col(text_col).isNotNull() & F.col(source_col).isNotNull())
         .select(digest.alias("__d__"), F.col(source_col).alias("__s__"))
@@ -967,13 +967,14 @@ def windowed_duplicate_ids(
 
 def window_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The (id, fingerprint) projection windowed_duplicate_ids and
-    incremental_window_duplicates share — ONE digest rule (md5 of
-    normalized text), the _banded_sigs convention: incremental equals
-    batch only because both sides fingerprint identically, so the rule
-    lives in exactly one place. This is also the slim frame to persist
+    incremental_window_duplicates share — ONE digest rule
+    (``text.content_digest``, md5 of normalized text), the _banded_sigs
+    convention: incremental equals batch only because both sides
+    fingerprint identically, so the rule lives in exactly one place.
+    This is also the slim frame to persist
     warehouse-side as the store (16-byte digest + id per row; corpus
     bytes stay in the scan task)."""
-    digest = F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8"))
+    digest = content_digest(F.col(text_col))
     return (df.where(F.col(text_col).isNotNull())
               .select(F.col(id_col).alias("id"), digest.alias("fingerprint")))
 

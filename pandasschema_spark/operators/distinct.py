@@ -16,7 +16,7 @@ Spark plan (the north star's clip_id uniqueness via hash-agg):
                was ~as large as its input)]
   filter count > 1                                    [duplicate keys only]
   broadcast join-back on value (null-safe)            [duplicates are rare;
-                 falls back to shuffle join when broadcast=False]
+                 the key set must fit Spark's 8 GB broadcast limit]
   filter row_idx != global_min_row_idx                -> violations
 
 A window (`row_number over partitionBy(value) orderBy(row_idx)`) expresses
@@ -53,23 +53,23 @@ def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
     )
 
 
-def duplicate_rows(base: DataFrame, broadcast: bool = True) -> DataFrame:
+def duplicate_rows(base: DataFrame) -> DataFrame:
     """Rows of a (__r__, __v__, ...) frame that repeat an earlier row's
     value, with all of ``base``'s columns — keep='first' fails every
-    occurrence but the one at the minimum ordinal. ``broadcast`` ships
-    the (rare) duplicate keys to the join-back; pass False when the
-    duplicate KEY set itself is too large to broadcast."""
-    return (_keeper_join(base, broadcast)
+    occurrence but the one at the minimum ordinal. The (rare) duplicate
+    keys are broadcast to the join-back, so they must fit Spark's
+    per-relation broadcast limit (8 GB); a larger duplicate KEY set
+    fails the job with Spark's broadcast error, with no shuffle
+    fallback."""
+    return (_keeper_join(base)
             .where(F.col("__r__") != F.col("__m__"))
             .select(*[base[c] for c in base.columns]))
 
 
-def _keeper_join(base: DataFrame, broadcast: bool) -> DataFrame:
+def _keeper_join(base: DataFrame) -> DataFrame:
     """``base`` rows whose value is duplicated, joined (null-safe) to
     their value's count and keeper ordinal ``__m__``."""
-    dupes = duplicate_keys(base, "__v__", "__r__")
-    if broadcast:
-        dupes = F.broadcast(dupes)
+    dupes = F.broadcast(duplicate_keys(base, "__v__", "__r__"))
     return base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]), "inner")
 
 
@@ -82,7 +82,6 @@ def distinct_violations(
     message: str,
     check_id: str,
     seq: int,
-    broadcast_dupes: bool = True,
     allow_empty: bool = False,
     verify_row_key: bool = False,
 ) -> DataFrame:
@@ -99,11 +98,11 @@ def distinct_violations(
     sound row key makes the guard a no-op)."""
     base = fail_base(df, value_col, row_col)
     kw = dict(warn_col=warn_col, message=message, check_id=check_id, seq=seq)
-    out = emit_violations(duplicate_rows(base, broadcast_dupes),
+    out = emit_violations(duplicate_rows(base),
                           df.schema[value_col].dataType, allow_empty=allow_empty, **kw)
     if not verify_row_key:
         return out
-    ties = (_keeper_join(base, broadcast_dupes).where(F.col("__r__") == F.col("__m__"))
+    ties = (_keeper_join(base).where(F.col("__r__") == F.col("__m__"))
             .groupBy(base["__v__"].alias("__tv__"))
             .agg(F.count(F.lit(1)).alias("__kc__"))
             .where(F.col("__kc__") > 1))
@@ -134,7 +133,6 @@ def id_conflicts(
     label_cols,
     *,
     meta_cols=(),
-    broadcast_dupes: bool = True,
 ) -> DataFrame:
     """Key-collision triage: for every id occurring more than once, count
     the DISTINCT label payloads and metadata payloads colliding under it
@@ -160,11 +158,9 @@ def id_conflicts(
     meta_cols = list(meta_cols)
     if not label_cols:
         raise ValueError("label_cols must name at least one column")
-    dups = (df.where(F.col(id_col).isNotNull())
-              .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rows"))
-              .where(F.col("n_rows") > 1))
-    if broadcast_dupes:
-        dups = F.broadcast(dups)
+    dups = F.broadcast(df.where(F.col(id_col).isNotNull())
+                       .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rows"))
+                       .where(F.col("n_rows") > 1))
     rows = df.join(dups, id_col, "inner")
     rows = rows.select(id_col, "n_rows",
                        _payload_hash(label_cols).alias("__lh__"),

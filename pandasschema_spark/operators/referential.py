@@ -16,13 +16,13 @@ from ..plans.compiler import value_repr
 from ..resources import hold
 
 
-def missing_rows(base: DataFrame, dim_df: DataFrame, dim_col: str, broadcast: bool = True) -> DataFrame:
+def missing_rows(base: DataFrame, dim_df: DataFrame, dim_col: str) -> DataFrame:
     """(__r__, __v__) rows of a (__r__, __v__) frame whose value is not in
-    ``dim_df[dim_col]``: a LEFT ANTI join against the distinct dimension
-    values, broadcast unless ``broadcast=False``."""
-    dim = dim_df.select(F.col(dim_col).alias("__dimv__")).distinct()
-    if broadcast:
-        dim = F.broadcast(dim)
+    ``dim_df[dim_col]``: a LEFT ANTI join against the broadcast distinct
+    dimension values. The distinct values must fit Spark's per-relation
+    broadcast limit (8 GB); a larger dimension fails the job with
+    Spark's broadcast error (screen it with build_bloom instead)."""
+    dim = F.broadcast(dim_df.select(F.col(dim_col).alias("__dimv__")).distinct())
     return base.join(dim, base["__v__"] == F.col("__dimv__"), "left_anti")
 
 
@@ -35,7 +35,6 @@ def cross_table_violations(
     row_col,
     value_col: str,
     message: str,
-    broadcast_dim: bool = False,
 ) -> DataFrame:
     """Cross-TABLE row predicate validation: join each fact row to its
     dimension/header row and flag pairs where ``violation_cond`` (a
@@ -52,17 +51,16 @@ def cross_table_violations(
     finding, not silently re-flagged here; a NULL-valued
     ``violation_cond`` is SQL-false (no violation).
 
-    Scale shape: one equi-join on ``on`` — shuffle hash join when both
-    sides are big (both sides pruned to the columns the predicate and
-    output need before the exchange), ``broadcast_dim=True`` for a
-    true dimension; the predicate and output projection are row-local
-    and fuse into the join's output stage. Skewed fact keys: wrap with
-    salted_join's regime table upstream."""
+    Scale shape: one equi-join on ``on`` with no join hint — Spark
+    picks the strategy from the sides' sizes (a shuffle join when both
+    are big, both pruned to the columns the predicate and output need
+    before the exchange; a broadcast when the dimension is under
+    ``spark.sql.autoBroadcastJoinThreshold``); the predicate and output
+    projection are row-local and fuse into the join's output stage.
+    Skewed fact keys: wrap with salted_join's regime table upstream."""
     need_dim = {on} | {c for c in dim.columns
                        if c in _referenced(violation_cond, dim.columns)}
     d = dim.select(*sorted(need_dim))
-    if broadcast_dim:
-        d = F.broadcast(d)
     j = fact.join(d, on, "inner").where(violation_cond)
     row = F.expr(row_col) if isinstance(row_col, str) else row_col
     v = F.col(value_col)
@@ -286,7 +284,6 @@ def orphan_rate_timeline(
     dim_key: str,
     *,
     bucket_s: int = 86_400,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Referential-miss RATE per time bucket: what fraction of fact
     rows arriving in each ``bucket_s``-second window reference a key
@@ -306,9 +303,10 @@ def orphan_rate_timeline(
     has only NULL keys).
 
     Scale shape at 10^12 facts: the dim reduces to distinct keys and
-    broadcasts (``broadcast_dim=False`` switches to a shuffle join for
-    dims past broadcast size — or screen with build_bloom first, the
-    bloom_screen_violations path); the fact side is ONE pruned
+    broadcasts, so those keys must fit Spark's per-relation broadcast
+    limit (8 GB) — a larger dim fails the job with Spark's broadcast
+    error, with no shuffle fallback (screen it with build_bloom first,
+    the bloom_screen_violations path); the fact side is ONE pruned
     (key, ts) projection -> membership flag fused row-local ->
     map-side-combined per-bucket agg. Facts never shuffle; output is
     O(buckets).
@@ -317,9 +315,7 @@ def orphan_rate_timeline(
         raise ValueError("bucket_s must be >= 1")
     from .sessions import _epoch_us
 
-    d = dim.select(F.col(dim_key).alias("__dimv__")).distinct()
-    if broadcast_dim:
-        d = F.broadcast(d)
+    d = F.broadcast(dim.select(F.col(dim_key).alias("__dimv__")).distinct())
     sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
     base = (fact.where(F.col(ts_col).isNotNull())
             .select(F.col(fact_key).alias("__k__"),

@@ -170,13 +170,23 @@ def normalized_text_expr(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
+def content_digest(text: Column) -> Column:
+    """The content identity of a text: md5 hex of its UTF-8
+    ``normalized_text_expr``. ``fingerprint`` and dedup's
+    exact_duplicate_ids, duplication_rate, source_dup_matrix and
+    window_fingerprints all key on this one rule, so a batch run and
+    an incremental run that fingerprint separately agree digest for
+    digest."""
+    return F.md5(F.encode(normalized_text_expr(text), "UTF-8"))
+
+
 def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, fp) — md5 hex of the normalized text. The canonical content
     key for exact dedup: grouping by the 32-byte digest instead of the
     full text keeps the dedup shuffle narrow at 100 TB."""
     return df.select(
         F.col(id_col),
-        F.md5(F.encode(normalized_text_expr(F.col(text_col)), "UTF-8")).alias("fp"),
+        content_digest(F.col(text_col)).alias("fp"),
     )
 
 
@@ -625,7 +635,6 @@ def boilerplate_scan(
     id_col: str,
     *,
     min_doc_freq: int = 10,
-    broadcast_dict: bool = True,
 ) -> DataFrame:
     """Line-level boilerplate profile: per document, how many of its
     distinct non-empty lines are BOILERPLATE — lines whose normalized
@@ -654,10 +663,10 @@ def boilerplate_scan(
     digests inside the scan task; the ONLY data-sized exchanges are the
     map-side-combined per-digest doc counts and the per-doc result agg. The boilerplate
     dictionary is bounded by total_lines / min_doc_freq and joins
-    back broadcast by default; pass ``broadcast_dict=False`` when the
-    frequent-line dictionary itself is too large to ship (low
-    thresholds over huge corpora) and the join falls back to a
-    digest-keyed shuffle join. The distinct (doc, digest) frame feeds
+    back broadcast, so it must fit Spark's per-relation broadcast limit
+    (8 GB); a larger dictionary (low thresholds over huge corpora)
+    fails the job with Spark's broadcast error, with no shuffle
+    fallback. The distinct (doc, digest) frame feeds
     BOTH the frequency agg and the join-back, so it is persisted —
     without it the split+normalize+md5 pipeline scans the corpus twice
     (measured in PLANS.md before this persist).
@@ -687,14 +696,12 @@ def boilerplate_scan(
     )
     from pyspark.storagelevel import StorageLevel
     pairs = hold(pairs.persist(StorageLevel.MEMORY_AND_DISK))
-    boiler = (
+    boiler = F.broadcast(
         pairs.groupBy("__d__")
         .agg(F.count(F.lit(1)).alias("__df__"))
         .where(F.col("__df__") >= min_doc_freq)
         .select("__d__", F.lit(1).alias("__hot__"))
     )
-    if broadcast_dict:
-        boiler = F.broadcast(boiler)
     flagged = pairs.join(boiler, "__d__", "left")
     return (
         flagged.groupBy("id")

@@ -201,11 +201,11 @@ def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v,
     if isinstance(v, IsDistinctValidation):
         from ..operators.distinct import duplicate_rows
 
-        return duplicate_rows(base, v.broadcast_dupes)
+        return duplicate_rows(base)
     if isinstance(v, InTableValidation):
         from ..operators.referential import missing_rows
 
-        return missing_rows(base, v.dim_df, v.dim_col, v.broadcast)
+        return missing_rows(base, v.dim_df, v.dim_col)
     if isinstance(v, _SeriesValidation) and not getattr(v, "is_global", False):
         # WHERE keeps only TRUE: a NULL pass-predicate is NOT a fail,
         # exactly like build_row_violations' F.when(~pred) shape

@@ -76,8 +76,6 @@ class ValidationResult:
         self,
         df: DataFrame,
         row_key: str,
-        *,
-        broadcast_bad: bool = True,
     ) -> typing.Tuple[DataFrame, DataFrame]:
         """(clean, quarantined): partition ``df`` by whether its
         ``row_key`` appears in the violations — the split an ingest
@@ -96,9 +94,10 @@ class ValidationResult:
         Scale shape: violating keys are distinct-aggregated
         (output rows = violating rows, typically rare) and BROADCAST
         against two scans of the source — the 10^12-row table itself
-        never shuffles. Pass ``broadcast_bad=False`` when violations are
-        NOT rare (a poisoned batch); Spark then plans shuffle joins and
-        AQE can still demote them back to broadcast at runtime.
+        never shuffles. Limit: the distinct violating-key set must fit
+        Spark's per-relation broadcast limit (8 GB); a poisoned batch
+        past it fails the job with Spark's broadcast error — it does not
+        fall back to a shuffle join.
 
         The distinct violating-key set is PERSISTED before fanning out to
         the two sides — both returned frames embed it, and without the
@@ -128,7 +127,7 @@ class ValidationResult:
 
         bad = hold(self.violations.select(F.col("row").alias("__bad_row__"))
                    .distinct().persist(StorageLevel.MEMORY_AND_DISK))
-        bad_side = F.broadcast(bad) if broadcast_bad else bad
+        bad_side = F.broadcast(bad)
         key = F.col(row_key).cast("long")
         clean = df.where(key.isNotNull()).join(
             bad_side, key == F.col("__bad_row__"), "left_anti")

@@ -146,8 +146,6 @@ def check_to_spec(v) -> dict:
         return s
     if isinstance(v, IsDistinctValidation):
         s["type"] = "is_distinct"
-        if not v.broadcast_dupes:
-            s["broadcast_dupes"] = False
         return s
     if isinstance(v, InTableValidation):
         path = getattr(v, "source_path", None)
@@ -161,8 +159,6 @@ def check_to_spec(v) -> dict:
         s["column"] = v.dim_col
         if getattr(v, "source_format", "parquet") != "parquet":
             s["format"] = v.source_format
-        if not v.broadcast:
-            s["broadcast"] = False
         return s
     if isinstance(v, CrossColumnExprValidation):
         sql = getattr(v, "source_sql", None)
@@ -272,16 +268,17 @@ def spec_to_check(spec: dict, spark=None):
     if t == "not_null":
         return NotNullValidation(**kw)
     if t == "is_distinct":
-        # a "salt_buckets" key in older specs is accepted and ignored
-        return IsDistinctValidation(spec.get("broadcast_dupes", True), **kw)
+        # older specs' "salt_buckets" and join-strategy flag keys are
+        # accepted and ignored
+        return IsDistinctValidation(**kw)
     if t == "in_table":
         if spark is None:
             raise PanSchArgumentError(
                 "in_table spec needs a SparkSession to resolve {!r}".format(spec["path"]))
         fmt = spec.get("format", "parquet")
         dim = spark.read.format(fmt).load(spec["path"])
-        check = InTableValidation(dim, spec["column"],
-                                  broadcast=spec.get("broadcast", True), **kw)
+        # an older spec's join-strategy flag key is accepted and ignored
+        check = InTableValidation(dim, spec["column"], **kw)
         check.source_path = spec["path"]
         check.source_format = fmt
         return check

@@ -824,16 +824,12 @@ class IsDistinctValidation(_SeriesValidation):
     hash aggregation per value (count + min row ordinal; Spark's partial
     aggregation pre-collapses hot keys per map task, see
     operators/distinct.py) followed by a broadcast join-back of the (rare)
-    duplicate keys. ``broadcast_dupes=False`` switches the join-back to a shuffle join — pass it when the duplicate
-    KEY set itself is too large to broadcast (there is no automatic
-    size-based fallback).
+    duplicate keys. Limit: the duplicate KEY set must fit Spark's
+    per-relation broadcast limit (8 GB); a larger one fails the job
+    with Spark's broadcast error — there is no shuffle fallback.
     """
 
     is_global = True
-
-    def __init__(self, broadcast_dupes: bool = True, **kw):
-        self.broadcast_dupes = broadcast_dupes
-        super().__init__(**kw)
 
     @property
     def default_message(self):
@@ -876,11 +872,10 @@ class InTableValidation(_SeriesValidation):
 
     is_global = True
 
-    def __init__(self, dim_df, dim_col: str, broadcast: bool = True,
+    def __init__(self, dim_df, dim_col: str,
                  inline_max_rows: int = 0, **kw):
         self.dim_df = dim_df
         self.dim_col = dim_col
-        self.broadcast = broadcast
         self._inline_values = None
         super().__init__(**kw)
         if inline_max_rows:

@@ -139,11 +139,6 @@ def test_salted_distinct_matches_window_oracle(spark):
     ).select("row").collect()
     oracle = distinct_violations_window_oracle(df, "v", "r").select("row").collect()
     assert sorted(r["row"] for r in fast) == sorted(r["row"] for r in oracle)
-    # same result with the shuffle join-back instead of the broadcast
-    shuffled = distinct_violations(
-        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0, broadcast_dupes=False
-    ).select("row").collect()
-    assert sorted(r["row"] for r in shuffled) == sorted(r["row"] for r in oracle)
 
 
 def test_distinct_nulls_count_as_equal(spark):

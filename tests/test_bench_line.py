@@ -47,3 +47,40 @@ def test_compact_line_carries_every_query_within_budget():
     assert set(q.values()) == {0.04}
     q = json.loads(bench.compact_line(_out(11.04)))["queries"]
     assert set(q.values()) == {11.0}
+
+
+def _leg(budget, slots, sec):
+    return {"cpu_budget": budget, "task_slots": slots, "sec_median": sec,
+            "clips_per_sec_median": round(60000 / sec, 1),
+            "samples": [{"sec": sec, "steal_pct": 0.1}]}
+
+
+def test_bench_md_states_the_host_it_ran_on(monkeypatch):
+    """A 4-CPU host: legs of 1 and 2 CPUs with one task slot each, and
+    an 8->32 probe whose budgets both clamp to 4 CPUs."""
+    monkeypatch.setattr(bench, "CPUS", 32)
+    out = dict(_out(0.5), n_clips=80000, cpu_budget=4, query_rounds=5,
+               query_samples={n: {"kept": 5, "steal_gate_exhausted": False}
+                              for n in bench.BENCH_QUERIES})
+    out["scaling"].update({
+        "n_cpus": _leg(1, 1, 30.7), "four_n_cpus": _leg(2, 1, 24.0),
+        "warmup_round_discarded": {"n": {"sec": 36.7}, "four_n": {"sec": 24.1}},
+        "per_round_efficiency": [0.629], "steal_gate_pct": 25.0,
+        "rounds_kept": 1, "rounds_dropped_steal": [],
+        "efficiency_vs_delivered": {"per_round": [0.65], "median": 0.65},
+        "scale_clips": 60000, "probe_full_saturation_8_to_32": None,
+    })
+    out["scaling"]["machine_parallel_capacity"]["per_round"] = [0.962]
+    md = bench.render_bench_md(out)
+    assert "32-CPU width" not in md
+    assert "headline leg at 4 CPUs, SPARK_GRAFT_CPUS=32 clamped" in md
+    assert "N=4 -> 4N=16" not in md and "**Why N=1 -> 4N=2:**" in md
+    assert "8->32 probe was **not measured**" in md
+    assert "None" not in md.split("## Run history")[0]
+    assert "measures no extra task parallelism" in md
+    # distinct slot counts and a measured probe: neither caveat appears
+    out["scaling"]["four_n_cpus"] = _leg(2, 2, 24.0)
+    out["scaling"]["probe_full_saturation_8_to_32"] = 0.9
+    md = bench.render_bench_md(out)
+    assert "scales at **0.9** going 8->32" in md
+    assert "not measured" not in md and "no extra task parallelism" not in md

@@ -50,8 +50,7 @@ def test_cross_table_violations_flags_and_inner_join(spark):
         [(10, 20), (20, 1), (30, 100)], "k long, lim long")
     out = cross_table_violations(
         fact, dim, "k", F.col("v") < F.col("lim"),
-        row_col="rid", value_col="v", message="below limit",
-        broadcast_dim=True).collect()
+        row_col="rid", value_col="v", message="below limit").collect()
     rows = {r["row"] for r in out}
     # rid 1 (5<20) flagged; rid 2 (50<20 false) not; rid 3 (5<1 false)
     # not; rid 4 has NO dim row -> inner join drops (referential's job);

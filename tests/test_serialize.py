@@ -39,7 +39,7 @@ def _full_schema():
             NotNullValidation() & LeadingWhitespaceValidation(),
             DateFormatValidation("%Y-%m-%d"),
             CanConvertValidation(int, message="must be int-like"),
-            IsDistinctValidation(broadcast_dupes=False),
+            IsDistinctValidation(),
         ], allow_empty=True),
     ], ordered=True)
 
@@ -122,6 +122,37 @@ def test_in_table_spec(spark, tmp_path):
     assert got == [1]
     # and it round-trips because the path is remembered
     assert schema_to_dict(schema)["columns"][0]["checks"][0]["path"] == path
+
+
+def test_legacy_join_strategy_keys_are_ignored(spark, tmp_path):
+    """Specs written while is_distinct and in_table carried a join-
+    strategy switch still load; the keys change no violation and are
+    not written back."""
+    dim = spark.createDataFrame([("pcm_s16le",), ("flac",)], ["codec"])
+    path = str(tmp_path / "dim")
+    dim.write.parquet(path)
+
+    def spec(legacy):
+        distinct = {"type": "is_distinct"}
+        in_table = {"type": "in_table", "path": path, "column": "codec"}
+        if legacy:
+            distinct["broadcast_dupes"] = False
+            in_table["broadcast"] = False
+        return {"version": 1, "ordered": False, "columns": [
+            {"name": "codec", "checks": [distinct, in_table]}]}
+
+    df = spark.createDataFrame(
+        [(0, "flac"), (1, "wav_unknown"), (2, "flac"), (3, "wav_unknown")],
+        ["row_ord", "codec"])
+    old, new = schema_from_dict(spec(True), spark), schema_from_dict(spec(False), spark)
+
+    def found(schema):
+        return sorted((r["row"], r["message"]) for r in schema.validate(
+            df, columns=["codec"], row_key="row_ord").violations.collect())
+
+    assert found(old) == found(new)
+    assert [row for row, _ in found(old)] == [1, 2, 3, 3]
+    assert schema_to_dict(old) == schema_to_dict(new) == spec(False)
 
 
 def test_in_table_needs_spark():

@@ -27,9 +27,7 @@ _leaf = st.one_of(
               st.sampled_from(["int", "float", "str"])),
     st.builds(lambda f: {"type": "date_format", "format": f},
               st.sampled_from(["%Y-%m-%d", "%Y%m%d", "%d/%m/%Y %H:%M"])),
-    st.builds(lambda b: {"type": "is_distinct",
-                         **({} if b else {"broadcast_dupes": False})},
-              st.booleans()),
+    st.just({"type": "is_distinct"}),
 )
 
 _check = st.recursive(
