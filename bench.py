@@ -42,8 +42,9 @@ slowdowns; round-1's official run lost 35% on the wide leg to one):
   in the output — nothing is hidden, only pre-registeredly excluded
   from the median
 - efficiency divides by the budgets the children ACTUALLY ran (clamped
-  to os.cpu_count()), not the requested env value; collapsing budgets
-  aborts the criterion with a warning instead of reporting a fake ratio
+  to os.cpu_count()), not the requested env value; legs that collapse
+  (the wide one has no more task slots than the narrow one) abort the
+  criterion with a warning instead of reporting a fake ratio
 
 efficiency = (clips/s @ wide budget / clips/s @ narrow budget)
              / (wide budget / narrow budget),  target >= 0.8.
@@ -240,16 +241,29 @@ def run_clips_suite(spark: SparkSession, warehouse: str = WAREHOUSE) -> tuple[fl
 # ---------------------------------------------------------------------------
 
 
+def task_slots(budget: int) -> int:
+    """Task slots of a leg pinned to ``budget`` CPUs: budget/2, at least 1.
+    Every Arrow-UDF task is a JVM-thread + Python-worker PAIR, so
+    `local[budget]` would put 2x budget runnable threads on the pinned
+    CPUs — measured 3x slower from scheduler thrash. Same rule as
+    spark.task.cpus=2 for UDF-heavy stages on a real cluster."""
+    return max(budget // 2, 1)
+
+
+def legs_collapsed(narrow, wide) -> bool:
+    """True when the wide scaling leg has no more task slots than the
+    narrow one: their ratio then measures no extra parallelism (a 4-CPU
+    host gives legs of 1 and 2 CPUs, one slot each), so the scaling
+    criterion is omitted rather than reported. Slots grow with the CPU
+    budget, so this covers equal budgets too."""
+    return wide.slots <= narrow.slots
+
+
 def leg_server(budget: int, n_clips: int) -> None:
     first = int(os.environ.get("SPARK_GRAFT_LEG_FIRST_CPU", "0"))
     os.sched_setaffinity(0, range(first, first + budget))  # defensive; preexec_fn set it too
-    # Task slots = budget/2: every Arrow-UDF task is a JVM-thread +
-    # Python-worker PAIR, so `local[budget]` would put 2x budget runnable
-    # threads on the pinned CPUs — measured 3x slower from scheduler
-    # thrash. Same rule as spark.task.cpus=2 for UDF-heavy stages on a
-    # real cluster.
     warehouse = warehouse_path(n_clips)
-    slots = max(budget // 2, 1)
+    slots = task_slots(budget)
     spark = make_session(slots)
     spark.sparkContext.setLogLevel("ERROR")
     warm_workers(spark, slots)
@@ -496,11 +510,12 @@ def main() -> None:
         narrow = Leg(SCALE_NARROW, SCALE_CLIPS, first_cpu=wide.budget)
         narrow.wait_ready()
         wide.wait_ready()
-        if wide.budget <= narrow.budget:
-            print("WARNING: CPU budgets collapsed ({} vs {}); scaling "
-                  "criterion not measurable on this host — omitting it "
-                  "rather than reporting a fake ratio".format(
-                      narrow.budget, wide.budget), file=sys.stderr)
+        if legs_collapsed(narrow, wide):
+            print("WARNING: CPU budgets collapsed ({} vs {} CPUs, {} vs {} "
+                  "task slots); scaling criterion not measurable on this "
+                  "host — omitting it rather than reporting a fake "
+                  "ratio".format(narrow.budget, wide.budget,
+                                 narrow.slots, wide.slots), file=sys.stderr)
             narrow.stop()
             wide.stop()
             skip_scaling = True
@@ -788,14 +803,6 @@ machine hits a host-SMT/overcommit ceiling that is invisible in the
 guest, applies to ANY workload, and says nothing about the engine.
 Half the machine keeps the host out of the ratio; the probe numbers
 below keep the ceiling visible."""
-    slots = ""
-    if n_leg["task_slots"] == w_leg["task_slots"]:
-        slots = """
-
-**Both legs ran {sl} task slot(s)** (slots = CPU budget / 2, at least
-1): the wide leg had no more task parallelism than the narrow one, so
-this efficiency figure measures no extra task parallelism — only what
-the extra CPUs give the same slots' JVM threads and Python workers."""
 
     return """# BENCH — measured throughput + scaling efficiency
 
@@ -847,7 +854,7 @@ Per-round efficiency (kept rounds): {effs}
 Rounds kept: {kept}; dropped by steal gate: {dropped}{dropped_detail}
 
 **Scaling efficiency (N -> 4N): {eff}** (criterion: >= 0.8;
-ratio-of-medians cross-check: {eff2}){slots}
+ratio-of-medians cross-check: {eff2})
 
 efficiency = (clips/s @ {c32} CPUs / clips/s @ {c8} CPUs) / ({c32}/{c8})
 — divisor taken from the budgets the legs actually ran, clamped to this
@@ -884,7 +891,6 @@ median of all samples and flags the row stormy.
         v=out["value"], n=out["n_clips"], head=head,
         sc=s["scale_clips"],
         probe=probe.format(sat=sat, c8=n_leg["cpu_budget"], c32=w_leg["cpu_budget"]),
-        slots=slots.format(sl=n_leg["task_slots"]),
         c8=n_leg["cpu_budget"], sl8=n_leg["task_slots"],
         t8=n_leg["sec_median"], p8=n_leg["clips_per_sec_median"],
         r8=leg_rows(n_leg),

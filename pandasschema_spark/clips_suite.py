@@ -14,8 +14,10 @@ Binds BASELINE.json's required checks to the engine
 - clip_id shape clip_############          -> native rlike
 - clip_id uniqueness (keep='first')        -> map-side-combined hash agg
 - bytes: decoded-PCM length + SNR>=30dB vs the sha256-derived synthesis
-  oracle, and transcript equality vs the oracle                -> one
-  Arrow pandas_udf over a struct (cross-column), fully distributed
+  oracle, and transcript equality vs the oracle                -> two
+  Arrow pandas_udfs (cross-column), each over its own struct, fully
+  distributed: one ArrowEvalPython node evaluates both, and clip_id
+  crosses to the Python worker once per struct (twice)
 
 All row-local checks (including the two Arrow UDF checks and the inlined
 codec referential) compile into ONE scan; the uniqueness agg is the only

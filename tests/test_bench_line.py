@@ -4,6 +4,7 @@ the line carries every per-query median within the size a last-line
 reader is known to parse (789 bytes, r05's line)."""
 
 import json
+import types
 
 import __spark_entry__ as E
 import bench
@@ -56,15 +57,15 @@ def _leg(budget, slots, sec):
 
 
 def test_bench_md_states_the_host_it_ran_on(monkeypatch):
-    """A 4-CPU host: legs of 1 and 2 CPUs with one task slot each, and
-    an 8->32 probe whose budgets both clamp to 4 CPUs."""
+    """An 8-CPU host: legs of 1 and 4 CPUs (1 and 2 task slots), and an
+    8->32 probe whose budgets both clamp to 8 CPUs."""
     monkeypatch.setattr(bench, "CPUS", 32)
-    out = dict(_out(0.5), n_clips=80000, cpu_budget=4, query_rounds=5,
+    out = dict(_out(0.5), n_clips=80000, cpu_budget=8, query_rounds=5,
                query_samples={n: {"kept": 5, "steal_gate_exhausted": False}
                               for n in bench.BENCH_QUERIES})
     out["scaling"].update({
-        "n_cpus": _leg(1, 1, 30.7), "four_n_cpus": _leg(2, 1, 24.0),
-        "warmup_round_discarded": {"n": {"sec": 36.7}, "four_n": {"sec": 24.1}},
+        "n_cpus": _leg(1, 1, 30.7), "four_n_cpus": _leg(4, 2, 12.0),
+        "warmup_round_discarded": {"n": {"sec": 36.7}, "four_n": {"sec": 14.1}},
         "per_round_efficiency": [0.629], "steal_gate_pct": 25.0,
         "rounds_kept": 1, "rounds_dropped_steal": [],
         "efficiency_vs_delivered": {"per_round": [0.65], "median": 0.65},
@@ -73,14 +74,25 @@ def test_bench_md_states_the_host_it_ran_on(monkeypatch):
     out["scaling"]["machine_parallel_capacity"]["per_round"] = [0.962]
     md = bench.render_bench_md(out)
     assert "32-CPU width" not in md
-    assert "headline leg at 4 CPUs, SPARK_GRAFT_CPUS=32 clamped" in md
-    assert "N=4 -> 4N=16" not in md and "**Why N=1 -> 4N=2:**" in md
+    assert "headline leg at 8 CPUs, SPARK_GRAFT_CPUS=32 clamped" in md
+    assert "N=4 -> 4N=16" not in md and "**Why N=1 -> 4N=4:**" in md
     assert "8->32 probe was **not measured**" in md
     assert "None" not in md.split("## Run history")[0]
-    assert "measures no extra task parallelism" in md
-    # distinct slot counts and a measured probe: neither caveat appears
-    out["scaling"]["four_n_cpus"] = _leg(2, 2, 24.0)
+    # a measured probe: the caveat goes
     out["scaling"]["probe_full_saturation_8_to_32"] = 0.9
     md = bench.render_bench_md(out)
     assert "scales at **0.9** going 8->32" in md
-    assert "not measured" not in md and "no extra task parallelism" not in md
+    assert "not measured" not in md
+
+
+def test_legs_with_equal_task_slots_collapse():
+    """A 4-CPU host gives scaling legs of 1 and 2 CPUs and one task slot
+    each: distinct budgets, but no extra parallelism to measure."""
+    def leg(budget):
+        return types.SimpleNamespace(budget=budget, slots=bench.task_slots(budget))
+
+    assert bench.legs_collapsed(leg(1), leg(2))
+    assert bench.legs_collapsed(leg(4), leg(4))
+    assert bench.legs_collapsed(leg(4), leg(5))  # 2 slots each
+    assert not bench.legs_collapsed(leg(4), leg(16))
+    assert not bench.legs_collapsed(leg(2), leg(4))
