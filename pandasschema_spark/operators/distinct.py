@@ -29,7 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.compiler import VIOLATION_NAMES, emit_violations, fail_base, violation_columns
+from ..plans.compiler import (VIOLATION_NAMES, aliased, emit_violations, fail_base,
+                              violation_columns)
+from ..validation import quote_ident, sql_literal
 
 
 def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
@@ -45,11 +47,12 @@ def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
     makes an explicit salt redundant at every scale (a hot value
     pre-collapses to one partial row per mapper before it ever crosses
     the wire)."""
-    base = df.select(F.col(value_col).alias("__v__"), F.col(row_col).cast("long").alias("__r__"))
+    base = df.selectExpr("{} AS __v__".format(quote_ident(value_col)),
+                         "CAST({} AS BIGINT) AS __r__".format(quote_ident(row_col)))
     return (
         base.groupBy("__v__")
-        .agg(F.count(F.lit(1)).alias("__c__"), F.min("__r__").alias("__m__"))
-        .where(F.col("__c__") > 1)
+        .agg(F.expr("count(1) AS __c__"), F.expr("min(__r__) AS __m__"))
+        .where("__c__ > 1")
     )
 
 
@@ -61,16 +64,15 @@ def duplicate_rows(base: DataFrame) -> DataFrame:
     per-relation broadcast limit (8 GB); a larger duplicate KEY set
     fails the job with Spark's broadcast error, with no shuffle
     fallback."""
-    return (_keeper_join(base)
-            .where(F.col("__r__") != F.col("__m__"))
-            .select(*[base[c] for c in base.columns]))
+    return _keeper_join(base).where("__r__ <> __m__").select("__b__.*")
 
 
 def _keeper_join(base: DataFrame) -> DataFrame:
-    """``base`` rows whose value is duplicated, joined (null-safe) to
-    their value's count and keeper ordinal ``__m__``."""
-    dupes = F.broadcast(duplicate_keys(base, "__v__", "__r__"))
-    return base.join(dupes, base["__v__"].eqNullSafe(dupes["__v__"]), "inner")
+    """``base`` rows (aliased ``__b__``) whose value is duplicated,
+    joined (null-safe) to their value's count and keeper ordinal
+    ``__m__`` (aliased ``__d__``)."""
+    dupes = F.broadcast(duplicate_keys(base, "__v__", "__r__")).alias("__d__")
+    return base.alias("__b__").join(dupes, F.expr("__b__.__v__ <=> __d__.__v__"), "inner")
 
 
 def distinct_violations(
@@ -102,20 +104,18 @@ def distinct_violations(
                           df.schema[value_col].dataType, allow_empty=allow_empty, **kw)
     if not verify_row_key:
         return out
-    ties = (_keeper_join(base).where(F.col("__r__") == F.col("__m__"))
-            .groupBy(base["__v__"].alias("__tv__"))
-            .agg(F.count(F.lit(1)).alias("__kc__"))
-            .where(F.col("__kc__") > 1))
-    guard = ties.select(*violation_columns(
-        F.raise_error(F.concat(
-            F.lit("distinct_violations: row key {!r} collides among "
-                  "duplicate values (value=".format(row_col)),
-            F.coalesce(F.col("__tv__").cast("string"), F.lit("NULL")),
-            F.lit(", "), F.col("__kc__").cast("string"),
-            F.lit(" rows tie at the keeper ordinal) — keep-first "
-                  "is ill-defined; use a unique row key"),
-        )).cast("bigint"),
-        F.lit(None).cast("string"), **kw)).toDF(*VIOLATION_NAMES)
+    ties = (_keeper_join(base).where("__r__ = __m__")
+            .groupBy(F.expr("__b__.__v__ AS __tv__"))
+            .agg(F.expr("count(1) AS __kc__"))
+            .where("__kc__ > 1"))
+    raised = "CAST(raise_error(concat({}, coalesce(CAST(__tv__ AS STRING), 'NULL'), ', ', " \
+        "CAST(__kc__ AS STRING), {})) AS BIGINT)".format(
+            sql_literal("distinct_violations: row key {!r} collides among "
+                        "duplicate values (value=".format(row_col)),
+            sql_literal(" rows tie at the keeper ordinal) — keep-first "
+                        "is ill-defined; use a unique row key"))
+    guard = ties.selectExpr(*aliased(
+        violation_columns(raised, "CAST(NULL AS STRING)", **kw), VIOLATION_NAMES))
     return out.unionByName(guard)
 
 

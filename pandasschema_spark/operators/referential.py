@@ -14,6 +14,7 @@ from ..functions.exact import floor_div
 
 from ..plans.compiler import value_repr
 from ..resources import hold
+from ..validation import quote_ident
 
 
 def missing_rows(base: DataFrame, dim_df: DataFrame, dim_col: str) -> DataFrame:
@@ -22,8 +23,8 @@ def missing_rows(base: DataFrame, dim_df: DataFrame, dim_col: str) -> DataFrame:
     dimension values. The distinct values must fit Spark's per-relation
     broadcast limit (8 GB); a larger dimension fails the job with
     Spark's broadcast error (screen it with build_bloom instead)."""
-    dim = F.broadcast(dim_df.select(F.col(dim_col).alias("__dimv__")).distinct())
-    return base.join(dim, base["__v__"] == F.col("__dimv__"), "left_anti")
+    dim = F.broadcast(dim_df.selectExpr("{} AS __dimv__".format(quote_ident(dim_col))).distinct())
+    return base.join(dim, F.expr("__v__ = __dimv__"), "left_anti")
 
 
 def cross_table_violations(
@@ -63,12 +64,11 @@ def cross_table_violations(
     d = dim.select(*sorted(need_dim))
     j = fact.join(d, on, "inner").where(violation_cond)
     row = F.expr(row_col) if isinstance(row_col, str) else row_col
-    v = F.col(value_col)
     vtype = fact.schema[value_col].dataType
     return j.select(
         row.cast("long").alias("row"),
         F.lit(value_col).alias("column"),
-        value_repr(v, vtype).alias("value"),
+        F.expr(value_repr(quote_ident(value_col), vtype)).alias("value"),
         F.lit(message).alias("message"))
 
 

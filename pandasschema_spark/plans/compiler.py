@@ -10,6 +10,16 @@ the string cast shared by several checks on one column) deduplicated by
 codegen CSE — and emit violations via an array-of-structs ``explode``:
 one output row per (failing cell x failed check).
 
+The projection is built as Spark SQL text: each check's pass predicate
+(``pass_sql``), its ``allow_empty`` exemption, the rendered value, the
+violation struct and the bitmap are strings, and a builder makes one
+``selectExpr`` of them. A pyspark Column call costs about 11 py4j round
+trips of call-site bookkeeping and JVM class lookups, so building the
+same expressions from Column calls cost the driver about 120 round trips
+per check; a string costs none. A leaf that exists only as a Column (an
+Arrow-fallback UDF, a user lambda) is selected once under a generated
+name (``_Leaves``) ahead of the projection, which refers to it by name.
+
 Violations schema: (row long, column string, value string, message string,
 check_id string, seq int). ``seq`` is the (column-position, check-position)
 global ordinal so collected warnings can reproduce the reference's stable
@@ -23,7 +33,7 @@ import functools
 import operator
 import typing
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, types as T
 
 from ..errors import PanSchArgumentError
 from ..frames import local_frame
@@ -34,6 +44,8 @@ from ..validation import (
     _InverseValidation,
     _SeriesValidation,
     is_numeric_spark_type,
+    quote_ident,
+    sql_literal,
 )
 
 VIOLATION_FIELDS = [
@@ -71,54 +83,80 @@ def empty_violations(spark) -> DataFrame:
     return local_frame(spark, [], VIOLATION_SCHEMA)
 
 
-def _empty_exemption(col, spark_type: T.DataType):
+def _empty_exemption(col: str, spark_type: T.DataType) -> str:
     """allow_empty semantics (reference validation.py:86-95): numeric /
     boolean columns exempt nulls; other columns exempt nulls AND
     zero-length strings (pandas .str.len() is NaN for null -> also exempt).
-    Returns the NOT-exempt predicate to AND with the fail mask."""
+    Returns the NOT-exempt predicate (SQL over the column expression
+    ``col``) to AND with the fail mask."""
     if is_numeric_spark_type(spark_type):
-        return col.isNotNull()
-    return col.isNotNull() & (F.length(col.cast("string")) > 0)
+        return "({} IS NOT NULL)".format(col)
+    return "({0} IS NOT NULL AND (length(CAST({0} AS STRING)) > 0))".format(col)
 
 
-def value_repr(col, spark_type: T.DataType):
-    """String rendering of the failing cell, matching str(value) in the
-    reference's warning loop for the common dtypes (ints '270', floats
-    '270.0', strings verbatim, nulls 'nan'). Binary payloads (audio bytes)
-    render as a length summary instead of megabytes of mojibake."""
+def value_repr(col: str, spark_type: T.DataType) -> str:
+    """String rendering of the failing cell (SQL over the column
+    expression ``col``), matching str(value) in the reference's warning
+    loop for the common dtypes (ints '270', floats '270.0', strings
+    verbatim, nulls 'nan'). Binary payloads (audio bytes) render as a
+    length summary instead of megabytes of mojibake."""
     if isinstance(spark_type, T.BinaryType):
-        return F.concat(
-            F.lit("<binary "), F.coalesce(F.length(col).cast("string"), F.lit("0")), F.lit(" bytes>")
-        )
-    return F.coalesce(col.cast("string"), F.lit(NULL_VALUE_REPR))
+        return "concat('<binary ', coalesce(CAST(length({}) AS STRING), '0'), ' bytes>')".format(col)
+    return "coalesce(CAST({} AS STRING), {})".format(col, sql_literal(NULL_VALUE_REPR))
 
 
-class _ColumnExprs:
-    """The per-column expressions of a check projection (the column, its
-    rendered ``value_repr`` and its ``allow_empty`` exemption), each built
-    on first use and shared by every check on that column: the pyspark
-    Column calls behind them cost about 11 py4j round trips each, which
-    a second check on a column would otherwise pay again. The plan is
-    the same either way."""
+def violation_columns(row: str, value: str, *, warn_col, message, check_id, seq) -> typing.List[str]:
+    """The violation expressions in VIOLATION_FIELDS order, as SQL:
+    ``row`` (a bigint) and the rendered ``value`` are expressions, the
+    rest are the check's constants as plain literals."""
+    return [row, sql_literal(warn_col), value, sql_literal(message), sql_literal(check_id),
+            sql_literal(seq)]
+
+
+def aliased(exprs: typing.Sequence[str], names: typing.Sequence[str]) -> typing.List[str]:
+    """``expr AS name`` select items for selectExpr."""
+    return ["{} AS {}".format(e, quote_ident(n)) for e, n in zip(exprs, names)]
+
+
+class _Leaves:
+    """The Column-only leaves of one projection over ``df`` (an Arrow
+    fallback, a user lambda's Column). Calling it with a Column names
+    the column (a name ``df`` does not have) and returns the SQL that
+    refers to it; ``frame()`` is ``df`` with every leaf selected ahead of
+    the projection, or ``df`` itself when there is none."""
 
     def __init__(self, df: DataFrame):
-        self.types = {f.name: f.dataType for f in df.schema.fields}
-        self.col = functools.cache(lambda name: df[name])
-        self.value = functools.cache(
-            lambda name: value_repr(self.col(name), self.types[name]))
-        self.not_empty = functools.cache(
-            lambda name: _empty_exemption(self.col(name), self.types[name]))
+        self.df = df
+        self.columns: typing.List[Column] = []
+
+    def __call__(self, column: Column) -> str:
+        taken = set(self.df.columns)
+        name = "__leaf{}__".format(len(self.columns))
+        while name in taken:
+            name = "_" + name
+        self.columns.append(column.alias(name))
+        return quote_ident(name)
+
+    def frame(self) -> DataFrame:
+        return self.df.select("*", *self.columns) if self.columns else self.df
 
 
-def violation_columns(row, value, *, warn_col, message, check_id, seq) -> typing.List[Column]:
-    """The violation columns in VIOLATION_FIELDS order, unnamed: ``row``
-    (a bigint) and the rendered ``value`` are expressions, the rest are
-    the check's constants as plain literals. A caller names them once,
-    with ``toDF(*VIOLATION_NAMES, ...)``, instead of a cast and an alias
-    per field: each pyspark Column call costs about 11 py4j round trips
-    of call-site bookkeeping, which made those 12 calls most of a
-    check's plan-build cost."""
-    return [row, F.lit(warn_col), value, F.lit(message), F.lit(check_id), F.lit(seq)]
+def _fail_sql(leaves: _Leaves, types, ck: Check) -> str:
+    """The FAIL predicate of one row check as SQL (shared by the
+    violations explode and the bitmap projection)."""
+    v = ck.validation
+    if getattr(v, "is_multi_column", False):
+        pass_pred = v.row_sql(leaves.df, leaves)
+    else:
+        pass_pred = v.pass_sql(quote_ident(ck.df_col), types[ck.df_col], leaves)
+    fail = "(NOT {})".format(pass_pred)
+    if ck.allow_empty:
+        fail = "({} AND {})".format(fail, _empty_exemption(quote_ident(ck.df_col), types[ck.df_col]))
+    return fail
+
+
+def _types(df: DataFrame):
+    return {f.name: f.dataType for f in df.schema.fields}
 
 
 def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str,
@@ -128,32 +166,31 @@ def build_row_violations(df: DataFrame, checks: typing.List[Check], row_col: str
     The produced plan is a narrow map: scan -> project(array of
     conditional structs) -> filter(non-empty) -> explode. No shuffle.
     Each violation also keeps the ``carry`` columns of the row that
-    produced it (the runner carries ``bucket``). Every check's struct
-    shares one bigint cast of the row key, and the checks of one column
-    share its rendered value and empty exemption; the fields keep
-    Spark's default names until the one ``toDF`` after the explode.
+    produced it (the runner carries ``bucket``). The whole projection is
+    one SQL expression; only Column-only leaves cost Column calls.
     """
-    exprs = _ColumnExprs(df)
-    row = F.col(row_col).cast("bigint")
+    leaves, types = _Leaves(df), _types(df)
+    row = "CAST({} AS BIGINT)".format(quote_ident(row_col))
     structs = [
-        F.when(
-            _fail_predicate(df, exprs, ck),
-            F.struct(*violation_columns(
-                row, exprs.value(ck.df_col),
-                warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq)),
-        )
+        "CASE WHEN {} THEN struct({}) END".format(
+            _fail_sql(leaves, types, ck),
+            ", ".join(violation_columns(
+                row, value_repr(quote_ident(ck.df_col), types[ck.df_col]),
+                warn_col=ck.warn_col, message=ck.message, check_id=ck.check_id, seq=ck.seq)))
         for ck in checks
     ]
+    carried = [quote_ident(c) for c in carry]
 
     # Explode ALL k struct slots (nulls included) and filter afterwards:
-    # the tempting F.filter(array, isNotNull) higher-order function is
+    # the tempting filter(array, isNotNull) higher-order function is
     # CodegenFallback and forces the WHOLE projection - every check
     # expression - into interpreted mode (measured 4x slower than
     # Generate + null filter, which stays on the codegen path).
     return (
-        df.select(F.explode(F.array(*structs)).alias("v"), *carry)
-        .where(F.col("v").isNotNull())
-        .select("v.*", *carry)
+        leaves.frame()
+        .selectExpr("explode(array({})) AS v".format(", ".join(structs)), *carried)
+        .where("v IS NOT NULL")
+        .selectExpr("v.*", *carried)
         .toDF(*VIOLATION_NAMES, *carry)
     )
 
@@ -167,8 +204,9 @@ def fail_base(df: DataFrame, df_col: str, row_col: str,
     """The (__r__ long, __v__, *carry) projection every global fail set
     is cut from: ``__r__`` is the bigint row that emit_violations emits
     as is."""
-    return df.select(F.col(row_col).cast("long").alias("__r__"), F.col(df_col).alias("__v__"),
-                     *carry)
+    return df.selectExpr("CAST({} AS BIGINT) AS __r__".format(quote_ident(row_col)),
+                         "{} AS __v__".format(quote_ident(df_col)),
+                         *[quote_ident(c) for c in carry])
 
 
 def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v,
@@ -208,9 +246,11 @@ def global_fail_rows(df: DataFrame, row_col: str, df_col: str, v,
         return missing_rows(base, v.dim_df, v.dim_col)
     if isinstance(v, _SeriesValidation) and not getattr(v, "is_global", False):
         # WHERE keeps only TRUE: a NULL pass-predicate is NOT a fail,
-        # exactly like build_row_violations' F.when(~pred) shape
-        pred = v.compile_predicate(F.col("__v__"), df.schema[df_col].dataType)
-        return base.where(~pred)
+        # exactly like build_row_violations' CASE WHEN NOT shape
+        leaves = _Leaves(base)
+        pred = v.pass_sql("__v__", df.schema[df_col].dataType, leaves)
+        fail = leaves.frame().where("NOT {}".format(pred))
+        return fail.select(*base.columns) if leaves.columns else fail
     raise PanSchArgumentError(
         "Unsupported validation in a global check: {!r}".format(type(v).__name__))
 
@@ -231,13 +271,12 @@ def emit_violations(
     The allow_empty exemption applies here, ONCE, to the whole (possibly
     composed) check — the reference's get_errors shape
     (validation.py:79-110)."""
-    v = F.col("__v__")
     if allow_empty:
-        fail = fail.where(_empty_exemption(v, spark_type))
-    return fail.select(*violation_columns(
-        F.col("__r__"), value_repr(v, spark_type),
-        warn_col=warn_col, message=message, check_id=check_id, seq=seq), *carry
-    ).toDF(*VIOLATION_NAMES, *carry)
+        fail = fail.where(_empty_exemption("__v__", spark_type))
+    return fail.selectExpr(*aliased(violation_columns(
+        "__r__", value_repr("__v__", spark_type),
+        warn_col=warn_col, message=message, check_id=check_id, seq=seq), VIOLATION_NAMES),
+        *[quote_ident(c) for c in carry])
 
 
 def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: str,
@@ -253,20 +292,6 @@ def build_global_violations(df: DataFrame, checks: typing.List[Check], row_col: 
             allow_empty=ck.allow_empty, carry=carry)
         for ck in checks
     ])
-
-
-def _fail_predicate(df, exprs: _ColumnExprs, ck: Check):
-    """The compiled FAIL predicate for one row check (shared by the
-    violations explode and the bitmap projection)."""
-    if getattr(ck.validation, "is_multi_column", False):
-        pass_pred = ck.validation.compile_row_predicate(df)
-    else:
-        pass_pred = ck.validation.compile_predicate(
-            exprs.col(ck.df_col), exprs.types[ck.df_col])
-    fail = ~pass_pred
-    if ck.allow_empty:
-        fail = fail & exprs.not_empty(ck.df_col)
-    return fail
 
 
 def build_violation_bitmap(
@@ -299,18 +324,15 @@ def build_violation_bitmap(
             "violation bitmap supports at most 63 row-local checks (got {}); "
             "split the schema or use build_row_violations".format(len(checks))
         )
-    exprs = _ColumnExprs(df)
-    bitmap = None
-    for i, ck in enumerate(checks):
-        bit = F.when(_fail_predicate(df, exprs, ck), F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bitmap = bit if bitmap is None else bitmap + bit
-    out = df.select(
-        F.col(row_col).cast("long").alias("row"),
-        bitmap.alias("bitmap"),
-        F.bit_count(bitmap).cast("int").alias("n_fail"),
+    leaves, types = _Leaves(df), _types(df)
+    bitmap = " + ".join(
+        "CASE WHEN {} THEN {}L ELSE 0L END".format(_fail_sql(leaves, types, ck), 1 << i)
+        for i, ck in enumerate(checks))
+    out = leaves.frame().selectExpr(
+        "CAST({} AS BIGINT) AS `row`".format(quote_ident(row_col)),
+        "{} AS bitmap".format(bitmap),
+        "CAST(bit_count({}) AS INT) AS n_fail".format(bitmap),
     )
     if not keep_clean:
-        out = out.where(F.col("bitmap") != 0)
+        out = out.where("bitmap <> 0")
     return out

@@ -59,6 +59,7 @@ from .frames import local_frame
 from .plans.compiler import build_global_violations, build_row_violations
 from .schema import Schema
 from .sources.warehouse import Warehouse
+from .validation import sql_in, sql_literal
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -195,7 +196,7 @@ class ValidationRunner:
         self._commit(built, "global", None)
 
     def _run_batch(self, table, checks, rows_seen, row_key):
-        src = table.where(F.col("bucket").isin(list(rows_seen)))  # partition pruning
+        src = table.where(sql_in("bucket", list(rows_seen)))  # partition pruning
         built = build_row_violations(src, checks, row_key, carry=["bucket"])
         self._commit(built, "local", rows_seen)
 
@@ -206,9 +207,9 @@ class ValidationRunner:
         to its listed row count; None marks the global phase. Nothing is
         persisted: the fail counts are read back from the partitions the
         write committed, so the write is the commit's only Spark job."""
-        violations = built.select(
-            F.lit(self.run_id).alias("run_id"), F.lit(phase).alias("phase"),
-            "row", "column", "value", "message", "check_id", "seq", "bucket",
+        violations = built.selectExpr(
+            "{} AS run_id".format(sql_literal(self.run_id)), "{} AS phase".format(sql_literal(phase)),
+            "`row`", "`column`", "`value`", "message", "check_id", "seq", "bucket",
         )
         self.wh.overwrite_partitions(
             violations, VIOLATIONS_TABLE, partition_by=list(VIOLATION_PARTITIONS))

@@ -3,18 +3,25 @@
 Semantics-parity targets (reference = /root/reference/pandas_schema):
 every class here reproduces the element-wise pass/fail semantics of the
 same-named reference class (validation.py:149-419) but compiles to a Spark
-boolean ``Column`` — a native Catalyst expression when provably equivalent
-for the input Spark type, else a vectorized Arrow ``pandas_udf`` that runs
-the pandas formula on whole batches (never per-row Python at the Spark
+boolean expression — native Spark SQL when provably equivalent for the
+input Spark type, else a vectorized Arrow ``pandas_udf`` that runs the
+pandas formula on whole batches (never per-row Python at the Spark
 layer).
 
 Compilation contract
 --------------------
-``compile_predicate(col, spark_type) -> Column`` returns the *pass*
-predicate as a null-free boolean Column (nulls coalesced to False at each
-leaf, mirroring pandas masks which are NA-free after coercion). The schema
-compiler inverts it, applies the ``allow_empty`` exemption
-(reference validation.py:86-95) and emits violation structs.
+``pass_sql(col_sql, spark_type, leaf) -> str`` renders the *pass*
+predicate as Spark SQL text over the column expression ``col_sql``,
+null-free at each native leaf (nulls coalesced to false, mirroring pandas
+masks which are NA-free after coercion); ``~``/``&``/``|`` compose the strings.
+A native check gives its Catalyst expression as ``sql_predicate(col_sql,
+spark_type)``, or None when no provably-equivalent one exists for the
+input type; a leaf that exists only as a Column (the Arrow fallback, a
+user lambda) goes through ``leaf(column)``, which selects it under a
+generated name and returns the SQL that names it. The schema compiler
+inverts the text, applies the ``allow_empty`` exemption (reference
+validation.py:86-95) and emits violation structs, all as SQL: a pyspark
+Column call costs about 11 py4j round trips, a SQL string none.
 
 ``pandas_validate(series) -> bool Series`` is the same check expressed as
 the reference's pandas formula — used inside the Arrow fallback and as the
@@ -24,6 +31,8 @@ local oracle in parity tests.
 from __future__ import annotations
 
 import datetime
+import decimal
+import functools
 import math
 import operator
 import re
@@ -35,6 +44,7 @@ from pyspark.sql import Column as SparkColumn
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._worker import trim_worker_import_caches
 from .errors import PanSchArgumentError
 from .validation_warning import ValidationWarning
 
@@ -55,14 +65,71 @@ def is_numeric_spark_type(dt: T.DataType) -> bool:
     return isinstance(dt, _NUMERIC_SPARK_TYPES + (T.BooleanType,))
 
 
-def _leaf(pred: SparkColumn) -> SparkColumn:
-    """Null-coalesce a leaf pass-predicate to False.
+def _leaf(pred: str) -> str:
+    """Null-coalesce a leaf pass-predicate to false.
 
     pandas leaf masks are NA-free (coercions yield False, reference
     validation.py:214, 388); Spark three-valued logic would propagate null
     through combinators, so normalize at each leaf before ~ & | compose.
     """
-    return F.coalesce(pred, F.lit(False))
+    return "coalesce({}, false)".format(pred)
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier: any column name, dots,
+    spaces and backticks included, names exactly that column."""
+    return "`{}`".format(name.replace("`", "``"))
+
+
+_INT_MIN, _INT_MAX = -(1 << 31), (1 << 31) - 1
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def sql_literal(value) -> typing.Optional[str]:
+    """``value`` as a typed Spark SQL literal, the type ``F.lit`` would
+    give it, or None when it has none here (a Python int beyond a long, a
+    timestamp, bytes). The text parses to the same value under any session conf:
+    an int that fits 32 bits is written as is and a long with ``L``; a
+    float is a ``D`` double, NaN and the infinities a cast of their name;
+    a string holding a quote or a backslash is a cast of its UTF-8 bytes,
+    because ``spark.sql.parser.escapedStringLiterals`` changes what a
+    backslash in a quoted literal means and no escape reads the same
+    both ways."""
+    if isinstance(value, np.generic):
+        value = value.item()
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        if _INT_MIN <= value <= _INT_MAX:
+            return str(value)
+        return "{}L".format(value) if _LONG_MIN <= value <= _LONG_MAX else None
+    if isinstance(value, float):
+        if math.isnan(value):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(value):
+            return "CAST('{}Infinity' AS DOUBLE)".format("-" if value < 0 else "")
+        return repr(value).upper() + "D"
+    if isinstance(value, str):
+        if "'" in value or "\\" in value:
+            return "CAST(X'{}' AS STRING)".format(value.encode("utf-8").hex().upper())
+        return "'{}'".format(value)
+    if isinstance(value, decimal.Decimal) and value.is_finite():
+        return "{}BD".format(value)
+    if isinstance(value, datetime.date) and not isinstance(value, datetime.datetime):
+        return "DATE'{}'".format(value.isoformat())
+    return None
+
+
+def sql_in(col_sql: str, values) -> typing.Optional[str]:
+    """``col_sql IN (values)`` as SQL, ``false`` for no values (what an
+    empty IN list means under the leaf coalesce), or None when a value
+    has no SQL literal."""
+    items = [sql_literal(v) for v in values]
+    if any(i is None for i in items):
+        return None
+    return "({} IN ({}))".format(col_sql, ", ".join(items)) if items else "false"
 
 
 _JAVA_UNSAFE_RE = re.compile(
@@ -76,6 +143,20 @@ _JAVA_UNSAFE_RE = re.compile(
 JAVA_UNICODE_FLAG = "(?U)"
 
 
+def _null_as_nan_rlike(col_sql: str, pattern: str) -> str:
+    """``col RLIKE pattern`` over ``astype(str)`` of the column: a NULL
+    reads as the string 'nan', as it does in pandas."""
+    return "(coalesce({}, 'nan') RLIKE {})".format(col_sql, sql_literal(pattern))
+
+
+def _user_predicate(sql, fn, df, leaf) -> str:
+    """A user's boolean predicate as SQL: its source text when it was
+    built from SQL (serialize's spec forms), else the Column ``fn(df)``
+    selected through ``leaf``. The newline ends any ``--`` comment the
+    text ends with."""
+    return "({}\n)".format(sql) if sql else leaf(fn(df))
+
+
 def _java_regex_safe(pattern: str) -> bool:
     """Conservative gate: True only for patterns whose Python-re and
     (?U)-flagged Java-regex semantics coincide (no named groups, comments,
@@ -85,12 +166,13 @@ def _java_regex_safe(pattern: str) -> bool:
     return not _JAVA_UNSAFE_RE.search(pattern)
 
 
-def _pandas_udf_predicate(fn, col: SparkColumn) -> SparkColumn:
+def _pandas_udf(fn):
     """Wrap a Series->bool-Series pandas function as an Arrow-vectorized UDF
     pass predicate. One UDF invocation per Arrow batch — no per-row Python
     at the Spark layer (input_hint requirement)."""
 
     def _wrapped(s: pd.Series) -> pd.Series:
+        trim_worker_import_caches()
         if s.dtype == object:
             # Arrow surfaces SQL NULL as None; the reference's pandas world
             # (CSV-loaded frames) holds np.nan, whose str() is 'nan'
@@ -101,11 +183,10 @@ def _pandas_udf_predicate(fn, col: SparkColumn) -> SparkColumn:
                 s = s.copy()
                 s[na] = np.nan
         out = fn(s)
-        # normalize to nullable boolean for Arrow; NA -> null -> coalesced False
+        # normalize to nullable boolean for Arrow; NA -> null
         return out.astype("boolean")
 
-    udf = F.pandas_udf(_wrapped, T.BooleanType())
-    return udf(col)
+    return F.pandas_udf(_wrapped, T.BooleanType())
 
 
 # ---------------------------------------------------------------------------
@@ -157,21 +238,49 @@ class _SeriesValidation(_BaseValidation):
     def validate(self, series: pd.Series) -> pd.Series:
         return self.pandas_validate(series)
 
-    def spark_predicate(self, col: SparkColumn, spark_type: T.DataType):
-        """Native pass-predicate, or None when no provably-equivalent
-        Catalyst expression exists for this input type."""
+    def sql_predicate(self, col_sql: str, spark_type: T.DataType) -> typing.Optional[str]:
+        """Native pass-predicate as SQL over ``col_sql``, or None when no
+        provably-equivalent Catalyst expression exists for this input
+        type."""
         return None
 
-    def compile_predicate(self, col: SparkColumn, spark_type: T.DataType) -> SparkColumn:
+    def pass_sql(self, col_sql: str, spark_type: T.DataType, leaf) -> str:
+        """The null-free pass predicate as SQL (see the module contract):
+        the native leaf, coalesced, else the Arrow fallback over
+        ``col_sql`` selected through ``leaf``."""
         if self.mode != "pandas":
-            native = self.spark_predicate(col, spark_type)
+            native = self.sql_predicate(col_sql, spark_type)
             if native is not None:
                 return _leaf(native)
             if self.mode == "native":
                 raise PanSchArgumentError(
                     "{} has no native Spark expression for input type {}".format(
                         type(self).__name__, spark_type.simpleString()))
-        return _pandas_udf_predicate(self.pandas_validate, col)
+        return leaf(self._udf_leaf(lambda: _pandas_udf(self.pandas_validate))(F.expr(col_sql)))
+
+    def _udf_leaf(self, build):
+        """This check's pandas UDF, built by ``build()`` on first use and
+        kept: the UDF is pure code, and re-registering it costs py4j round
+        trips on every compile (runner batches, stream micro-batches)."""
+        udf = self.__dict__.get("_udf")
+        if udf is None:
+            udf = self._udf = build()
+        return udf
+
+    def __getstate__(self):
+        # the fallback UDF pickles this check (it calls pandas_validate);
+        # the cached UDF holds a JVM handle and is rebuilt where needed
+        state = dict(self.__dict__)
+        state.pop("_udf", None)
+        return state
+
+    def compile_predicate(self, name: str, spark_type: T.DataType) -> SparkColumn:
+        """The pass predicate over column ``name`` as one Column: ``F.expr``
+        of its SQL, or the Arrow-fallback UDF column (the combinators
+        compose these with ~ & |)."""
+        udf = []
+        sql = self.pass_sql(quote_ident(name), spark_type, udf.append)
+        return udf[0] if udf else F.expr(sql)
 
     # -- boolean algebra (reference validation.py:61-77) -------------------
     def __invert__(self):
@@ -234,8 +343,11 @@ class _InverseValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return ~self.negated.pandas_validate(series)
 
-    def compile_predicate(self, col, spark_type):
-        return ~self.negated.compile_predicate(col, spark_type)
+    def pass_sql(self, col_sql, spark_type, leaf):
+        return "(NOT {})".format(self.negated.pass_sql(col_sql, spark_type, leaf))
+
+    def compile_predicate(self, name, spark_type):
+        return ~self.negated.compile_predicate(name, spark_type)
 
 
 class _CombinedValidation(_SeriesValidation):
@@ -262,10 +374,14 @@ class _CombinedValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return self.operator(self.v_a.pandas_validate(series), self.v_b.pandas_validate(series))
 
-    def compile_predicate(self, col, spark_type):
-        a = self.v_a.compile_predicate(col, spark_type)
-        b = self.v_b.compile_predicate(col, spark_type)
-        return (a | b) if self.operator is operator.or_ else (a & b)
+    def pass_sql(self, col_sql, spark_type, leaf):
+        a = self.v_a.pass_sql(col_sql, spark_type, leaf)
+        b = self.v_b.pass_sql(col_sql, spark_type, leaf)
+        return "({} {} {})".format(a, "OR" if self.operator is operator.or_ else "AND", b)
+
+    def compile_predicate(self, name, spark_type):
+        return self.operator(self.v_a.compile_predicate(name, spark_type),
+                             self.v_b.compile_predicate(name, spark_type))
 
 
 # ---------------------------------------------------------------------------
@@ -343,7 +459,7 @@ class CanConvertValidation(CanCallValidation):
     def default_message(self):
         return "cannot be converted to type {}".format(self.callable)
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         # Fast native approximations for the common constructors. Only
         # enabled under mode='native' (explicit opt-in): CPython's int()
         # grammar has corners (unicode digits/whitespace) a Java regex
@@ -351,14 +467,15 @@ class CanConvertValidation(CanCallValidation):
         if self.mode != "native":
             return None
         if self.callable is int and isinstance(spark_type, T.StringType):
-            return F.trim(col).rlike(r"^[+-]?[0-9]+(_[0-9]+)*$")
+            return "(trim({}) RLIKE {})".format(col, sql_literal(r"^[+-]?[0-9]+(_[0-9]+)*$"))
         if self.callable is int and is_numeric_spark_type(spark_type):
             # int(float) succeeds except NaN/inf; ints always succeed
             if isinstance(spark_type, (T.FloatType, T.DoubleType)):
-                return col.isNotNull() & ~F.isnan(col) & (col != F.lit(float("inf"))) & (col != F.lit(float("-inf")))
-            return col.isNotNull()
+                return "((({0} IS NOT NULL AND (NOT isnan({0}))) AND ({0} <> {1})) AND ({0} <> {2}))".format(
+                    col, sql_literal(math.inf), sql_literal(-math.inf))
+            return "({} IS NOT NULL)".format(col)
         if self.callable is str:
-            return F.lit(True)
+            return "true"
         return None
 
 
@@ -389,10 +506,11 @@ class DateFormatValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return series.astype(str).apply(self.valid_date)
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         if self.spark_format is None:
             return None
-        return F.try_to_timestamp(col.cast("string"), F.lit(self.spark_format)).isNotNull()
+        return "(try_to_timestamp(CAST({} AS STRING), {}) IS NOT NULL)".format(
+            col, sql_literal(self.spark_format))
 
 
 # ---------------------------------------------------------------------------
@@ -420,26 +538,34 @@ class InRangeValidation(_SeriesValidation):
         s = pd.to_numeric(series, errors="coerce")
         return (s >= self.min) & (s < self.max)
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
+        lo, hi = sql_literal(self.min), sql_literal(self.max)
+        if lo is None or hi is None:
+            return None
         # The pandas formula fails NaN on BOTH sides (NaN >= m and
         # NaN < M are both False), but Spark orders NaN GREATER than
-        # every double — with max=inf the short-circuited lit(True)
-        # never sees the column and NaN (or, with both bounds infinite,
-        # even NULL) would pass. Pin both explicitly: NULL fails (the
-        # _leaf coalesce needs the column to appear in the predicate)
-        # and NaN fails on float-family inputs.
+        # every double. Pin it explicitly: NULL fails (the _leaf
+        # coalesce needs the column to appear in the predicate) and NaN
+        # fails on float-family inputs; a NaN bound fails every row, and
+        # an infinite max still fails +inf on float-family inputs.
         if is_numeric_spark_type(spark_type) and not isinstance(spark_type, T.BooleanType):
-            c = col.cast("double") if isinstance(spark_type, T.DecimalType) else col
-            pred = F.lit(True) if self.min == -math.inf else (c >= F.lit(self.min))
-            pred2 = F.lit(True) if self.max == math.inf else (c < F.lit(self.max))
-            ok = pred & pred2 & col.isNotNull()
-            if isinstance(spark_type, (T.FloatType, T.DoubleType, T.DecimalType)):
-                ok = ok & ~F.isnan(c)
-            return ok
+            if self.min != self.min or self.max != self.max:
+                return "false"
+            floats = isinstance(spark_type, (T.FloatType, T.DoubleType))
+            c = "CAST({} AS DOUBLE)".format(col) if isinstance(spark_type, T.DecimalType) else col
+            ok = []
+            if self.min != -math.inf:
+                ok.append("({} >= {})".format(c, lo))
+            if self.max != math.inf or floats:
+                ok.append("({} < {})".format(c, hi))
+            ok.append("({} IS NOT NULL)".format(col))
+            if floats or isinstance(spark_type, T.DecimalType):
+                ok.append("(NOT isnan({}))".format(c))
+            return functools.reduce("({} AND {})".format, ok)
         if self.mode == "native" and isinstance(spark_type, T.StringType):
-            c = F.try_cast(F.trim(col), "double")
-            return (c >= F.lit(self.min)) & (c < F.lit(self.max)) & ~F.isnan(
-                F.coalesce(c, F.lit(0.0)))
+            c = "try_cast(trim({}) AS DOUBLE)".format(col)
+            return "((({0} >= {1}) AND ({0} < {2})) AND (NOT isnan(coalesce({0}, 0.0D))))".format(
+                c, lo, hi)
         return None
 
 
@@ -465,18 +591,18 @@ class InListValidation(_SeriesValidation):
             return series.isin(self.options)
         return series.str.lower().isin([s.lower() for s in self.options])
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         opts = self.options
         str_col = isinstance(spark_type, T.StringType)
         num_col = is_numeric_spark_type(spark_type) and not isinstance(spark_type, T.BooleanType)
         if not self.case_sensitive:
             if str_col and all(isinstance(o, str) for o in opts):
-                return F.lower(col).isin([o.lower() for o in opts])
+                return sql_in("lower({})".format(col), [o.lower() for o in opts])
             return None
         if str_col and all(isinstance(o, str) for o in opts):
-            return col.isin(opts)
+            return sql_in(col, opts)
         if num_col and all(isinstance(o, (int, float)) and not isinstance(o, bool) for o in opts):
-            return col.isin(opts)
+            return sql_in(col, opts)
         return None
 
 
@@ -540,20 +666,16 @@ class FuzzyInListValidation(_SeriesValidation):
 
         return series.map(ok)
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         if not (isinstance(spark_type, T.StringType)
                 and all(isinstance(o, str) for o in self.options)):
             return None
-        c = col if self.case_sensitive else F.lower(col)
-        hits = [
-            F.levenshtein(c, F.lit(self._norm(o)), self.max_dist) >= 0
-            for o in self.options
-        ]
-        any_hit = hits[0]
-        for h in hits[1:]:
-            any_hit = any_hit | h
+        c = col if self.case_sensitive else "lower({})".format(col)
+        any_hit = functools.reduce("({} OR {})".format, [
+            "(levenshtein({}, {}, {}) >= 0)".format(c, sql_literal(self._norm(o)), self.max_dist)
+            for o in self.options])
         # NULL never matches (levenshtein(NULL, x) is NULL): pin to False
-        return F.when(col.isNull(), F.lit(False)).otherwise(any_hit)
+        return "CASE WHEN ({} IS NULL) THEN false ELSE {} END".format(col, any_hit)
 
 
 class MatchesPatternValidation(_SeriesValidation):
@@ -577,12 +699,12 @@ class MatchesPatternValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return series.astype(str).str.contains(self.pattern, **self.options)
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         if (isinstance(spark_type, T.StringType) and isinstance(self.pattern, str)
                 and not self.options and _java_regex_safe(self.pattern)):
             # (?U): Java's \d \s are ASCII-only by default; Python's are
             # unicode-aware. UNICODE_CHARACTER_CLASS aligns them.
-            return F.coalesce(col, F.lit("nan")).rlike(JAVA_UNICODE_FLAG + self.pattern)
+            return _null_as_nan_rlike(col, JAVA_UNICODE_FLAG + self.pattern)
         return None
 
 
@@ -596,9 +718,9 @@ class TrailingWhitespaceValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return ~series.astype(str).str.contains(r"\s+$")
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         if isinstance(spark_type, T.StringType):
-            return ~F.coalesce(col, F.lit("nan")).rlike(r"(?U)\s+$")
+            return "(NOT {})".format(_null_as_nan_rlike(col, r"(?U)\s+$"))
         return None
 
 
@@ -612,9 +734,9 @@ class LeadingWhitespaceValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return ~series.astype(str).str.contains(r"^\s+")
 
-    def spark_predicate(self, col, spark_type):
+    def sql_predicate(self, col, spark_type):
         if isinstance(spark_type, T.StringType):
-            return ~F.coalesce(col, F.lit("nan")).rlike(r"(?U)^\s+")
+            return "(NOT {})".format(_null_as_nan_rlike(col, r"(?U)^\s+"))
         return None
 
 
@@ -632,8 +754,8 @@ class NotNullValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return series.notna()
 
-    def spark_predicate(self, col, spark_type):
-        return col.isNotNull()
+    def sql_predicate(self, col, spark_type):
+        return "({} IS NOT NULL)".format(col)
 
 
 class CrossColumnExprValidation(_SeriesValidation):
@@ -672,7 +794,7 @@ class CrossColumnExprValidation(_SeriesValidation):
 
     def pandas_validate(self, series):
         raise PanSchArgumentError(
-            "CrossColumnExprValidation needs multiple columns; use compile_row_predicate")
+            "CrossColumnExprValidation needs multiple columns; use row_sql")
 
     def pandas_validate_frame(self, frame: pd.DataFrame) -> pd.Series:
         if self._pandas_fn is None:
@@ -680,8 +802,8 @@ class CrossColumnExprValidation(_SeriesValidation):
                 "no pandas_fn supplied for CrossColumnExprValidation")
         return self._pandas_fn(frame)
 
-    def compile_row_predicate(self, df) -> SparkColumn:
-        return _leaf(self._expr_fn(df))
+    def row_sql(self, df, leaf) -> str:
+        return _leaf(_user_predicate(getattr(self, "source_sql", None), self._expr_fn, df, leaf))
 
 
 class ConditionalValidation(_SeriesValidation):
@@ -747,8 +869,7 @@ class ConditionalValidation(_SeriesValidation):
 
     def pandas_validate(self, series):
         raise PanSchArgumentError(
-            "ConditionalValidation needs multiple columns; use "
-            "compile_row_predicate")
+            "ConditionalValidation needs multiple columns; use row_sql")
 
     def pandas_validate_frame(self, frame: pd.DataFrame) -> pd.Series:
         if self._when_pandas_fn is None:
@@ -759,12 +880,12 @@ class ConditionalValidation(_SeriesValidation):
             frame[self.then_column]).astype(bool)
         return ~cond | inner
 
-    def compile_row_predicate(self, df) -> SparkColumn:
-        cond = _leaf(self._when_fn(df))          # NULL condition -> pass
-        spark_type = df.schema[self.then_column].dataType
-        inner = self.then_validation.compile_predicate(
-            df[self.then_column], spark_type)    # already _leaf-coalesced
-        return ~cond | inner
+    def row_sql(self, df, leaf) -> str:
+        cond = _leaf(_user_predicate(             # NULL condition -> pass
+            getattr(self, "source_when_sql", None), self._when_fn, df, leaf))
+        inner = self.then_validation.pass_sql(    # already _leaf-coalesced
+            quote_ident(self.then_column), df.schema[self.then_column].dataType, leaf)
+        return "((NOT {}) OR {})".format(cond, inner)
 
 
 class CustomRowValidation(_SeriesValidation):
@@ -789,25 +910,23 @@ class CustomRowValidation(_SeriesValidation):
         return self._custom_message
 
     def pandas_validate(self, series):
-        raise PanSchArgumentError("CustomRowValidation needs multiple columns; use compile_row_predicate")
+        raise PanSchArgumentError("CustomRowValidation needs multiple columns; use row_sql")
 
     def pandas_validate_frame(self, frame: pd.DataFrame) -> pd.Series:
         return self._fn(frame)
 
-    def compile_row_predicate(self, df) -> SparkColumn:
-        # the wrapped pandas_udf is pure code (no per-frame state): build
-        # it once per validation instance — re-registering a UDF is ~10
-        # py4j roundtrips of driver-serial plan-build time per validate()
-        # call, which the bench pays on every timed pass
-        udf = getattr(self, "_compiled_udf", None)
-        if udf is None:
-            fn = self._fn
+    def row_sql(self, df, leaf) -> str:
+        fn = self._fn
 
+        def build():
             def _wrapped(batch: pd.DataFrame) -> pd.Series:
+                trim_worker_import_caches()
                 return fn(batch).astype("boolean")
 
-            udf = self._compiled_udf = F.pandas_udf(_wrapped, T.BooleanType())
-        return _leaf(udf(F.struct(*[df[c] for c in self.input_columns])))
+            return F.pandas_udf(_wrapped, T.BooleanType())
+
+        struct = "struct({})".format(", ".join(quote_ident(c) for c in self.input_columns))
+        return _leaf(leaf(self._udf_leaf(build)(F.expr(struct))))
 
 
 # ---------------------------------------------------------------------------
@@ -864,7 +983,8 @@ class InTableValidation(_SeriesValidation):
     the single-scan violations projection — removing the whole
     anti-join branch (its pruned re-scan, the dim distinct agg, and the
     broadcast-build stage) from every validate() plan. Falls back to the
-    anti-join plan silently when the dim turns out bigger. Semantics are
+    anti-join plan silently when the dim turns out bigger, or holds a
+    value with no SQL literal (a timestamp). Semantics are
     identical bit-for-bit: a NULL value fails either way (never equal to
     any dim value), NULL dim values match nothing, and an empty dim
     fails every row. Do NOT set it for unbounded dims — the construction
@@ -886,20 +1006,19 @@ class InTableValidation(_SeriesValidation):
             else:
                 values = [r[0] for r in dim_df.select(dim_col).distinct()
                           .limit(int(inline_max_rows) + 1).collect()]
-            if len(values) <= inline_max_rows:
-                # NULL dim values can never equal anything — drop them so
-                # isin() keeps pure two-valued semantics under _leaf
-                self._inline_values = [v for v in values if v is not None]
+            # NULL dim values can never equal anything — drop them so IN
+            # keeps pure two-valued semantics under _leaf
+            values = [v for v in values if v is not None] if len(values) <= inline_max_rows else None
+            if values is not None and sql_in("v", values) is not None:
+                self._inline_values = values
                 self.is_global = False  # instance shadows the class attr
 
-    def spark_predicate(self, col: SparkColumn, spark_type: T.DataType):
+    def sql_predicate(self, col, spark_type):
         if self._inline_values is None:
             return None  # global anti-join plan (the default route)
-        if not self._inline_values:
-            # empty dim: nothing can match — every row is a violation,
-            # exactly like the LEFT ANTI against an empty build side
-            return F.lit(False)
-        return col.isin(self._inline_values)
+        # an empty dim is ``false``: nothing can match — every row is a
+        # violation, exactly like the LEFT ANTI against an empty build side
+        return sql_in(col, self._inline_values)
 
     @property
     def default_message(self):

@@ -45,7 +45,7 @@ def test_native_equals_pandas(spark, pattern):
     df = spark.createDataFrame(list(enumerate(PROBES)), schema)
 
     def mask(v):
-        rows = df.select("i", v.compile_predicate(df["v"], T.StringType()).alias("p")) \
+        rows = df.select("i", v.compile_predicate("v", T.StringType()).alias("p")) \
                  .orderBy("i").collect()
         return [bool(r["p"]) for r in rows]
 

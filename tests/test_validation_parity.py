@@ -39,7 +39,7 @@ def spark_mask(spark, validator, values, spark_type=T.StringType()):
         [T.StructField("row_idx", T.LongType()), T.StructField("v", spark_type)]
     )
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], schema)
-    pred = validator.compile_predicate(df["v"], spark_type)
+    pred = validator.compile_predicate("v", spark_type)
     rows = df.select("row_idx", pred.alias("p")).orderBy("row_idx").collect()
     return [bool(r["p"]) for r in rows]
 

@@ -1,8 +1,9 @@
 """A Python worker that runs one of the package's UDFs holds no
-``zipimporter`` of a sub-package inside an archive, so the
-``importlib.invalidate_caches()`` pyspark makes at the start of every
-task re-reads each archive's directory once, not once per sub-package
-(``pandasschema_spark._drop_zip_subpackage_finders``)."""
+``zipimporter`` of a sub-package inside an archive, and no ``.jar`` on
+``sys.path``, so the ``importlib.invalidate_caches()`` pyspark makes at
+the start of every task re-reads each Python archive's directory once,
+not once per sub-package, and never the spark-core jar's
+(``pandasschema_spark._worker.trim_worker_import_caches``)."""
 
 import sys
 import zipimport
@@ -46,5 +47,20 @@ def test_reused_worker_holds_no_zip_subpackage_finders(spark):
 
     # two one-partition jobs in sequence: the second task runs on a
     # reused worker, after that task's own cache invalidation
+    counts = [schema.validate(df).violations.count() for _ in range(2)]
+    assert counts[1] == 0, counts
+
+
+def test_reused_worker_has_no_jar_on_sys_path(spark):
+    # clip i fails while i < the number of .jar entries on the worker's
+    # sys.path (sys.path_importer_cache keys included), as above
+    kernel = lambda b: b["clip_id"].map(_parse_ordinal).astype("int64") >= sum(  # noqa: E731
+        1 for p in list(sys.path) + list(sys.path_importer_cache)
+        if isinstance(p, str) and p.endswith(".jar"))
+    df = spark.range(N_ROWS, numPartitions=1).selectExpr(
+        "format_string('clip_%012d', id) AS clip_id", "id AS i")
+    schema = Schema([Column("clip_id", [CustomRowValidation(["clip_id", "i"], kernel, "probe")]),
+                     Column("i", [])])
+
     counts = [schema.validate(df).violations.count() for _ in range(2)]
     assert counts[1] == 0, counts
