@@ -1,12 +1,11 @@
 """Python-worker import-cache hygiene: ``trim_worker_import_caches``
 keeps what the per-task ``importlib.invalidate_caches()`` re-reads
 small. A worker runs it when it imports the package (unpickling a UDF
-that references it), and the validation UDF wrappers run it on every
-batch: a module that a later batch imports from a pyspark sub-package
-re-creates that sub-package's importer, and a worker that imported the
-package earlier would otherwise keep it."""
+that references it), and the stateful stream operator runs it again
+after the imports its first ``GroupState.update`` makes."""
 
 import sys
+import zipfile
 import zipimport
 
 
@@ -31,20 +30,36 @@ def _drop_zip_subpackage_finders() -> None:
             del sys.path_importer_cache[path]
 
 
+def _holds_python(archive: str) -> bool:
+    """True unless ``archive`` is a readable zip with no ``.py`` or
+    ``.pyc`` entry, the only files ``zipimport`` imports. The directory
+    its cached ``zipimporter`` already parsed is read when there is one
+    (a jar's takes 20 ms to parse again)."""
+    names = getattr(sys.path_importer_cache.get(archive), "_files", None)
+    if names is None:
+        try:
+            with zipfile.ZipFile(archive) as z:
+                names = z.namelist()
+        except (OSError, zipfile.BadZipFile):
+            return True
+    return any(n.endswith((".py", ".pyc")) for n in names)
+
+
 def _drop_jars_from_sys_path() -> None:
-    """Remove ``.jar`` archives from ``sys.path``, and their
-    ``sys.path_importer_cache`` entries.
+    """Remove the ``.jar`` archives that hold no Python from ``sys.path``,
+    and their ``sys.path_importer_cache`` entries.
 
     Spark puts the spark-core jar on every Python worker's PYTHONPATH
     (``PythonUtils.sparkPythonPaths``). It holds no Python, but while it
     is on ``sys.path`` the per-task ``importlib.invalidate_caches()``
     re-reads its 5,359-entry directory: 24-39 ms of every task. Deleting
     only its importer does not last (the next import re-creates it);
-    taking the path entry away does."""
-    jars = [p for p in sys.path if isinstance(p, str) and p.endswith(".jar")]
-    for path in jars:
-        sys.path.remove(path)
-        sys.path_importer_cache.pop(path, None)
+    taking the path entry away does. A jar that ships Python modules
+    (``--packages`` puts such jars on the path too) stays."""
+    for path in [p for p in sys.path if isinstance(p, str) and p.endswith(".jar")]:
+        if not _holds_python(path):
+            sys.path.remove(path)
+            sys.path_importer_cache.pop(path, None)
 
 
 def trim_worker_import_caches() -> None:

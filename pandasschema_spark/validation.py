@@ -44,7 +44,6 @@ from pyspark.sql import Column as SparkColumn
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._worker import trim_worker_import_caches
 from .errors import PanSchArgumentError
 from .validation_warning import ValidationWarning
 
@@ -77,7 +76,13 @@ def _leaf(pred: str) -> str:
 
 def quote_ident(name: str) -> str:
     """``name`` as a back-quoted SQL identifier: any column name, dots,
-    spaces and backticks included, names exactly that column."""
+    spaces and backticks included, names exactly that column. Spark
+    substitutes ``${...}`` anywhere in SQL text before it parses it
+    (``spark.sql.variable.substitute``), identifiers included, so a name
+    holding ``${`` has no SQL form and is refused."""
+    if "${" in name:
+        raise PanSchArgumentError(
+            "column name {!r} holds '${{', which Spark SQL substitutes".format(name))
     return "`{}`".format(name.replace("`", "``"))
 
 
@@ -91,10 +96,11 @@ def sql_literal(value) -> typing.Optional[str]:
     timestamp, bytes). The text parses to the same value under any session conf:
     an int that fits 32 bits is written as is and a long with ``L``; a
     float is a ``D`` double, NaN and the infinities a cast of their name;
-    a string holding a quote or a backslash is a cast of its UTF-8 bytes,
-    because ``spark.sql.parser.escapedStringLiterals`` changes what a
-    backslash in a quoted literal means and no escape reads the same
-    both ways."""
+    a string holding a quote, a backslash or ``${`` is a cast of its
+    UTF-8 bytes, because ``spark.sql.parser.escapedStringLiterals``
+    changes what a backslash in a quoted literal means, no escape reads
+    the same both ways, and Spark substitutes ``${...}`` even inside a
+    quoted literal."""
     if isinstance(value, np.generic):
         value = value.item()
     if value is None:
@@ -112,7 +118,7 @@ def sql_literal(value) -> typing.Optional[str]:
             return "CAST('{}Infinity' AS DOUBLE)".format("-" if value < 0 else "")
         return repr(value).upper() + "D"
     if isinstance(value, str):
-        if "'" in value or "\\" in value:
+        if "'" in value or "\\" in value or "${" in value:
             return "CAST(X'{}' AS STRING)".format(value.encode("utf-8").hex().upper())
         return "'{}'".format(value)
     if isinstance(value, decimal.Decimal) and value.is_finite():
@@ -172,7 +178,6 @@ def _pandas_udf(fn):
     at the Spark layer (input_hint requirement)."""
 
     def _wrapped(s: pd.Series) -> pd.Series:
-        trim_worker_import_caches()
         if s.dtype == object:
             # Arrow surfaces SQL NULL as None; the reference's pandas world
             # (CSV-loaded frames) holds np.nan, whose str() is 'nan'
@@ -274,14 +279,6 @@ class _SeriesValidation(_BaseValidation):
         state.pop("_udf", None)
         return state
 
-    def compile_predicate(self, name: str, spark_type: T.DataType) -> SparkColumn:
-        """The pass predicate over column ``name`` as one Column: ``F.expr``
-        of its SQL, or the Arrow-fallback UDF column (the combinators
-        compose these with ~ & |)."""
-        udf = []
-        sql = self.pass_sql(quote_ident(name), spark_type, udf.append)
-        return udf[0] if udf else F.expr(sql)
-
     # -- boolean algebra (reference validation.py:61-77) -------------------
     def __invert__(self):
         return _InverseValidation(self)
@@ -346,9 +343,6 @@ class _InverseValidation(_SeriesValidation):
     def pass_sql(self, col_sql, spark_type, leaf):
         return "(NOT {})".format(self.negated.pass_sql(col_sql, spark_type, leaf))
 
-    def compile_predicate(self, name, spark_type):
-        return ~self.negated.compile_predicate(name, spark_type)
-
 
 class _CombinedValidation(_SeriesValidation):
     """Element-wise AND/OR of two checks; the combined pair emits ONE
@@ -378,10 +372,6 @@ class _CombinedValidation(_SeriesValidation):
         a = self.v_a.pass_sql(col_sql, spark_type, leaf)
         b = self.v_b.pass_sql(col_sql, spark_type, leaf)
         return "({} {} {})".format(a, "OR" if self.operator is operator.or_ else "AND", b)
-
-    def compile_predicate(self, name, spark_type):
-        return self.operator(self.v_a.compile_predicate(name, spark_type),
-                             self.v_b.compile_predicate(name, spark_type))
 
 
 # ---------------------------------------------------------------------------
@@ -920,7 +910,6 @@ class CustomRowValidation(_SeriesValidation):
 
         def build():
             def _wrapped(batch: pd.DataFrame) -> pd.Series:
-                trim_worker_import_caches()
                 return fn(batch).astype("boolean")
 
             return F.pandas_udf(_wrapped, T.BooleanType())

@@ -8,6 +8,7 @@ known to diverge must be REJECTED by the gate (fall back to pandas).
 import pytest
 from pyspark.sql import types as T
 
+from pandasschema_spark.plans.compiler import _Leaves
 from pandasschema_spark.validation import MatchesPatternValidation, _java_regex_safe
 
 # strings chosen to poke anchors, multiline, unicode, dots, escapes
@@ -45,8 +46,9 @@ def test_native_equals_pandas(spark, pattern):
     df = spark.createDataFrame(list(enumerate(PROBES)), schema)
 
     def mask(v):
-        rows = df.select("i", v.compile_predicate("v", T.StringType()).alias("p")) \
-                 .orderBy("i").collect()
+        leaves = _Leaves(df)
+        pred = v.pass_sql("`v`", T.StringType(), leaves)
+        rows = leaves.frame().selectExpr("i", pred + " AS p").orderBy("i").collect()
         return [bool(r["p"]) for r in rows]
 
     auto, pd_ = mask(v_auto), mask(v_pandas)

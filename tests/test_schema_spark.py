@@ -413,15 +413,16 @@ def test_fallback_udf_is_built_once_per_check(spark):
     handle, and still validates."""
     from pyspark import cloudpickle
 
+    from pandasschema_spark.plans.compiler import _Leaves
     from pandasschema_spark.validation import CustomSeriesValidation
 
     v = CustomSeriesValidation(lambda s: s.str.len() > 1, "too short")
-    v.compile_predicate("b", T.StringType())
+    df = spark.createDataFrame([(0, "ab"), (1, "a")], "k long, b string")
+    v.pass_sql("`b`", T.StringType(), _Leaves(df))
     udf = v._udf
-    v.compile_predicate("b", T.StringType())
+    v.pass_sql("`b`", T.StringType(), _Leaves(df))
     assert v._udf is udf
     assert "_udf" not in cloudpickle.loads(cloudpickle.dumps(v)).__dict__
 
-    df = spark.createDataFrame([(0, "ab"), (1, "a")], "k long, b string")
     rows = Schema([Column("b", [v])]).validate(df, columns=["b"], row_key="k").violations.collect()
     assert [(r["row"], r["value"]) for r in rows] == [(1, "a")]

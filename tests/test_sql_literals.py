@@ -3,9 +3,11 @@ SQL text. Each native pass mask here must equal the check's own pandas
 formula (``pandas_validate``) on values chosen to break a naive
 rendering, under both settings of
 ``spark.sql.parser.escapedStringLiterals``: quotes, backslashes,
-newlines, tabs, ``$`` and non-BMP characters in options and patterns;
+newlines, tabs, ``$``, ``${...}`` (which Spark substitutes in SQL text)
+and non-BMP characters in options, patterns and messages;
 int and long boundary options; Decimal columns; NaN, infinite and
-negative-zero range bounds; column names holding a backtick or a space."""
+negative-zero range bounds; column names holding a backtick or a space
+(a name holding ``${`` is refused)."""
 
 import decimal
 import math
@@ -16,6 +18,8 @@ import pytest
 from pyspark.sql import types as T
 
 from pandasschema_spark import Column, Schema
+from pandasschema_spark.errors import PanSchArgumentError
+from pandasschema_spark.plans.compiler import _Leaves
 from pandasschema_spark.validation import (
     CanConvertValidation,
     FuzzyInListValidation,
@@ -27,12 +31,14 @@ from pandasschema_spark.validation import (
     MatchesPatternValidation,
     NotNullValidation,
     TrailingWhitespaceValidation,
+    quote_ident,
     sql_literal,
 )
 
 D = decimal.Decimal
 
 TRICKY = ["it's", "a\\b", "O'Neil\\", "line\nbreak", "tab\there", "cost $5",
+          "${env:HOME}", "${spark.app.name}", "${nope}", "$x{y}",
           "emoji \U0001F642", "\U0001F600", "\\n", "''", "plain", " lead", "trail ", None]
 
 
@@ -50,9 +56,10 @@ def escaped(spark, request):
 def _native_mask(spark, v, values, spark_type, name="v"):
     schema = T.StructType([T.StructField("i", T.LongType()), T.StructField(name, spark_type)])
     df = spark.createDataFrame(list(enumerate(values)), schema)
-    pred = v.compile_predicate(name, spark_type)
-    assert "_wrapped" not in str(pred), "took the Arrow fallback: {}".format(pred)
-    return [bool(r["p"]) for r in df.select("i", pred.alias("p")).orderBy("i").collect()]
+    leaves = _Leaves(df)
+    pred = v.pass_sql(quote_ident(name), spark_type, leaves)
+    assert not leaves.columns, "took the Arrow fallback: {}".format(pred)
+    return [bool(r["p"]) for r in leaves.frame().selectExpr("i", pred + " AS p").orderBy("i").collect()]
 
 
 def _pandas_mask(v, series):
@@ -68,7 +75,7 @@ def _strings(values):
 STRING_CHECKS = [
     InListValidation(TRICKY[:-1]),
     InListValidation(["IT'S", "A\\B", "LINE\nBREAK", "EMOJI \U0001F642"], case_sensitive=False),
-    FuzzyInListValidation(["it's", "a\\b", "cost $6", "\U0001F600x"], max_dist=1),
+    FuzzyInListValidation(["it's", "a\\b", "cost $6", "\U0001F600x", "${nope}x"], max_dist=1),
     MatchesPatternValidation(r"it's"),
     MatchesPatternValidation(r"\\"),
     MatchesPatternValidation(r"\\$"),
@@ -178,3 +185,19 @@ def test_column_names_with_backtick_space_or_dot(escaped, name):
                           (2, name, "y", "IsDistinctValidation")])
     bits = schema.validate_bitmap(df, columns=["n`2 x"], row_key="k").collect()
     assert [(r["row"], r["bitmap"]) for r in bits] == [(1, 1)]
+
+
+def test_message_with_substitution_syntax_renders_verbatim(escaped):
+    message = "${env:HOME} and ${spark.app.name} and ${nope}"
+    df = escaped.createDataFrame([(0, "x"), (1, "y")], "k long, v string")
+    schema = Schema([Column("v", [InListValidation(["x"], message=message)])])
+    rows = schema.validate(df, columns=["v"], row_key="k").violations.collect()
+    assert [(r["row"], r["message"]) for r in rows] == [(1, message)]
+
+
+def test_column_name_with_substitution_syntax_is_refused(spark):
+    df = spark.createDataFrame([(0, "x")], T.StructType([
+        T.StructField("k", T.LongType()), T.StructField("a${nope}b", T.StringType())]))
+    schema = Schema([Column("a${nope}b", [InListValidation(["x"])])])
+    with pytest.raises(PanSchArgumentError, match="substitutes"):
+        schema.validate(df, columns=["a${nope}b"], row_key="k")

@@ -17,6 +17,7 @@ import re
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from pandasschema_spark.plans.compiler import _Leaves
 from pandasschema_spark.validation import (
     CanCallValidation,
     CanConvertValidation,
@@ -39,8 +40,11 @@ def spark_mask(spark, validator, values, spark_type=T.StringType()):
         [T.StructField("row_idx", T.LongType()), T.StructField("v", spark_type)]
     )
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], schema)
-    pred = validator.compile_predicate("v", spark_type)
-    rows = df.select("row_idx", pred.alias("p")).orderBy("row_idx").collect()
+    # built as the compiler builds it: the pass SQL over the frame that
+    # selects the check's Column-only leaves (an Arrow fallback)
+    leaves = _Leaves(df)
+    pred = validator.pass_sql("`v`", spark_type, leaves)
+    rows = leaves.frame().selectExpr("row_idx", pred + " AS p").orderBy("row_idx").collect()
     return [bool(r["p"]) for r in rows]
 
 

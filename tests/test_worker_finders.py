@@ -5,12 +5,15 @@ the start of every task re-reads each Python archive's directory once,
 not once per sub-package, and never the spark-core jar's
 (``pandasschema_spark._worker.trim_worker_import_caches``)."""
 
+import importlib
 import sys
+import zipfile
 import zipimport
 
 import pytest
 
 from pandasschema_spark import Column, Schema
+from pandasschema_spark._worker import _drop_jars_from_sys_path
 from pandasschema_spark.clips_suite import _parse_ordinal
 from pandasschema_spark.validation import CustomRowValidation
 
@@ -64,3 +67,23 @@ def test_reused_worker_has_no_jar_on_sys_path(spark):
 
     counts = [schema.validate(df).violations.count() for _ in range(2)]
     assert counts[1] == 0, counts
+
+
+def test_jar_holding_python_stays_on_sys_path(tmp_path, monkeypatch):
+    # Spark puts --packages jars on the Python path because some ship
+    # Python modules; only a jar with none leaves it
+    with_py, classes_only = str(tmp_path / "with_py.jar"), str(tmp_path / "classes.jar")
+    with zipfile.ZipFile(with_py, "w") as z:
+        z.writestr("jar_probe_module.py", "VALUE = 7\n")
+    with zipfile.ZipFile(classes_only, "w") as z:
+        z.writestr("org/probe/Probe.class", b"\xca\xfe\xba\xbe")
+    monkeypatch.setattr(sys, "path", [classes_only, with_py] + sys.path)
+    monkeypatch.setattr(sys, "path_importer_cache", dict(sys.path_importer_cache))
+
+    _drop_jars_from_sys_path()
+
+    assert with_py in sys.path and classes_only not in sys.path
+    try:
+        assert importlib.import_module("jar_probe_module").VALUE == 7
+    finally:
+        sys.modules.pop("jar_probe_module", None)
