@@ -1591,9 +1591,9 @@ def q_ann_near_dup(spark, sf_dir):
         ).alias("embedding"),
     )
     corpus = emb.select("vec_id", "embedding").unionByName(mutated)
-    # impl='expr': the bitwise oracle mode (left-fold == DuckDB
-    # list_reduce); production default is the ~100x arrow scorer
-    out = embedding_near_dup_pairs(corpus, threshold=ANN_DUP_THRESHOLD, impl="expr")
+    # the Arrow scorer folds in dimension order (== DuckDB list_reduce),
+    # so the oracle hashes the production path bit for bit
+    out = embedding_near_dup_pairs(corpus, threshold=ANN_DUP_THRESHOLD)
     return out.select(
         "id_a", "id_b", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_e6")
     )
@@ -1623,7 +1623,6 @@ def q_ann_near_dup_bucketed(spark, sf_dir):
     )
     out = embedding_near_dup_pairs(
         corpus, threshold=ANN_DUP_THRESHOLD, centroids=centroids, n_probe=2,
-        impl="expr",  # bitwise oracle mode; production default is arrow
     )
     return out.select(
         "id_a", "id_b", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_e6")
@@ -1639,11 +1638,9 @@ def q_ann_cosine_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = S.cosine_topk(emb, queries, k=ANN_K)
-    # floor(cos*1e6) -> exact integer compare across engines. The arrow
-    # matmul reassociates float sums vs the DuckDB fold (<=1-ulp apart);
-    # the 1e-6 quantization absorbs it and ranking equality between the
-    # two impls is asserted in tests — deterministic for this corpus,
-    # not a bitwise guarantee (impl='expr' is the bitwise mode)
+    # floor(cos*1e6) -> exact integer compare across engines. The Arrow
+    # scorer folds in dimension order like the DuckDB list_reduce, so
+    # each cosine is bit-identical to the oracle's before quantization
     return out.select(
         "query_id", "vec_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_e6")
     )
@@ -2169,7 +2166,7 @@ def q_audio_embed_ann(spark, sf_dir):
         ordinal.alias("cell"), F.col("embedding").alias("cvec"))
     out = embedding_near_dup_pairs(
         emb, id_col="clip_id", vec_col="embedding",
-        threshold=0.999, centroids=cents, n_probe=2, impl="arrow")
+        threshold=0.999, centroids=cents, n_probe=2)
     return out.select(F.col("id_a").alias("clip_a"), F.col("id_b").alias("clip_b"))
 
 
@@ -2727,9 +2724,9 @@ def q_embedding_norm(spark, sf_dir):
     embedding_norm_violations): rows off unit norm or with the wrong
     dimensionality, over a deterministically corrupted copy of the
     embeddings table (vec_id % 53 scaled 1.5x -> norm2 ~2.25e6; vec_id
-    % 97 truncated to 32 dims). Gated through impl='expr' (the
-    left-fold double accumulation DuckDB's list_reduce reproduces
-    bit-for-bit); production default is the arrow batch scorer."""
+    % 97 truncated to 32 dims). The Arrow scorer sums the squares in
+    dimension order, the left-fold double accumulation DuckDB's
+    list_reduce reproduces bit-for-bit."""
     from pandasschema_spark.operators.similarity import embedding_norm_violations
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2742,7 +2739,7 @@ def q_embedding_norm(spark, sf_dir):
         .otherwise(F.col("embedding")).alias("embedding"))
     return embedding_norm_violations(
         corrupted, expected_dim=64,
-        min_norm2_micro=990_000, max_norm2_micro=1_010_000, impl="expr")
+        min_norm2_micro=990_000, max_norm2_micro=1_010_000)
 
 
 def q_drift_ks_by(spark, sf_dir):

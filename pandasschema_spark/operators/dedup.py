@@ -6,11 +6,12 @@ SURVEY.md §2.4). Design targets the 100 TB documents table:
 - **exact_duplicate_ids** shuffles a 16-byte md5 digest, never the text;
   the aggregation is Spark's partial+final hash-agg (map-side combine), so
   the shuffle volume is O(distinct digests), not O(corpus bytes).
-- **n-gram / MinHash math is 100% native Catalyst expressions**
-  (regexp_extract_all, aggregate, array_min, conv(md5)) — whole-stage
-  codegen, no Python, and deterministic across engines (the md5-derived 32-bit gram
-  hash makes signatures exactly reproducible in any SQL engine, which the
-  DuckDB oracles exploit).
+- **n-gram math is native Catalyst expressions** (regexp_extract_all)
+  — whole-stage codegen, no Python. The MinHash and SimHash signatures
+  are one Arrow pass of numpy over the same grams (``_py_ngrams``) and
+  their md5-derived 32-bit hashes (the first 8 hex chars, base 16), so
+  any SQL engine reproduces them exactly, which the DuckDB oracles
+  exploit.
 - **LSH banding** turns the quadratic all-pairs problem into a group-by on
   (band_idx, band_key): only documents agreeing on a full band ever meet.
   Hot buckets (boilerplate docs) are dropped by a default-on per-bucket
@@ -117,13 +118,6 @@ def word_ngrams_expr(text: Column, n: int) -> Column:
         .otherwise(F.array(norm))
     )
     return F.array_distinct(grams)
-
-
-def gram_hash_expr(gram: Column) -> Column:
-    """Deterministic 32-bit gram hash: first 8 hex chars of md5, parsed
-    base-16. Engine-portable (any SQL engine can reproduce it), uniform,
-    and cheap relative to the text scan."""
-    return F.conv(F.substring(F.md5(F.encode(gram, "UTF-8")), 1, 8), 16, 10).cast("long")
 
 
 def doc_grams(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
@@ -248,12 +242,13 @@ _ASCII_WS_RE = None  # compiled lazily; Java \s == ASCII [ \t\n\x0b\f\r]
 
 
 def _py_ngrams(text: str, n: int) -> typing.List[str]:
-    """Python mirror of word_ngrams_expr (normalize -> distinct shingles);
-    exact same outputs — the Arrow impl depends on this equivalence.
-    Tokenization MUST split on the ASCII class Java's \\s matches (NOT
-    Python str.split(), which is Unicode-aware: a U+00A0 NBSP would
-    split here but not in the Catalyst/SQL form, desynchronizing the
-    two impls and the DuckDB oracle); trim is space-only like F.trim."""
+    """Python mirror of word_ngrams_expr (normalize -> distinct shingles),
+    output for output: the MinHash and SimHash kernels hash these grams,
+    the DuckDB oracles the SQL form's. Tokenization MUST split on the
+    ASCII class Java's \\s matches (NOT Python str.split(), which is
+    Unicode-aware: a U+00A0 NBSP would split here but not in the SQL
+    form, so the signatures would drift from the oracle's); trim is
+    space-only like F.trim."""
     global _ASCII_WS_RE
     if _ASCII_WS_RE is None:
         import re
@@ -273,33 +268,11 @@ def _py_ngrams(text: str, n: int) -> typing.List[str]:
 
 def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str, *, n: int = 3, k: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, sig array<long>) — narrow projection, no shuffle. Both impls
-    produce IDENTICAL signatures (same md5-derived gram hashes, same
-    affine params); tests assert bit-equality.
-
-    impl='arrow' (default): vectorized numpy inside an Arrow batch —
-    the k x grams affine-min reduces to one (k, G) matrix op per doc.
-    impl='native': pure Catalyst expression tree. Zero Python, but
-    Spark executes higher-order array lambdas interpreted (boxed,
-    codegen-fallback), measured ~8x slower per doc than the numpy path;
-    kept for UDF-free deployments and as the semantics spec."""
-    if impl == "native":
-        hashed = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(word_ngrams_expr(F.col(text_col), n), lambda g: gram_hash_expr(g)).alias(
-                "__gh__"
-            ),
-        )
-        parts = [
-            F.array_min(
-                F.transform(F.col("__gh__"), lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME))
-            )
-            for a, b in _affine_params(k)
-        ]
-        return hashed.select("id", F.array(*parts).alias("sig"))
-
+    """(id, sig array<long>) — narrow projection, no shuffle: one Arrow
+    pass in which each document's k x grams affine-min over the
+    md5-derived gram hashes is one (k, G) numpy op. NULL text gives k
+    NULL parts, as the SQL form (array_min of a NULL array) does."""
     ab = _affine_params(k)
     a_vec = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in ab], dtype=np.int64)[:, None]
@@ -309,8 +282,6 @@ def minhash_signatures(
         out = []
         for t in texts:
             if t is None:
-                # mirror the native impl exactly: word_ngrams_expr
-                # propagates NULL, array_min(NULL) is NULL per part
                 out.append([None] * k)
                 continue
             grams = _py_ngrams(t, n)
@@ -333,7 +304,6 @@ def lsh_candidate_pairs(
     k: int = 16,
     bands: int = 4,
     max_bucket: typing.Optional[int] = DEFAULT_MAX_BUCKET,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) agreeing on >=1 full LSH band
     (r = k/bands rows per band). The shuffle key is (band_idx, band_key) —
@@ -351,7 +321,7 @@ def lsh_candidate_pairs(
     r = k // bands
     # persist: both self-join sides would otherwise recompute the whole
     # ngram->md5->k-fold signature pipeline (the expensive part)
-    sigs = hold(minhash_signatures(df, text_col, id_col, n=n, k=k, impl=impl)
+    sigs = hold(minhash_signatures(df, text_col, id_col, n=n, k=k)
                 .persist(StorageLevel.MEMORY_AND_DISK))
     [banded] = drop_hot_keys(
         [_banded_sigs(sigs, bands, r)], ["band_idx", "band_key"], max_bucket)
@@ -385,7 +355,6 @@ def incremental_lsh_pairs(
     k: int = 16,
     bands: int = 4,
     max_bucket: typing.Optional[int] = DEFAULT_MAX_BUCKET,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Incremental dedup: candidate pairs (id_new, id_store) between a
     NEW batch and an existing signature STORE — the (id, sig) frame
@@ -411,7 +380,7 @@ def incremental_lsh_pairs(
     """
     assert k % bands == 0, "k must divide evenly into bands"
     r = k // bands
-    new_sigs = hold(minhash_signatures(new_df, text_col, id_col, n=n, k=k, impl=impl)
+    new_sigs = hold(minhash_signatures(new_df, text_col, id_col, n=n, k=k)
                     .persist(StorageLevel.MEMORY_AND_DISK))
     nb, sb = drop_hot_keys(
         [_banded_sigs(new_sigs, bands, r), _banded_sigs(store_sigs, bands, r)],
@@ -472,88 +441,47 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(
-    df: DataFrame, text_col: str, id_col: str, *, n: int = 3, impl: str = "arrow"
-) -> DataFrame:
+def simhash64(df: DataFrame, text_col: str, id_col: str, *, n: int = 3) -> DataFrame:
     """(id, simhash long) — 64-bit SimHash over word n-grams.
 
     Signature bit b = majority vote of gram-hash bit b, from two
     independent 32-bit md5-prefix hashes (digest chars 1-8 / 9-16);
-    bit 63 kept clear. Both impls produce identical signatures.
+    bit 63 kept clear. One Arrow pass: the 63 bit votes are one
+    (G, 63) >>-and-sum numpy op per document. NULL text votes nothing
+    and signs 0."""
+    lo_shifts = np.arange(32, dtype=np.int64)[None, :]
+    hi_shifts = np.arange(31, dtype=np.int64)[None, :]
 
-    impl='arrow' (default): numpy — the 63 bit votes are one
-    (G, 63) >>-and-sum matrix op per doc inside an Arrow batch.
-    impl='native': Catalyst expression tree (63 interpreted array
-    folds); kept as the UDF-free path and semantics spec."""
-    if impl == "arrow":
-        lo_shifts = np.arange(32, dtype=np.int64)[None, :]
-        hi_shifts = np.arange(31, dtype=np.int64)[None, :]
+    @F.pandas_udf("long")
+    def _sig(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                out.append(0)
+                continue
+            grams = _py_ngrams(t, n)
+            digs = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+            lo = np.array([int(d[:8], 16) for d in digs], dtype=np.int64)[:, None]
+            hi = np.array([int(d[8:16], 16) for d in digs], dtype=np.int64)[:, None]
+            g = len(grams)
+            lo_bits = ((lo >> lo_shifts) & 1).sum(axis=0) * 2 > g
+            hi_bits = ((hi >> hi_shifts) & 1).sum(axis=0) * 2 > g
+            sig = int((lo_bits * (1 << np.arange(32, dtype=np.int64))).sum()
+                      + (hi_bits * (1 << np.arange(32, 63, dtype=np.int64))).sum())
+            out.append(sig)
+        return pd.Series(out)
 
-        @F.pandas_udf("long")
-        def _sig(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    # native: NULL grams -> NULL votes -> every
-                    # F.when(NULL).otherwise(0) contributes 0 -> sig 0
-                    out.append(0)
-                    continue
-                grams = _py_ngrams(t, n)
-                digs = [hashlib.md5(g.encode()).hexdigest() for g in grams]
-                lo = np.array([int(d[:8], 16) for d in digs], dtype=np.int64)[:, None]
-                hi = np.array([int(d[8:16], 16) for d in digs], dtype=np.int64)[:, None]
-                g = len(grams)
-                lo_bits = ((lo >> lo_shifts) & 1).sum(axis=0) * 2 > g
-                hi_bits = ((hi >> hi_shifts) & 1).sum(axis=0) * 2 > g
-                sig = int((lo_bits * (1 << np.arange(32, dtype=np.int64))).sum()
-                          + (hi_bits * (1 << np.arange(32, 63, dtype=np.int64))).sum())
-                out.append(sig)
-            return pd.Series(out)
-
-        return df.select(F.col(id_col).alias("id"), _sig(F.col(text_col)).alias("simhash"))
-
-    toks = word_ngrams_expr(F.col(text_col), n)
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(toks, lambda g: gram_hash_expr(g)).alias("__lo__"),
-        F.transform(
-            toks,
-            lambda g: F.conv(F.substring(F.md5(F.encode(g, "UTF-8")), 9, 8), 16, 10).cast("long"),
-        ).alias("__hi__"),
-    )
-
-    def bit_vote(hashes: Column, bit: int) -> Column:
-        # sum over grams of (2*bit_b(h) - 1) > 0  -> bit set
-        return (
-            F.aggregate(
-                hashes,
-                F.lit(0).cast("long"),
-                lambda acc, h: acc + (F.shiftright(h, bit) % 2) * 2 - 1,
-            )
-            > 0
-        )
-
-    sig = F.lit(0).cast("long")
-    for bit in range(32):
-        sig = sig + F.when(bit_vote(F.col("__lo__"), bit), F.lit(2 ** bit).cast("long")).otherwise(
-            F.lit(0)
-        )
-    for bit in range(31):  # keep the sign bit clear; 63 information bits
-        sig = sig + F.when(
-            bit_vote(F.col("__hi__"), bit), F.lit(2 ** (32 + bit)).cast("long")
-        ).otherwise(F.lit(0))
-    return hashed.select("id", sig.alias("simhash"))
+    return df.select(F.col(id_col).alias("id"), _sig(F.col(text_col)).alias("simhash"))
 
 
 def simhash_candidates(
     df: DataFrame, text_col: str, id_col: str, *, n: int = 3, chunk_bits: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-dup candidates: pairs agreeing on >=1 of the 16-bit signature
     chunks (classic Hamming-ball banding — any pair within Hamming distance
     3 of a 64-bit signature shares at least one of 4 chunks)."""
     chunks = bit_chunks(F.col("simhash"), 64, chunk_bits)
-    sigs = hold(simhash64(df, text_col, id_col, n=n, impl=impl)
+    sigs = hold(simhash64(df, text_col, id_col, n=n)
                 .persist(StorageLevel.MEMORY_AND_DISK))
     chunked = sigs.select("id", F.posexplode(chunks).alias("chunk_idx", "chunk_val"))
     return bucket_pairs(chunked, ["chunk_idx", "chunk_val"], "id")

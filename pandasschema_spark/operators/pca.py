@@ -16,8 +16,7 @@ Scale shape at 10^12 rows (the only one that works):
   matrix. NO shuffle of vectors, no d x d per-ROW materialization — the
   accumulation happens inside the Arrow batches.
 - APPLY: the k x d projection matrix broadcasts in the UDF closure; one
-  numpy matmul per Arrow batch, same pattern as cosine_topk's arrow
-  path.
+  numpy matmul per Arrow batch, the closure pattern of cosine_topk.
 
 Determinism: eigh on the exact same covariance is deterministic; sign
 convention fixed per component (largest-|loading| entry positive), so

@@ -3,26 +3,35 @@
 Engine extensions for training-data pipelines (no reference analog —
 SURVEY.md §2.4):
 
-- **cosine_topk** — exact brute-force top-k: broadcast the (small) query
-  set, score every (query, vector) pair with a native double-precision
-  fold (zip_with + aggregate — JVM codegen, deterministic left-to-right
-  accumulation, so results are bit-reproducible across engines), then
-  per-query top-k. At 100 TB the scan is embarrassingly parallel; the
-  only shuffle is the per-query top-k reduction, whose input we pre-prune
-  with a per-partition top-k so each partition ships at most k rows per
-  query instead of its whole slice.
+- **cosine_topk** — exact brute-force top-k: the (small) query set rides
+  in the kernel's closure, one Arrow pass scores every (query, vector)
+  pair and keeps each batch's own top k per query, then one per-query
+  window picks the global top k. At 100 TB the scan is embarrassingly
+  parallel; the only shuffle is that window's, and it carries at most k
+  rows per query per batch instead of the corpus.
 
 - **ivf_topk** — the scale path: an IVF (inverted-file) index. Vectors
   are bucketed by nearest centroid at index build; a query scores only
   the ``n_probe`` nearest cells. Recall < 1.0 by construction; the
   brute-force operator is the correctness oracle (tests assert recall).
+
+Every Arrow kernel here scores with ``_cosine``: a double-precision fold
+over the dimensions in order (``acc + a[i] * b[i]``), vectorised across
+rows, then ``dot / (sqrt(na) * sqrt(nb))``. That is the order of
+``dot_expr``/``norm_expr`` and of DuckDB's ``list_reduce``, so every
+score is bit-identical to the oracle's. One rule covers undefined
+cosines: a NULL vector, a NULL or non-finite element, a zero norm, or a
+length that differs from the other side's has no cosine, and the pair is
+absent — never a crash, a NULL score or an arbitrary cell.
 """
 
 from __future__ import annotations
 
 import typing
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..frames import local_frame
 from ..resources import hold
@@ -49,6 +58,45 @@ def norm_expr(a: Column) -> Column:
     )
 
 
+def _stack(vecs, width=None):
+    """Array values as a float64 (width, n) matrix for ``_cosine``, one
+    column per vector (dimension-major, so each step of a fold reads one
+    contiguous row), and their lengths. Columns are zero-padded to
+    ``width`` (default: the longest, and at least one, so that a NULL
+    vector always holds a NaN); a zero adds nothing to a fold, so a short
+    vector keeps its cosine with one of its own length. A NULL vector, or
+    one longer than ``width``, is a column of NaN, and a NULL element
+    reads as NaN."""
+    lens = np.array([0 if v is None else len(v) for v in vecs], dtype=np.int64)
+    if width is None:
+        width = int(lens.max(initial=1))
+    mat = np.zeros((len(lens), width))
+    for i, v in enumerate(vecs):
+        if v is None or lens[i] > width:
+            mat[i] = np.nan
+        else:
+            mat[i, :lens[i]] = v
+    return np.ascontiguousarray(mat.T), lens
+
+
+def _fold(a, b):
+    """Dot products of the columns of ``a`` and ``b`` (broadcast over all
+    but the first axis), summed over the first axis in index order."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _cosine(a, a_len, b, b_len):
+    """Cosines of the columns of ``a`` and ``b`` (``_stack`` output of one
+    width, broadcast like ``_fold``), NaN where undefined."""
+    with np.errstate(all="ignore"):
+        cos = _fold(a, b) / (np.sqrt(_fold(a, a)) * np.sqrt(_fold(b, b)))
+    cos[a_len != b_len] = np.nan
+    return cos
+
+
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -58,55 +106,48 @@ def cosine_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     k: int = 10,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, vec_id, cos) with deterministic
     (-cos, vec_id) tie order, self-matches excluded when ids collide.
+    A pair with no cosine is absent (the module's rule), so a query set
+    with no defined vector gives an empty result.
 
-    Plan: broadcast the query set -> narrow scoring projection -> ONE
-    per-query row_number window. Spark's WindowGroupLimit pushes a
-    partial top-k below the exchange (map-side), so the single
-    hash(query_id) shuffle carries O(tasks * |Q| * k) rows, not the full
-    corpus — a manual per-partition pre-prune window would itself need a
-    hash(partition_id, query_id) Exchange of the ENTIRE cross product
-    and is strictly worse (measured: 3 exchanges vs 2).
+    Plan: the query set is collected to the driver and shipped in the
+    kernel's closure; one Arrow pass scores each batch against it and
+    keeps the batch's top k per query, then ONE per-query row_number
+    window over those rows picks the global top k, so the hash(query_id)
+    exchange carries O(batches * |Q| * k) rows, not the corpus."""
+    q_rows = queries.select(query_id_col, query_vec_col).collect()
+    q_ids = np.array([r[0] for r in q_rows])  # any id type
+    q_mat, q_len = _stack([r[1] for r in q_rows])
 
-    impl='arrow' (default, the 100 TB path): one numpy
-    (batch, dim) @ (dim, |Q|) matmul per Arrow batch — orders of
-    magnitude faster than per-element expression folds. impl='expr':
-    zip_with/aggregate double fold — left-to-right accumulation,
-    bit-reproducible in any engine (kept as the oracle/determinism mode),
-    but interpreted per element by Catalyst (~0.4 ms per 64-dim pair).
-    The matmul reassociates the sum, so scores can differ from 'expr' by
-    ~1 ulp (ranking is tested to agree; floor(cos*1e6) comparisons absorb
-    the reassociation)."""
-    if impl == "arrow":
-        return _cosine_topk_arrow(df, queries, id_col=id_col, vec_col=vec_col,
-                                  query_id_col=query_id_col, query_vec_col=query_vec_col, k=k)
-    q = F.broadcast(queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv__")
-    ))
-    base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v__"))
-    scored = (
-        base.crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.try_divide(
-                dot_expr(F.col("__v__"), F.col("__qv__")),
-                norm_expr(F.col("__v__")) * norm_expr(F.col("__qv__"))).alias("cos"),
-        )
-        # undefined cosines are ABSENT, matching the arrow kernel's
-        # rule: try_divide (NOT /) maps a zero norm to NULL even under
-        # Spark 4's ANSI default where / THROWS DIVIDE_BY_ZERO, and a
-        # NULL element NULLs the fold — otherwise they'd pad out sparse
-        # top-k lists (or kill the job)
-        .where(F.col("cos").isNotNull())
-    )
+    # id columns keep their input Spark types (string clip ids work too)
+    out_schema = T.StructType([
+        T.StructField("query_id", queries.schema[query_id_col].dataType),
+        T.StructField("vec_id", df.schema[id_col].dataType),
+        T.StructField("cos", T.DoubleType()),
+    ])
+
+    def score(batches):
+        for b in batches:
+            ids = b[id_col].to_numpy()
+            mat, lens = _stack(b[vec_col], len(q_mat))
+            sims = _cosine(mat[:, :, None], lens[:, None], q_mat[:, None], q_len[None])
+            outs = []
+            for qi in range(len(q_ids)):
+                col = sims[:, qi]
+                cand = np.nonzero(np.isfinite(col) & (ids != q_ids[qi]))[0]
+                top = cand[np.lexsort((ids[cand], -col[cand]))][:k]
+                if len(top):
+                    outs.append(pd.DataFrame({
+                        "query_id": q_ids[qi], "vec_id": ids[top], "cos": col[top]}))
+            if outs:
+                yield pd.concat(outs)
+
+    pruned = df.select(id_col, vec_col).mapInPandas(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
-        scored.withColumn("__r__", F.row_number().over(w))
+        pruned.withColumn("__r__", F.row_number().over(w))
         .where(F.col("__r__") <= k)
         .select("query_id", "vec_id", "cos")
     )
@@ -120,17 +161,10 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     centroids: DataFrame = None,
     n_probe: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos) with
-    cos >= threshold and id_a < id_b.
-
-    ``impl='arrow'`` (default, same as cosine_topk): one vectorized numpy
-    pass per Arrow batch scores candidates ~100x faster than the
-    per-element expression fold on wide embeddings; identical result set
-    at any healthy threshold margin. ``impl='expr'`` is the bitwise
-    oracle mode (left-to-right fold == DuckDB list_reduce) kept for
-    cross-engine hash parity.
+    cos >= threshold and id_a < id_b. Candidates are scored by one Arrow
+    pass (``_cosine``); a pair with no cosine is absent.
 
     With centroids (the scale path): IVF multi-probe blocking — every
     vector is assigned to its ``n_probe`` nearest cells
@@ -149,7 +183,7 @@ def embedding_near_dup_pairs(
     if centroids is not None:
         memb = assign_probe_cells(
             df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")),
-            centroids, n_probe=n_probe, impl=impl,
+            centroids, n_probe=n_probe,
         ).select(F.col("query_id").alias("id"), "cell")
         cand = (
             memb.select("cell", F.col("id").alias("id_a"))
@@ -165,23 +199,7 @@ def embedding_near_dup_pairs(
         a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va__"))
         b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb__"))
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    if impl == "arrow":
-        return _score_pairs_arrow(pairs, df.schema[id_col].dataType, threshold)
-    cos = F.try_divide(dot_expr(F.col("__va__"), F.col("__vb__")),
-                       norm_expr(F.col("__va__")) * norm_expr(F.col("__vb__")))
-    return pairs.select("id_a", "id_b", cos.alias("cos")).where(F.col("cos") >= threshold)
-
-
-def _score_pairs_arrow(pairs: DataFrame, id_type, threshold: float) -> DataFrame:
-    """Arrow scoring of candidate pairs: one vectorized numpy pass per
-    batch instead of a per-element expression fold (~100x on wide
-    embeddings). Same result set at any healthy threshold margin; exact
-    float ties vs the fold may differ by reassociation, so the
-    oracle-parity gates keep impl='expr'."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    id_type = df.schema[id_col].dataType
     schema = T.StructType([
         T.StructField("id_a", id_type),
         T.StructField("id_b", id_type),
@@ -190,16 +208,10 @@ def _score_pairs_arrow(pairs: DataFrame, id_type, threshold: float) -> DataFrame
 
     def gen(batches):
         for b in batches:
-            if not len(b):
-                continue
-            va = np.stack([np.asarray(v, dtype=np.float64) for v in b["__va__"]])
-            vb = np.stack([np.asarray(v, dtype=np.float64) for v in b["__vb__"]])
-            na = np.linalg.norm(va, axis=1)
-            nb = np.linalg.norm(vb, axis=1)
-            denom = na * nb
-            denom[denom == 0.0] = np.inf
-            cos = (va * vb).sum(axis=1) / denom
-            keep = cos >= threshold
+            va, la = _stack(b["__va__"])
+            vb, lb = _stack(b["__vb__"], len(va))
+            cos = _cosine(va, la, vb, lb)
+            keep = cos >= threshold  # an undefined (NaN) cosine never is
             yield pd.DataFrame({
                 "id_a": b["id_a"].to_numpy()[keep],
                 "id_b": b["id_b"].to_numpy()[keep],
@@ -207,89 +219,6 @@ def _score_pairs_arrow(pairs: DataFrame, id_type, threshold: float) -> DataFrame
             })
 
     return pairs.select("id_a", "id_b", "__va__", "__vb__").mapInPandas(gen, schema)
-
-
-def _cosine_topk_arrow(
-    df: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Scale path: per-partition numpy scoring + local top-k via
-    mapInPandas (query matrix shipped in the closure — it is the small
-    side), then the global per-query window over <=k rows per partition."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = [r for r in queries.select(query_id_col, query_vec_col).collect()
-              if r[query_vec_col] is not None]
-    if not q_rows:
-        raise ValueError("cosine_topk: no non-null query vectors")
-    q_ids = np.array([r[query_id_col] for r in q_rows])  # any id type
-    q_mat = np.stack([np.asarray(r[query_vec_col], dtype=np.float64) for r in q_rows])
-    # zero-norm / NaN (NULL-element) queries have no defined cosine —
-    # excluded, matching the candidate-side rule below
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_ok = np.isfinite(q_norm) & (q_norm > 0)
-    q_ids, q_mat, q_norm = q_ids[q_ok], q_mat[q_ok], q_norm[q_ok]
-    q_mat = q_mat / q_norm[:, None]
-
-    # id columns keep their input Spark types (string clip ids work too)
-    q_id_type = dict((f.name, f.dataType) for f in queries.schema.fields)[query_id_col]
-    v_id_type = dict((f.name, f.dataType) for f in df.schema.fields)[id_col]
-    out_schema = T.StructType([
-        T.StructField("query_id", q_id_type),
-        T.StructField("vec_id", v_id_type),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def score(batches):
-        for b in batches:
-            if not len(b):
-                continue
-            # poison-pill isolation (the sibling-kernel convention): a
-            # NULL vector, a NULL element (numpy renders it NaN), or a
-            # zero-norm vector has no defined cosine — those rows are
-            # ABSENT from the result, never a NaN that Spark's desc
-            # window would rank FIRST, and never a dead stage
-            nn = b[vec_col].notna().to_numpy()
-            if not nn.any():
-                continue
-            ids = b[id_col].to_numpy()[nn]
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in b[vec_col].to_numpy()[nn]])
-            norms = np.linalg.norm(mat, axis=1)
-            ok = np.isfinite(norms) & (norms > 0)
-            if not ok.any():
-                continue
-            ids, mat, norms = ids[ok], mat[ok], norms[ok]
-            mat = mat / norms[:, None]
-            sims = mat @ q_mat.T  # (batch, |Q|)
-            outs = []
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                mask = ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if not len(cand_idx):
-                    continue
-                top = cand_idx[np.lexsort((ids[cand_idx], -col[cand_idx]))][:k]
-                outs.append(pd.DataFrame({
-                    "query_id": q_ids[qi], "vec_id": ids[top], "cos": col[top]}))
-            yield (pd.concat(outs) if outs
-                   else pd.DataFrame({"query_id": [], "vec_id": [], "cos": []}))
-
-    pruned = df.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        pruned.withColumn("__r__", F.row_number().over(w))
-        .where(F.col("__r__") <= k)
-        .select("query_id", "vec_id", "cos")
-    )
 
 
 def assign_cells(
@@ -310,8 +239,6 @@ def assign_cells(
     must be numeric (train_ivf_centroids emits integer ordinals) so the
     smallest-cell tiebreak can ride the struct as -cell; payload sits
     LAST in the struct and can never decide (cell ids are unique)."""
-    from pyspark.sql import types as T
-
     cell_t = dict((f.name, f.dataType)
                   for f in centroids.schema.fields)[centroid_id_col]
     if not isinstance(cell_t, (T.ByteType, T.ShortType, T.IntegerType,
@@ -331,10 +258,11 @@ def assign_cells(
             dot_expr(F.col("__v__"), F.col("__cv__")),
             norm_expr(F.col("__v__")) * norm_expr(F.col("__cv__"))).alias("__s__"),
     )
-    # zero-norm / NULL-element vectors have no defined cosine to ANY
-    # cell (try_divide -> NULL): absent from the index, the shared
-    # poison-pill rule (embedding_validate flags them upstream)
-    scored = scored.where(F.col("__s__").isNotNull())
+    # a vector with no defined cosine to ANY cell is absent from the
+    # index, the module's rule (embedding_validate flags it upstream):
+    # try_divide gives NULL for a zero norm, zip_with's NULL padding for
+    # a length mismatch, a NULL element NULL, and a non-finite one NaN
+    scored = scored.where(F.col("__s__").isNotNull() & ~F.isnan("__s__"))
     best = (scored.groupBy("vec_id")
             .agg(F.max(F.struct(
                 F.col("__s__").alias("s"),
@@ -360,7 +288,8 @@ def ivf_topk(
     """Approximate top-k: score only vectors in each query's n_probe
     nearest cells. At scale the index table is written partitioned by
     ``cell`` so the probe is a partition-pruned scan; here the same
-    pruning happens via the (query cell) semi-join."""
+    pruning happens via the (query cell) semi-join. A query or vector
+    with no cosine to any centroid is absent (the module's rule)."""
     indexed = assign_cells(df, centroids, id_col=id_col, vec_col=vec_col)
     q_cells = assign_probe_cells(
         queries, centroids, n_probe=n_probe,
@@ -390,73 +319,32 @@ def assign_probe_cells(
     n_probe: int,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    impl: str = "expr",
 ) -> DataFrame:
-    """(query_id, cell) for each query's n_probe nearest centroids.
-
-    impl='expr' (default): the pure-Catalyst fold — bitwise identical to
-    the DuckDB list_reduce oracle, which the ivf/near-dup-bucketed gates
-    assert down to tie order. impl='arrow': one numpy matmul per Arrow
-    batch against the (small, closure-shipped) centroid matrix — the
-    100 TB path; ~100x faster on wide embeddings, ties still broken by
-    ascending cell via a stable argsort over cell-sorted centroids, but
-    float reassociation can flip exact-tie assignments vs the fold, so
-    the oracle-parity gates keep 'expr'."""
-    if impl == "arrow":
-        return _assign_probe_cells_arrow(
-            queries, centroids, n_probe, query_id_col, query_vec_col)
-    c = F.broadcast(centroids.select(F.col("cell"), F.col("cvec").alias("__cv__")))
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv__"))
-    scored = q.crossJoin(c).select(
-        "query_id",
-        "cell",
-        F.try_divide(
-            dot_expr(F.col("__qv__"), F.col("__cv__")),
-            norm_expr(F.col("__qv__")) * norm_expr(F.col("__cv__"))).alias("__s__"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("__s__").desc(), F.col("cell"))
-    return (
-        scored.withColumn("__r__", F.row_number().over(w))
-        .where(F.col("__r__") <= n_probe)
-        .select("query_id", "cell")
-    )
-
-
-def _assign_probe_cells_arrow(queries, centroids, n_probe, query_id_col,
-                              query_vec_col) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    """(query_id, cell) for each query's n_probe nearest centroids by
+    ``_cosine``, ties by ascending cell (the oracle's window order): one
+    Arrow pass against the centroid matrix, which rides in the kernel's
+    closure. A (query, centroid) pair with no cosine is never a probe."""
     c_rows = sorted(centroids.select("cell", "cvec").collect(),
-                    key=lambda r: r["cell"])  # cell-ascending: stable
+                    key=lambda r: r["cell"])
     cells = np.array([r["cell"] for r in c_rows])  # any orderable cell type
-    cmat = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in c_rows])
-    cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cnorm[cnorm == 0.0] = 1.0
-    cmat = cmat / cnorm
+    c_mat, c_len = _stack([r["cvec"] for r in c_rows])
     take = min(n_probe, len(cells))
-
-    id_type = dict((f.name, f.dataType) for f in queries.schema.fields)[query_id_col]
-    cell_type = dict((f.name, f.dataType) for f in centroids.schema.fields)["cell"]
     schema = T.StructType([
-        T.StructField("query_id", id_type),
-        T.StructField("cell", cell_type),
+        T.StructField("query_id", queries.schema[query_id_col].dataType),
+        T.StructField("cell", centroids.schema["cell"].dataType),
     ])
 
     def gen(batches):
         for b in batches:
-            if not len(b):
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in b[query_vec_col]])
-            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-            nrm[nrm == 0.0] = 1.0
-            sims = (mat / nrm) @ cmat.T
-            # stable argsort over cell-sorted columns -> ties by asc cell
+            mat, lens = _stack(b[query_vec_col], len(c_mat))
+            sims = _cosine(mat[:, :, None], lens[:, None], c_mat[:, None], c_len[None])
+            # stable sort over cell-ascending columns: ties go to the
+            # smaller cell, and NaN (no cosine) sorts last
             top = np.argsort(-sims, axis=1, kind="stable")[:, :take]
+            keep = np.isfinite(np.take_along_axis(sims, top, axis=1)).ravel()
             yield pd.DataFrame({
-                "query_id": np.repeat(b[query_id_col].to_numpy(), take),
-                "cell": cells[top].ravel(),
+                "query_id": np.repeat(b[query_id_col].to_numpy(), take)[keep],
+                "cell": cells[top].ravel()[keep],
             })
 
     return queries.select(query_id_col, query_vec_col).mapInPandas(gen, schema)
@@ -474,7 +362,6 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     k: int = 64,
     n_iter: int = 5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Train the IVF coarse quantizer: spherical k-means (Lloyd's with
     cosine assignment + L2-normalized means). Returns a (cell, cvec)
@@ -492,8 +379,8 @@ def train_ivf_centroids(
     assignment break by ascending cell.
 
     Scale shape per iteration (the 10^12-row plan):
-    - ASSIGN: centroids broadcast (k x dim, driver-sized); impl='arrow'
-      scores one numpy matmul per Arrow batch — no shuffle, no window.
+    - ASSIGN: assign_probe_cells, one Arrow pass against the (k x dim,
+      driver-sized) centroids in its closure — no shuffle, no window.
     - MEAN: posexplode(vec) -> groupBy(cell, pos) sum/count. Catalyst's
       partial aggregation combines per partition BEFORE the exchange,
       so shuffle volume is O(partitions * k * dim) accumulator entries —
@@ -507,8 +394,6 @@ def train_ivf_centroids(
     the k-means optimum. Not SQL-oracle-gated (iterative float means
     reassociate differently across engines); verified by pytest on
     planted well-separated clusters + monotone inertia."""
-    import numpy as np
-
     base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v__"))
 
     # deterministic maximin seeding over a hash-ordered driver sample
@@ -545,7 +430,7 @@ def train_ivf_centroids(
         memb = assign_probe_cells(
             base.select(F.col("vec_id").alias("query_id"),
                         F.col("__v__").alias("query_vec")),
-            cdf, n_probe=1, impl=impl,
+            cdf, n_probe=1,
         )
         joined = base.join(
             memb.select(F.col("query_id").alias("vec_id"), "cell"), "vec_id")
@@ -581,7 +466,6 @@ def embedding_norm_violations(
     expected_dim: typing.Optional[int] = None,
     min_norm2_micro: typing.Optional[int] = None,
     max_norm2_micro: typing.Optional[int] = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-store validation: rows whose vector is NULL, has the
     wrong dimensionality, contains non-finite entries, or whose squared
@@ -591,55 +475,32 @@ def embedding_norm_violations(
     breaks every downstream cosine ranking; this is the cheap scan-time
     gate that catches it.
 
-    Output: (id, dim, norm2_micro) for flagged rows; NULL/non-finite
-    vectors carry dim 0 / norm2_micro NULL and are always flagged.
+    Output: (id, dim, norm2_micro) for flagged rows; a NULL vector has
+    dim 0, and a vector with no finite norm2_micro (a NULL or non-finite
+    element, or a sum past the long range) has norm2_micro NULL and is
+    always flagged. One Arrow pass sums the squares in dimension order
+    (``_fold``, the oracle's list_reduce order): row-local, a single
+    pruned scan, no shuffle."""
+    def score(batches):
+        for b in batches:
+            mat, lens = _stack(b["vec"])
+            with np.errstate(all="ignore"):
+                n2 = np.floor(_fold(mat, mat) * 1e6)
+                ok = np.isfinite(n2) & (n2 < 2.0 ** 63)
+            yield pd.DataFrame({
+                "id": b["id"],
+                "dim": lens.astype(np.int32),
+                "norm2_micro": pd.arrays.IntegerArray(
+                    np.where(ok, n2, 0).astype(np.int64), ~ok),
+            })
 
-    impl='arrow' (production): one numpy pass per Arrow batch — finite
-    check plus vectorized square-sum. impl='expr': zip-free native fold
-    (same left-to-right double accumulation as DuckDB list_reduce,
-    bit-reproducible — the oracle/determinism mode; no finite check,
-    Catalyst-interpreted per element). Both are row-local: single pruned
-    scan, no shuffle."""
-    if impl == "expr":
-        n2 = F.aggregate(
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0), lambda acc, v: acc + v)
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.coalesce(F.size(F.col(vec_col)), F.lit(0)).alias("dim"),
-            F.floor(n2 * 1e6).cast("long").alias("norm2_micro"))
-    else:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        def score(batches):
-            for b in batches:
-                ids, dims, n2s = [], [], []
-                for i, v in zip(b["id"], b["vec"]):
-                    ids.append(i)
-                    if v is None:
-                        dims.append(0)
-                        n2s.append(None)
-                        continue
-                    x = np.asarray(v, dtype=np.float64)
-                    dims.append(int(x.size))
-                    if not np.all(np.isfinite(x)):
-                        n2s.append(None)
-                    else:
-                        n2s.append(int(np.floor(float(x @ x) * 1e6)))
-                yield pd.DataFrame({"id": ids, "dim": dims,
-                                    "norm2_micro": pd.array(n2s, dtype="Int64")})
-
-        out_schema = T.StructType([
-            T.StructField("id", df.schema[id_col].dataType),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("norm2_micro", T.LongType()),
-        ])
-        base = (df.select(F.col(id_col).alias("id"),
-                          F.col(vec_col).alias("vec"))
-                .mapInPandas(score, out_schema))
+    out_schema = T.StructType([
+        T.StructField("id", df.schema[id_col].dataType),
+        T.StructField("dim", T.IntegerType()),
+        T.StructField("norm2_micro", T.LongType()),
+    ])
+    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+            .mapInPandas(score, out_schema))
     cond = F.col("norm2_micro").isNull()
     if expected_dim is not None:
         cond = cond | (F.col("dim") != expected_dim)
@@ -706,7 +567,6 @@ def label_agreement(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     k: int = 10,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Label-noise mining by neighborhood vote (the Confident-Learning
     triage question over an embedding space): for each query vector, its
@@ -727,9 +587,7 @@ def label_agreement(
     oracle attests exactly this NULL-propagating semantics, so the
     engine will not coalesce it away underneath you). All outputs are
     integer counts and labels — cross-engine exact; the cosine ranking
-    underneath has the same determinism contract as cosine_topk (arrow
-    matmul vs fold agree on ranking for quantized corpora; impl='expr'
-    is the bitwise mode).
+    underneath is cosine_topk's, bit-identical to the oracle's fold.
 
     Scale shape: neighbor search is ``cosine_topk`` (broadcast queries,
     two-level per-partition top-k — the corpus never shuffles); the
@@ -748,7 +606,7 @@ def label_agreement(
     # names flow through correctly
     nbrs = cosine_topk(df, queries, id_col=id_col, vec_col=vec_col,
                        query_id_col=query_id_col,
-                       query_vec_col=query_vec_col, k=k, impl=impl) \
+                       query_vec_col=query_vec_col, k=k) \
         .select(F.col("query_id").alias("__qid__"),
                 F.col("vec_id").alias("__nid__"))
     # NULL-labeled neighbors cannot vote: they would inflate

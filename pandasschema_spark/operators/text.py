@@ -328,8 +328,6 @@ def oov_scan(
     text_col: str,
     id_col: str,
     vocab: typing.Iterable[str],
-    *,
-    keep_clean: bool = False,
 ) -> DataFrame:
     """Closed-vocabulary validation: ``(id, n_tokens, n_oov)`` where
     ``n_oov`` counts whitespace tokens of ``lower(text)`` outside
@@ -346,23 +344,19 @@ def oov_scan(
     few thousand entries); open vocabularies take the explode +
     broadcast-anti-join route instead. Rows with NULL text drop out
     (NULL arithmetic — a null transcript is the notnull check's
-    finding); empty text counts 0 tokens and is clean. Default output
-    is violating rows only (``n_oov > 0``); ``keep_clean=True`` keeps
-    every non-null row for profiling."""
+    finding); empty text counts 0 tokens and is clean. Output is the
+    violating rows only (``n_oov > 0``)."""
     words = sorted({w.lower() for w in vocab})
     if not words:
         raise ValueError("vocab must be non-empty")
     text = F.col(text_col)
     nt = F.size(tokens_expr(text)).cast("long")
     inv = token_marker_count_expr(text, words)
-    out = df.select(
+    return df.select(
         F.col(id_col),
         nt.alias("n_tokens"),
         (nt - inv).alias("n_oov"),
-    )
-    if keep_clean:
-        return out.where(F.col("n_oov").isNotNull())
-    return out.where(F.col("n_oov") > 0)
+    ).where(F.col("n_oov") > 0)
 
 
 #: Java-regex \s (what normalized_text_expr's regexp_replace collapses):

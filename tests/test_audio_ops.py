@@ -267,7 +267,7 @@ def test_wav_header_stats_on_raw_pcm(spark, quality_df):
 
 def test_audio_embed_near_dup_integration(spark):
     """audio -> spectral embedding -> generic IVF near-dup recovers the
-    injected re-encodes exactly, on both the arrow and expr impls."""
+    injected re-encodes exactly."""
     from pandasschema_spark.operators.audio import audio_embed
     from pandasschema_spark.operators.similarity import embedding_near_dup_pairs
 
@@ -278,12 +278,10 @@ def test_audio_embed_near_dup_integration(spark):
     cents = emb.where(ordinal % 64 == 7).select(
         ordinal.alias("cell"), F.col("embedding").alias("cvec"))
     expected = set(expected_near_dup_pairs(n))
-    for impl in ("arrow", "expr"):
-        out = embedding_near_dup_pairs(
-            emb, id_col="clip_id", vec_col="embedding",
-            threshold=0.999, centroids=cents, n_probe=2, impl=impl)
-        got = {(r["id_a"], r["id_b"]) for r in out.collect()}
-        assert got == expected, impl
+    out = embedding_near_dup_pairs(
+        emb, id_col="clip_id", vec_col="embedding",
+        threshold=0.999, centroids=cents, n_probe=2)
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == expected
     emb.unpersist()
 
 

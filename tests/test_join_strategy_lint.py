@@ -1,7 +1,9 @@
-"""Source lint: an operator picks its own join strategy. No function in
-the package takes a ``broadcast`` or ``broadcast_*`` parameter — each
-join is broadcast or not by the operator's one rule, so callers have no
-switch whose other value every test would need to cover."""
+"""Source lint: an operator has one join strategy and one body. No
+function in the package takes a ``broadcast`` or ``broadcast_*``
+parameter — each join is broadcast or not by the operator's one rule —
+and none takes an ``impl`` parameter: each kernel has one body, gated
+by its DuckDB oracle. So callers have no switch whose other value every
+test would need to cover."""
 
 import ast
 import pathlib
@@ -14,13 +16,21 @@ def _params(args: ast.arguments):
     return [a.arg for a in named] + [a.arg for a in (args.vararg, args.kwarg) if a]
 
 
-def test_no_broadcast_parameter_in_any_signature():
-    found = []
+def _signature_params():
+    """(module, line, parameter) for every function and lambda."""
     for p in sorted(PKG.rglob("*.py")):
         for node in ast.walk(ast.parse(p.read_text())):
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
-                continue
-            for name in _params(node.args):
-                if name == "broadcast" or name.startswith("broadcast_"):
-                    found.append((str(p.relative_to(PKG)), node.lineno, name))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                for name in _params(node.args):
+                    yield str(p.relative_to(PKG)), node.lineno, name
+
+
+def test_no_broadcast_parameter_in_any_signature():
+    found = [f for f in _signature_params()
+             if f[2] == "broadcast" or f[2].startswith("broadcast_")]
+    assert found == [], found
+
+
+def test_no_impl_parameter_in_any_signature():
+    found = [f for f in _signature_params() if f[2] == "impl"]
     assert found == [], found

@@ -33,11 +33,6 @@ def test_vocab_is_literal_not_regex(spark):
     assert out[1] == (3, 3)
 
 
-def test_keep_clean_profile(spark):
-    out = _run(spark, ["ba", "zz", None], keep_clean=True)
-    assert out == {0: (1, 0), 1: (1, 1)}
-
-
 def test_guard_and_plan(spark):
     df = spark.createDataFrame([(1, "x")], "id long, t string")
     with pytest.raises(ValueError):

@@ -5,6 +5,9 @@ the operators must agree exactly (dedup, text) or meet recall bounds
 (LSH, IVF: approximate by design, verified against the exact operator).
 """
 
+import hashlib
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -42,6 +45,52 @@ def _grams(t: str, n=3):
     if len(w) < n:
         return {" ".join(w)}
     return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+
+
+def _spark_grams(df, text_col, id_col, n=3):
+    """{id: grams} as Spark's word_ngrams_expr emits them (None for NULL
+    text): the SQL form the DuckDB oracles replay, so the signature
+    closed forms below hash Java-\\s tokens, not a Python mirror's."""
+    return {r[0]: r[1] for r in df.select(
+        id_col, D.word_ngrams_expr(F.col(text_col), n)).collect()}
+
+
+def _md5(g: str) -> str:
+    return hashlib.md5(g.encode()).hexdigest()
+
+
+def _minhash(grams, k=16):
+    """MinHash closed form: per affine (a, b), the min over the grams of
+    (a * md5[:8] + b) mod p; NULL text gives k NULL parts."""
+    if grams is None:
+        return [None] * k
+    hs = [int(_md5(g)[:8], 16) for g in grams]
+    return [min((a * h + b) % D.MINHASH_PRIME for h in hs)
+            for a, b in D._affine_params(k)]
+
+
+def _simhash(grams):
+    """SimHash closed form: bit b < 32 is the majority vote of bit b of
+    md5[:8], bit 32 + b (b < 31) that of md5[8:16]; NULL text signs 0."""
+    if grams is None:
+        return 0
+    digs = [_md5(g) for g in grams]
+    sig = 0
+    for bit in range(63):
+        hs = [int(d[:8] if bit < 32 else d[8:16], 16) for d in digs]
+        if sum(2 * ((h >> bit % 32) & 1) - 1 for h in hs) > 0:
+            sig |= 1 << bit
+    return sig
+
+
+def _cos_fold(a, b):
+    """Scalar left fold in dimension order, the oracle's cosine."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += float(x) * float(y)
+        na += float(x) * float(x)
+        nb += float(y) * float(y)
+    return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
 # ---------------------------------------------------------------------------
@@ -159,21 +208,21 @@ def test_scope_unpersists(spark, docs, pinned):
 
 
 def test_minhash_arrow_native_equivalence(spark, docs):
+    """The Arrow signatures equal the hashlib closed form over Spark's
+    grams."""
     sub = docs.where(F.col("doc_id") < 60)
-    arrow = {r["id"]: r["sig"] for r in
-             D.minhash_signatures(sub, "text", "doc_id", impl="arrow").collect()}
-    native = {r["id"]: r["sig"] for r in
-              D.minhash_signatures(sub, "text", "doc_id", impl="native").collect()}
-    assert arrow == native
+    got = {r["id"]: r["sig"] for r in
+           D.minhash_signatures(sub, "text", "doc_id").collect()}
+    grams = _spark_grams(sub, "text", "doc_id")
+    assert got == {i: _minhash(g) for i, g in grams.items()}
 
 
 def test_simhash_arrow_native_equivalence(spark, docs):
     sub = docs.where(F.col("doc_id") < 60)
-    arrow = {r["id"]: r["simhash"] for r in
-             D.simhash64(sub, "text", "doc_id", impl="arrow").collect()}
-    native = {r["id"]: r["simhash"] for r in
-              D.simhash64(sub, "text", "doc_id", impl="native").collect()}
-    assert arrow == native
+    got = {r["id"]: r["simhash"] for r in
+           D.simhash64(sub, "text", "doc_id").collect()}
+    grams = _spark_grams(sub, "text", "doc_id")
+    assert got == {i: _simhash(g) for i, g in grams.items()}
 
 
 def test_simhash_properties(spark, docs):
@@ -234,17 +283,18 @@ def test_cosine_topk_matches_numpy(spark, emb):
 
 
 def test_cosine_topk_arrow_matches_expr(spark, emb):
+    """Scores and ranking equal a scalar left fold bit for bit: the Arrow
+    kernel folds in dimension order, as dot_expr and DuckDB do."""
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    def ranked(impl):
-        out = {}
-        for r in S.cosine_topk(emb, queries, k=10, impl=impl).collect():
-            out.setdefault(r["query_id"], []).append((round(r["cos"], 9), r["vec_id"]))
-        return {q: sorted(v, key=lambda t: (-t[0], t[1])) for q, v in out.items()}
-    a, e = ranked("arrow"), ranked("expr")
+    got = {}
+    for r in S.cosine_topk(emb, queries, k=10).collect():
+        got.setdefault(r["query_id"], []).append((-r["cos"], r["vec_id"]))
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
     for q in (0, 1, 2):
-        assert [v for _, v in a[q]] == [v for _, v in e[q]]
-        assert all(abs(x - y) < 1e-9 for (x, _), (y, _) in zip(a[q], e[q]))
+        expected = sorted((-_cos_fold(v, vecs[q]), i)
+                          for i, v in vecs.items() if i != q)[:10]
+        assert sorted(got[q]) == expected
 
 
 def test_ivf_topk_recall(spark, emb):
@@ -436,7 +486,7 @@ def test_train_ivf_centroids_recovers_planted_clusters(spark):
     memb = assign_probe_cells(
         df.select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("query_vec")),
-        cents, n_probe=1, impl="arrow")
+        cents, n_probe=1)
     got = {r["query_id"]: r["cell"] for r in memb.collect()}
     truth = {r["vec_id"]: r["truth"] for r in df.collect()}
     # cells are a relabeling of the planted clusters: grouping must match
@@ -465,19 +515,56 @@ def test_train_ivf_centroids_deterministic(spark):
 
 
 def test_cosine_topk_poison_pill_vectors(spark):
-    """Zero-norm, NULL-element, and NULL vectors have no defined cosine
-    — they must be ABSENT from top-k in BOTH impls (a NaN cosine would
-    rank FIRST under Spark's desc ordering and poison every query)."""
-    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 0.0]),
-            (3, [1.0, None]), (4, None), (5, [0.5, 0.5])]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame([(0, [1.0, 0.0])],
-                                    "query_id long, query_vec array<double>")
-    for impl in ("arrow", "expr"):
-        got = [r["vec_id"]
-               for r in S.cosine_topk(corpus, queries, k=10, impl=impl)
-               .orderBy(F.col("cos").desc(), "vec_id").collect()]
-        assert got == [1, 5], impl
+    """One rule for undefined cosines, across every vector kernel: a NULL
+    vector, a NULL or NaN element, a zero norm, or a length that differs
+    from the other side's (shorter or longer) has no cosine. The row is ABSENT — never a
+    crash, a NULL or NaN score (NaN would rank FIRST under Spark's desc
+    ordering), or an arbitrary cell — and embedding_norm_violations
+    flags it instead, with norm2_micro NULL where no finite norm
+    exists."""
+    nan = float("nan")
+    good = [(0, [1.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0]), (5, [0.5, 0.5, 0.0])]
+    bad = [(2, [0.0, 0.0, 0.0]), (3, [1.0, None, 0.0]), (4, None),
+           (6, [1.0, nan, 0.0]), (7, [1.0, 0.0]), (8, [1.0, 0.0, 0.0, 0.0])]
+    corpus = spark.createDataFrame(good + bad, "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (10, [0.0, 0.0, 0.0]), (11, [1.0, None, 0.0]),
+         (12, None), (13, [nan, 1.0, 0.0]), (14, [1.0])],
+        "query_id long, query_vec array<double>")
+    null_queries = spark.createDataFrame(
+        [(0, None), (1, None)], "query_id long, query_vec array<double>")
+    # cell 2 has a zero norm: never anyone's probe
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 0.0])],
+        "cell int, cvec array<double>")
+    as_queries = corpus.select(F.col("vec_id").alias("query_id"),
+                               F.col("embedding").alias("query_vec"))
+    good_pairs = {(0, 1), (0, 5), (1, 5)}
+    table = [
+        ("cosine_topk", S.cosine_topk(corpus, queries, k=10), {(0, 1), (0, 5)}),
+        ("cosine_topk, all-NULL queries",
+         S.cosine_topk(corpus, null_queries, k=10), set()),
+        ("near_dup_pairs", S.embedding_near_dup_pairs(corpus, threshold=0.5),
+         good_pairs),
+        ("near_dup_pairs, centroids", S.embedding_near_dup_pairs(
+            corpus, threshold=0.5, centroids=cents, n_probe=2), good_pairs),
+        ("assign_probe_cells", S.assign_probe_cells(as_queries, cents, n_probe=2),
+         {(i, c) for i in (0, 1, 5) for c in (0, 1)}),
+        ("ivf_topk", S.ivf_topk(corpus, queries, cents, k=10, n_probe=2),
+         {(0, 1), (0, 5)}),
+        ("ivf_topk, all-NULL queries",
+         S.ivf_topk(corpus, null_queries, cents, k=10, n_probe=2), set()),
+    ]
+    for name, out, expected in table:
+        rows = [tuple(r) for r in out.collect()]
+        assert {r[:2] for r in rows} == expected and len(rows) == len(expected), (name, rows)
+        if "cos" in out.columns:
+            assert all(math.isfinite(r[2]) for r in rows), (name, rows)
+    flagged = {r["id"]: (r["dim"], r["norm2_micro"]) for r in
+               S.embedding_norm_violations(corpus, expected_dim=3,
+                                           min_norm2_micro=1).collect()}
+    assert flagged == {2: (3, 0), 3: (3, None), 4: (0, None), 6: (3, None),
+                       7: (2, 1_000_000), 8: (4, 1_000_000)}
 
 
 def test_assign_cells_argmax_no_window(spark):
@@ -498,27 +585,27 @@ def test_assign_cells_argmax_no_window(spark):
 
 
 def test_signature_impl_parity_on_unicode_ws_and_null(spark):
-    """impl='arrow' and impl='native' must emit bit-identical signatures
-    even on non-ASCII whitespace (Java \\s is ASCII-only; Python
-    str.split() is Unicode-aware — the mirror must use the ASCII class)
-    and on NULL text (native: minhash [NULL]*k, simhash 0)."""
+    """Signatures equal the hashlib closed form over the grams Spark's
+    word_ngrams_expr emits, even on non-ASCII whitespace (Java \\s is
+    ASCII-only; Python str.split() is Unicode-aware — the kernels' mirror
+    must use the ASCII class) and on NULL text (minhash [NULL]*k,
+    simhash 0)."""
     from pandasschema_spark.operators.dedup import (
         minhash_signatures, simhash64, simhash_candidates)
 
-    rows = [(0, "foo bar baz qux extra words here"),
+    rows = [(0, "foo\u00a0bar baz qux extra words here"),
             (1, "plain ascii words only right here"),
-            (2, None), (3, ""), (4, " line sep tokens a b c")]
+            (2, None), (3, ""), (4, "\u2028line\u2028sep tokens a b c")]
     df = spark.createDataFrame(rows, "doc_id long, body string")
-    mh = {}
-    sh = {}
-    for impl in ("arrow", "native"):
-        mh[impl] = {r["id"]: r["sig"] for r in
-                    minhash_signatures(df, "body", "doc_id", impl=impl).collect()}
-        sh[impl] = {r["id"]: r["simhash"] for r in
-                    simhash64(df, "body", "doc_id", impl=impl).collect()}
-    assert mh["arrow"] == mh["native"]
-    assert sh["arrow"] == sh["native"]
-    assert mh["arrow"][2] == [None] * 16 and sh["arrow"][2] == 0
+    grams = _spark_grams(df, "body", "doc_id")
+    assert "foo\u00a0bar baz qux" in grams[0]  # NBSP does not split
+    mh = {r["id"]: r["sig"] for r in
+          minhash_signatures(df, "body", "doc_id").collect()}
+    sh = {r["id"]: r["simhash"] for r in
+          simhash64(df, "body", "doc_id").collect()}
+    assert mh == {i: _minhash(g) for i, g in grams.items()}
+    assert sh == {i: _simhash(g) for i, g in grams.items()}
+    assert mh[2] == [None] * 16 and sh[2] == 0
     with pytest.raises(ValueError, match="divide 64"):
         simhash_candidates(df, "body", "doc_id", chunk_bits=24)
 

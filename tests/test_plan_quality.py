@@ -334,14 +334,14 @@ def test_speech_rate_codegen_clean_and_bytes_pruned(spark):
 
 
 def test_embedding_norm_arrow_no_shuffle(spark):
-    """The production (arrow) embedding-norm scan is a single pass with
+    """The embedding-norm scan (one Arrow pass) is a single pass with
     zero exchanges — flagging must not cost a shuffle."""
     from pandasschema_spark.operators.similarity import embedding_norm_violations
 
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     plan = plan_of(embedding_norm_violations(
         emb, expected_dim=64, min_norm2_micro=990_000,
-        max_norm2_micro=1_010_000, impl="arrow"))
+        max_norm2_micro=1_010_000))
     assert "Exchange" not in plan
     assert plan.count("Scan parquet") == 1
 

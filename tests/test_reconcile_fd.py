@@ -1,6 +1,9 @@
 """Round-5 operators: header-detail reconciliation, FD check, per-group
 two-sample drift, speech-rate consistency."""
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,20 +112,24 @@ def test_embedding_norm_arrow_matches_expr_and_flags(spark):
             (1, [0.5] * 4),            # norm2 = 1e6 -> clean
             (2, [0.5] * 3),            # wrong dim
             (3, None),                 # null vec -> flagged
-            (4, [float("nan")] * 4)]   # non-finite -> flagged (arrow only)
+            (4, [float("nan")] * 4),   # non-finite -> flagged
+            (5, [0.3, 0.6, 0.5, 0.2]),  # norm2 ~0.74e6 -> under bounds
+            (6, [1e7] * 4)]            # norm2 * 1e6 past the long range
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     kw = dict(expected_dim=4, min_norm2_micro=990_000, max_norm2_micro=1_010_000)
-    arrow = {r["id"]: (r["dim"], r["norm2_micro"])
-             for r in embedding_norm_violations(df, impl="arrow", **kw).collect()}
-    assert set(arrow) == {0, 2, 3, 4}
-    assert arrow[0] == (4, 4_000_000)
-    assert arrow[3] == (0, None)
-    assert arrow[4][1] is None  # non-finite refused, not a garbage number
-    # expr mode (the oracle path) agrees on the finite rows
-    expr = {r["id"]: (r["dim"], r["norm2_micro"])
-            for r in embedding_norm_violations(
-                df.where(F.col("vec_id") < 4), impl="expr", **kw).collect()}
-    assert expr == {k: v for k, v in arrow.items() if k < 4}
+    got = {r["id"]: (r["dim"], r["norm2_micro"])
+           for r in embedding_norm_violations(df, **kw).collect()}
+
+    def micro(v):  # the oracle's floor(left fold * 1e6) over float32 inputs
+        acc = 0.0
+        for x in np.asarray(v, dtype=np.float32).astype(np.float64):
+            acc += x * x
+        return math.floor(acc * 1e6)
+
+    assert got == {0: (4, micro(rows[0][1])), 2: (3, micro(rows[2][1])),
+                   3: (0, None), 4: (4, None), 5: (4, micro(rows[5][1])),
+                   6: (4, None)}
+    assert got[0] == (4, 4_000_000) and got[5][1] < 990_000
 
 
 def test_ks_two_sample_by_matches_python(spark):
