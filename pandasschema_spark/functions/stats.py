@@ -90,14 +90,6 @@ def chi2_stat(observed: np.ndarray, expected: np.ndarray) -> float:
     return float(((observed[mask] - expected[mask]) ** 2 / expected[mask]).sum())
 
 
-def chi2_test(observed: np.ndarray, expected: np.ndarray):
-    """(statistic, p_value) for a goodness-of-fit test with
-    df = k - 1 categories."""
-    stat = chi2_stat(observed, expected)
-    df = int(np.sum(np.asarray(expected, dtype=float) > 0)) - 1
-    return stat, chi2_sf(stat, max(df, 1))
-
-
 def kolmogorov_sf(lam: float) -> float:
     """Q(lambda) = 2 sum_{k>=1} (-1)^{k-1} exp(-2 k^2 lambda^2).
 

@@ -394,48 +394,6 @@ def incremental_lsh_pairs(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.6,
-    max_bucket: typing.Optional[int] = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """LSH candidates verified by exact n-gram Jaccard: the scale path
-    (banding prunes the pair space) with the exact path's precision.
-    Returns (id_a, id_b, n_common, n_a, n_b)."""
-    cands = lsh_candidate_pairs(
-        df, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
-    )
-    grams = hold(doc_grams(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK))
-    # one agg, two broadcast join-backs: persist the slim (id, n_grams)
-    # frame so each build reads the cache instead of replaying the
-    # groupBy(id) exchange (same rationale as ngram_jaccard_pairs)
-    sizes = hold(grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-    ga = grams.select(F.col("id").alias("id_a"), F.col("gram").alias("g_a"))
-    gb = grams.select(F.col("id").alias("id_b"), F.col("gram").alias("g_b"))
-    common = (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(F.col("g_a") == F.col("g_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("n_b"))
-    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .where(jacc >= threshold)
-        .select("id_a", "id_b", "n_common", "n_a", "n_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------

@@ -19,19 +19,21 @@ Spark plan (the north star's clip_id uniqueness via hash-agg):
                  the key set must fit Spark's 8 GB broadcast limit]
   filter row_idx != global_min_row_idx                -> violations
 
+This module holds the leaves; the one production path is
+``Schema.validate -> plans.compiler.global_fail_rows -> duplicate_rows ->
+emit_violations``, and the tests gate that path against the oracle.
+
 A window (`row_number over partitionBy(value) orderBy(row_idx)`) expresses
 the same thing but funnels every row of a hot key through one task; the
 map-side-combined aggregation keeps partials bounded. The window form lives
-only in tests as the semantic oracle.
+only in tests as the semantic oracle (``distinct_violations_window_oracle``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.compiler import (VIOLATION_NAMES, aliased, emit_violations, fail_base,
-                              violation_columns)
-from ..validation import quote_ident, sql_literal
+from ..validation import quote_ident
 
 
 def duplicate_keys(df: DataFrame, value_col: str, row_col: str) -> DataFrame:
@@ -63,60 +65,13 @@ def duplicate_rows(base: DataFrame) -> DataFrame:
     keys are broadcast to the join-back, so they must fit Spark's
     per-relation broadcast limit (8 GB); a larger duplicate KEY set
     fails the job with Spark's broadcast error, with no shuffle
-    fallback."""
-    return _keeper_join(base).where("__r__ <> __m__").select("__b__.*")
-
-
-def _keeper_join(base: DataFrame) -> DataFrame:
-    """``base`` rows (aliased ``__b__``) whose value is duplicated,
-    joined (null-safe) to their value's count and keeper ordinal
-    ``__m__`` (aliased ``__d__``)."""
+    fallback. ``__r__`` must be unique among equal values: two rows
+    sharing the keeper ordinal both read as first, and the pair is not
+    reported."""
+    # null-safe join to each duplicated value's keeper ordinal __m__
     dupes = F.broadcast(duplicate_keys(base, "__v__", "__r__")).alias("__d__")
-    return base.alias("__b__").join(dupes, F.expr("__b__.__v__ <=> __d__.__v__"), "inner")
-
-
-def distinct_violations(
-    df: DataFrame,
-    value_col: str,
-    row_col: str,
-    *,
-    warn_col: str,
-    message: str,
-    check_id: str,
-    seq: int,
-    allow_empty: bool = False,
-    verify_row_key: bool = False,
-) -> DataFrame:
-    """Violation rows (VIOLATION_SCHEMA) for non-first duplicates.
-
-    CONTRACT: ``row_col`` must be unique at least among equal values —
-    keep-first is keyed on min(row), so two duplicate rows sharing the
-    same ordinal BOTH read as "first" and the pair is silently
-    under-reported (CLAUDE.md's LINEITEM_ROW warning is exactly this
-    hazard). ``verify_row_key=True`` adds a lazy guard branch that
-    RAISES when any duplicate value has a tied keeper ordinal, at the
-    cost of a second pruned-scan pass over the broadcast join (off by
-    default: the keeper join itself assumes duplicates are rare, and a
-    sound row key makes the guard a no-op)."""
-    base = fail_base(df, value_col, row_col)
-    kw = dict(warn_col=warn_col, message=message, check_id=check_id, seq=seq)
-    out = emit_violations(duplicate_rows(base),
-                          df.schema[value_col].dataType, allow_empty=allow_empty, **kw)
-    if not verify_row_key:
-        return out
-    ties = (_keeper_join(base).where("__r__ = __m__")
-            .groupBy(F.expr("__b__.__v__ AS __tv__"))
-            .agg(F.expr("count(1) AS __kc__"))
-            .where("__kc__ > 1"))
-    raised = "CAST(raise_error(concat({}, coalesce(CAST(__tv__ AS STRING), 'NULL'), ', ', " \
-        "CAST(__kc__ AS STRING), {})) AS BIGINT)".format(
-            sql_literal("distinct_violations: row key {!r} collides among "
-                        "duplicate values (value=".format(row_col)),
-            sql_literal(" rows tie at the keeper ordinal) — keep-first "
-                        "is ill-defined; use a unique row key"))
-    guard = ties.selectExpr(*aliased(
-        violation_columns(raised, "CAST(NULL AS STRING)", **kw), VIOLATION_NAMES))
-    return out.unionByName(guard)
+    return (base.alias("__b__").join(dupes, F.expr("__b__.__v__ <=> __d__.__v__"), "inner")
+            .where("__r__ <> __m__").select("__b__.*"))
 
 
 def _payload_hash(cols) -> F.Column:

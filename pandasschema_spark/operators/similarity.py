@@ -406,10 +406,18 @@ def train_ivf_centroids(
         .select("__v__")
         .collect()
     )
-    X = np.stack([np.asarray(r["__v__"], dtype=np.float64) for r in sample])
-    xn = np.linalg.norm(X, axis=1, keepdims=True)
-    xn[xn == 0.0] = 1.0
-    Xn = X / xn
+    # seed only from vectors with a cosine (the module's rule): every
+    # element finite, a nonzero norm, the length of the first such one
+    mat, lens = _stack([r["__v__"] for r in sample])
+    X = mat.T
+    with np.errstate(all="ignore"):
+        xn = np.linalg.norm(X, axis=1, keepdims=True)
+    ok = np.isfinite(X).all(axis=1) & np.isfinite(xn[:, 0]) & (xn[:, 0] > 0)
+    if not ok.any():
+        raise ValueError("train_ivf_centroids: no sampled vector has a cosine")
+    dim = int(lens[ok][0])
+    ok &= lens == dim
+    Xn = X[ok, :dim] / xn[ok]
     chosen = [0]  # smallest md5 hash
     best_cos = Xn @ Xn[0]  # similarity of every sample point to its nearest seed
     for _ in range(1, min(k, len(Xn))):
@@ -421,7 +429,6 @@ def train_ivf_centroids(
         cents = np.vstack([cents, cents[: k - len(cents)]])
 
     spark = df.sparkSession
-    dim = cents.shape[1]
     for _ in range(n_iter):
         cdf = local_frame(
             spark, [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],

@@ -67,21 +67,12 @@ _CONVERT_TYPES = {"int": int, "float": float, "str": str, "bool": bool, "complex
 
 
 def _base_kw(spec: dict) -> dict:
-    kw = {}
-    if spec.get("message") is not None:
-        kw["message"] = spec["message"]
-    if spec.get("mode"):
-        kw["mode"] = spec["mode"]
-    return kw
+    # an older spec's "mode" key is accepted and ignored
+    return {} if spec.get("message") is None else {"message": spec["message"]}
 
 
 def _base_spec(v) -> dict:
-    out = {}
-    if getattr(v, "_custom_message", None):
-        out["message"] = v._custom_message
-    if getattr(v, "mode", "auto") != "auto":
-        out["mode"] = v.mode
-    return out
+    return {"message": v._custom_message} if getattr(v, "_custom_message", None) else {}
 
 
 def check_to_spec(v) -> dict:
@@ -123,8 +114,6 @@ def check_to_spec(v) -> dict:
     if isinstance(v, DateFormatValidation):
         s["type"] = "date_format"
         s["format"] = v.date_format
-        if v.spark_format:
-            s["spark_format"] = v.spark_format
         return s
     if isinstance(v, CanConvertValidation):
         name = getattr(v.callable, "__name__", None)
@@ -182,7 +171,7 @@ def check_to_spec(v) -> dict:
                 "then": check_to_spec(v.then_validation),
                 "message": v.message}
     if isinstance(v, IsDtypeValidation):
-        # merge _base_spec so a custom message/mode round-trips like on
+        # merge _base_spec so a custom message round-trips like on
         # every other check type
         return {**s, "type": "is_dtype", "dtype": np.dtype(v.dtype).name}
     raise PanSchArgumentError(
@@ -226,13 +215,6 @@ def spec_to_check(spec: dict, spark=None):
         # ~/|/& construct wrapper objects without a message slot; a
         # combinator spec's custom message overrides the default quirky
         # repr-interpolated one ('(a) <built-in function or_> (b)').
-        # 'mode' has no meaning on the wrapper (each child spec carries
-        # its own) — reject rather than silently discard a config that
-        # thinks it forced pandas/native evaluation
-        if "mode" in kw:
-            raise PanSchArgumentError(
-                "'mode' is not valid on a combinator spec ({}) — set it on "
-                "the child specs instead".format(t))
         if "message" in kw:
             check._custom_message = kw["message"]
         return check
@@ -256,7 +238,8 @@ def spec_to_check(spec: dict, spark=None):
     if t == "matches_pattern":
         return MatchesPatternValidation(spec["pattern"], **kw)
     if t == "date_format":
-        return DateFormatValidation(spec["format"], spec.get("spark_format"), **kw)
+        # an older spec's "spark_format" key is accepted and ignored
+        return DateFormatValidation(spec["format"], **kw)
     if t == "can_convert":
         if spec["to"] not in _CONVERT_TYPES:
             raise PanSchArgumentError("unknown can_convert target {!r}".format(spec["to"]))
@@ -290,9 +273,6 @@ def spec_to_check(spec: dict, spark=None):
                                  spec["column"],
                                  message=spec.get("message"))
     if t == "is_dtype":
-        if "mode" in kw:
-            raise PanSchArgumentError(
-                "'mode' is not valid on the frame-level is_dtype spec")
         return IsDtypeValidation(np.dtype(spec["dtype"]), **kw)
     raise PanSchArgumentError("unknown check spec type {!r}".format(t))
 

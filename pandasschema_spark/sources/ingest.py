@@ -33,12 +33,13 @@ ORDINAL_COL = "row_ord"
 
 def read_csv_with_ordinal(spark: SparkSession, path: str, *,
                           header: bool = True, ordinal_col: str = ORDINAL_COL,
-                          infer_schema: bool = False, **options) -> DataFrame:
-    """CSV -> DataFrame with a read-order ordinal column. All columns stay
-    strings by default (``infer_schema=False``): the reference validates
-    CSV cells by their string repr (nulls render 'nan'), and string-in /
-    string-out keeps warning values byte-compatible."""
-    reader = spark.read.options(header=header, inferSchema=infer_schema, **options)
+                          **options) -> DataFrame:
+    """CSV -> DataFrame with a read-order ordinal column; ``options`` go
+    to Spark's CSV reader. All columns stay strings unless the options
+    set ``inferSchema``: the reference validates CSV cells by their
+    string repr (nulls render 'nan'), and string-in / string-out keeps
+    warning values byte-compatible."""
+    reader = spark.read.options(header=header, **options)
     return with_file_ordered_row_index(reader.csv(path), ordinal_col)
 
 

@@ -53,11 +53,11 @@ def stream_validate(
     *,
     validate_columns: typing.List[str],
     row_key: str = "row_ord",
-    trigger_available_now: bool = True,
     max_files_per_trigger: int = None,
 ):
-    """Start (and with available-now trigger, run to completion) the
-    incremental validation stream. Returns the StreamingQuery."""
+    """Start the incremental validation stream with an available-now
+    trigger: it validates every file present at start, then stops.
+    Returns the StreamingQuery."""
     reader = (
         spark.readStream.schema(source_schema)
         .option("recursiveFileLookup", "true")
@@ -90,13 +90,12 @@ def stream_validate(
             ).withColumn("finished_at", F.current_timestamp())
             warehouse.overwrite_partitions(metrics, STREAM_METRICS_TABLE, partition_by=["batch_id"])
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_histogram(
@@ -177,56 +176,3 @@ def streaming_rate_limit(
         .select(user_col, F.col("win.start").alias("window_start"),
                 "n_events")
     )
-
-
-def streaming_dedup_within_watermark(
-    stream: DataFrame,
-    id_cols: typing.Sequence[str],
-    ts_col: str,
-    *,
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Bounded-state streaming deduplication: drop records whose
-    ``id_cols`` key was already seen within the watermark horizon —
-    the production answer to at-least-once ingest (retried producers,
-    replayed partitions) where exact global dedup would need unbounded
-    state.
-
-    Thin, documented wrapper over ``dropDuplicatesWithinWatermark``:
-    state holds one entry per key seen in the last ``delay`` of event
-    time and is evicted by the watermark, so memory is bounded by the
-    key arrival RATE, not the stream's lifetime — at 10^12 events/day
-    with a 10-minute horizon that is ~10^7 in-flight keys per shard,
-    not 10^12. The guarantee is asymmetric and stated plainly:
-    duplicates closer together than ``delay`` (the at-least-once retry
-    window) are ALWAYS dropped; duplicates farther apart MAY both
-    survive — the downstream batch keep-first pass (operators/
-    distinct.py) remains the exactness reconciler, same division of
-    labor as streaming_duplicate_violations.
-
-    The first-arrival row is kept (matching keep-first by arrival);
-    output is append-mode safe."""
-    if not id_cols:
-        raise ValueError("id_cols must be non-empty")
-    return (stream.withWatermark(ts_col, delay)
-            .dropDuplicatesWithinWatermark(list(id_cols)))
-
-
-def streaming_cms_sketch(
-    stream: DataFrame, col: str, *, width: int = 1024, depth: int = 4
-) -> DataFrame:
-    """Streaming count-min sketch: the same md5-chunk counters as the
-    batch :func:`..operators.sketch.cms_sketch`, maintained incrementally
-    — state is the (r, b) counter grid, bounded at depth x width forever,
-    which is the entire point of sketching a stream (an exact frequency
-    table grows with the key space; the sketch never does). Because the
-    counters are pure additions over deterministic hashes, the streaming
-    result after any prefix equals the batch sketch of the same prefix
-    (pytest-locked parity), and sketches from different streams/days
-    still merge by addition downstream."""
-    from ..operators.sketch import cms_sketch as _batch
-
-    # the batch builder's projection is already incremental-safe: a
-    # groupBy-count over row-local hashes (no windows, no ordering), so
-    # structured streaming runs the identical plan in update mode
-    return _batch(stream, col, width=width, depth=depth)

@@ -14,14 +14,17 @@ Compilation contract
 predicate as Spark SQL text over the column expression ``col_sql``,
 null-free at each native leaf (nulls coalesced to false, mirroring pandas
 masks which are NA-free after coercion); ``~``/``&``/``|`` compose the strings.
-A native check gives its Catalyst expression as ``sql_predicate(col_sql,
-spark_type)``, or None when no provably-equivalent one exists for the
-input type; a leaf that exists only as a Column (the Arrow fallback, a
-user lambda) goes through ``leaf(column)``, which selects it under a
-generated name and returns the SQL that names it. The schema compiler
-inverts the text, applies the ``allow_empty`` exemption (reference
-validation.py:86-95) and emits violation structs, all as SQL: a pyspark
-Column call costs about 11 py4j round trips, a SQL string none.
+There is one compile rule and no per-check override: a check gives its
+Catalyst expression as ``sql_predicate(col_sql, spark_type)`` when that
+expression is provably identical to its pandas formula for the input
+type, and None otherwise; on None, ``pass_sql`` runs the formula itself
+through the Arrow fallback. A leaf that exists only as a Column (the
+Arrow fallback, a user lambda) goes through ``leaf(column)``, which
+selects it under a generated name and returns the SQL that names it.
+The schema compiler inverts the text, applies the ``allow_empty``
+exemption (reference validation.py:86-95) and emits violation structs,
+all as SQL: a pyspark Column call costs about 11 py4j round trips, a SQL
+string none.
 
 ``pandas_validate(series) -> bool Series`` is the same check expressed as
 the reference's pandas formula — used inside the Arrow fallback and as the
@@ -213,17 +216,14 @@ class _BaseValidation:
 class _SeriesValidation(_BaseValidation):
     """A check defined by an element-wise boolean mask.
 
-    Reference: validation.py:31-110. ``mode`` selects the compilation
-    strategy: 'auto' (native Catalyst expr when provably equivalent for the
-    input type, else Arrow pandas_udf), 'native' (force expr), 'pandas'
-    (force Arrow UDF — exact reference semantics in all corner cases).
+    Reference: validation.py:31-110. The check compiles to its native
+    ``sql_predicate`` where one exists for the input type (it exists only
+    where it is provably identical to ``pandas_validate``), else to an
+    Arrow pandas_udf running ``pandas_validate`` itself.
     """
 
-    def __init__(self, message: str = None, mode: str = "auto"):
+    def __init__(self, message: str = None):
         self._custom_message = message
-        if mode not in ("auto", "native", "pandas"):
-            raise PanSchArgumentError("mode must be auto|native|pandas, got {!r}".format(mode))
-        self.mode = mode
 
     # -- messages ----------------------------------------------------------
     @property
@@ -253,14 +253,9 @@ class _SeriesValidation(_BaseValidation):
         """The null-free pass predicate as SQL (see the module contract):
         the native leaf, coalesced, else the Arrow fallback over
         ``col_sql`` selected through ``leaf``."""
-        if self.mode != "pandas":
-            native = self.sql_predicate(col_sql, spark_type)
-            if native is not None:
-                return _leaf(native)
-            if self.mode == "native":
-                raise PanSchArgumentError(
-                    "{} has no native Spark expression for input type {}".format(
-                        type(self).__name__, spark_type.simpleString()))
+        native = self.sql_predicate(col_sql, spark_type)
+        if native is not None:
+            return _leaf(native)
         return leaf(self._udf_leaf(lambda: _pandas_udf(self.pandas_validate))(F.expr(col_sql)))
 
     def _udf_leaf(self, build):
@@ -450,36 +445,29 @@ class CanConvertValidation(CanCallValidation):
         return "cannot be converted to type {}".format(self.callable)
 
     def sql_predicate(self, col, spark_type):
-        # Fast native approximations for the common constructors. Only
-        # enabled under mode='native' (explicit opt-in): CPython's int()
-        # grammar has corners (unicode digits/whitespace) a Java regex
-        # can't reproduce exactly, so 'auto' keeps the Arrow-UDF exact path.
-        if self.mode != "native":
-            return None
-        if self.callable is int and isinstance(spark_type, T.StringType):
-            return "(trim({}) RLIKE {})".format(col, sql_literal(r"^[+-]?[0-9]+(_[0-9]+)*$"))
-        if self.callable is int and is_numeric_spark_type(spark_type):
-            # int(float) succeeds except NaN/inf; ints always succeed
-            if isinstance(spark_type, (T.FloatType, T.DoubleType)):
-                return "((({0} IS NOT NULL AND (NOT isnan({0}))) AND ({0} <> {1})) AND ({0} <> {2}))".format(
-                    col, sql_literal(math.inf), sql_literal(-math.inf))
-            return "({} IS NOT NULL)".format(col)
+        # SURVEY V4's exact forms. str() never raises, NULL included (it
+        # reads 'nan'). int() of a number or a bool raises only on a NULL
+        # (NaN in the Arrow batch), NaN or an infinity. int() of a string
+        # has no regex twin: CPython reads unicode digits (int('１２') == 12).
         if self.callable is str:
             return "true"
-        return None
+        if self.callable is not int or not is_numeric_spark_type(spark_type):
+            return None
+        if isinstance(spark_type, (T.FloatType, T.DoubleType)):
+            return "((({0} IS NOT NULL AND (NOT isnan({0}))) AND ({0} <> {1})) AND ({0} <> {2}))".format(
+                col, sql_literal(math.inf), sql_literal(-math.inf))
+        return "({} IS NOT NULL)".format(col)
 
 
 class DateFormatValidation(_SeriesValidation):
     """Pass iff datetime.strptime(str(x), fmt) succeeds — *semantic* date
     validity, not shape (reference validation.py:393-419; '11112233' fails
-    '%Y%m%d' because month 22 is invalid). strptime directives differ from
-    Spark datetime patterns, so the exact path is always the Arrow UDF; a
-    fast native variant is opt-in via spark_format= when the caller has
-    verified equivalence for their format."""
+    '%Y%m%d' because month 22 is invalid). It always runs as the Arrow
+    UDF: no Spark datetime pattern parses exactly what strptime parses,
+    not even for '%Y%m%d' ('2024111' is 2024-11-01 to strptime)."""
 
-    def __init__(self, date_format: str, spark_format: str = None, **kw):
+    def __init__(self, date_format: str, **kw):
         self.date_format = date_format
-        self.spark_format = spark_format
         super().__init__(**kw)
 
     @property
@@ -496,12 +484,6 @@ class DateFormatValidation(_SeriesValidation):
     def pandas_validate(self, series):
         return series.astype(str).apply(self.valid_date)
 
-    def sql_predicate(self, col, spark_type):
-        if self.spark_format is None:
-            return None
-        return "(try_to_timestamp(CAST({} AS STRING), {}) IS NOT NULL)".format(
-            col, sql_literal(self.spark_format))
-
 
 # ---------------------------------------------------------------------------
 # expression checks (reference validation.py:194-214, 296-390)
@@ -510,10 +492,10 @@ class DateFormatValidation(_SeriesValidation):
 class InRangeValidation(_SeriesValidation):
     """pd.to_numeric(series, errors='coerce') then (s >= min) & (s < max):
     min inclusive, max exclusive; non-numeric text coerces to NaN -> fails
-    (reference validation.py:194-214). Native path for numeric Spark types
-    is exactly equivalent (null -> fail); string input takes the pandas
-    path by default because pd.to_numeric's grammar differs from Spark's
-    cast ('0x1f', '1_0', locale corner cases)."""
+    (reference validation.py:194-214). Numeric Spark types compile to an
+    exactly equivalent native predicate (null -> fail); string input runs
+    the pandas formula on Arrow batches, because pd.to_numeric's grammar
+    differs from Spark's cast ('0x1f', '1_0', locale corner cases)."""
 
     def __init__(self, min: float = -math.inf, max: float = math.inf, **kw):
         self.min = min
@@ -552,10 +534,6 @@ class InRangeValidation(_SeriesValidation):
             if floats or isinstance(spark_type, T.DecimalType):
                 ok.append("(NOT isnan({}))".format(c))
             return functools.reduce("({} AND {})".format, ok)
-        if self.mode == "native" and isinstance(spark_type, T.StringType):
-            c = "try_cast(trim({}) AS DOUBLE)".format(col)
-            return "((({0} >= {1}) AND ({0} < {2})) AND (NOT isnan(coalesce({0}, 0.0D))))".format(
-                c, lo, hi)
         return None
 
 
@@ -808,7 +786,7 @@ class ConditionalValidation(_SeriesValidation):
 
     ``when_fn(df) -> Column`` builds the condition from the live frame
     (any columns); ``then_validation`` is any single-column validation
-    (its own native/pandas compilation strategy is reused unchanged).
+    (it compiles as it does alone: native SQL or the Arrow formula).
     ``when_pandas_fn`` (optional) is the condition as a pandas
     frame -> bool Series formula for parity tests. Serializable via the
     ``conditional`` spec form (serialize.conditional_check) when built
@@ -1023,12 +1001,11 @@ class InTableValidation(_SeriesValidation):
         rows = (self.dim_df.select(self.dim_col).distinct()
                 .limit(cap + 1).collect())
         if len(rows) > cap:
-            from .errors import PanSchArgumentError
             raise PanSchArgumentError(
                 "InTableValidation pandas fallback refused: dimension column "
                 "{!r} has more than {:,} distinct values — collecting it to "
-                "the driver would OOM. Use the default plan (mode='auto': "
-                "broadcast LEFT ANTI join) which never collects the dimension."
+                "the driver would OOM. Validate through Schema.validate, whose "
+                "broadcast LEFT ANTI join never collects the dimension."
                 .format(self.dim_col, cap))
         return series.isin([r[self.dim_col] for r in rows])
 

@@ -1,18 +1,18 @@
 """Clips-table suite: deterministic synthesis oracle, injected violations,
-PCM SNR invariant, drift checks, salted distinct vs window oracle."""
+PCM SNR invariant, drift checks, Schema.validate's uniqueness vs the
+window oracle."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from pandasschema_spark import Column, Schema
 from pandasschema_spark.clips_suite import validate_clips
 from pandasschema_spark.functions import audio as A
 from pandasschema_spark.operators import drift as D
-from pandasschema_spark.operators.distinct import (
-    distinct_violations,
-    distinct_violations_window_oracle,
-)
+from pandasschema_spark.operators.distinct import distinct_violations_window_oracle
 from pandasschema_spark.sources import datagen as G
+from pandasschema_spark.validation import IsDistinctValidation
 
 N = 7000  # covers all six injection classes: 997,1994,2991,3988,4985,5982,6979
 SEED = 42
@@ -134,9 +134,10 @@ def test_salted_distinct_matches_window_oracle(spark):
         )
         .withColumn("r", F.col("id"))
     )
-    fast = distinct_violations(
-        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0
-    ).select("row").collect()
+    # the production path: Schema.validate -> global_fail_rows ->
+    # duplicate_rows -> emit_violations
+    fast = (Schema([Column("v", [IsDistinctValidation()])])
+            .validate(df, columns=["v"], row_key="r").violations.select("row").collect())
     oracle = distinct_violations_window_oracle(df, "v", "r").select("row").collect()
     assert sorted(r["row"] for r in fast) == sorted(r["row"] for r in oracle)
 
@@ -146,9 +147,8 @@ def test_distinct_nulls_count_as_equal(spark):
         T.StructField("v", T.StringType()), T.StructField("r", T.LongType())
     ])
     df = spark.createDataFrame([(None, 0), (None, 1), ("a", 2)], sch)
-    rows = distinct_violations(
-        df, "v", "r", warn_col="v", message="m", check_id="c", seq=0
-    ).collect()
+    rows = (Schema([Column("v", [IsDistinctValidation()])])
+            .validate(df, columns=["v"], row_key="r").violations.collect())
     assert [r["row"] for r in rows] == [1]
     assert rows[0]["value"] == "nan"
 

@@ -5,7 +5,8 @@ from pyspark.sql import functions as F
 
 from pandasschema_spark import Column, Schema
 from pandasschema_spark.errors import PanSchArgumentError
-from pandasschema_spark.validation import FuzzyInListValidation, _edit_distance
+from pandasschema_spark.validation import (CustomSeriesValidation, FuzzyInListValidation,
+                                           _edit_distance)
 
 OPTS = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
@@ -22,10 +23,15 @@ def _mk(spark):
     return spark.createDataFrame(rows, "k long, pr string")
 
 
-@pytest.mark.parametrize("mode", ["native", "pandas"])
-def test_fuzzy_membership_both_paths(spark, mode):
+@pytest.mark.parametrize("path", ["native", "pandas"])
+def test_fuzzy_membership_both_paths(spark, path):
+    # "pandas" runs the same check's formula as an Arrow UDF, the route
+    # pass_sql takes where a check has no native predicate
+    v = FuzzyInListValidation(OPTS, max_dist=1)
+    if path == "pandas":
+        v = CustomSeriesValidation(v.pandas_validate, v.message)
     df = _mk(spark)
-    schema = Schema([Column("pr", [FuzzyInListValidation(OPTS, max_dist=1, mode=mode)])])
+    schema = Schema([Column("pr", [v])])
     res = schema.validate(df, columns=["pr"], row_key="k")
     bad = sorted(r["row"] for r in res.violations.collect())
     assert bad == [4, 5, 6]

@@ -1,6 +1,7 @@
 """tools/plan_report.py's query mode prints the executed plans of named
-registry queries with the per-session ids masked, so the output of two
-runs (or of two checkouts) diffs line by line."""
+registry queries with the per-session ids and lambda variable numbers
+masked, so the output of two runs (or of two checkouts) diffs line by
+line."""
 
 import os
 import re
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from plan_report import plan_of, query_plans  # noqa: E402
+from plan_report import masked_plan, plan_of, query_plans  # noqa: E402
 from test_plan_quality import SF_DIR  # noqa: E402
 
 NAMES = ["val_inrange", "dedup_exact"]
@@ -32,3 +33,16 @@ def test_plan_of_escapes_sentinels(spark):
     plan = plan_of(df)
     assert "a\\x00b\\x01" in plan
     assert "\x00" not in plan and "\x01" not in plan
+
+
+def test_lambda_variable_numbers_are_masked(spark):
+    """pyspark numbers a Column lambda's variable from a process-wide
+    counter (``lambda x_65#``), so one query built twice reads two
+    names; the masked plans are equal."""
+    def build():
+        return spark.range(3).select(
+            F.transform(F.array("id", "id"), lambda x: x + 1).alias("a"))
+
+    a, b = masked_plan(build()), masked_plan(build())
+    assert "lambda x_#" in a
+    assert a == b

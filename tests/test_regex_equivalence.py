@@ -1,15 +1,16 @@
 """Stress the MatchesPatternValidation native-path gate: for every
-pattern the engine compiles to a Java-regex rlike (mode='auto' picks
-native), the result must equal the pandas str.contains formula on
+pattern the engine compiles to a Java-regex rlike, the result must equal
+the pandas str.contains formula, run as the Arrow fallback, on
 adversarial inputs. Patterns where Java and Python regex semantics are
 known to diverge must be REJECTED by the gate (fall back to pandas).
 """
 
 import pytest
-from pyspark.sql import types as T
+from pyspark.sql import functions as F, types as T
 
 from pandasschema_spark.plans.compiler import _Leaves
-from pandasschema_spark.validation import MatchesPatternValidation, _java_regex_safe
+from pandasschema_spark.validation import (MatchesPatternValidation, _java_regex_safe,
+                                           _pandas_udf)
 
 # strings chosen to poke anchors, multiline, unicode, dots, escapes
 PROBES = [
@@ -40,19 +41,17 @@ UNSAFE_PATTERNS = [
 
 @pytest.mark.parametrize("pattern", SAFE_PATTERNS)
 def test_native_equals_pandas(spark, pattern):
-    v_auto = MatchesPatternValidation(pattern, mode="auto")
-    v_pandas = MatchesPatternValidation(pattern, mode="pandas")
+    v = MatchesPatternValidation(pattern)
     schema = T.StructType([T.StructField("i", T.LongType()), T.StructField("v", T.StringType())])
     df = spark.createDataFrame(list(enumerate(PROBES)), schema)
-
-    def mask(v):
-        leaves = _Leaves(df)
-        pred = v.pass_sql("`v`", T.StringType(), leaves)
-        rows = leaves.frame().selectExpr("i", pred + " AS p").orderBy("i").collect()
-        return [bool(r["p"]) for r in rows]
-
-    auto, pd_ = mask(v_auto), mask(v_pandas)
-    assert auto == pd_, "pattern {!r}: native={} pandas={}".format(pattern, auto, pd_)
+    leaves = _Leaves(df)
+    native = v.pass_sql("`v`", T.StringType(), leaves)
+    assert "RLIKE" in native, native
+    fallback = leaves(_pandas_udf(v.pandas_validate)(F.col("v")))
+    rows = (leaves.frame().selectExpr("i", native + " AS n", fallback + " AS f")
+            .orderBy("i").collect())
+    got, pd_ = [bool(r["n"]) for r in rows], [bool(r["f"]) for r in rows]
+    assert got == pd_, "pattern {!r}: native={} pandas={}".format(pattern, got, pd_)
 
 
 @pytest.mark.parametrize("pattern", UNSAFE_PATTERNS)

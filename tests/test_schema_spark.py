@@ -265,48 +265,27 @@ def test_intable_pandas_fallback_guard(spark, monkeypatch):
 def test_inrange_nan_and_infinite_bounds_native_matches_pandas(spark):
     """Spark orders NaN GREATER than every double, so with an infinite
     max bound the native predicate used to pass NaN (and with both
-    bounds infinite, even NULL). The pandas formula fails both; the
-    native path must agree."""
+    bounds infinite, even NULL). The pandas formula, run as the Arrow
+    fallback, fails both; the native path must agree."""
     import math
 
     from pandasschema_spark.column import Column
     from pandasschema_spark.schema import Schema
-    from pandasschema_spark.validation import InRangeValidation
+    from pandasschema_spark.validation import CustomSeriesValidation, InRangeValidation
 
     df = spark.createDataFrame(
         [(0, 1.0), (1, float("nan")), (2, None), (3, -5.0)],
         "row_ord long, v double")
 
     for lo, hi in [(0, math.inf), (-math.inf, math.inf), (0, 10)]:
+        native = InRangeValidation(lo, hi)
         fails = {}
-        for mode in ("native", "pandas"):
-            sch = Schema([Column("v", [InRangeValidation(lo, hi, mode=mode)])])
-            res = sch.validate(df, columns=["v"], row_key="row_ord")
-            fails[mode] = sorted(r["row"] for r in res.violations.collect())
+        for path, v in (("native", native),
+                        ("pandas", CustomSeriesValidation(native.pandas_validate, native.message))):
+            res = Schema([Column("v", [v])]).validate(df, columns=["v"], row_key="row_ord")
+            fails[path] = sorted(r["row"] for r in res.violations.collect())
         assert fails["native"] == fails["pandas"], (lo, hi, fails)
         assert 1 in fails["native"] and 2 in fails["native"], (lo, hi)
-
-
-def test_distinct_verify_row_key_guard(spark):
-    """Opt-in guard: a row key colliding among equal values makes
-    keep-first ill-defined — verify_row_key=True raises instead of
-    silently under-reporting; a sound key leaves output unchanged."""
-    import pytest
-
-    from pandasschema_spark.operators.distinct import distinct_violations
-
-    kw = dict(warn_col="v", message="dup", check_id="c", seq=0)
-    good = spark.createDataFrame(
-        [(0, "a"), (1, "a"), (2, "b")], "r long, v string")
-    rows = distinct_violations(good, "v", "r", verify_row_key=True, **kw).collect()
-    assert [x["row"] for x in rows] == [1]
-    collided = spark.createDataFrame(
-        [(0, "a"), (0, "a"), (2, "a")], "r long, v string")
-    # silent default: the tied pair both read as 'first' -> only row 2
-    assert [x["row"] for x in distinct_violations(
-        collided, "v", "r", **kw).collect()] == [2]
-    with pytest.raises(Exception, match="keeper ordinal"):
-        distinct_violations(collided, "v", "r", verify_row_key=True, **kw).collect()
 
 
 def _round_trips(build):

@@ -204,21 +204,27 @@ def test_combinator_custom_message_round_trip():
     assert schema_to_dict(s) == d
 
 
-def test_combinator_mode_rejected():
-    """'mode' on a combinator spec would be silently discarded (the
-    wrapper has no evaluation mode of its own) — it must raise instead of
-    letting a config believe it forced pandas/native evaluation."""
-    import pytest as _pytest
+def test_older_mode_and_spark_format_keys_ignored():
+    """An older spec's per-check compile override ("mode", on a check or
+    a combinator) and DateFormat's "spark_format" load and are ignored:
+    every check compiles by the one rule, and the spec written back
+    carries neither key."""
+    from pandasschema_spark.serialize import check_to_spec, spec_to_check
 
-    from pandasschema_spark.errors import PanSchArgumentError
-    from pandasschema_spark.serialize import spec_to_check
-
-    with _pytest.raises(PanSchArgumentError, match="combinator"):
-        spec_to_check({"type": "not", "mode": "pandas",
-                       "of": {"type": "trailing_whitespace"}})
-    # mode on the CHILD is the supported spelling
-    spec_to_check({"type": "not", "of": {"type": "trailing_whitespace",
-                                         "mode": "pandas"}})
+    specs = [
+        {"type": "not", "mode": "pandas", "of": {"type": "trailing_whitespace"}},
+        {"type": "not", "of": {"type": "trailing_whitespace", "mode": "native"}},
+        {"type": "date_format", "format": "%Y%m%d", "spark_format": "yyyyMMdd",
+         "mode": "auto"},
+        {"type": "is_dtype", "dtype": "int64", "mode": "pandas"},
+    ]
+    want = [
+        {"type": "not", "of": {"type": "trailing_whitespace"}},
+        {"type": "not", "of": {"type": "trailing_whitespace"}},
+        {"type": "date_format", "format": "%Y%m%d"},
+        {"type": "is_dtype", "dtype": "int64"},
+    ]
+    assert [check_to_spec(spec_to_check(s)) for s in specs] == want
 
 
 def test_is_dtype_message_round_trip():

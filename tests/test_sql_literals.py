@@ -158,7 +158,7 @@ def test_range_bounds_nan_inf_negative_zero(escaped, lo, hi):
 
 
 def test_can_convert_int_on_doubles(escaped):
-    v = CanConvertValidation(int, mode="native")
+    v = CanConvertValidation(int)
     values = [1.5, math.nan, math.inf, -math.inf, -0.0, None]
     got = _native_mask(escaped, v, values, T.DoubleType())
     assert got == _pandas_mask(v, pd.Series([math.nan if x is None else x for x in values]))

@@ -3,7 +3,6 @@ output, resume across restarts, and the watermarked drift histogram."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from pandasschema_spark.clips_suite import PUBLIC_COLUMNS, clips_schema
@@ -235,54 +234,6 @@ def test_streaming_rate_limit_batch_parity(spark, tmp_path_factory):
     assert got == want and len(want) == 2  # users 1 and 2 burst
 
 
-def test_streaming_dedup_within_watermark_batch_parity(spark, tmp_path_factory):
-    """Duplicates arriving within the watermark horizon are dropped
-    across micro-batches; the surviving set equals the batch
-    dropDuplicates result on the same data (all planted dups are
-    within-horizon here)."""
-    base = str(tmp_path_factory.mktemp("sdedup"))
-    src, out, ckpt = base + "/src", base + "/out", base + "/ckpt"
-
-    rows1 = [(i, "2024-01-01 00:{:02d}:00".format(i % 10)) for i in range(20)]
-    rows1 += [(3, "2024-01-01 00:03:30"), (7, "2024-01-01 00:07:30")]  # dups
-    df1 = spark.createDataFrame(rows1, "event_id long, ts_s string") \
-        .select("event_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    df1.coalesce(1).write.mode("append").parquet(src)
-
-    def _run():
-        stream = spark.readStream.schema("event_id long, ts timestamp") \
-            .parquet(src)
-        dedup = S.streaming_dedup_within_watermark(
-            stream, ["event_id"], "ts", delay="30 minutes")
-        q = (dedup.writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    _run()
-    # second micro-batch replays keys 0..4 (producer retry) + new key 100
-    rows2 = [(i, "2024-01-01 00:0{}:45".format(i)) for i in range(5)]
-    rows2 += [(100, "2024-01-01 00:09:59")]
-    df2 = spark.createDataFrame(rows2, "event_id long, ts_s string") \
-        .select("event_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    df2.coalesce(1).write.mode("append").parquet(src)
-    _run()
-
-    got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
-    batch = sorted(
-        r["event_id"]
-        for r in spark.read.parquet(src).dropDuplicates(["event_id"]).collect())
-    assert got == batch == sorted(set(range(20)) | {100})
-
-
-def test_streaming_dedup_requires_keys(spark, tmp_path_factory):
-    empty = str(tmp_path_factory.mktemp("sdedup_empty"))
-    stream = spark.readStream.schema("event_id long, ts timestamp") \
-        .parquet(empty)
-    with pytest.raises(ValueError):
-        S.streaming_dedup_within_watermark(stream, [], "ts")
-
-
 def test_streaming_cms_batch_parity(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("cms"))
     src = base + "/src"
@@ -291,15 +242,17 @@ def test_streaming_cms_batch_parity(spark, tmp_path_factory):
     # several files -> several micro-batch candidates
     df.repartition(4).write.parquet(src)
     stream = spark.readStream.schema("id long, v string").parquet(src)
-    sk = S.streaming_cms_sketch(stream, "v", width=32, depth=4)
+    # the batch builder is a groupBy-count over row-local hashes: the
+    # same call runs incrementally on a stream in complete mode
+    from pandasschema_spark.operators.sketch import cms_sketch
+
+    sk = cms_sketch(stream, "v", width=32, depth=4)
     q = (
         sk.writeStream.format("memory").queryName("cms_out")
         .outputMode("complete").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
     got = {(r["r"], r["b"]): r["cnt"] for r in spark.sql("SELECT * FROM cms_out").collect()}
-    from pandasschema_spark.operators.sketch import cms_sketch
-
     want = {(r["r"], r["b"]): r["cnt"]
             for r in cms_sketch(df, "v", width=32, depth=4).collect()}
     assert got == want

@@ -2,16 +2,21 @@
 
 Ports every ``validate_and_compare`` case from the reference's test suite
 (/root/reference/test/test_validation.py:13-40 harness, :43-690 cases) and
-evaluates our *Spark-compiled* predicate over a 1-column DataFrame, in both
-compile modes:
+evaluates each check over a 1-column DataFrame twice:
 
-- ``auto``   — native Catalyst expression where we claim equivalence
-- ``pandas`` — Arrow pandas_udf running the reference pandas formula
+- the compiled leg: ``pass_sql``, the SQL the schema compiler emits (the
+  native predicate where the check has one for the input type, else the
+  Arrow fallback);
+- the fallback leg: ``_pandas_udf(v.pandas_validate)`` over the column,
+  the expression ``pass_sql`` builds when ``sql_predicate`` is None — the
+  reference pandas formula run on Arrow batches.
 
 Both must reproduce the reference's expected element-wise booleans.
 """
 
+import decimal
 import json
+import math
 import re
 
 import pytest
@@ -30,12 +35,12 @@ from pandasschema_spark.validation import (
     LeadingWhitespaceValidation,
     MatchesPatternValidation,
     TrailingWhitespaceValidation,
+    _pandas_udf,
 )
 
-MODES = ["auto", "pandas"]
 
-
-def spark_mask(spark, validator, values, spark_type=T.StringType()):
+def spark_masks(spark, validator, values, spark_type=T.StringType()):
+    """(compiled, fallback) pass masks of ``validator`` over ``values``."""
     schema = T.StructType(
         [T.StructField("row_idx", T.LongType()), T.StructField("v", spark_type)]
     )
@@ -43,35 +48,36 @@ def spark_mask(spark, validator, values, spark_type=T.StringType()):
     # built as the compiler builds it: the pass SQL over the frame that
     # selects the check's Column-only leaves (an Arrow fallback)
     leaves = _Leaves(df)
-    pred = validator.pass_sql("`v`", spark_type, leaves)
-    rows = leaves.frame().selectExpr("row_idx", pred + " AS p").orderBy("row_idx").collect()
-    return [bool(r["p"]) for r in rows]
+    compiled = validator.pass_sql("`v`", spark_type, leaves)
+    fallback = leaves(_pandas_udf(validator.pandas_validate)(F.col("v")))
+    rows = (leaves.frame().selectExpr("row_idx", compiled + " AS c", fallback + " AS f")
+            .orderBy("row_idx").collect())
+    return [bool(r["c"]) for r in rows], [bool(r["f"]) for r in rows]
 
 
-def check(spark, make_validator, values, expected, spark_type=T.StringType()):
+def check(spark, validator, values, expected, spark_type=T.StringType()):
     """expected: single bool applied to all, or a list per element."""
     exp = expected if isinstance(expected, list) else [expected] * len(values)
-    for mode in MODES:
-        got = spark_mask(spark, make_validator(mode=mode), values, spark_type)
-        assert got == exp, "mode={} got={} expected={}".format(mode, got, exp)
+    compiled, fallback = spark_masks(spark, validator, values, spark_type)
+    assert compiled == exp, "compiled got={} expected={}".format(compiled, exp)
+    assert fallback == exp, "fallback got={} expected={}".format(fallback, exp)
 
 
 # -- CustomSeriesValidation (ref :43-55) ------------------------------------
 
 def test_custom_series(spark):
-    mk = lambda mode: CustomSeriesValidation(
-        lambda s: ~s.str.contains("fail"), "contained the word fail", mode=mode)
-    check(spark, mk, ["good", "success"], True)
-    check(spark, mk, ["fail", "failure"], False)
+    v = CustomSeriesValidation(lambda s: ~s.str.contains("fail"), "contained the word fail")
+    check(spark, v, ["good", "success"], True)
+    check(spark, v, ["fail", "failure"], False)
 
 
 # -- CustomElementValidation (ref :58-70) -----------------------------------
 
 def test_custom_element(spark):
-    mk = lambda mode: CustomElementValidation(
-        lambda s: s.startswith("_start_"), "Didn't begin with '_start_'", mode=mode)
-    check(spark, mk, ["_start_sdiyhsd", "_start_234fpwunxc\n"], True)
-    check(spark, mk, ["fail", "324wfp9ni"], False)
+    v = CustomElementValidation(
+        lambda s: s.startswith("_start_"), "Didn't begin with '_start_'")
+    check(spark, v, ["_start_sdiyhsd", "_start_234fpwunxc\n"], True)
+    check(spark, v, ["fail", "324wfp9ni"], False)
 
 
 # -- whitespace (ref :73-161) -----------------------------------------------
@@ -82,148 +88,161 @@ WS_MIDDLE = ["middle spaces", "middle tabs", "middle\n                newline"]
 
 
 def test_leading_whitespace(spark):
-    mk = lambda mode: LeadingWhitespaceValidation(mode=mode)
-    check(spark, mk, WS_TRAILING, True)
-    check(spark, mk, WS_LEADING, False)
-    check(spark, mk, WS_MIDDLE, True)
+    v = LeadingWhitespaceValidation()
+    check(spark, v, WS_TRAILING, True)
+    check(spark, v, WS_LEADING, False)
+    check(spark, v, WS_MIDDLE, True)
 
 
 def test_trailing_whitespace(spark):
-    mk = lambda mode: TrailingWhitespaceValidation(mode=mode)
-    check(spark, mk, WS_TRAILING, False)
-    check(spark, mk, WS_LEADING, True)
-    check(spark, mk, WS_MIDDLE, True)
+    v = TrailingWhitespaceValidation()
+    check(spark, v, WS_TRAILING, False)
+    check(spark, v, WS_LEADING, True)
+    check(spark, v, WS_MIDDLE, True)
 
 
 # -- CanCallValidation (ref :164-224) ---------------------------------------
 
 def test_can_call_json(spark):
-    mk = lambda mode: CanCallValidation(json.loads, mode=mode)
-    check(spark, mk, ['[1, 2, 3]', '{"a": 1.1, "b": 2.2, "c": 3.3}', '"string"'], True)
-    check(spark, mk, ['[1, 2, 3', '{a: 1.1, b: 2.2, c: 3.3}', 'string'], False)
+    v = CanCallValidation(json.loads)
+    check(spark, v, ['[1, 2, 3]', '{"a": 1.1, "b": 2.2, "c": 3.3}', '"string"'], True)
+    check(spark, v, ['[1, 2, 3', '{a: 1.1, b: 2.2, c: 3.3}', 'string'], False)
 
 
 def test_can_call_lambda(spark):
-    mk = lambda mode: CanCallValidation(
-        lambda x: False if x % 2 == 0 else 1 / 0, mode=mode)
-    check(spark, mk, [2, 4, 6], True, T.LongType())
-    check(spark, mk, [1, 3, 5], False, T.LongType())
+    v = CanCallValidation(lambda x: False if x % 2 == 0 else 1 / 0)
+    check(spark, v, [2, 4, 6], True, T.LongType())
+    check(spark, v, [1, 3, 5], False, T.LongType())
 
 
 # -- CanConvertValidation (ref :227-257) ------------------------------------
 
 def test_can_convert_int(spark):
-    mk = lambda mode: CanConvertValidation(int, mode=mode)
-    check(spark, mk, ["1", "10", "999", "99999"], True)
-    check(spark, mk, ["1.0", "9.5", "abc", "1e-6"], False)
-    # native fast path agrees on these fixtures too
-    native = CanConvertValidation(int, mode="native")
-    assert spark_mask(spark, native, ["1", "10", "999", "99999"], T.StringType()) == [True] * 4
-    assert spark_mask(spark, native, ["1.0", "9.5", "abc", "1e-6"], T.StringType()) == [False] * 4
+    v = CanConvertValidation(int)
+    check(spark, v, ["1", "10", "999", "99999"], True)
+    check(spark, v, ["1.0", "9.5", "abc", "1e-6"], False)
+    # CPython's int() reads unicode digits and whitespace: a string column
+    # has no native twin, and the Arrow formula gets these right
+    check(spark, v, ["\uff11\uff12", " 7\n", "1_000", "\u0663"], True)
+
+
+D = decimal.Decimal
+
+
+@pytest.mark.parametrize("spark_type,values,int_ok", [
+    (T.LongType(), [1, -5, (1 << 63) - 1, None], [True, True, True, False]),
+    (T.DoubleType(), [1.5, math.nan, math.inf, -math.inf, -0.0, None],
+     [True, False, False, False, True, False]),
+    (T.BooleanType(), [True, False, None], [True, True, False]),
+    (T.DecimalType(10, 2), [D("1.50"), D("-0.01"), None], [True, True, False]),
+], ids=["long", "double", "boolean", "decimal"])
+def test_can_convert_int_and_str_on_typed_columns(spark, spark_type, values, int_ok):
+    """int() of a number or a bool fails only on NULL (NaN in pandas),
+    NaN and the infinities; str() never fails. Both compile natively on
+    these types, and the native masks equal the Arrow formula's."""
+    check(spark, CanConvertValidation(int), values, int_ok, spark_type)
+    check(spark, CanConvertValidation(str), values, True, spark_type)
 
 
 # -- InListValidation (ref :260-317) ----------------------------------------
 
 def test_in_list_case_sensitive(spark):
-    mk = lambda mode: InListValidation(["a", "b", "c"], mode=mode)
-    check(spark, mk, ["a", "b", "c"], True)
-    check(spark, mk, ["aa", "bb", "d", "A", "B", "C"], False)
+    v = InListValidation(["a", "b", "c"])
+    check(spark, v, ["a", "b", "c"], True)
+    check(spark, v, ["aa", "bb", "d", "A", "B", "C"], False)
 
 
 def test_in_list_case_insensitive(spark):
-    mk = lambda mode: InListValidation(["a", "b", "c"], case_sensitive=False, mode=mode)
-    check(spark, mk, ["a", "b", "c", "A", "B", "C"], True)
-    check(spark, mk, ["aa", "bb", "d"], False)
+    v = InListValidation(["a", "b", "c"], case_sensitive=False)
+    check(spark, v, ["a", "b", "c", "A", "B", "C"], True)
+    check(spark, v, ["aa", "bb", "d"], False)
 
 
 def test_in_list_numeric(spark):
-    mk = lambda mode: InListValidation([8000, 16000, 44100, 48000], mode=mode)
-    check(spark, mk, [8000, 44100], True, T.IntegerType())
-    check(spark, mk, [11025, None], False, T.IntegerType())
+    v = InListValidation([8000, 16000, 44100, 48000])
+    check(spark, v, [8000, 44100], True, T.IntegerType())
+    check(spark, v, [11025, None], False, T.IntegerType())
 
 
 # -- DateFormatValidation (ref :320-343) ------------------------------------
 
 def test_date_format(spark):
-    mk = lambda mode: DateFormatValidation("%Y%m%d", mode=mode)
-    check(spark, mk, ["20160404", "00011212"], True)
+    v = DateFormatValidation("%Y%m%d")
+    check(spark, v, ["20160404", "00011212"], True)
     # '11112233' is shape-valid but month 22 is semantically invalid
-    check(spark, mk, ["1/2/3456", "yyyymmdd", "11112233"], False)
+    check(spark, v, ["1/2/3456", "yyyymmdd", "11112233"], False)
 
 
 # -- MatchesPatternValidation (ref :346-370, 405-433) -----------------------
 
 def test_string_regex(spark):
-    mk = lambda mode: MatchesPatternValidation(r"^.+\.txt$", mode=mode)
-    check(spark, mk, ["pass.txt", "a.txt", "lots of words.txt"], True)
-    check(spark, mk, ["pass.TXT", ".txt", "lots of words.tx"], False)
+    v = MatchesPatternValidation(r"^.+\.txt$")
+    check(spark, v, ["pass.txt", "a.txt", "lots of words.txt"], True)
+    check(spark, v, ["pass.TXT", ".txt", "lots of words.tx"], False)
 
 
 def test_compiled_regex(spark):
-    mk = lambda mode: MatchesPatternValidation(
-        re.compile(r"^.+\.txt$", re.IGNORECASE), mode=mode)
-    check(spark, mk, ["pass.txt", "a.TXT", "lots of words.tXt"], True)
-    check(spark, mk, ["pass.txtt", ".txt", "lots of words.tx"], False)
+    v = MatchesPatternValidation(re.compile(r"^.+\.txt$", re.IGNORECASE))
+    check(spark, v, ["pass.txt", "a.TXT", "lots of words.tXt"], True)
+    check(spark, v, ["pass.txtt", ".txt", "lots of words.tx"], False)
 
 
 def test_pattern_null_becomes_nan_string(spark):
     # astype(str) maps null to the literal 'nan' (ref validation.py:316)
-    mk = lambda mode: MatchesPatternValidation("nan", mode=mode)
-    check(spark, mk, [None, "nanometer"], True)
-    check(spark, mk, ["xyz"], False)
+    v = MatchesPatternValidation("nan")
+    check(spark, v, [None, "nanometer"], True)
+    check(spark, v, ["xyz"], False)
 
 
 # -- InRangeValidation (ref :436-485) ---------------------------------------
 
 def test_in_range_ints(spark):
-    mk = lambda mode: InRangeValidation(7, 9, mode=mode)
-    check(spark, mk, [7, 8, 7], True, T.LongType())
-    check(spark, mk, [1, 2, 3], False, T.LongType())
+    v = InRangeValidation(7, 9)
+    check(spark, v, [7, 8, 7], True, T.LongType())
+    check(spark, v, [1, 2, 3], False, T.LongType())
     # max is exclusive
-    check(spark, mk, [9], False, T.LongType())
+    check(spark, v, [9], False, T.LongType())
 
 
 def test_in_range_text_coercion(spark):
-    mk = lambda mode: InRangeValidation(7, 9, mode=mode)
-    check(spark, mk, ["7", "8"], True)
-    check(spark, mk, ["seven", "eight"], False)
+    v = InRangeValidation(7, 9)
+    check(spark, v, ["7", "8"], True)
+    check(spark, v, ["seven", "eight"], False)
 
 
 def test_in_range_null_fails(spark):
-    mk = lambda mode: InRangeValidation(min=4, mode=mode)
-    check(spark, mk, [1.0, None, 3.0], False, T.DoubleType())
-    mk0 = lambda mode: InRangeValidation(min=0, mode=mode)
-    check(spark, mk0, [1.0, 3.0], True, T.DoubleType())
-    check(spark, mk0, [None], False, T.DoubleType())
+    v = InRangeValidation(min=4)
+    check(spark, v, [1.0, None, 3.0], False, T.DoubleType())
+    v0 = InRangeValidation(min=0)
+    check(spark, v0, [1.0, 3.0], True, T.DoubleType())
+    check(spark, v0, [None], False, T.DoubleType())
 
 
 # -- combinators (ref :546-606) ---------------------------------------------
 
 def test_negate(spark):
-    mk = lambda mode: ~MatchesPatternValidation("fail", mode=mode)
-    check(spark, mk, ["Pass", "1", "True"], True)
-    check(spark, mk, ["fail", "thisfails", "failure"], False)
+    v = ~MatchesPatternValidation("fail")
+    check(spark, v, ["Pass", "1", "True"], True)
+    check(spark, v, ["fail", "thisfails", "failure"], False)
 
 
 def test_or(spark):
-    mk = lambda mode: (MatchesPatternValidation("yes", mode=mode)
-                       | MatchesPatternValidation("pass", mode=mode))
-    check(spark, mk, ["pass", "yes", "passyes", "345yes345"], True)
-    check(spark, mk, ["fail", "YES", "YPESS"], False)
+    v = MatchesPatternValidation("yes") | MatchesPatternValidation("pass")
+    check(spark, v, ["pass", "yes", "passyes", "345yes345"], True)
+    check(spark, v, ["fail", "YES", "YPESS"], False)
 
 
 def test_and(spark):
-    mk = lambda mode: (MatchesPatternValidation("a", mode=mode)
-                       & MatchesPatternValidation("b", mode=mode))
-    check(spark, mk, ["ab", "ba"], True)
-    check(spark, mk, ["a", "b", "c"], False)
+    v = MatchesPatternValidation("a") & MatchesPatternValidation("b")
+    check(spark, v, ["ab", "ba"], True)
+    check(spark, v, ["a", "b", "c"], False)
 
 
 def test_mixed_mode_combinator(spark):
     # one native child + one Arrow-UDF child combine into a single plan
-    v = (MatchesPatternValidation("yes", mode="auto")
-         | CustomSeriesValidation(lambda s: s.str.len() > 4, "too short", mode="pandas"))
-    assert spark_mask(spark, v, ["yes", "longer", "no"], T.StringType()) == [True, True, False]
+    v = (MatchesPatternValidation("yes")
+         | CustomSeriesValidation(lambda s: s.str.len() > 4, "too short"))
+    check(spark, v, ["yes", "longer", "no"], [True, True, False])
 
 
 # -- messages (ref :609-637 + combinator message quirks) --------------------

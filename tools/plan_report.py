@@ -9,7 +9,9 @@ Usage: python tools/plan_report.py [sf_dir]
 The second form prints the executed plan of each named
 __spark_entry__.queries() entry under a `## NAME` header instead, with
 expression and exchange ids masked (`#123` -> `#`, `plan_id=45` ->
-`plan_id=`) so two runs or two checkouts diff line by line.
+`plan_id=`) and lambda variable numbers too (`lambda x_65#` ->
+`lambda x_#`: pyspark numbers them from a process-wide counter), so two
+runs or two checkouts diff line by line.
 """
 
 from __future__ import annotations
@@ -34,9 +36,16 @@ def plan_of(df) -> str:
     )
 
 
+def masked_plan(df) -> str:
+    """``plan_of(df)`` without the numbers that depend on the session's
+    history: expression and exchange ids, and lambda variable names."""
+    plan = re.sub(r"(#|plan_id=)\d+", r"\1", plan_of(df))
+    return re.sub(r"(lambda \w+_)\d+(?=#)", r"\1", plan)
+
+
 def query_plans(spark, sf_dir: str, names) -> str:
-    """One `## NAME` section per registry query: its executed plan,
-    built inside resources.scope(), with the per-session ids masked."""
+    """One `## NAME` section per registry query: its masked executed
+    plan, built inside resources.scope()."""
     import __spark_entry__ as E
     from pandasschema_spark.resources import scope
 
@@ -44,8 +53,7 @@ def query_plans(spark, sf_dir: str, names) -> str:
     out = []
     for name in names:
         with scope():
-            plan = re.sub(r"(#|plan_id=)\d+", r"\1",
-                          plan_of(qs[name](spark, sf_dir)))
+            plan = masked_plan(qs[name](spark, sf_dir))
         out += ["## " + name, "", plan.rstrip(), ""]
     return "\n".join(out)
 
