@@ -7,8 +7,8 @@ Binds BASELINE.json's required checks to the engine
 - dur_ms  > 0                              -> InRange(min=1), native
 - codec   in allowed set                   -> native IN
 - codec   referential vs codec_dim         -> inlined row-local IN (the
-  dim is a bounded enum; InTableValidation(inline_max_rows=...) fuses it
-  into the single scan — the generic anti-join plan stays the default)
+  dim is a 4-row local frame, so InTableValidation inlines it into the
+  single scan; a dim read from storage keeps the anti-join plan)
 - transcript matches ^[a-z0-9 ,.'?!-]+$    -> native rlike
 - transcript non-null                      -> native isNotNull
 - clip_id shape clip_############          -> native rlike
@@ -150,13 +150,10 @@ def clips_schema(codec_dim_df=None, *, seed: int = 42, with_pcm_checks: bool = T
     """The full constraint suite as a Schema over the 6 public clip columns."""
     codec_checks = [InListValidation(["pcm_s16le", "flac", "opus", "mp3"])]
     if codec_dim_df is not None:
-        # the codec dimension is a bounded enum by contract (FIXTURES.md
-        # §C1): inline it so the referential check fuses into the single
-        # row-local scan instead of planning an anti-join branch — the
-        # branch's re-scan + dim distinct + broadcast stages were pure
-        # per-pass overhead for a 4-row dim
-        codec_checks.append(InTableValidation(codec_dim_df, "codec",
-                                              inline_max_rows=64))
+        # the codec dimension is a 4-row local frame (FIXTURES.md §C1),
+        # so the referential check inlines and fuses into the single
+        # row-local scan instead of planning an anti-join branch
+        codec_checks.append(InTableValidation(codec_dim_df, "codec"))
     bytes_checks = []
     transcript_checks = [
         NotNullValidation(),

@@ -46,7 +46,8 @@ def floor_div(num: Column, den: Column) -> Column:
 
 def ppm(num: Column, den: Column) -> Column:
     """``floor(num * 1_000_000 / den)`` exact parts-per-million over
-    non-negative integer-valued decimal columns (BIGINT). The numerator
-    product stays in decimal(38,0), so callers pass ``num`` already cast
-    — ``ppm(F.sum("x").cast("decimal(38,0)"), n)``."""
+    non-negative integer-valued decimal columns (BIGINT): the one ppm
+    rule every operator's ``*_ppm`` ratio column goes through. The
+    numerator product stays in decimal(38,0), so callers pass ``num``
+    already cast — ``ppm(F.sum("x").cast("decimal(38,0)"), n)``."""
     return floor_div(num * 1_000_000, den)

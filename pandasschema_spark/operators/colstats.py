@@ -21,7 +21,8 @@ Scale shapes at 10^12 rows:
   columns quantize first (floor to a grid); the quantile of the
   quantized column is the quantized quantile, and k stays bounded by
   the grid. The final join against the O(#quantiles) rank frame is a
-  broadcast.
+  broadcast. group_quantiles runs the same ceil-rank core
+  (``_ceil_rank_quantiles``) with its windows partitioned by group.
 - zscore_outliers: per-group (n, sum, sum-of-squares) via ONE
   map-side-combined hash agg (decimal(38) accumulators — cent^2 sums
   overflow int64 past ~10^5 rows); O(groups) rows reach the driver,
@@ -41,7 +42,40 @@ import typing
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..frames import local_frame
-from ..functions.exact import floor_div
+from ..functions.exact import ppm
+
+
+def _ceil_rank_quantiles(df: DataFrame, group_cols, value_col, qs_pm, denom: int) -> DataFrame:
+    """The one ceil-rank core of exact_quantiles and group_quantiles:
+    ([grp,] q_pm, rank, n, value), for each group and each q the
+    smallest value whose within-group cumulative count reaches rank
+    ceil(q * n / denom). ``group_cols`` is empty (one global group) or
+    one column, renamed ``grp``. A (group, value) histogram; the
+    cumulative count and the group total are windows over it
+    partitioned by the group (none for the global form); the rank join
+    is a broadcast of the O(qs) rank frame."""
+    bad = [q for q in qs_pm if not (0 < int(q) <= denom)]
+    if bad:
+        raise ValueError(
+            "qs_pm must satisfy 0 < q <= denom={} (got {}): q=0 or q>denom "
+            "would compute a rank outside [1, n] and silently emit no row "
+            "for that quantile".format(denom, bad))
+    keys = ["grp"] if group_cols else []
+    v = F.col(value_col) if isinstance(value_col, str) else value_col
+    h = (df.select(*[F.col(g).alias("grp") for g in group_cols], v.alias("value"))
+           .where(F.col("value").isNotNull())
+           .groupBy(*keys, "value").agg(F.count(F.lit(1)).alias("c")))
+    wc = (Window.partitionBy(*keys).orderBy("value")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = h.select(*keys, "value", "c",
+                   F.sum("c").over(wc).alias("cum"),
+                   F.sum("c").over(Window.partitionBy(*keys)).alias("n"))
+    qdf = local_frame(df.sparkSession, [(int(q),) for q in qs_pm], "q_pm long")
+    # ceil(q*n/denom) as pure integer arithmetic: (a + b - 1) div b
+    rank = F.expr("(q_pm * n + {d} - 1) div {d}".format(d=denom))
+    return (cum.join(F.broadcast(qdf),
+                     (F.col("cum") >= rank) & ((F.col("cum") - F.col("c")) < rank))
+            .select(*keys, "q_pm", rank.alias("rank"), "n", "value"))
 
 
 def exact_quantiles(
@@ -59,28 +93,11 @@ def exact_quantiles(
     Returns (q_pm, rank, n, value) — one row per requested quantile.
     ``value_col`` may be a column name or a Column expression (cast it
     to an integral type for cross-engine hashing). NULLs are excluded
-    from n, matching SQL aggregate semantics.
+    from n, matching SQL aggregate semantics. The global case of the
+    one ceil-rank core (``_ceil_rank_quantiles``), which
+    group_quantiles shares.
     """
-    bad = [q for q in qs_pm if not (0 < int(q) <= denom)]
-    if bad:
-        raise ValueError(
-            "qs_pm must satisfy 0 < q <= denom={} (got {}): q=0 or q>denom "
-            "would compute a rank outside [1, n] and silently emit no row "
-            "for that quantile".format(denom, bad))
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    h = (df.select(v.alias("value")).where(F.col("value").isNotNull())
-           .groupBy("value").agg(F.count(F.lit(1)).alias("c")))
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding,
-                                            Window.currentRow)
-    cum = h.withColumn("cum", F.sum("c").over(w)) \
-           .crossJoin(h.agg(F.sum("c").alias("n")))
-    spark = df.sparkSession
-    qdf = local_frame(spark, [(int(q),) for q in qs_pm], "q_pm long")
-    # ceil(q*n/denom) as pure integer arithmetic: (a + b - 1) div b
-    rank = F.expr("(q_pm * n + {d} - 1) div {d}".format(d=denom))
-    return (cum.join(F.broadcast(qdf),
-                     (F.col("cum") >= rank) & ((F.col("cum") - F.col("c")) < rank))
-            .select("q_pm", rank.alias("rank"), "n", "value"))
+    return _ceil_rank_quantiles(df, [], value_col, qs_pm, denom)
 
 
 class GroupCutoffs(typing.NamedTuple):
@@ -646,9 +663,8 @@ def fd_profile(
                  # exact floor division (functions.exact: Spark's
                  # F.floor(decimal/decimal) rounds HALF_UP at scale 6
                  # BEFORE floor — it is NOT DuckDB's //)
-                 floor_div((F.sum("__n__") - F.sum("__keep__"))
-                           .cast("decimal(38,0)") * 1_000_000,
-                           F.sum("__n__").cast("decimal(38,0)"))
+                 ppm((F.sum("__n__") - F.sum("__keep__")).cast("decimal(38,0)"),
+                     F.sum("__n__").cast("decimal(38,0)"))
                   .alias("error_ppm")))
 
 
@@ -664,8 +680,9 @@ def group_quantiles(
     exact_quantiles ("p95 session gap per event_type", "p99 clip
     duration per codec"): for each group and each q, the smallest
     value whose within-group cumulative count reaches
-    ceil(q * n_g / denom). Same ceil-rank rule, same quantize-first
-    contract for unbounded columns.
+    ceil(q * n_g / denom). The same ceil-rank core as exact_quantiles
+    (``_ceil_rank_quantiles``), same quantize-first contract for
+    unbounded columns.
 
     Returns (grp, q_pm, rank, n, value). NULL groups form their own
     group (a per-cohort SLO for the unattributed cohort is still an
@@ -679,27 +696,7 @@ def group_quantiles(
     grouping restores the parallelism). The quantile-rank join is a
     broadcast of O(qs) rows cross-keyed per group.
     """
-    bad = [q for q in qs_pm if not (0 < int(q) <= denom)]
-    if bad:
-        raise ValueError(
-            "qs_pm must satisfy 0 < q <= denom={} (got {})".format(denom, bad))
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    h = (df.select(F.col(group_col).alias("grp"), v.alias("value"))
-           .where(F.col("value").isNotNull())
-           .groupBy("grp", "value").agg(F.count(F.lit(1)).alias("c")))
-    wc = (Window.partitionBy("grp").orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    wg = Window.partitionBy("grp")
-    cum = h.select(
-        "grp", "value", "c",
-        F.sum("c").over(wc).alias("cum"),
-        F.sum("c").over(wg).alias("n"))
-    spark = df.sparkSession
-    qdf = local_frame(spark, [(int(q),) for q in qs_pm], "q_pm long")
-    rank = F.expr("(q_pm * n + {d} - 1) div {d}".format(d=denom))
-    return (cum.join(F.broadcast(qdf),
-                     (F.col("cum") >= rank) & ((F.col("cum") - F.col("c")) < rank))
-            .select("grp", "q_pm", rank.alias("rank"), "n", "value"))
+    return _ceil_rank_quantiles(df, [group_col], value_col, qs_pm, denom)
 
 
 def concentration_profile(
@@ -753,11 +750,10 @@ def concentration_profile(
             .agg(F.sum("c").cast("long").alias("n_nonnull"),
                  F.count(F.lit(1)).cast("long").alias("n_distinct"),
                  F.when(n > 1,
-                        floor_div(F.sum(dc * (dc - 1)) * 1_000_000,
-                                  n * (n - 1)))
+                        ppm(F.sum(dc * (dc - 1)), n * (n - 1)))
                   .otherwise(F.lit(None).cast("long")).alias("simpson_ppm"),
                  F.max("c").cast("long").alias("c_max"),
-                 floor_div(F.max("c").cast("decimal(38,0)") * 1_000_000, n)
+                 ppm(F.max("c").cast("decimal(38,0)"), n)
                   .alias("top_share_ppm")))
 
 

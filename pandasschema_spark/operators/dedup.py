@@ -30,7 +30,7 @@ import typing
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from ..functions.exact import floor_div
+from ..functions.exact import ppm
 from ..resources import hold
 from pyspark.storagelevel import StorageLevel
 
@@ -585,9 +585,8 @@ def duplication_rate(
                      .cast("long").alias("bucket_start"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
                  F.sum("__dup__").cast("long").alias("n_dups"),
-                 floor_div(F.sum("__dup__").cast("decimal(38,0)")
-                           * 1_000_000,
-                           F.count(F.lit(1)).cast("decimal(38,0)"))
+                 ppm(F.sum("__dup__").cast("decimal(38,0)"),
+                     F.count(F.lit(1)).cast("decimal(38,0)"))
                   .alias("dup_ppm")))
 
 
@@ -635,8 +634,7 @@ def containment_pairs(
         .where(F.col("n_common") * 1_000_000 >= F.lit(threshold_ppm) * small)
         .select(
             "id_a", "id_b", "n_common", "n_a", "n_b",
-            floor_div(F.col("n_common").cast("decimal(38,0)") * 1_000_000,
-                      small.cast("decimal(38,0)"))
+            ppm(F.col("n_common").cast("decimal(38,0)"), small.cast("decimal(38,0)"))
              .alias("containment_ppm"),
         )
     )
@@ -706,8 +704,7 @@ def source_dup_matrix(
             F.col("n_shared").cast("long").alias("n_shared"),
             F.col("n_a").cast("long").alias("n_a"),
             F.col("n_b").cast("long").alias("n_b"),
-            floor_div(F.col("n_shared").cast("decimal(38,0)") * 1_000_000,
-                      small.cast("decimal(38,0)"))
+            ppm(F.col("n_shared").cast("decimal(38,0)"), small.cast("decimal(38,0)"))
              .alias("share_ppm"),
         )
     )
@@ -972,8 +969,7 @@ def gram_overlap_score(
            .agg(F.count(F.lit(1)).cast("long").alias("n_grams"),
                 F.sum(F.coalesce(F.col("__hot__"), F.lit(0)))
                  .cast("long").alias("n_common"),
-                floor_div(F.sum(F.coalesce(F.col("__hot__"), F.lit(0)))
-                          .cast("decimal(38,0)") * 1_000_000,
-                          F.count(F.lit(1)).cast("decimal(38,0)"))
+                ppm(F.sum(F.coalesce(F.col("__hot__"), F.lit(0))).cast("decimal(38,0)"),
+                    F.count(F.lit(1)).cast("decimal(38,0)"))
                  .alias("overlap_ppm")))
     return out

@@ -13,6 +13,13 @@ numpy (functions/stats.py, scipy absent).
 Result objects carry (stat, p_value, drifted) and a per-bucket observed
 vs expected frame for reporting; a failing drift check is frame-level
 (one warning), not per-row.
+
+The per-group and onset forms stay in Spark and return integer-exact
+rationals. Each exact statistic has one body: ``_chi2_by`` (two-sample
+chi-square) and ``_ks_by`` (two-sample KS) over a (grp, bucket, a, b)
+histogram, fed by the one tagged-union count (``_tagged_counts``) for
+the per-group forms and by the one dense time-bucket grid
+(``_onset_grid``) for the onsets.
 """
 
 from __future__ import annotations
@@ -21,10 +28,10 @@ import dataclasses
 import typing
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import stats as _stats
-from ..functions.exact import floor_div
+from ..functions.exact import floor_div, ppm
 from ..resources import hold
 from ..validation_warning import ValidationWarning
 
@@ -85,22 +92,46 @@ def chi_square_drift(
     return DriftResult(column, "chi_square", stat, p, int(n), p < alpha, alpha, buckets)
 
 
+def _tagged_counts(df_ref: DataFrame, df_cand: DataFrame, column: str,
+                   *group_cols: str) -> DataFrame:
+    """([grp,] bucket, c_ref, c_cand): both histograms in ONE shuffle —
+    the frames are tagged and unioned so the counts come out of a single
+    partial+final hash agg keyed (group, bucket), O(groups x categories)
+    output, never rows. ``group_cols`` is empty or one column, renamed
+    ``grp``."""
+    grp = [F.col(g).alias("grp") for g in group_cols]
+
+    def tagged(df, ref):
+        return df.select(*grp, F.col(column).alias("bucket"), F.lit(ref).alias("__ref__"))
+
+    return (tagged(df_ref, 1).unionAll(tagged(df_cand, 0))
+            .groupBy(*(["grp"] if group_cols else []), "bucket")
+            .agg(F.sum("__ref__").cast("long").alias("c_ref"),
+                 F.sum(F.lit(1) - F.col("__ref__")).cast("long").alias("c_cand")))
+
+
 def two_sample_categorical_counts(
     df_ref: DataFrame, df_cand: DataFrame, column: str
 ) -> DataFrame:
-    """(bucket, c_ref, c_cand): both histograms in ONE shuffle — the
-    frames are tagged and unioned so the counts come out of a single
-    partial+final hash agg, O(categories) output. The building block for
-    reference-vs-candidate drift on e.g. sr_hz between ingest batches."""
-    tagged = df_ref.select(
-        F.col(column).alias("bucket"), F.lit(1).alias("__ref__")
-    ).unionAll(
-        df_cand.select(F.col(column).alias("bucket"), F.lit(0).alias("__ref__"))
-    )
-    return tagged.groupBy("bucket").agg(
-        F.sum("__ref__").cast("long").alias("c_ref"),
-        F.sum(F.lit(1) - F.col("__ref__")).cast("long").alias("c_cand"),
-    )
+    """(bucket, c_ref, c_cand): the no-group case of the one tagged-union
+    count (``_tagged_counts``). The building block for reference-vs-
+    candidate drift on e.g. sr_hz between ingest batches."""
+    return _tagged_counts(df_ref, df_cand, column)
+
+
+def _two_sample_arrays(df_ref: DataFrame, df_cand: DataFrame, column: str, test: str):
+    """The collected two-sample counts ``(a, b, na, nb, buckets)`` as
+    floats, ``buckets`` the (label, candidate, scaled reference) report
+    rows. Raises unless both samples are non-empty."""
+    rows = two_sample_categorical_counts(df_ref, df_cand, column).collect()
+    a = np.array([r["c_ref"] for r in rows], dtype=float)
+    b = np.array([r["c_cand"] for r in rows], dtype=float)
+    na, nb = a.sum(), b.sum()
+    if na == 0 or nb == 0:
+        raise ValueError("both samples must be non-empty for {}".format(test))
+    buckets = [(str(r["bucket"]), float(bj), float(aj * nb / na))
+               for r, aj, bj in zip(rows, a, b)]
+    return a, b, na, nb, buckets
 
 
 def chi_square_two_sample(
@@ -114,22 +145,13 @@ def chi_square_two_sample(
     statistic sum_j (a_j*sqrt(nb/na) - b_j*sqrt(na/nb))^2 / (a_j+b_j),
     dof = k-1. Spark does one O(categories) agg; numpy does the O(k)
     statistic on the driver."""
-    rows = two_sample_categorical_counts(df_ref, df_cand, column).collect()
-    a = np.array([r["c_ref"] for r in rows], dtype=float)
-    b = np.array([r["c_cand"] for r in rows], dtype=float)
-    na, nb = a.sum(), b.sum()
-    if na == 0 or nb == 0:
-        raise ValueError("both samples must be non-empty for two-sample chi-square")
+    a, b, na, nb, buckets = _two_sample_arrays(df_ref, df_cand, column, "two-sample chi-square")
     k1, k2 = np.sqrt(nb / na), np.sqrt(na / nb)
     tot = a + b
     mask = tot > 0
     stat = float((((a * k1 - b * k2) ** 2)[mask] / tot[mask]).sum())
     dof = max(int(mask.sum()) - 1, 1)
     p = _stats.chi2_sf(stat, dof)
-    buckets = [
-        (str(r["bucket"]), float(bj), float(aj * nb / na))
-        for r, aj, bj in zip(rows, a, b)
-    ]
     return DriftResult(column, "chi_square_2sample", stat, p, int(na + nb),
                        p < alpha, alpha, buckets)
 
@@ -195,17 +217,10 @@ def population_stability_index(
     aggregation as the chi-square test; the O(k) float math runs on the
     driver (ln() is why PSI is pytest- rather than oracle-verified —
     the histogram legs it consumes ARE oracle-gated via audio_sr_drift)."""
-    rows = two_sample_categorical_counts(df_ref, df_cand, column).collect()
-    a = np.array([r["c_ref"] for r in rows], dtype=float)
-    b = np.array([r["c_cand"] for r in rows], dtype=float)
-    na, nb = a.sum(), b.sum()
-    if na == 0 or nb == 0:
-        raise ValueError("both samples must be non-empty for PSI")
+    a, b, na, nb, buckets = _two_sample_arrays(df_ref, df_cand, column, "PSI")
     p = np.maximum(a / na, epsilon)
     q = np.maximum(b / nb, epsilon)
     psi = float(((p - q) * np.log(p / q)).sum())
-    buckets = [(str(r["bucket"]), float(bj), float(aj * nb / na))
-               for r, aj, bj in zip(rows, a, b)]
     return DriftResult(column, "psi", psi, float("nan"), int(na + nb),
                        psi > threshold, threshold, buckets)
 
@@ -214,117 +229,142 @@ def two_sample_counts_by(
     df_ref: DataFrame, df_cand: DataFrame, group_col: str, column: str
 ) -> DataFrame:
     """(grp, bucket, c_ref, c_cand): per-GROUP two-sample histograms in
-    one shuffle — the per-cohort version of two_sample_categorical_counts
-    (per-codec sr drift, per-language length drift). Both frames tagged,
-    unioned, aggregated once keyed (group, bucket); output is
-    O(groups x categories), never rows."""
-    tagged = df_ref.select(
-        F.col(group_col).alias("grp"), F.col(column).alias("bucket"),
-        F.lit(1).alias("__ref__"),
-    ).unionAll(df_cand.select(
-        F.col(group_col).alias("grp"), F.col(column).alias("bucket"),
-        F.lit(0).alias("__ref__"),
-    ))
-    return tagged.groupBy("grp", "bucket").agg(
-        F.sum("__ref__").cast("long").alias("c_ref"),
-        F.sum(F.lit(1) - F.col("__ref__")).cast("long").alias("c_cand"),
-    )
+    one shuffle — the per-cohort case of the one tagged-union count
+    (``_tagged_counts``; per-codec sr drift, per-language length
+    drift)."""
+    return _tagged_counts(df_ref, df_cand, column, group_col)
+
+
+# The exact two-sample statistics. Each has ONE body, fed a
+# (grp, bucket, a, b) histogram: a and b count the bucket in the two
+# samples of group grp. The *_two_sample_by forms feed
+# two_sample_counts_by (grp = the group column, a = reference,
+# b = candidate); the onsets feed _onset_grid (grp = the time bucket,
+# a = in the bucket, b = in the rest of the data). Rational integers,
+# not floats: float summation order differs across engines, 128-bit
+# integer arithmetic does not. The per-group totals and cumulative sums
+# are windows over grp on the AGGREGATED histogram (never a second
+# aggregation of the raw rows), and the final per-group agg reuses the
+# window's hash(grp) partitioning.
+
+def _chi2_by(hist: DataFrame) -> DataFrame:
+    """(grp, k, n_a, n_b, chi2_num, chi2_den): the two-sample chi-square
+    sum_j (a_j*nb - b_j*na)^2 / ((a_j+b_j) * na * nb) with both sqrt
+    factors cleared, as chi2_num = sum_j (a_j*nb - b_j*na)^2 div
+    (a_j+b_j) (per-term integer floor — deterministic across engines,
+    bias < k against a statistic read at thresholds of O(10+)) over
+    chi2_den = na*nb; k counts the group's histogram rows, and each row
+    needs a_j + b_j >= 1. Callers compare chi2_num/chi2_den to the
+    chi2(k-1) cutoff."""
+    w = Window.partitionBy("grp")
+    a, b, na, nb = (F.col(c).cast("decimal(38,0)") for c in ("a", "b", "n_a", "n_b"))
+    term = a * nb - b * na
+    # exact floor division (functions.exact): F.floor(dec/dec) is NOT
+    # // — Spark rounds the scale-6 quotient HALF_UP before floor
+    return (hist.select("grp", "a", "b",
+                        F.sum("a").over(w).alias("n_a"),
+                        F.sum("b").over(w).alias("n_b"),
+                        F.count(F.lit(1)).over(w).alias("k"))
+            .groupBy("grp")
+            .agg(F.first("k").cast("long").alias("k"),
+                 F.first("n_a").cast("long").alias("n_a"),
+                 F.first("n_b").cast("long").alias("n_b"),
+                 F.sum(floor_div(term * term, a + b)).cast("long").alias("chi2_num"),
+                 F.first(na * nb).cast("long").alias("chi2_den")))
+
+
+def _ks_by(hist: DataFrame) -> DataFrame:
+    """(grp, n_a, n_b, ks_num, ks_den): the two-sample
+    Kolmogorov-Smirnov statistic max_j |cumA_j * nb - cumB_j * na| /
+    (na * nb) over the buckets in ``bucket`` order. The sup needs
+    evaluating at every OBSERVED bucket edge only: between observed
+    buckets both CDFs are flat, so the gap cannot change. Products ride
+    decimal(38,0): na * nb overflows int64 past ~3e9 rows per side (long
+    multiplication wraps SILENTLY in non-ANSI mode); ks_num <= ks_den,
+    so both fit BIGINT whenever ks_den does."""
+    wc = (Window.partitionBy("grp").orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, 0))
+    w = Window.partitionBy("grp")
+    cum_a, cum_b, na, nb = (F.col(c).cast("decimal(38,0)")
+                            for c in ("cum_a", "cum_b", "n_a", "n_b"))
+    return (hist.select("grp",
+                        F.sum("a").over(wc).alias("cum_a"),
+                        F.sum("b").over(wc).alias("cum_b"),
+                        F.sum("a").over(w).alias("n_a"),
+                        F.sum("b").over(w).alias("n_b"))
+            .groupBy("grp")
+            .agg(F.first("n_a").cast("long").alias("n_a"),
+                 F.first("n_b").cast("long").alias("n_b"),
+                 F.max(F.abs(cum_a * nb - cum_b * na)).cast("long").alias("ks_num"),
+                 F.first(na * nb).cast("long").alias("ks_den")))
+
+
+def _two_sample_by(stat, df_ref: DataFrame, df_cand: DataFrame, group_col: str,
+                   column: str) -> DataFrame:
+    """``stat`` (``_chi2_by`` or ``_ks_by``) over two_sample_counts_by,
+    a = reference and b = candidate, named n_ref/n_cand on the way out."""
+    hist = two_sample_counts_by(df_ref, df_cand, group_col, column)
+    return (stat(hist.withColumnsRenamed({"c_ref": "a", "c_cand": "b"}))
+            .withColumnsRenamed({"n_a": "n_ref", "n_b": "n_cand"}))
 
 
 def chi_square_two_sample_by(
     df_ref: DataFrame, df_cand: DataFrame, group_col: str, column: str
 ) -> DataFrame:
-    """Per-group two-sample chi-square homogeneity, integer-exact: for
-    each group, stat = sum_j (a_j*nb - b_j*na)^2 / ((a_j+b_j) * na * nb)
-    — the standard two-sample statistic with both sqrt factors cleared.
-    Emitted as (grp, k, n_ref, n_cand, chi2_num, chi2_den) where
-    chi2_num = sum_j (a_j*nb - b_j*na)^2 div (a_j+b_j)   (per-term
-    integer floor — deterministic across engines, bias < k against a
-    statistic read at thresholds of O(10+)) and chi2_den = na*nb; the
-    caller compares chi2_num/chi2_den against the chi2(k-1) cutoff.
-    Rational integers for the same reason the global drift queries use
-    them: float summation order differs across engines, 128-bit integer
-    arithmetic does not.
+    """Per-group two-sample chi-square homogeneity, integer-exact
+    (``_chi2_by`` over ``two_sample_counts_by``): (grp, k, n_ref, n_cand,
+    chi2_num, chi2_den), the caller comparing chi2_num/chi2_den against
+    the chi2(k-1) cutoff.
 
     Scale: the raw rows shuffle ONCE (tagged union, map-side combined,
-    keyed (group, bucket)). The per-group totals come from a window
-    PARTITIONED BY group over the already-aggregated
-    O(groups x categories) histogram — NOT a second aggregation of the
-    inputs, which would scan and shuffle the raw rows twice (a window
-    over aggregated rows is fine; the repo's no-window rule is about
-    caps over raw data). One more tiny exchange of the histogram on
-    grp, then the final per-group agg reuses that partitioning."""
-    from pyspark.sql import Window
-
-    hist = two_sample_counts_by(df_ref, df_cand, group_col, column)
-    w = Window.partitionBy("grp")
-    enriched = hist.select(
-        "grp", "c_ref", "c_cand",
-        F.sum("c_ref").over(w).alias("n_ref"),
-        F.sum("c_cand").over(w).alias("n_cand"),
-        F.count(F.lit(1)).over(w).alias("k"))
-    a = F.col("c_ref").cast("decimal(38,0)")
-    b = F.col("c_cand").cast("decimal(38,0)")
-    na = F.col("n_ref").cast("decimal(38,0)")
-    nb = F.col("n_cand").cast("decimal(38,0)")
-    term = (a * nb - b * na)
-    # exact floor division (functions.exact): F.floor(dec/dec) is NOT
-    # // — Spark rounds the scale-6 quotient HALF_UP before floor
-    num_j = floor_div(term * term, a + b)
-    return (enriched.groupBy("grp")
-            .agg(F.first("k").cast("long").alias("k"),
-                 F.first("n_ref").cast("long").alias("n_ref"),
-                 F.first("n_cand").cast("long").alias("n_cand"),
-                 F.sum(num_j).cast("long").alias("chi2_num"),
-                 F.first(na * nb).cast("long").alias("chi2_den")))
+    keyed (group, bucket)); the per-group totals are a window over the
+    O(groups x categories) histogram, one more tiny exchange of it on
+    grp, and the final per-group agg reuses that partitioning."""
+    return _two_sample_by(_chi2_by, df_ref, df_cand, group_col, column)
 
 
 def ks_two_sample_by(
     df_ref: DataFrame, df_cand: DataFrame, group_col: str, column: str
 ) -> DataFrame:
     """Per-group two-sample Kolmogorov-Smirnov statistic over a discrete
-    bucket column, integer-exact: for each group,
-    KS = max_j |cumA_j * nB - cumB_j * nA| / (nA * nB), emitted as the
-    rational pair (ks_num, ks_den). The numeric-drift companion of
+    bucket column, integer-exact (``_ks_by`` over
+    ``two_sample_counts_by``): (grp, n_ref, n_cand, ks_num, ks_den) with
+    KS = ks_num / ks_den. The numeric-drift companion of
     chi_square_two_sample_by (chi-square ignores bucket ORDER; KS is the
     sup over the ordered CDF gap, so it catches shifts chi-square
-    dilutes).
+    dilutes). Same scale shape as the chi-square form: one tagged-union
+    shuffle, then windows over the aggregated histogram only."""
+    return _two_sample_by(_ks_by, df_ref, df_cand, group_col, column)
 
-    Scale shape: identical to the chi-square variant — the raw rows
-    shuffle ONCE through the tagged-union (group, bucket) hash agg; the
-    cumulative sums are a window over the O(groups x buckets) histogram
-    ordered by bucket within each group (aggregated rows only, never
-    data). The sup needs evaluating at every OBSERVED bucket edge only:
-    between observed buckets both CDFs are flat, so the gap cannot
-    change."""
-    from pyspark.sql import Window
 
-    hist = two_sample_counts_by(df_ref, df_cand, group_col, column)
-    w = (Window.partitionBy("grp").orderBy("bucket")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    wg = Window.partitionBy("grp")
-    cum = hist.select(
-        "grp",
-        F.sum("c_ref").over(w).alias("cum_a"),
-        F.sum("c_cand").over(w).alias("cum_b"),
-        F.sum("c_ref").over(wg).alias("n_ref"),
-        F.sum("c_cand").over(wg).alias("n_cand"))
-    # products ride decimal(38,0): n_ref * n_cand overflows int64 past
-    # ~3e9 rows per side (long multiplication wraps SILENTLY in
-    # non-ANSI mode) — the ks_onset sibling already casts; match it.
-    # ks_num <= ks_den, so both fit BIGINT whenever ks_den does; the
-    # final casts keep the documented <2^63 output envelope.
-    gap = F.abs(F.col("cum_a").cast("decimal(38,0)")
-                * F.col("n_cand").cast("decimal(38,0)")
-                - F.col("cum_b").cast("decimal(38,0)")
-                * F.col("n_ref").cast("decimal(38,0)"))
-    return (cum.groupBy("grp")
-            .agg(F.first("n_ref").cast("long").alias("n_ref"),
-                 F.first("n_cand").cast("long").alias("n_cand"),
-                 F.max(gap).cast("long").alias("ks_num"),
-                 F.first(F.col("n_ref").cast("decimal(38,0)")
-                         * F.col("n_cand").cast("decimal(38,0)"))
-                  .cast("long").alias("ks_den")))
+def _onset_grid(df: DataFrame, ts_col: str, column: str, bucket_s: int) -> DataFrame:
+    """The onsets' dense (grp, bucket, a, b) grid: grp the
+    ``bucket_s``-second time bucket, bucket a value of ``column``, a its
+    count in the time bucket and b = g - a its count in the REST of the
+    data (g its global count). Every time bucket carries every value, so
+    a value absent from the bucket still contributes (chi-square) and
+    still advances the complement CDF (KS).
+
+    ONE map-side-combined (time bucket, value) hash agg over the raw
+    rows, persisted; everything after reads that O(buckets x values)
+    histogram: the value totals, the distinct time buckets and the
+    broadcast cross join of the two, never a row-level op."""
+    from .sessions import _epoch_bucket
+
+    grp = _epoch_bucket(ts_col, bucket_s).alias("grp")
+    hist = hold(df.where(F.col(ts_col).isNotNull() & F.col(column).isNotNull())
+                  .groupBy(grp, F.col(column).alias("bucket"))
+                  .agg(F.count(F.lit(1)).alias("a"))
+                  .persist())
+    tot = hist.groupBy("bucket").agg(F.sum("a").alias("g"))
+    a = F.coalesce(F.col("a"), F.lit(0))
+    return (hist.select("grp").distinct()
+            .crossJoin(F.broadcast(tot))
+            .join(hist, ["grp", "bucket"], "left")
+            .select("grp", "bucket", a.alias("a"), (F.col("g") - a).alias("b")))
+
+
+_ONSET_NAMES = {"grp": "bucket_start", "n_a": "n_bucket", "n_b": "n_rest"}
 
 
 def chi_square_onset(
@@ -343,63 +383,17 @@ def chi_square_onset(
     (chi_square_two_sample_by) cannot express: its groups partition the
     data once, while onset needs every bucket compared to everything
     else — done here without a second scan by deriving the complement
-    from the SAME aggregated histogram (b_j = global_j - a_j).
+    from the SAME aggregated histogram (``_onset_grid``).
 
-    Integer-exact rational output per bucket, same convention as
-    chi_square_two_sample_by: (bucket_start, k, n_bucket, n_rest,
-    chi2_num, chi2_den) with chi2_num = sum_j (a_j*nb - b_j*na)^2 div
-    (a_j + b_j) and chi2_den = na*nb; callers compare
-    chi2_num/chi2_den to the chi2(k-1) cutoff. k counts the GLOBAL
-    category set: a category absent from the bucket still contributes
-    its (0 - b_j*na)^2 term — vanishing categories are drift too.
-
-    Scale shape at 10^12 rows: the raw rows reduce through ONE
-    map-side-combined hash agg keyed (bucket, category); everything
-    after operates on that O(buckets x categories) histogram — category
-    totals and the grand total are tiny re-aggregations of it, the
-    dense bucket x category grid is a broadcast cross join of the two
-    aggregate sides, never a row-level op. Buckets are integer epoch
-    seconds floored to ``bucket_s`` via the subtraction idiom (never
-    float division by a large divisor — doubles round near boundaries).
+    ``_chi2_by`` over that grid, so the row of bucket t equals
+    chi_square_two_sample_by of bucket t against the rest:
+    (bucket_start, k, n_bucket, n_rest, chi2_num, chi2_den). k counts
+    the GLOBAL category set: a category absent from the bucket still
+    contributes its (0 - b_j*na)^2 term — vanishing categories are
+    drift too. Buckets are integer epoch seconds floored to
+    ``bucket_s`` (sessions._epoch_bucket).
     """
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    from .sessions import _epoch_us
-
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
-    bucket = (sec - (sec % F.lit(bucket_s))).alias("bucket_start")
-    hist = (df.where(F.col(ts_col).isNotNull() & F.col(column).isNotNull())
-              .groupBy(bucket, F.col(column).alias("__cat__"))
-              .agg(F.count(F.lit(1)).alias("__a__")))
-    hist = hold(hist.persist())
-    # all further inputs derive from the aggregated histogram: O(buckets
-    # x categories) rows, no second raw scan
-    cat_tot = hist.groupBy("__cat__").agg(F.sum("__a__").alias("__g__"))
-    buck_tot = hist.groupBy("bucket_start").agg(F.sum("__a__").alias("__na__"))
-    grand = cat_tot.agg(F.sum("__g__").alias("__n__"))
-    grid = (buck_tot
-            .crossJoin(F.broadcast(cat_tot))
-            .crossJoin(F.broadcast(grand))
-            .join(hist, ["bucket_start", "__cat__"], "left")
-            .select(
-                "bucket_start", "__na__", "__n__", "__g__",
-                F.coalesce(F.col("__a__"), F.lit(0)).alias("__a__")))
-    a = F.col("__a__").cast("decimal(38,0)")
-    g = F.col("__g__").cast("decimal(38,0)")
-    na = F.col("__na__").cast("decimal(38,0)")
-    nb = (F.col("__n__") - F.col("__na__")).cast("decimal(38,0)")
-    b = g - a
-    # per-term EXACT floor division (functions.exact; F.floor of the
-    # decimal quotient is NOT //); a + b = g >= 1 by construction
-    num_j = floor_div((a * nb - b * na) * (a * nb - b * na), g)
-    out = (grid.groupBy("bucket_start")
-           .agg(F.count(F.lit(1)).cast("long").alias("k"),
-                F.first("__na__").cast("long").alias("n_bucket"),
-                F.first(F.col("__n__") - F.col("__na__")).cast("long")
-                 .alias("n_rest"),
-                F.sum(num_j).cast("long").alias("chi2_num"),
-                F.first(na * nb).cast("long").alias("chi2_den")))
-    return out
+    return _chi2_by(_onset_grid(df, ts_col, column, bucket_s)).withColumnsRenamed(_ONSET_NAMES)
 
 
 def ks_onset(
@@ -417,62 +411,14 @@ def ks_onset(
     shift spreads thin across categories; KS takes the sup over the
     ordered CDF gap and catches exactly that.
 
-    Integer-exact rational output per bucket, the ks_two_sample_by
-    convention: (bucket_start, n_bucket, n_rest, ks_num, ks_den) with
-    ks_num = max_v |cumA_v * nb - cumB_v * na| and ks_den = na * nb.
-    The sup only needs evaluating at observed value edges (both CDFs
-    are flat between them), and the complement CDF derives from the
-    global one: cumB_v = cumG_v - cumA_v.
-
-    Scale shape: identical to chi_square_onset — ONE map-side-combined
-    (bucket, value) hash agg over the raw rows; the dense bucket x
-    value grid, the global cumulative counts and the per-bucket
-    cumulative sums are windows/joins over that O(buckets x distinct)
-    histogram. For unbounded-cardinality columns quantize first (the
-    exact_quantiles rule): the KS of the quantized column is the KS
-    read on the grid, and the histogram stays bounded.
+    ``_ks_by`` over chi_square_onset's grid (``_onset_grid``), so the
+    row of bucket t equals ks_two_sample_by of bucket t against the
+    rest: (bucket_start, n_bucket, n_rest, ks_num, ks_den). For
+    unbounded-cardinality columns quantize first (the exact_quantiles
+    rule): the KS of the quantized column is the KS read on the grid,
+    and the histogram stays bounded.
     """
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    from pyspark.sql import Window
-
-    from .sessions import _epoch_us
-
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
-    bucket = (sec - (sec % F.lit(bucket_s))).alias("bucket_start")
-    hist = (df.where(F.col(ts_col).isNotNull() & F.col(column).isNotNull())
-              .groupBy(bucket, F.col(column).alias("__v__"))
-              .agg(F.count(F.lit(1)).alias("__a__")))
-    hist = hold(hist.persist())
-    val_tot = hist.groupBy("__v__").agg(F.sum("__a__").alias("__g__"))
-    buck_tot = hist.groupBy("bucket_start").agg(F.sum("__a__").alias("__na__"))
-    grand = val_tot.agg(F.sum("__g__").alias("__n__"))
-    # dense grid so a value absent from the bucket still advances the
-    # complement CDF at that edge
-    grid = (buck_tot
-            .crossJoin(F.broadcast(val_tot))
-            .crossJoin(F.broadcast(grand))
-            .join(hist, ["bucket_start", "__v__"], "left")
-            .select("bucket_start", "__na__", "__n__", "__v__", "__g__",
-                    F.coalesce(F.col("__a__"), F.lit(0)).alias("__a__")))
-    wc = (Window.partitionBy("bucket_start").orderBy("__v__")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    cum = grid.select(
-        "bucket_start", "__na__", "__n__",
-        F.sum("__a__").over(wc).alias("__cum_a__"),
-        F.sum("__g__").over(wc).alias("__cum_g__"))
-    na = F.col("__na__").cast("decimal(38,0)")
-    nb = (F.col("__n__") - F.col("__na__")).cast("decimal(38,0)")
-    cum_a = F.col("__cum_a__").cast("decimal(38,0)")
-    cum_b = (F.col("__cum_g__") - F.col("__cum_a__")).cast("decimal(38,0)")
-    gap = F.abs(cum_a * nb - cum_b * na)
-    out = (cum.groupBy("bucket_start")
-           .agg(F.first("__na__").cast("long").alias("n_bucket"),
-                F.first(F.col("__n__") - F.col("__na__")).cast("long")
-                 .alias("n_rest"),
-                F.max(gap).cast("long").alias("ks_num"),
-                F.first(na * nb).cast("long").alias("ks_den")))
-    return out
+    return _ks_by(_onset_grid(df, ts_col, column, bucket_s)).withColumnsRenamed(_ONSET_NAMES)
 
 
 def embedding_centroid_drift(
@@ -548,7 +494,6 @@ def embedding_centroid_drift(
                         F.signum(F.col("__dot__")).cast("int")
                          .alias("dot_sign"),
                         F.when(den > 0,
-                               floor_div(F.col("__dot__") * F.col("__dot__")
-                                         * 1_000_000, den))
+                               ppm(F.col("__dot__") * F.col("__dot__"), den))
                          .otherwise(F.lit(None).cast("long"))
                          .alias("cos2_ppm")))

@@ -40,7 +40,7 @@ import typing
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.exact import floor_div
+from ..functions.exact import ppm
 from ..resources import hold
 
 DEFAULT_SALT_BUCKETS = 16
@@ -331,7 +331,6 @@ def join_cardinality(
                F.col("cnt_b").cast("long").alias("cnt_b"),
                F.col("__pair__").cast("long").alias("pair_rows"),
                F.col("__total__").cast("long").alias("total_rows"),
-               floor_div(F.col("__pair__") * 1_000_000,
-                         F.col("__total__"))
+               ppm(F.col("__pair__"), F.col("__total__"))
                 .alias("share_ppm")))
     return out

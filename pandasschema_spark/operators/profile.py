@@ -250,17 +250,11 @@ def null_bursts(
     integer microseconds agree). Rows with NULL timestamps are excluded
     (they have no bucket; the notnull check owns them).
     """
-    from .sessions import _epoch_us
+    from .sessions import _epoch_bucket
 
     if not cols:
         raise ValueError("cols must be non-empty")
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    # integer epoch seconds, then integer modulo — the double-division
-    # floor form misbuckets timestamps within ~0.2us below a boundary
-    # (quotient rounds up to the boundary integer before floor sees it)
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
-    bucket = (sec - (sec % F.lit(bucket_s))).cast("long")
+    bucket = _epoch_bucket(ts_col, bucket_s).cast("long")
     base = df.where(F.col(ts_col).isNotNull())
     aggs = [F.count(F.lit(1)).cast("long").alias("__n")]
     for i, c in enumerate(cols):
@@ -415,10 +409,11 @@ def timeline_anomaly(
     partial edge buckets (first/last day of collection) flag
     themselves.
 
-    Integer-exact: the median and MAD use the ceil-rank form
-    (rank (N+1) div 2 over the sorted buckets, the repo's discrete
-    quantile rule) and the flag is the cross-multiplied compare
-    ``10 * |n - med| > k_tenths * mad`` — no float crosses an engine.
+    Integer-exact: the median and MAD are colstats.exact_quantiles at
+    q = 500 per mille (rank (N+1) div 2 over the sorted buckets, the
+    repo's discrete quantile rule) and the flag is the cross-multiplied
+    compare ``10 * |n - med| > k_tenths * mad`` — no float crosses an
+    engine.
     When mad = 0 (a perfectly regular timeline) any deviation flags.
 
     Output per anomalous bucket: (bucket_start, n_events, med, mad,
@@ -431,42 +426,29 @@ def timeline_anomaly(
     statistics reaching the driver as single rows, the zscore-cutoff
     convention.
     """
+    from .colstats import exact_quantiles
     from .sessions import timeline_completeness
-
-    from pyspark.sql import Window
 
     counts = hold(timeline_completeness(
         df, ts_col, bucket_s=bucket_s, max_buckets=max_buckets).persist())
-    n_buckets = counts.count()
-    if n_buckets == 0:
+    def median(col):
+        rows = exact_quantiles(counts, col, [500]).collect()
+        return int(rows[0]["value"]) if rows else None
+
+    med = median("n_events")
+    if med is None:
         counts.unpersist()
         return local_frame(
             df.sparkSession, [],
             "bucket_start: bigint, n_events: bigint, med: bigint, "
             "mad: bigint, dev: bigint")
-    rank = (n_buckets + 1) // 2
-
-    def _ceil_rank_median(frame, col):
-        hist = frame.groupBy(F.col(col).alias("v")).agg(
-            F.count(F.lit(1)).alias("c"))
-        w = (Window.orderBy("v")
-             .rowsBetween(Window.unboundedPreceding, 0))
-        row = (hist.select("v", F.sum("c").over(w).alias("cum"))
-               .where(F.col("cum") >= rank)
-               .orderBy("v").limit(1).collect())
-        return int(row[0]["v"])
-
-    med = _ceil_rank_median(counts, "n_events")
-    devs = counts.select(
-        F.abs(F.col("n_events") - F.lit(med)).alias("dev"))
-    mad = _ceil_rank_median(devs, "dev")
-    return (counts.where(
-        F.abs(F.col("n_events") - F.lit(med)) * 10 > F.lit(k_tenths * mad))
+    dev = F.abs(F.col("n_events") - F.lit(med))
+    mad = median(dev)
+    return (counts.where(dev * 10 > F.lit(k_tenths * mad))
         .select("bucket_start", "n_events",
                 F.lit(med).cast("long").alias("med"),
                 F.lit(mad).cast("long").alias("mad"),
-                F.abs(F.col("n_events") - F.lit(med)).cast("long")
-                 .alias("dev")))
+                dev.cast("long").alias("dev")))
 
 
 def timeline_trend(

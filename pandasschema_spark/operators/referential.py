@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.exact import floor_div
+from ..functions.exact import ppm
 
 from ..plans.compiler import value_repr
 from ..resources import hold
@@ -311,15 +311,12 @@ def orphan_rate_timeline(
     map-side-combined per-bucket agg. Facts never shuffle; output is
     O(buckets).
     """
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    from .sessions import _epoch_us
+    from .sessions import _epoch_bucket
 
+    bucket = _epoch_bucket(ts_col, bucket_s).alias("bucket_start")
     d = F.broadcast(dim.select(F.col(dim_key).alias("__dimv__")).distinct())
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
     base = (fact.where(F.col(ts_col).isNotNull())
-            .select(F.col(fact_key).alias("__k__"),
-                    (sec - (sec % F.lit(bucket_s))).alias("bucket_start")))
+            .select(F.col(fact_key).alias("__k__"), bucket))
     joined = base.join(d, base["__k__"] == F.col("__dimv__"), "left")
     nn = F.col("__k__").isNotNull()
     orphan = (nn & F.col("__dimv__").isNull()).cast("int")
@@ -330,9 +327,8 @@ def orphan_rate_timeline(
                  F.sum((~nn).cast("int")).cast("long").alias("n_null"),
                  F.when(
                      F.sum(nn.cast("int")) > 0,
-                     floor_div(F.sum(orphan).cast("decimal(38,0)")
-                               * 1_000_000,
-                               F.sum(nn.cast("int")).cast("decimal(38,0)")))
+                     ppm(F.sum(orphan).cast("decimal(38,0)"),
+                         F.sum(nn.cast("int")).cast("decimal(38,0)")))
                   .otherwise(F.lit(0))
                   .cast("long").alias("orphan_ppm")))
 

@@ -79,6 +79,18 @@ def _epoch_us(ts_col: str):
     )
 
 
+def _epoch_bucket(ts_col: str, bucket_s: int):
+    """Integer epoch seconds of ``ts_col`` (``_epoch_us``) floored to its
+    ``bucket_s``-second bucket by the subtraction idiom, BIGINT. Never a
+    double division by a large divisor: the quotient of a timestamp
+    within ~0.2us below a boundary rounds up to the boundary before floor
+    sees it. Raises ValueError unless ``bucket_s >= 1``."""
+    if bucket_s < 1:
+        raise ValueError("bucket_s must be >= 1")
+    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
+    return sec - (sec % F.lit(bucket_s))
+
+
 def _with_session_no(df, user_col, ts_col, id_col, gap_us):
     us = _epoch_us(ts_col)
     w = Window.partitionBy(user_col).orderBy(us.asc(), F.col(id_col).asc())
@@ -360,10 +372,7 @@ def timeline_completeness(
     are integer epoch seconds (floor to ``bucket_s``) — no timestamp
     rendering or timezone semantics cross any engine boundary.
     """
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")  # NTZ-safe (see _epoch_us)
-    b = (sec - (sec % F.lit(bucket_s))).alias("bucket_start")
+    b = _epoch_bucket(ts_col, bucket_s).alias("bucket_start")
     counts = (
         df.where(F.col(ts_col).isNotNull())
         .groupBy(b)
@@ -530,10 +539,7 @@ def retention_cohorts(
     integer epoch seconds via the subtraction idiom; the period delta
     divides exactly (both operands are bucket multiples).
     """
-    if bucket_s < 1:
-        raise ValueError("bucket_s must be >= 1")
-    sec = (_epoch_us(ts_col) / 1_000_000).cast("long")
-    bucket = (sec - (sec % F.lit(bucket_s))).alias("__b__")
+    bucket = _epoch_bucket(ts_col, bucket_s).alias("__b__")
     ud = (df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
             .groupBy(F.col(user_col).alias("__u__"), bucket)
             .agg(F.lit(1).alias("__one__")))

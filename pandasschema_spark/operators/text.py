@@ -24,7 +24,7 @@ import typing
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..frames import row_map
-from ..functions.exact import floor_div
+from ..functions.exact import ppm
 from ..resources import hold
 
 # ---------------------------------------------------------------------------
@@ -616,9 +616,8 @@ def vocab_novelty(
                  F.count(F.lit(1)).cast("long").alias("n_types"),
                  F.sum((F.col("__b__") == F.col("__fb__")).cast("int"))
                   .cast("long").alias("n_new_types"),
-                 floor_div(
-                     F.sum((F.col("__b__") == F.col("__fb__")).cast("int"))
-                     .cast("decimal(38,0)") * 1_000_000,
+                 ppm(F.sum((F.col("__b__") == F.col("__fb__")).cast("int"))
+                     .cast("decimal(38,0)"),
                      F.count(F.lit(1)).cast("decimal(38,0)"))
                   .alias("novelty_ppm")))
 
@@ -702,9 +701,8 @@ def boilerplate_scan(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             F.sum(F.coalesce(F.col("__hot__"), F.lit(0))).cast("long").alias("n_boiler"),
-            floor_div(
-                F.sum(F.coalesce(F.col("__hot__"), F.lit(0))).cast("decimal(38,0)")
-                * 1_000_000,
+            ppm(
+                F.sum(F.coalesce(F.col("__hot__"), F.lit(0))).cast("decimal(38,0)"),
                 F.count(F.lit(1)).cast("decimal(38,0)")
             ).alias("boiler_ppm"),
         )

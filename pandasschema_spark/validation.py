@@ -514,6 +514,12 @@ class InRangeValidation(_SeriesValidation):
         lo, hi = sql_literal(self.min), sql_literal(self.max)
         if lo is None or hi is None:
             return None
+        # pandas compares the float it coerced to against an exact
+        # Decimal bound (-0.01 >= Decimal('-0.01') is False), while Spark
+        # compares doubles; only a bound that is an exact double agrees
+        if any(isinstance(b, decimal.Decimal) and b != decimal.Decimal(float(b))
+               for b in (self.min, self.max)):
+            return None
         # The pandas formula fails NaN on BOTH sides (NaN >= m and
         # NaN < M are both False), but Spark orders NaN GREATER than
         # every double. Pin it explicitly: NULL fails (the _leaf
@@ -937,46 +943,46 @@ def _distinct(values) -> list:
     return list(seen.values())
 
 
+#: the most distinct non-NULL values a local InTableValidation dimension
+#: may hold and still be inlined as an IN list
+INLINE_MAX_VALUES = 64
+
+
 class InTableValidation(_SeriesValidation):
     """Engine extension (no reference analog — SURVEY.md §2.4): referential
     integrity against a dimension table. Pass iff the value exists in
     ``dim_df[dim_col]``. Planned as a broadcast LEFT ANTI join emitting
     violations (the north star's codec-dimension check).
 
-    ``inline_max_rows`` (opt-in, default off): when the caller KNOWS the
-    dimension is a tiny enum (a codec/status/country table), pass its
-    upper bound and the distinct dim values are collected ONCE at
-    construction and compiled as a row-local IN predicate that fuses into
-    the single-scan violations projection — removing the whole
-    anti-join branch (its pruned re-scan, the dim distinct agg, and the
-    broadcast-build stage) from every validate() plan. Falls back to the
-    anti-join plan silently when the dim turns out bigger, or holds a
-    value with no SQL literal (a timestamp). Semantics are
-    identical bit-for-bit: a NULL value fails either way (never equal to
-    any dim value), NULL dim values match nothing, and an empty dim
-    fails every row. Do NOT set it for unbounded dims — the construction
-    pays one driver collect of up to ``inline_max_rows + 1`` rows."""
+    A dimension planned as a local relation (``dim_df.isLocal()``: a
+    ``local_frame`` enum such as the codec table) with at most
+    ``INLINE_MAX_VALUES`` distinct non-NULL values is inlined instead:
+    the driver dedupes its rows at construction, which runs no job, and
+    the check compiles to a row-local IN predicate that fuses into the
+    single-scan violations projection, removing the whole anti-join
+    branch (its pruned re-scan, the dim distinct agg and the
+    broadcast-build stage). A dim holding a value with no SQL literal (a
+    timestamp) keeps the anti join. Semantics are identical bit-for-bit:
+    a NULL value fails either way (never equal to any dim value), NULL
+    dim values match nothing, and an empty dim fails every row. Any
+    other dimension (a parquet read, a registry or serialized
+    ``in_table`` dim) keeps the anti join, with no job at construction
+    and no snapshot of the dim taken before the validation runs."""
 
     is_global = True
 
-    def __init__(self, dim_df, dim_col: str,
-                 inline_max_rows: int = 0, **kw):
+    def __init__(self, dim_df, dim_col: str, **kw):
         self.dim_df = dim_df
         self.dim_col = dim_col
         self._inline_values = None
         super().__init__(**kw)
-        if inline_max_rows:
-            if dim_df.isLocal():
-                # the rows live in the plan: a collect runs no job, and
-                # the driver dedupes them as distinct() would
-                values = _distinct(r[0] for r in dim_df.select(dim_col).collect())
-            else:
-                values = [r[0] for r in dim_df.select(dim_col).distinct()
-                          .limit(int(inline_max_rows) + 1).collect()]
-            # NULL dim values can never equal anything — drop them so IN
-            # keeps pure two-valued semantics under _leaf
-            values = [v for v in values if v is not None] if len(values) <= inline_max_rows else None
-            if values is not None and sql_in("v", values) is not None:
+        if dim_df.isLocal():
+            # the rows live in the plan: a collect runs no job, and the
+            # driver dedupes them as distinct() would; NULL dim values
+            # can never equal anything, so IN keeps two-valued semantics
+            values = [v for v in _distinct(r[0] for r in dim_df.select(dim_col).collect())
+                      if v is not None]
+            if len(values) <= INLINE_MAX_VALUES and sql_in("v", values) is not None:
                 self._inline_values = values
                 self.is_global = False  # instance shadows the class attr
 

@@ -3,8 +3,9 @@ function in the package takes a ``broadcast`` or ``broadcast_*``
 parameter — each join is broadcast or not by the operator's one rule —
 and none takes an ``impl`` parameter: each kernel has one body, gated
 by its DuckDB oracle. A check has one compile rule: no signature in
-validation.py or serialize.py takes ``mode`` or ``spark_format`` (native
-SQL where provably identical, else the Arrow formula), and the package
+validation.py or serialize.py takes ``mode``, ``spark_format`` or
+``inline_max_rows`` (native SQL where provably identical, else the Arrow
+formula; a local dimension inlines, any other anti-joins), and the package
 has none of the switches that no caller set off their default
 (``verify_row_key``, ``infer_schema``, ``trigger_available_now``). So
 callers have no switch whose other value every test would need to
@@ -43,7 +44,7 @@ def test_no_impl_parameter_in_any_signature():
 
 def test_no_compile_override_on_any_check():
     found = [f for f in _signature_params()
-             if f[0] in ("validation.py", "serialize.py") and f[2] in ("mode", "spark_format")]
+             if f[0] in ("validation.py", "serialize.py") and f[2] in ("mode", "spark_format", "inline_max_rows")]
     assert found == [], found
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from pandasschema_spark import Column, Schema
 from pandasschema_spark.errors import PanSchArgumentError
+from pandasschema_spark.frames import local_frame
 from pandasschema_spark.plans.compiler import _Leaves
 from pandasschema_spark.validation import (
     CanConvertValidation,
@@ -96,8 +97,8 @@ def test_string_options_and_patterns(escaped, v):
 
 
 def test_inline_dimension_with_quotes_and_backslashes(escaped):
-    dim = escaped.createDataFrame([(x,) for x in TRICKY], "codec string")
-    v = InTableValidation(dim, "codec", inline_max_rows=64)
+    dim = local_frame(escaped, [(x,) for x in TRICKY], "codec string")
+    v = InTableValidation(dim, "codec")
     assert not v.is_global
     values = TRICKY + ["it", "a\\\\b"]
     expected = [x is not None for x in values[:len(TRICKY)]] + [False, False]
@@ -137,6 +138,28 @@ DECIMALS = [D("0.00"), D("10.49"), D("10.50"), D("-0.01"), D("2.50"), D("1.00"),
 def test_decimal_columns(escaped, v, values):
     got = _native_mask(escaped, v, values, T.DecimalType(10, 2))
     assert got == _pandas_mask(v, pd.Series(values, dtype=object))
+
+
+@pytest.mark.parametrize("spark_type", [T.DecimalType(10, 2), T.DoubleType(), T.LongType()])
+def test_inexact_decimal_bound_runs_the_pandas_formula(spark, spark_type):
+    """A Decimal bound that is not an exact double has no native
+    predicate: pandas compares the float it coerced to against the exact
+    Decimal (float(-0.01) >= Decimal('-0.01') is False), Spark would
+    compare doubles. Row 0 sits on the bound and fails, as in pandas."""
+    v = InRangeValidation(min=D("-0.01"))
+    assert v.sql_predicate("`v`", spark_type) is None
+    assert InRangeValidation(min=D("-0.5")).sql_predicate("`v`", spark_type) is not None
+    values = [D("-0.01"), D("0.50"), D("-0.02")]
+    if not isinstance(spark_type, T.DecimalType):
+        values = [float(x) if isinstance(spark_type, T.DoubleType) else int(x) for x in values]
+    df = spark.createDataFrame(list(enumerate(values)),
+                               T.StructType([T.StructField("i", T.LongType()),
+                                             T.StructField("v", spark_type)]))
+    out = Schema([Column("v", [v])]).validate(df, columns=["v"], row_key="i").violations
+    want = [i for i, ok in enumerate(_pandas_mask(v, df.toPandas()["v"])) if not ok]
+    assert sorted(r["row"] for r in out.collect()) == want
+    if isinstance(spark_type, T.DecimalType):
+        assert want == [0, 2]
 
 
 DOUBLES = [math.nan, math.inf, -math.inf, 0.0, -0.0, 1.0, -1.0, None]
